@@ -38,6 +38,7 @@ is steady-state throughput of the physical plan.
 
 from __future__ import annotations
 
+import glob
 import json
 import os
 import re
@@ -203,12 +204,12 @@ HEADLINE = [
     "lorenz_spend_deciles",
     "ljung_box_daily",
     # round 9: the ISO-BMFF container roundtrip (the sixth in-repo
-    # format) and the two heaviest global-window rewrites (prefix-sum
-    # ntile over customers, resp. over raw lineitem) so their
-    # fixed-cost-for-parallel-sort trade stays visible round to round.
+    # format) and the heaviest global-window rewrite (prefix-sum ntile
+    # over customers; its raw-lineitem sibling zonemap_prune_audit is
+    # benched above) so the fixed-cost-for-parallel-sort trade stays
+    # visible round to round.
     "mp4_container_stats",
     "rfm_segments",
-    "zonemap_prune_audit",
     "fmp4_fragment_stats",
     # round 10: the Matroska/WebM EBML container roundtrip (streaming
     # containers two-for-two next to MP4/fMP4), the exact edit-distance
@@ -243,6 +244,40 @@ def run_query(spark, name: str, sf_dir: str) -> float:
         fn(spark, sf_dir).write.mode("overwrite").format("noop").save()
         best = min(best, time.perf_counter() - t0)
     return best
+
+
+def compare_with_prior(here: str, this_round: int, timings: dict) -> dict | None:
+    """This run against the newest earlier full record,
+    BENCH_LOCAL_rNN.json with NN < this_round, over the queries both
+    timed.  The headline set grows round over round, so the totals are
+    restricted to the shared names, and the prior record's load stamp
+    is carried along.  None when no readable record exists or it shares
+    no query."""
+    records = sorted(
+        (int(m.group(1)), p)
+        for p in glob.glob(os.path.join(here, "BENCH_LOCAL_r*.json"))
+        for m in [re.fullmatch(r"BENCH_LOCAL_r(\d+)\.json", os.path.basename(p))]
+        if m and int(m.group(1)) < this_round
+    )
+    if not records:
+        return None
+    path = records[-1][1]
+    try:
+        with open(path) as f:
+            prior = json.load(f)
+        prior_q = prior.get("queries") or {}
+    except (OSError, ValueError, AttributeError):
+        return None
+    shared = sorted(set(prior_q) & set(timings))
+    if not shared:
+        return None
+    return {
+        "record": os.path.basename(path),
+        "n_queries": len(shared),
+        "this_run": round(sum(timings[n] for n in shared), 3),
+        "prior_run": round(sum(prior_q[n] for n in shared), 3),
+        "prior_contaminated": bool(prior.get("contaminated")),
+    }
 
 
 def main() -> None:
@@ -280,55 +315,7 @@ def main() -> None:
             # contract; subset runs write no BENCH_LOCAL artifact)
             print(f"[only] {name}: {timings[name]}", file=sys.stderr, flush=True)
     total = round(sum(timings.values()), 3)
-    # The headline set GROWS round over round, so the full total is not
-    # comparable across rounds; also publish this run's total restricted
-    # to each earlier round's query set (and that round's total on the
-    # same subset) so round-over-round deltas compare like with like.
-    import glob
-
-    common: dict[str, dict] = {}
     here = os.path.dirname(os.path.abspath(__file__))
-    # From round 8 the stdout line no longer carries the per-query map
-    # (the thrice-clipped field), so prior rounds' maps come from the
-    # BENCH_LOCAL_r*.json full records; the BENCH_r*.json fallbacks
-    # below recover rounds 1-7 (pre-full-record or clipped).  Where both
-    # exist for a round tag, the richer map wins.
-    for path in sorted(
-        glob.glob(os.path.join(here, "BENCH_r*.json"))
-        + glob.glob(os.path.join(here, "BENCH_LOCAL_r*.json"))
-    ):
-        try:
-            with open(path) as f:
-                prior = json.load(f)
-            # the driver wraps our JSON line under "parsed"
-            parsed = prior.get("parsed") or {}
-            prior_q = prior.get("queries") or parsed.get("queries") or {}
-            if not prior_q and isinstance(prior.get("tail"), str):
-                # the driver truncates long lines (BENCH_r04: parsed is
-                # null, only the line's tail survives) — recover the
-                # per-query pairs that ARE present; names are validated
-                # against the registry so stray fields can't leak in
-                import re
-
-                cand = {
-                    m.group(1): float(m.group(2))
-                    for m in re.finditer(
-                        r'"([a-z0-9_]+)":\s*([0-9]+\.[0-9]+)', prior["tail"]
-                    )
-                }
-                prior_q = {k: v for k, v in cand.items() if k in registry.QUERIES}
-        except (OSError, ValueError, AttributeError):
-            continue
-        shared = sorted(set(prior_q) & set(timings))
-        if shared:
-            tag = os.path.basename(path).removesuffix(".json").rsplit("_", 1)[-1]
-            if tag in common and common[tag]["n_queries"] >= len(shared):
-                continue  # keep the richer record for this round tag
-            common[tag] = {
-                "n_queries": len(shared),
-                "this_run": round(sum(timings[n] for n in shared), 3),
-                "prior_run": round(sum(prior_q[n] for n in shared), 3),
-            }
     # Round number for the local artifact: one past the newest driver
     # BENCH file.  The driver's round-N sequence is: correctness gate ->
     # bench run -> write BENCH_rN.json, so at driver-bench time files
@@ -344,6 +331,7 @@ def main() -> None:
         if m
     ]
     this_round = (max(rounds) + 1) if rounds else 0
+    vs_prior = compare_with_prior(here, this_round, timings)
     # Contamination stamp (round-13, verdict item 1): a 1-min loadavg
     # above 1.0 at start means another workload owned part of the box —
     # the record is still written (the driver needs its line) but every
@@ -354,7 +342,7 @@ def main() -> None:
                 "value": total,
                 "unit": "sec",
                 "queries": timings,
-                "common_subset_totals": common,
+                "vs_prior": vs_prior,
                 "sf": SF_DIR.rstrip("/").rsplit("sf", 1)[-1],
                 "contaminated": contaminated,
                 "loadavg_before": load_before,

@@ -1311,8 +1311,3 @@ CURATION_QUERIES = {
     "stratified_sample_langs": (stratified_sample_langs, STRATIFIED_SQL),
     "quality_classifier": (quality_classifier_agreement, _qc_agreement_sql()),
 }
-
-# Engine-internal RNG (sampleBy accept/reject stream) — no cross-engine
-# oracle is definable; determinism + rate accuracy pinned in tests.
-# All former rows-only curation entries now carry contract oracles.
-CURATION_ROWS_ONLY: dict = {}

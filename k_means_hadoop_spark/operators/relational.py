@@ -2891,6 +2891,3 @@ RELATIONAL_QUERIES = {
     "approx_percentile_values": (approx_percentile_values, APPROX_PCT_SQL),
     "hll_users_daily": (hll_users_daily, HLL_DAILY_SQL),
 }
-
-# All former rows-only sketch entries now carry within-tolerance oracles.
-RELATIONAL_ROWS_ONLY: dict = {}

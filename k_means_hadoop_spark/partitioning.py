@@ -30,7 +30,8 @@ def truncate_lineage(df: DataFrame, eager: bool = True) -> DataFrame:
     replays from storage instead of killing the job — the 100 TB
     preemptible-cluster switch.  Identical results either way (both
     pin the materialized partitions both window passes share); the
-    trade is write bandwidth to the checkpoint store.
+    trade is write bandwidth to the checkpoint store.  The env dir wins
+    over a checkpoint dir set earlier on the same context.
 
     Call sites use ``.transform(truncate_lineage)`` /
     ``.transform(truncate_lineage_lazy)`` so the policy lives in ONE
@@ -39,10 +40,23 @@ def truncate_lineage(df: DataFrame, eager: bool = True) -> DataFrame:
     ckpt_dir = os.environ.get("SPARK_GRAFT_CHECKPOINT_DIR")
     if ckpt_dir:
         sc = df.sparkSession.sparkContext
-        if sc.getCheckpointDir() is None:
+        if not _checkpoint_dir_under(sc, ckpt_dir):
             sc.setCheckpointDir(ckpt_dir)
         return df.checkpoint(eager=eager)
     return df.localCheckpoint(eager=eager)
+
+
+def _checkpoint_dir_under(sc, ckpt_dir: str) -> bool:
+    """True iff the context's checkpoint dir is the ``<uuid>`` child
+    that ``setCheckpointDir(ckpt_dir)`` creates.  Both sides are
+    compared as qualified Hadoop paths (``file:/...``, ``hdfs://...``)."""
+    current = sc.getCheckpointDir()
+    if current is None:
+        return False
+    hadoop_path = sc._jvm.org.apache.hadoop.fs.Path
+    want = hadoop_path(ckpt_dir)
+    want = want.getFileSystem(sc._jsc.hadoopConfiguration()).makeQualified(want)
+    return hadoop_path(current).getParent().equals(want)
 
 
 def truncate_lineage_lazy(df: DataFrame) -> DataFrame:

@@ -19,6 +19,10 @@ make every query fully deterministic (I2 init mode, KMeans.java:598-607).
 
 from __future__ import annotations
 
+import glob
+import json
+import os
+import re
 from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession, Window
@@ -646,8 +650,8 @@ ORACLES: dict[str, str] = {
 from k_means_hadoop_spark.operators.analytics import ANALYTICS_QUERIES
 from k_means_hadoop_spark.operators.corpus_extra import CORPUS_EXTRA_QUERIES
 from k_means_hadoop_spark.operators.sketches import SKETCH_QUERIES
-from k_means_hadoop_spark.operators.curation import CURATION_QUERIES, CURATION_ROWS_ONLY
-from k_means_hadoop_spark.operators.relational import RELATIONAL_QUERIES, RELATIONAL_ROWS_ONLY
+from k_means_hadoop_spark.operators.curation import CURATION_QUERIES
+from k_means_hadoop_spark.operators.relational import RELATIONAL_QUERIES
 from k_means_hadoop_spark.operators.tpch_extra import TPCH_EXTRA_QUERIES
 from k_means_hadoop_spark.operators.trends import TRENDS_QUERIES
 from k_means_hadoop_spark.operators.stats_extra import STATS_EXTRA_QUERIES
@@ -659,27 +663,6 @@ from k_means_hadoop_spark.operators.round10 import ROUND10_QUERIES
 from k_means_hadoop_spark.operators.round11 import ROUND11_QUERIES
 from k_means_hadoop_spark.operators.round12 import ROUND12_QUERIES
 from k_means_hadoop_spark.registry_pipeline import PIPELINE_ORACLES, PIPELINE_QUERIES
-
-for _name, (_fn, _sql) in {
-    **RELATIONAL_QUERIES,
-    **TPCH_EXTRA_QUERIES,
-    **CURATION_QUERIES,
-    **ANALYTICS_QUERIES,
-    **CORPUS_EXTRA_QUERIES,
-    **SKETCH_QUERIES,
-    **TRENDS_QUERIES,
-    **STATS_EXTRA_QUERIES,
-    **MINING_QUERIES,
-    **ROUND7_QUERIES,
-    **ROUND8_QUERIES,
-    **ROUND9_QUERIES,
-    **ROUND10_QUERIES,
-    **ROUND11_QUERIES,
-    **ROUND12_QUERIES,
-}.items():
-    ORACLES[_name] = _sql
-
-ORACLES.update(PIPELINE_ORACLES)
 
 QUERIES: dict[str, QueryFn] = {
     "s2_points_scan": q_s2_points_scan,
@@ -708,487 +691,67 @@ QUERIES: dict[str, QueryFn] = {
     "kmeans_mllib": q_kmeans_mllib,  # r4: quality-contract oracle (WSSSE floor vs Lloyd)
 }
 
-QUERIES.update({name: fn for name, (fn, _sql) in RELATIONAL_QUERIES.items()})
-QUERIES.update({name: fn for name, (fn, _sql) in TPCH_EXTRA_QUERIES.items()})
-QUERIES.update({name: fn for name, (fn, _sql) in CURATION_QUERIES.items()})
-QUERIES.update({name: fn for name, (fn, _sql) in ANALYTICS_QUERIES.items()})
-QUERIES.update({name: fn for name, (fn, _sql) in CORPUS_EXTRA_QUERIES.items()})
-QUERIES.update({name: fn for name, (fn, _sql) in SKETCH_QUERIES.items()})
-QUERIES.update({name: fn for name, (fn, _sql) in TRENDS_QUERIES.items()})
-QUERIES.update({name: fn for name, (fn, _sql) in STATS_EXTRA_QUERIES.items()})
-QUERIES.update({name: fn for name, (fn, _sql) in MINING_QUERIES.items()})
-QUERIES.update({name: fn for name, (fn, _sql) in ROUND7_QUERIES.items()})
-QUERIES.update({name: fn for name, (fn, _sql) in ROUND8_QUERIES.items()})
-QUERIES.update({name: fn for name, (fn, _sql) in ROUND9_QUERIES.items()})
-QUERIES.update({name: fn for name, (fn, _sql) in ROUND10_QUERIES.items()})
-QUERIES.update({name: fn for name, (fn, _sql) in ROUND11_QUERIES.items()})
-QUERIES.update({name: fn for name, (fn, _sql) in ROUND12_QUERIES.items()})
-QUERIES.update(RELATIONAL_ROWS_ONLY)
-QUERIES.update(CURATION_ROWS_ONLY)
-QUERIES.update(PIPELINE_QUERIES)
+# Every operator family registers (fn, oracle_sql) pairs; the pipeline
+# keeps its two halves in separate dicts, zipped here by name.
+for _family in (
+    RELATIONAL_QUERIES,
+    TPCH_EXTRA_QUERIES,
+    CURATION_QUERIES,
+    ANALYTICS_QUERIES,
+    CORPUS_EXTRA_QUERIES,
+    SKETCH_QUERIES,
+    TRENDS_QUERIES,
+    STATS_EXTRA_QUERIES,
+    MINING_QUERIES,
+    ROUND7_QUERIES,
+    ROUND8_QUERIES,
+    ROUND9_QUERIES,
+    ROUND10_QUERIES,
+    ROUND11_QUERIES,
+    ROUND12_QUERIES,
+    {n: (fn, PIPELINE_ORACLES[n]) for n, fn in PIPELINE_QUERIES.items()},
+):
+    for _name, (_fn, _sql) in _family.items():
+        QUERIES[_name] = _fn
+        ORACLES[_name] = _sql
 
 # ---------------------------------------------------------------- ordering
 #
-# The driver's correctness gate checks the FIRST 50 entries of queries()
-# in iteration order.  Round 1 verified the original first 50 (the
-# k-means parity core + the first relational block — all green, and all
-# still pinned by tests/test_oracle_parity.py).  To convert the rest of
-# the surface from builder-claimed to driver-proven, the window ROTATES:
-# every query that already has a green driver row (hash-match, or a
-# rows-only run for the declared no-oracle entries) moves to the back;
-# never-verified and previously-FAILED queries float to the front, in
-# the curated priority order below.  The verified set is derived from
-# the CORRECTNESS_r*.json artifacts on disk, so each new round's
-# results re-rotate the window automatically.
-
-# ---- THE schedule table: one edit point for window scheduling -------
-#
-# Each row is name -> {"front": bool, "stale_after": int | None}:
-#   front=True  : the query holds a curated slot in the unverified front;
-#                 curated order = insertion order of the front rows
-#                 (rounds 2 and 3 accreted three separate lists here —
-#                 folded in round 4, sequence preserved and pinned by
-#                 tests/test_plans.py::test_window_schedule_regression).
-#   stale_after : the last round whose green driver row verified an OLD
-#                 definition of this query; it counts as UNVERIFIED until
-#                 a green row from a later round re-proves the current
-#                 definition.  (Round 3: q8/q9 had fixture-mismatched
-#                 literals, q22's anti join was empty at every sf, the
-#                 embedding near-dup pair ran over a corpus with no
-#                 near-dup pairs — all hash-matched vacuously and were
-#                 rewritten; see the round-2 verdict.  Round 3 also
-#                 upgraded six rows-only entries to contract oracles.
-#                 Round 4 gave the flagship Lloyd loop and I1 full value
-#                 oracles, moved the store-backed dedup + its streaming
-#                 face onto the 3-table signature store, and bounded the
-#                 brute simhash oracle measure.)
-#
-# To schedule a query for re-verification in round N+1: add/update its
-# row with stale_after=N.  To curate its window position: front=True,
-# placed where it should run.  Unlisted queries schedule by registry
-# iteration order behind the curated front.
+# The driver's correctness gate checks the first 50 entries of queries().
+# So that every query keeps getting re-proven, the order is derived from
+# the CORRECTNESS_rNN.json artifacts next to the package: never-verified
+# queries first (registry order), then verified ones, oldest latest green
+# round first.  Each new round's artifact re-rotates the window.
 
 
-def _row(
-    front: bool = False, stale_after: int | None = None, defer: bool | int = False
-) -> dict:
-    """``defer`` is a GENERATION rank, not just a flag: False/0 = not
-    deferred, 1 (or True) = deferred one round ago, 2 = deferred this
-    round, ...  Older generations sort FIRST among the deferred tail so
-    a new round's late additions can never push a previous round's
-    still-unverified deferrals back out of the window."""
-    return {"front": front, "stale_after": stale_after, "defer": int(defer)}
-
-
-_SCHEDULE: dict[str, dict] = {
-    # -- curated front, tier 1 (the round-3 priority order) ------------
-    "q8_market_share": _row(front=True, stale_after=2),
-    "q9_product_profit": _row(front=True, stale_after=2),
-    "q22_idle_rich_customers": _row(front=True, stale_after=2),
-    "dedup_embedding_cosine": _row(front=True, stale_after=2),
-    "dedup_embedding_bucketed": _row(front=True, stale_after=2),
-    "s1_points_tsv_roundtrip": _row(front=True),
-    "s3_centroid_wire_roundtrip": _row(front=True),
-    "s6_final_output_roundtrip": _row(front=True),
-    "knn_signbit_lsh": _row(front=True),
-    "knn_pq": _row(front=True),
-    "knn_pq_rerank": _row(front=True),
-    "streaming_upsert_snapshot": _row(front=True),
-    "streaming_kmeans_foreachbatch": _row(front=True),
-    "streaming_ingest_dedup": _row(front=True, stale_after=3),
-    "streaming_kmeans_assign": _row(front=True),
-    "streaming_dedup_keys": _row(front=True),
-    "streaming_enrich_join": _row(front=True),
-    "streaming_session_windows": _row(front=True),
-    "dedup_incremental": _row(front=True),
-    "ingest_increment": _row(front=True),
-    "curate_corpus_full": _row(front=True),
-    "dedup_survivors": _row(front=True),
-    "dedup_semantic_cells": _row(front=True),
-    "knn_lsh": _row(front=True),
-    "knn_ivf": _row(front=True),
-    "knn_mllib_lsh": _row(front=True),
-    "neardup_mllib_minhash": _row(front=True),
-    "dedup_incremental_stored": _row(front=True, stale_after=3),
-    "embedding_truncate_renorm": _row(front=True),
-    # -- curated front, tier 2 (the round-2 window, minus the names
-    #    already holding a tier-1 slot; Q11 is fixture-impossible: no
-    #    partsupp — see README) --------------------------------------
-    "q1_pricing_summary": _row(front=True),
-    "q2_min_cost_supplier": _row(front=True),
-    "q3_top_revenue_orders": _row(front=True),
-    "q4_priority_late_ships": _row(front=True),
-    "q5_nation_revenue": _row(front=True),
-    "q6_forecast_revenue": _row(front=True),
-    "q7_volume_shipping": _row(front=True),
-    "q10_returned_items": _row(front=True),
-    "q12_priority_shipping": _row(front=True),
-    "q13_order_count_distribution": _row(front=True),
-    "q14_promo_revenue": _row(front=True),
-    "q15_top_supplier": _row(front=True),
-    "q16_supplier_part_counts": _row(front=True),
-    "q18_large_volume_customers": _row(front=True),
-    "q19_disjunctive_revenue": _row(front=True),
-    "q20_promo_part_suppliers": _row(front=True),
-    "q21_sole_late_suppliers": _row(front=True),
-    "dedup_exact": _row(front=True),
-    "dedup_ngram_jaccard": _row(front=True),
-    "dedup_ngram_jaccard_capped": _row(front=True),
-    "dedup_minhash_lsh": _row(front=True),
-    "dedup_minhash_verified": _row(front=True),
-    "dedup_simhash_pairs": _row(front=True, stale_after=3),
-    "dedup_simhash_banded": _row(front=True),
-    "dedup_components": _row(front=True),
-    "text_token_counts": _row(front=True),
-    "text_quality_scores": _row(front=True),
-    "text_lang_id": _row(front=True),
-    "text_fingerprints": _row(front=True),
-    "text_simhash": _row(front=True),
-    "knn_bruteforce": _row(front=True),
-    "quantize_embeddings": _row(front=True),
-    "tfidf_top_terms": _row(front=True),
-    "decontaminate_corpus": _row(front=True),
-    "leakage_audit": _row(front=True),
-    "pack_sequences": _row(front=True),
-    "split_train_val": _row(front=True),
-    "mix_sources_weighted": _row(front=True),
-    "temperature_sample_langs": _row(front=True),
-    "quota_per_source": _row(front=True),
-    "scrub_event_props": _row(front=True),
-    "streaming_window_stats": _row(front=True),
-    "streaming_stateful_totals": _row(front=True),
-    "streaming_interval_join": _row(front=True),
-    "pca_project": _row(front=True, stale_after=3),
-    # -- uncurated stale re-verifies (schedule with the registry-order
-    #    remainder; the rest-tier sort sends stale-greens behind
-    #    never-verified oracle entries, whose old rows at least proved
-    #    execution) ---------------------------------------------------
-    "hll_users_daily": _row(stale_after=2),
-    "stratified_sample_langs": _row(stale_after=2),
-    "quality_classifier": _row(stale_after=2),
-    "approx_top_terms": _row(stale_after=2),
-    "approx_distinct_parts": _row(stale_after=2),
-    "approx_percentile_values": _row(stale_after=2),
-    "window_rank_metrics": _row(stale_after=3),
-    "kmeans_mllib": _row(stale_after=3),
-    "kmeans_lloyd": _row(stale_after=3),
-    # -- round-4c additions, deferred during round 4 and PROMOTED to
-    #    the round-5 window (the flush the round-4 verdict mandated):
-    #    with the r3 dark set and the stale redefinitions all green in
-    #    CORRECTNESS_r04, these 44 unverified entries plus the 6 new
-    #    round-5 queries fill the 50-slot window exactly -------------
-    "retention_cohorts": _row(front=True),
-    # round-9 redefinition (prefix-sum ntile): stale_after merged IN
-    # PLACE — a duplicate dict key would silently drop front=True
-    "rfm_segments": _row(front=True, stale_after=8),
-    "vocab_coverage": _row(front=True),
-    "source_lang_entropy": _row(front=True),
-    "quality_percentile_gate": _row(front=True),
-    "market_basket_pairs": _row(front=True),
-    "event_transition_matrix": _row(front=True),
-    "dau_wau_mau": _row(front=True),
-    "pagerank_copurchase": _row(front=True),
-    "bm25_search": _row(front=True),
-    "hybrid_retrieval": _row(front=True),
-    "i1_init_random": _row(stale_after=3),
-    # -- round-4d additions (statistics + graph analytics), likewise
-    #    promoted into the round-5 window --------------------------
-    "corr_matrix_lineitem": _row(front=True),
-    "ols_price_model": _row(front=True),
-    "chi2_event_dow": _row(front=True),
-    "skew_report_orders": _row(front=True),
-    "pareto_front_parts": _row(front=True),
-    "triangle_count_parts": _row(front=True),
-    "copurchase_degree_hist": _row(front=True),
-    "label_prop_communities": _row(front=True),
-    "curriculum_schedule": _row(front=True),
-    "perplexity_buckets": _row(front=True),
-    "repeated_ngram_spans": _row(front=True),
-    "mad_outlier_docs": _row(front=True),
-    "dedup_rate_by_source": _row(front=True),
-    "pmi_bigrams": _row(front=True),
-    "quality_length_slopes": _row(front=True),
-    "ab_conversion_lift": _row(front=True),
-    "dedup_prefix_filter": _row(front=True),
-    "silhouette_by_cluster": _row(front=True),
-    "cms_event_counts": _row(front=True),
-    "bloom_membership_audit": _row(front=True),
-    "dq_expectations": _row(front=True),
-    "bfs_levels": _row(front=True),
-    "streaming_cms_counts": _row(front=True),
-    "auc_quality_vs_gopher": _row(front=True),
-    "classifier_calibration": _row(front=True),
-    "merge_apply_changelog": _row(front=True),
-    "anova_event_values": _row(front=True),
-    "spearman_quality_logprob": _row(front=True),
-    "ks_quality_halves": _row(front=True),
-    "mi_lang_source_cells": _row(front=True),
-    "shortest_paths_weighted": _row(front=True),
-    "streaming_bloom_bits": _row(front=True),
-    "kcore_membership": _row(front=True),
-    "interarrival_stats": _row(front=True),
-    # -- round-5 additions beyond the 6 window slots, deferred to the
-    #    round-6 window (the same trade round 4 made: the 44 promoted
-    #    entries must keep their slots this round) -------------------
-    "hll_portable_registers": _row(defer=True),
-    "streaming_hll_merge": _row(defer=True),
-    "ipf_raking": _row(defer=True),
-    "holt_linear_daily": _row(defer=True),
-    "recursive_cte_bfs": _row(defer=True),
-    "lateral_top2_lineitems": _row(defer=True),
-    "power_iteration_pc1": _row(defer=True),
-    "pipe_syntax_priority_revenue": _row(defer=True),
-    "neighbor_jaccard_edges": _row(defer=True),
-    "multimodal_decode_real": _row(defer=True),
-    "webdataset_tar_scan": _row(defer=True),
-    "wav_frame_energy": _row(defer=True),
-    "median_polish_cells": _row(defer=True),
-    "streaming_merge_changelog": _row(defer=True),
-    "conformal_quality_floor": _row(defer=True),
-    "quantile_normalize_scores": _row(defer=True),
-    "kneser_ney_bigrams": _row(defer=True),
-    "vocab_richness_stats": _row(defer=True),
-    "good_turing_counts": _row(defer=True),
-    "zipf_slope_fit": _row(defer=True, stale_after=8),  # round-9 redefinition
-    "js_divergence_langs": _row(defer=True),
-    "vocab_growth_curve": _row(defer=True),
-    "umass_topic_coherence": _row(defer=True, stale_after=8),  # round-9 redefinition
-    "bootstrap_ci_quality": _row(defer=True),
-    # round 6 changed cusum's rounding from round(x,6) to the
-    # tie-stable floor form (ADVICE item) — its r05 green row verified
-    # the OLD definition, so it must re-earn a driver row.
-    "cusum_changepoints": _row(stale_after=5),
-    # -- round-6 additions beyond the 50 window slots (the window is
-    # exactly full: 21 early-r6 + 5 late-r6 + 24 deferred r5 rows),
-    # deferred to the round-7 window; all locally oracle-verified at
-    # sf0.001/0.01/0.1.
-    "benford_totalprice": _row(defer=2),
-    "burstiness_events": _row(defer=2),
-    "streaming_kmv_merge": _row(defer=2),
-    "graph_assortativity": _row(defer=2),
-    "mattr_docs": _row(defer=2),
-    "negative_sampling_pairs": _row(defer=2),
-    "hilbert_vs_zorder_locality": _row(defer=2),
-    "kaplan_meier_retention": _row(defer=2),
-    "dp_noisy_lang_counts": _row(defer=2),
-    "ridge_price_model": _row(defer=2),
-    "logistic_newton_step": _row(defer=2),
-    "cronbach_alpha_items": _row(defer=2),
-    "exact_percentiles_values": _row(defer=2),
-    "anova_two_way": _row(defer=2),
-    "pagerank_personalized": _row(defer=2),
-    "streaming_outer_interval_join": _row(defer=2),
-    # -- round-7 additions: defer=3 (a NEWER generation than the 17
-    # inherited never-verified entries) so they enter the window only
-    # BEHIND them — the r6 directive that nothing may displace the
-    # head.  All locally oracle-verified at sf0.001/0.01/0.1.
-    "power_iteration_pc1_float": _row(defer=3),
-    "gini_spend_nations": _row(defer=3),
-    "cramers_v_event_dow": _row(defer=3),
-    "mom_revenue_change": _row(defer=3),
-    "simpson_diversity_sources": _row(defer=3),
-    "cond_entropy_transitions": _row(defer=3),
-    "stupid_backoff_trigrams": _row(defer=3),
-    "importance_weights_mixture": _row(defer=3),
-    "decision_stump_quality": _row(defer=3),
-    "adamic_adar_links": _row(defer=3),
-    "clustering_coefficient_nodes": _row(defer=3),
-    "levene_value_groups": _row(defer=3),
-    "wav_frame_zero_crossings": _row(defer=3),
-    "bmp_channel_histogram": _row(defer=3),
-    "streaming_topk_users": _row(defer=3),
-    "holm_bonferroni_nation_acctbal": _row(defer=3),
-    "haar_wavelet_daily": _row(defer=3),
-    "relational_division_priorities": _row(defer=3),
-    "friedman_event_dow": _row(defer=3),
-    "mcnemar_gates": _row(defer=3),
-    "png_decode_stats": _row(defer=3),
-    # -- round-8 additions: defer=4 (a NEWER generation than everything
-    # before, though with the never-verified queue at ZERO after
-    # CORRECTNESS_r07 these 11 headed the round-8 window directly; the
-    # other 39 slots recycled the 35 r01 + 4 oldest r02 greens — the
-    # staleness drain the round-7 verdict mandated).  Page/Theil
-    # re-land from commit 8aa4c28.  All locally oracle-verified at
-    # sf0.001/0.01/0.1.
-    "theil_u_lang_source": _row(defer=4),
-    # round-10 redefinition: midrank tie-corrected variance replaces the
-    # documented no-tie z (round-9 verdict item 6) — HASH CHANGES, so
-    # the r04 green proved the old statistic; re-verify the new one
-    # (the round's ONE hash-changing entry: window budget <= 5 keeps
-    # >= 45 slots draining the r03/r04 cohort)
-    "page_trend_event_dow": _row(defer=4, stale_after=9),
-    "mann_kendall_daily": _row(defer=4),
-    "ljung_box_daily": _row(defer=4),
-    "permutation_entropy_daily": _row(defer=4),
-    "lorenz_spend_deciles": _row(defer=4),
-    "log_odds_terms_langs": _row(defer=4),
-    "kendall_tau_grid_qty_disc": _row(defer=4),
-    "hypergeom_enrichment_sources": _row(defer=4),
-    "gif_decode_stats": _row(defer=4),
-    "jpeg_decode_stats": _row(defer=4),
-    # -- round-9 redefinitions: the six global-window queries rebuilt
-    # on prefix_sum / top-k-then-rank (round-8 verdict items 2/3/6).
-    # Hashes verified unchanged locally at sf0.001/0.01/0.1, but the
-    # old driver greens proved the OLD plans — re-verify the new ones.
-    # (rfm_segments / umass_topic_coherence / zipf_slope_fit carry their
-    # stale_after=8 on their ORIGINAL rows above — a second dict key here
-    # would silently override the earlier row and drop its front/defer.)
-    "mannwhitney_value_groups": _row(stale_after=8),
-    "mood_median_test": _row(stale_after=8),
-    "pr_curve_quality": _row(stale_after=8),
-    # the plan-sweep test surfaced a seventh fact-grain global window
-    # the verdict missed: ntile(64) over raw lineitem
-    "zonemap_prune_audit": _row(stale_after=8),
-    # -- round-9 additions: defer=5 (capped at TWO new entries so the
-    # window drains the r02/r03 stale-green cohort — verdict item 1:
-    # 7 redefinitions + 2 new entries leave 41 slots for the recycle,
-    # still above the >= 40 bar).  Locally oracle-verified at
-    # sf0.001/0.01/0.1.
-    "mp4_container_stats": _row(defer=5),
-    "fmp4_fragment_stats": _row(defer=5),
-    # -- round-10 additions: defer=6 (budget: these three new entries +
-    # the page_trend_event_dow stale_after=9 redefinition above are the
-    # round's ONLY window-head charges — 4 of the <= 5 cap, leaving
-    # 46 slots to drain the r03/r04 cohort per round-9 verdict item 1).
-    # Locally oracle-verified at sf0.001/0.01/0.1.
-    "mkv_container_stats": _row(defer=6),
-    "dedup_edit_distance": _row(defer=6),
-    "ogg_container_stats": _row(defer=6),
-    # -- round-11 additions (verdict items 3 and 5: the LSH→levenshtein
-    # composition of the edit-distance tier, plus the whole ingest
-    # archive tier — ZIP with the reflected CRC-32, multi-member gzip
-    # with verified trailers, the .warc.gz record layer whose oracle
-    # reads the REAL table, and POSIX ustar with verified header
-    # checksums — the round's window-head charges, exactly the <= 5
-    # cap, leaving 45 drain slots for the r04/r05 cohort).  Locally
-    # oracle-verified at sf0.001/0.01/0.1.
-    "dedup_edit_verified": _row(defer=7),
-    "zip_container_stats": _row(defer=7),
-    "gzip_member_stats": _row(defer=7),
-    "warc_ingest_stats": _row(defer=7),
-    "tar_archive_stats": _row(defer=7),
-    # -- round-12 additions (verdict items 2-5: the Ogg codec-id layer
-    # — OpusHead/Vorbis identification headers inside BOS packets, the
-    # WET conversion-record shape, the file-based .warc.gz shard
-    # DataSource on the tar_shards pattern, and the survivor-selecting
-    # composition of the edit-distance dedup tier — the round's
-    # window-head charges, 4 of the <= 5 cap, leaving 46 drain slots
-    # for the r06 cohort).  Locally oracle-verified at
-    # sf0.001/0.01/0.1.
-    "ogg_codec_id_stats": _row(defer=8),
-    "warc_wet_stats": _row(defer=8),
-    "warc_shard_scan": _row(defer=8),
-    "dedup_edit_components": _row(defer=8),
-}
-
-
-def _driver_verified_names() -> frozenset[str]:
-    """Names with a green driver row in ANY round's CORRECTNESS file:
+def latest_green_rounds(root: str) -> dict[str, int]:
+    """name -> latest round NN whose CORRECTNESS_rNN.json row is green:
     hash_match=True, or a completed rows-only run (err='no_oracle' with
-    a row count) for entries that declare no oracle.  Failed or errored
-    entries do NOT count — they stay in the front window for a retry."""
-    import glob
-    import json
-    import os
-
-    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-    green: set[str] = set()
-    for path in sorted(glob.glob(os.path.join(root, "CORRECTNESS_r*.json"))):
-        try:
-            with open(path) as f:
-                rows = json.load(f)
-        except (OSError, ValueError):
-            continue
-        for name, row in rows.items():
-            if not isinstance(row, dict):
-                continue
-            if row.get("hash_match") is True:
-                green.add(name)
-            elif row.get("err") == "no_oracle" and row.get("spark_rows") is not None:
-                green.add(name)
-    return frozenset(green)
-
-
-def _assert_known(names, label: str) -> None:
-    """A typo'd name would silently lose its front-window slot (the
-    window filter drops unknown names without error) — fail loudly
-    instead."""
-    missing = [n for n in names if n not in QUERIES]
-    assert not missing, f"{label} names absent from registry: {missing}"
-
-
-_assert_known(_SCHEDULE, "_SCHEDULE")
-
-_verified = _driver_verified_names()
-
-
-def _round_of(path: str) -> int:
-    import re
-
-    m = re.search(r"CORRECTNESS_r(\d+)", path)
-    return int(m.group(1)) if m else 0
-
-
-def _greens_by_round() -> dict[str, int]:
-    """name -> latest round with a green row for it."""
-    import glob
-    import json
-    import os
-
-    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    a row count).  Failed or errored rows do not count; an unreadable
+    artifact is skipped."""
     latest: dict[str, int] = {}
-    for path in sorted(glob.glob(os.path.join(root, "CORRECTNESS_r*.json"))):
-        rnd = _round_of(path)
+    for path in glob.glob(os.path.join(root, "CORRECTNESS_r*.json")):
+        m = re.fullmatch(r"CORRECTNESS_r(\d+)\.json", os.path.basename(path))
+        if not m:
+            continue
         try:
             with open(path) as f:
                 rows = json.load(f)
         except (OSError, ValueError):
             continue
         for name, row in rows.items():
-            if not isinstance(row, dict):
-                continue
-            ok = row.get("hash_match") is True or (
-                row.get("err") == "no_oracle" and row.get("spark_rows") is not None
-            )
-            if ok:
-                latest[name] = max(latest.get(name, 0), rnd)
+            if isinstance(row, dict) and (
+                row.get("hash_match") is True
+                or (row.get("err") == "no_oracle" and row.get("spark_rows") is not None)
+            ):
+                latest[name] = max(latest.get(name, 0), int(m.group(1)))
     return latest
 
 
-_latest_green = _greens_by_round()
-# stale greens verified an OLD definition — treat as unverified until a
-# round AFTER stale_after lands a green row for the new definition
-_stale = {
-    n
-    for n, row in _SCHEDULE.items()
-    if row["stale_after"] is not None and _latest_green.get(n, 0) <= row["stale_after"]
-}
-_verified = frozenset(_verified - _stale)
+def window_order(names, latest_green: dict[str, int]) -> list[str]:
+    """Stable sort on the latest green round (0 = never verified)."""
+    return sorted(names, key=lambda n: latest_green.get(n, 0))
 
-_front = [n for n, row in _SCHEDULE.items() if row["front"] and n not in _verified]
-_rest = [n for n in QUERIES if n not in _front and n not in _verified]
-# Ordering within each tier: oracle-backed before rows-only (a window
-# slot spent on a rows-only entry buys the weaker check), and among the
-# oracle-backed, NEVER-verified entries before stale-green re-verifies
-# whose old rows at least proved execution.  The sort is stable, so the
-# curated order above survives within each bucket.
-_defer_rank = {n: int(row.get("defer") or 0) for n, row in _SCHEDULE.items()}
-_front.sort(key=lambda n: n not in ORACLES)
-# rest tier: deferred entries last (they cede their round-4 slot to
-# stale redefinitions), then oracle-backed before rows-only, then
-# never-verified before stale re-verifies
-_rest.sort(
-    key=lambda n: (_defer_rank.get(n, 0), n not in ORACLES, n in _stale)
-)
-_back = [n for n in QUERIES if n in _verified]
-# Staleness cadence (round-5 verdict item 8 / round-6 directive 4): the
-# verified tier is ordered OLDEST green round first, so whatever window
-# slots remain after the never-verified head recycle the longest-
-# unre-verified rows each round.  With W = 50 slots and U unverified
-# entries heading the window, every round re-proves the (W - U) stalest
-# greens; the stable sort keeps registry order within a round cohort, so
-# the recycle walks each cohort deterministically front-to-back and the
-# max staleness of any green row is bounded by ceil(|registry| / (W - U))
-# rounds rather than unbounded.
-_back.sort(key=lambda n: _latest_green.get(n, 0))
-QUERIES = {n: QUERIES[n] for n in (*_front, *_rest, *_back)}
+
+_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+QUERIES = {n: QUERIES[n] for n in window_order(QUERIES, latest_green_rounds(_ROOT))}

@@ -12,6 +12,10 @@ from k_means_hadoop_spark.session import get_spark
 SF_DIR = os.environ.get("SPARK_GRAFT_TEST_SF_DIR", "/root/testdata/sf0.001")
 
 
+def pytest_configure(config):
+    config.addinivalue_line("markers", "slow: full-registry sweep, opt-in via SPARK_GRAFT_SLOW=1")
+
+
 @pytest.fixture(scope="session")
 def spark():
     s = get_spark("k_means_hadoop_spark-tests")

@@ -1,9 +1,6 @@
-"""Pins for the four round-8 ADVICE items (ADVICE.md, round 8):
+"""Pins for the round-8 ADVICE items (ADVICE.md, round 8).  Item 1, a
+registry scheduling comment, went with the scheduling table itself.
 
-1. registry.py's round-8 schedule comment claimed '10 head the window /
-   40 recycled slots' while 11 defer=4 entries were added.  Fix: the
-   comment states 11 entries / 39 recycled; pinned textually against
-   the actual defer=4 count so the arithmetic can't drift again.
 2. hypergeom_enrichment_sources guarded only the corpus-level gate
    (0 < K < N); a single-source corpus makes the variance factor
    (N - ns) zero and every z = 0/0 NaN — identical on both engines, so
@@ -19,33 +16,9 @@
 
 from __future__ import annotations
 
-import os
-import re
-
 import numpy as np
 import pandas as pd
 import pytest
-
-_REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-
-
-def test_registry_schedule_comment_matches_defer4_count():
-    """ADVICE 1: the round-8 window comment must state the real split."""
-    import k_means_hadoop_spark.registry as registry
-
-    n_r8 = sum(
-        1 for row in registry._SCHEDULE.values() if row.get("defer") == 4
-    )
-    assert n_r8 == 11, f"defer=4 generation changed size: {n_r8}"
-    src = open(os.path.join(_REPO, "k_means_hadoop_spark", "registry.py")).read()
-    m = re.search(r"these (\d+) headed the round-8 window", src)
-    assert m and int(m.group(1)) == n_r8, (
-        "round-8 schedule comment disagrees with the defer=4 count"
-    )
-    m = re.search(r"other (\d+) slots recycled", src)
-    assert m and int(m.group(1)) == 50 - n_r8, (
-        "recycled-slot arithmetic in the round-8 comment is off"
-    )
 
 
 def _docs_parquet(tmp_path, sources):

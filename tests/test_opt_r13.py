@@ -62,6 +62,21 @@ def test_truncate_lineage_reliable_escape_hatch(spark, tmp_path, monkeypatch):
     assert n_after > n_before
 
 
+def test_truncate_lineage_env_dir_wins_over_earlier_dir(spark, tmp_path, monkeypatch):
+    """A checkpoint dir already set on the context (another caller, an
+    earlier test) must not capture the reliable checkpoints: they land
+    under SPARK_GRAFT_CHECKPOINT_DIR, and repeated calls reuse the one
+    <uuid> dir setCheckpointDir made there."""
+    other, ckpt = tmp_path / "other", tmp_path / "env"
+    spark.sparkContext.setCheckpointDir(str(other))
+    monkeypatch.setenv("SPARK_GRAFT_CHECKPOINT_DIR", str(ckpt))
+    assert truncate_lineage(spark.range(20)).count() == 20
+    assert truncate_lineage(spark.range(5)).count() == 5
+    assert not [f for _, _, fs in os.walk(other) for f in fs]
+    assert [f for _, _, fs in os.walk(ckpt) for f in fs]
+    assert len(os.listdir(ckpt)) == 1
+
+
 def test_prefix_sum_identical_under_reliable_checkpoint(spark, tmp_path, monkeypatch):
     """prefix_sum's pinned-assignment correctness holds through the
     reliable-checkpoint route: same cumulative sums as the default."""

@@ -754,67 +754,63 @@ def test_holt_is_two_aggregations_no_join(plans):
     assert p.count("Exchange") <= 4
 
 
-def test_window_schedule_regression():
-    """The round-4 consolidation of the three rotation lists into the
-    single _SCHEDULE table must be behavior-preserving: given the
-    round-1..3 artifacts on disk, the derived window front is exactly
-    the sequence the old three-list mechanism produced (captured live
-    before the refactor).  Pinned against the r01-r03 artifact set; a
-    later round's new CORRECTNESS file legitimately re-rotates the
-    window, so the sequence check is scoped to that artifact set."""
-    import glob
+def _repo_greens() -> dict[str, int]:
     import os
 
-    from k_means_hadoop_spark import registry
-
-    names = list(registry.QUERIES)
-    # structural invariants that hold in EVERY round:
-    front_len = len(names) - len([n for n in names if n in registry._verified])
-    unverified, verified = names[:front_len], names[front_len:]
-    assert all(n in registry._verified for n in verified)
-    assert not any(n in registry._verified for n in unverified)
-    # stale-marked entries count as unverified until re-proven
-    for n in registry._stale:
-        assert n in unverified, f"stale {n} rotated back without re-verification"
-
     root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-    arts = sorted(
-        os.path.basename(p) for p in glob.glob(os.path.join(root, "CORRECTNESS_r*.json"))
-    )
-    if arts != ["CORRECTNESS_r01.json", "CORRECTNESS_r02.json", "CORRECTNESS_r03.json"]:
-        return  # a later round re-rotates; the invariants above still ran
-    # The r4 additions interleave into the unverified rest-tier by
-    # registry iteration order; the 30 pre-r4 unverified names keep
-    # their relative order (the behavior-preservation claim of the
-    # _SCHEDULE consolidation, re-scoped to a subsequence check when
-    # new round-4 queries joined the window).
-    pre_r4 = [
-        "streaming_ingest_dedup", "dedup_incremental_stored", "dedup_simhash_pairs",
-        "dataset_card", "bpe_train_merges", "bpe_compression", "tokenizer_fit_bigrams",
-        "text_repetition_scores", "text_unigram_logprob", "chunk_documents",
-        "prepare_corpus", "multimodal_decode", "docs_jsonl_roundtrip",
-        "schema_evolution_merge", "lineitem_csv_roundtrip", "multimodal_frame_sample",
-        "python_datasource_scan", "udtf_tokenize", "multimodal_arrow_stats",
-        "top_terms_corpus", "unpivot_quality_metrics", "kmeans_lloyd",
-        "i1_init_random", "approx_distinct_parts", "approx_percentile_values",
-        "hll_users_daily", "stratified_sample_langs", "quality_classifier",
-        "approx_top_terms", "streaming_tws_user_stats",
-    ]
-    got = [n for n in names[:front_len] if n in pre_r4]
-    assert got == pre_r4
-    # every NON-DEFERRED unverified entry — in particular every stale
-    # redefinition — fits the 50-slot driver window; entries marked
-    # defer=True deliberately cede their slot to the next round
-    deferred = {n for n, row in registry._SCHEDULE.items() if row.get("defer")}
-    n_window = len([n for n in names[:front_len] if n not in deferred])
-    assert n_window <= 50, n_window
-    for n in registry._stale:
-        assert names.index(n) < 50, f"stale {n} fell outside the driver window"
+    return registry.latest_green_rounds(root)
+
+
+def test_window_schedule_regression():
+    """queries() is the ordering rule applied to the artifacts on disk:
+    the key set is the oracle set, and the order is a fixed point of the
+    never-verified-first, oldest-green-next sort."""
+    names = list(registry.QUERIES)
+    assert set(names) == set(registry.ORACLES)
+    assert registry.window_order(names, _repo_greens()) == names
+
+
+def test_window_order_rule_synthetic():
+    """The rule on a synthetic green map: never-verified names head the
+    list in registry order, then verified ones oldest green first, ties
+    in registry order."""
+    names = ["a", "b", "c", "d", "e", "f"]
+    green = {"a": 3, "c": 1, "e": 3, "f": 2, "zz": 1}
+    assert registry.window_order(names, green) == ["b", "d", "c", "f", "a", "e"]
+    assert registry.window_order(names, {}) == names
+
+
+def test_latest_green_rounds_scan(tmp_path):
+    """One scan of CORRECTNESS_rNN.json: hash matches and completed
+    rows-only runs are green, failures are not, the latest round wins,
+    and an unreadable or misnamed artifact is skipped."""
+    import json
+
+    def art(name, rows):
+        (tmp_path / name).write_text(json.dumps(rows))
+
+    art("CORRECTNESS_r01.json", {
+        "old": {"hash_match": True},
+        "rows_only": {"err": "no_oracle", "spark_rows": 4},
+        "later_failed": {"hash_match": True},
+        "note": "not a row",
+    })
+    art("CORRECTNESS_r03.json", {
+        "old": {"hash_match": True},
+        "later_failed": {"hash_match": False, "err": "hash"},
+        "crashed": {"err": "no_oracle", "spark_rows": None},
+    })
+    (tmp_path / "CORRECTNESS_r04.json").write_text("{truncated")
+    art("CORRECTNESS_r05_draft.json", {"old": {"hash_match": True}})
+    assert registry.latest_green_rounds(str(tmp_path)) == {
+        "old": 3,
+        "rows_only": 1,
+        "later_failed": 1,
+    }
 
 
 def test_window_staleness_sweep():
-    """Round-7 staleness cadence (r5 verdict item 8, r6 directive 4):
-    the verified tier is ordered oldest-green-round first, so the
+    """The verified tier is ordered oldest-green-round first, so the
     window's leftover slots re-verify the stalest rows every round.
 
     Invariants:
@@ -823,27 +819,20 @@ def test_window_staleness_sweep():
          (no fresher green precedes a staler one into the window);
       3. bounded max staleness: with U = unverified head size < 50,
          each round recycles 50 - U greens, so a full pass over G
-         greens takes ceil(G / (50 - U)) rounds — finite, and with the
-         current registry shape (U from the schedule, G the green set)
-         the bound stays under 25 rounds.
+         greens takes ceil(G / (50 - U)) rounds.
     """
     import math
 
-    from k_means_hadoop_spark import registry
-
     names = list(registry.QUERIES)
-    verified = [n for n in names if n in registry._verified]
-    rounds = [registry._latest_green.get(n, 0) for n in verified]
+    green = _repo_greens()
+    verified = [n for n in names if green.get(n, 0) > 0]
+    rounds = [green[n] for n in verified]
     assert rounds == sorted(rounds), "verified tier not oldest-first"
     unverified_head = len(names) - len(verified)
-    window_greens = [n for n in names[:50] if n in registry._verified]
+    window_greens = [n for n in names[:50] if green.get(n, 0) > 0]
     if window_greens:
-        newest_in_window = max(
-            registry._latest_green.get(n, 0) for n in window_greens
-        )
-        outside = [
-            registry._latest_green.get(n, 0) for n in names[50:] if n in registry._verified
-        ]
+        newest_in_window = max(green[n] for n in window_greens)
+        outside = [green[n] for n in names[50:] if green.get(n, 0) > 0]
         assert all(r >= newest_in_window for r in outside), (
             "a staler green sits outside the window while a fresher one "
             "occupies a recycle slot"
@@ -851,18 +840,14 @@ def test_window_staleness_sweep():
     if unverified_head < 50:
         per_round = 50 - unverified_head
         bound = math.ceil(len(verified) / per_round)
-        # Round-8 tightening (r7 verdict item 1): with the
-        # never-verified queue drained to zero in CORRECTNESS_r07, the
-        # instantaneous bound must stay single-digit even mid-round
-        # (new defer=4 entries temporarily shrink the recycle share)...
         assert bound <= 9, (
             f"max-staleness bound {bound} rounds — registry grew past "
             "what the recycle cadence can re-verify; widen the window "
             "share or prune"
         )
-    # ...and the STEADY-STATE bound — the full-registry sweep cadence
-    # once the current additions earn their green rows (U returns to 0,
-    # all 50 slots recycle) — must stay within one sweep per ~7 rounds.
+    # the steady-state bound — the full-registry sweep cadence once
+    # every entry holds a green row (all 50 slots recycle) — must stay
+    # within one sweep per ~7 rounds.
     steady = math.ceil(len(names) / 50)
     assert steady <= 7, (
         f"steady-state sweep bound {steady} rounds — cap registry "
