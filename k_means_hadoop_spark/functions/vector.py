@@ -43,8 +43,8 @@ def squared_distance_unrolled(a_ref: str, b_ref: str, d: int) -> Column:
     measured 2.7× faster at d=64, bit-identical decimal sums).
 
     Bit-exact vs the fold: same left-associative index-order summation,
-    and ``0.0 + t0 == t0`` for the non-negative first term — the same
-    equivalence ``assign.nearest_centroid_sql(unroll=True)`` pins.
+    and ``0.0 + t0 == t0`` for the non-negative first term, pinned
+    bit-for-bit in ``tests/test_opt_r12.py``.
 
     ``a_ref``/``b_ref`` are SQL column references (e.g. ``a.features``);
     use when d is known at build time WITHOUT an extra scan — e.g. from

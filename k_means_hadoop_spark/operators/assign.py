@@ -6,15 +6,15 @@ with the k-centroid table held in mapper memory, KMeans.java:36,40-74,
 
 Two Spark-first realizations, both pure Catalyst expressions:
 
-``assign_expr``  — the 100 TB path.  The k×d centroid table is folded
-    into the plan as a literal ARRAY<STRUCT<cluster,centroid>> and the
-    argmin is a single projection: **zero shuffle, zero join**, one
-    narrow map over the points (HOF-interpreted by default, or fully
-    whole-stage-codegen'd via ``unroll=True`` — see
-    ``nearest_centroid_sql`` for the compile-cost trade).  This is
-    strictly better than a broadcast join (no build-side hashing, no
-    stream-side probe) and is exactly what the reference's in-mapper
-    centroid cache approximates.
+``assign_expr``  — the 100 TB path, and the one assignment expression
+    of the Lloyd loop, the streaming assigner and every query built on
+    them.  The k×d centroid table is folded into the plan as a literal
+    ARRAY<STRUCT<cluster,centroid>> and the argmin is a single
+    projection: **zero shuffle, zero join**, one narrow map over the
+    points (see ``nearest_centroid_sql``).  This is strictly better than
+    a broadcast join (no build-side hashing, no stream-side probe) and
+    is exactly what the reference's in-mapper centroid cache
+    approximates.
 
 ``assign_join``  — the general path when centroids are a DataFrame
     (e.g. produced by an upstream query): ``crossJoin(F.broadcast(...))``
@@ -31,7 +31,7 @@ from __future__ import annotations
 
 from collections.abc import Sequence
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from k_means_hadoop_spark.functions.vector import squared_distance
@@ -64,86 +64,29 @@ def _centroid_literal_sql(centroids: Centroids) -> str:
     return f"array({entries})"
 
 
-def _centroid_literal(centroids: Centroids) -> Column:
-    """``_centroid_literal_sql`` parsed JVM-side in ONE call:
-    constructing k×d literals through the Column API costs hundreds of
-    Py4J round-trips per call, which dominated the per-iteration
-    wall-clock of the Lloyd loop (~1.4 s/iter of pure driver overhead
-    at k=8, d=64)."""
-    return F.expr(_centroid_literal_sql(centroids))
-
-
-def nearest_centroid_sql(features_sql: str, centroids: Centroids, unroll: bool = False) -> str:
+def nearest_centroid_sql(features_sql: str, centroids: Centroids) -> str:
     """``array_min`` argmin over STRUCT(sqdist, cluster) as ONE SQL
-    string, parsed JVM-side in one call — the Column-API form this
-    replaced built hundreds of Column objects per invocation
-    (~0.26 s of pure Py4J overhead at k=8, d=64).
+    string, parsed JVM-side in one call — building the k×d literals
+    through the Column API cost hundreds of Py4J round-trips per call
+    (~1.4 s per Lloyd iteration of pure driver overhead at k=8, d=64).
 
-    Two executor-side realizations with IDENTICAL values (same
-    left-associative index-order summation; ``0.0 + t0 == t0`` for the
-    non-negative first term), so every distance, tie break, and
-    convergence decision matches to the last bit:
-
-    - ``unroll=True`` — per-centroid squared distances as plain
-      arithmetic chains.  ``transform``/``aggregate`` lambdas don't
-      support codegen, so this is the only form whose n·k·d hot loop
-      runs inside whole-stage codegen — the right choice whenever the
-      plan is compiled ONCE and scanned at scale (one-shot assignment
-      over a large table).  Cost: Janino must compile the k×d-term
-      expression (~1.3 s at k=8, d=64), re-paid every time the
-      centroid literals change.
-    - ``unroll=False`` — the HOF form (``transform`` over the centroid
-      array, ``aggregate``-fold distance).  CodegenFallback: the hot
-      loop is interpreted, but NOTHING is recompiled when the literals
-      change — the right choice inside the Lloyd loop, where every
-      iteration produces a fresh centroid table and a per-iteration
-      Janino compile would dominate (measured 3×) the iteration.
+    The HOF form (``transform`` over the centroid array,
+    ``aggregate``-fold distance) is CodegenFallback, so the hot loop is
+    interpreted, but nothing is recompiled when the literals change.  An
+    unrolled arithmetic chain would run inside whole-stage codegen, but
+    Janino must recompile it for every fresh centroid table: measured 3×
+    slower per Lloyd iteration at k=8, d=64, so do not retry it.
 
     Struct comparison is lexicographic, so ties go to the lowest
     cluster id (deterministic — the reference is HashMap-order
     nondeterministic here, KMeans.java:101).
     """
-    if not unroll:
-        return (
-            f"array_min(transform({_centroid_literal_sql(centroids)}, "
-            f"c -> named_struct('sqdist', "
-            f"aggregate(zip_with({features_sql}, c.centroid, (x, y) -> (x - y) * (x - y)), "
-            f"0.0D, (acc, v) -> acc + v), "
-            f"'cluster', c.cluster)))"
-        )
-    entries = []
-    for cid, vec in sorted(centroids, key=lambda t: t[0]):
-        chain = " + ".join(
-            f"({features_sql}[{i}] - {_double_sql(v)}) * ({features_sql}[{i}] - {_double_sql(v)})"
-            for i, v in enumerate(vec)
-        )
-        entries.append(f"named_struct('sqdist', {chain}, 'cluster', {int(cid)})")
-    return f"array_min(array({', '.join(entries)}))"
-
-
-def nearest_centroid(features: Column | str, centroids: Centroids) -> Column:
-    """STRUCT(cluster INT, dist DOUBLE) of the nearest centroid.
-
-    String input (a plain column name) takes the fast parsed-SQL path
-    (``nearest_centroid_sql``); a Column expression falls back to the
-    equivalent ``transform`` + ``array_min`` HOF form (same fold order,
-    same values).
-    """
-    if isinstance(features, str):
-        best = F.expr(nearest_centroid_sql(features, centroids))
-    else:
-        best = F.array_min(
-            F.transform(
-                _centroid_literal(centroids),
-                lambda c: F.struct(
-                    squared_distance(features, c["centroid"]).alias("sqdist"),
-                    c["cluster"].alias("cluster"),
-                ),
-            )
-        )
-    return F.struct(
-        best["cluster"].alias("cluster"),
-        F.sqrt(best["sqdist"]).alias("dist"),
+    return (
+        f"array_min(transform({_centroid_literal_sql(centroids)}, "
+        f"c -> named_struct('sqdist', "
+        f"aggregate(zip_with({features_sql}, c.centroid, (x, y) -> (x - y) * (x - y)), "
+        f"0.0D, (acc, v) -> acc + v), "
+        f"'cluster', c.cluster)))"
     )
 
 
@@ -151,21 +94,16 @@ def assign_expr(
     points: DataFrame,
     centroids: Centroids,
     features_col: str = "features",
-    unroll: bool = False,
 ) -> DataFrame:
-    """Assignment as a single narrow projection (no shuffle, no join).
-
-    ``unroll`` picks the executor realization (see
-    ``nearest_centroid_sql``): True for one-shot plans (codegen'd hot
-    loop), False inside iteration loops where the centroid literals
-    change every pass and recompiling would dominate.
+    """Assignment as a single narrow projection (no shuffle, no join):
+    adds ``cluster`` and ``dist`` (Euclidean) to every point.
 
     The argmin struct is materialized once in an intermediate column so
     the k×d expression tree appears exactly once in the plan (two
     direct ``withColumn``s would embed it twice and double both the
     analysis cost and — where Catalyst declines to CSE a non-cheap
     expression — the execution cost)."""
-    best = F.expr(nearest_centroid_sql(features_col, centroids, unroll=unroll))
+    best = F.expr(nearest_centroid_sql(features_col, centroids))
     return (
         points.withColumn("_best", best)
         .withColumn("cluster", F.col("_best").getField("cluster"))

@@ -126,7 +126,6 @@ def lloyd_kmeans(
     max_iter: int = -1,
     tol: float = 0.0,
     features_col: str = "features",
-    cache: bool = True,
 ) -> KMeansResult:
     """Full Lloyd loop (C1-C5). ``max_iter=-1`` runs until convergence."""
     centroids = [(int(c), [float(v) for v in vec]) for c, vec in init_centroids]
@@ -135,19 +134,14 @@ def lloyd_kmeans(
     # first() scan: one Spark job saved per Lloyd invocation (the
     # flagship, plus every IVF quantizer fit that trains on a sample).
     d = len(centroids[0][1]) if centroids else feature_dim(points, features_col)
-    if cache:
-        points = points.persist(StorageLevel.MEMORY_AND_DISK)
+    points = points.persist(StorageLevel.MEMORY_AND_DISK)
     iterations = 0
     converged = False
     # Hard backstop for max_iter=-1 so a pathological non-convergence
     # (possible only with tol=0 float cycling) cannot loop forever.
     cap = max_iter if max_iter >= 0 else 10_000
     while iterations < cap:
-        # unroll=False: the centroid literals change every iteration, so
-        # the codegen'd unrolled form would pay a fresh Janino compile
-        # per pass (measured 3× the iteration cost at k=8, d=64); the
-        # HOF form recompiles nothing and computes identical bits.
-        assigned = assign_expr(points, centroids, features_col, unroll=False)
+        assigned = assign_expr(points, centroids, features_col)
         new_centroids = _collect_centroids(
             recompute_centroids(assigned, d=d, features_col=features_col)
         )
@@ -157,9 +151,8 @@ def lloyd_kmeans(
             converged = True
             break
         centroids = new_centroids
-    result = assign_expr(points, centroids, features_col, unroll=False)
-    if cache:
-        points.unpersist()
+    result = assign_expr(points, centroids, features_col)
+    points.unpersist()
     return KMeansResult(assignments=result, centroids=centroids, iterations=iterations, converged=converged)
 
 

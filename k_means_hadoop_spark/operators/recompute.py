@@ -12,9 +12,10 @@ the reference's entire shuffled dataset.  The d element accessors are
 unrolled as literal columns (d is known from the schema), keeping the
 whole thing inside whole-stage codegen.
 
-A4 (member-id collect, KMeans.java:166) and A5 (cluster size,
-KMeans.java:524) ride the same aggregation; member lists are sorted for
-determinism (the reference inherits arrival order).
+A5 (cluster size, KMeans.java:524) rides the same aggregation; A4
+(member-id collect, KMeans.java:166) is the ``a4_member_ids`` registry
+query, whose member lists are sorted for determinism (the reference
+inherits arrival order).
 """
 
 from __future__ import annotations
@@ -37,10 +38,8 @@ def recompute_centroids(
     d: int | None = None,
     features_col: str = "features",
     cluster_col: str = "cluster",
-    with_members: bool = False,
-    id_col: str = "id",
 ) -> DataFrame:
-    """(cluster, centroid ARRAY<DOUBLE>, size BIGINT [, member_ids]).
+    """(cluster, centroid ARRAY<DOUBLE>, size BIGINT).
 
     Empty clusters produce no output row — the reference's C5 semantics
     (a key that is never emitted simply vanishes, KMeans.java:113,148).
@@ -49,17 +48,13 @@ def recompute_centroids(
         d = feature_dim(assignments, features_col)
     # One JVM-parsed expression instead of d Column-API avg() builders:
     # the Py4J round-trips otherwise dominate driver time in the Lloyd
-    # loop (see assign._centroid_literal).
+    # loop (see assign.nearest_centroid_sql).
     mean_arr = "array({}) AS centroid".format(
         ", ".join(f"avg(`{features_col}`[{i}])" for i in range(d))
     )
-    aggs = [F.expr(mean_arr), F.count(F.lit(1)).alias("size")]
-    if with_members:
-        aggs.append(F.sort_array(F.collect_list(F.col(id_col))).alias("member_ids"))
-    keep = [cluster_col, "centroid", "size"]
-    if with_members:
-        keep.append("member_ids")
-    return assignments.groupBy(cluster_col).agg(*aggs).select(*keep)
+    return assignments.groupBy(cluster_col).agg(
+        F.expr(mean_arr), F.count(F.lit(1)).alias("size")
+    )
 
 
 def recompute_exploded(

@@ -542,52 +542,65 @@ def _lloyd_oracle_sql(n_iter: int) -> str:
     )
     return "WITH " + ", ".join(parts) + " " + final
 
-ORACLES: dict[str, str] = {
-    "s2_points_scan": f"WITH pts AS ({_PTS}) SELECT id, label, len(features)::INTEGER AS dim FROM pts",
-    "p1_drop_label": f"WITH pts AS ({_PTS}) SELECT id, round(features[1], 6) AS f0 FROM pts",
-    "p3_outlier_filter": (
-        f"WITH pts AS ({_PTS}) SELECT label, count(*)::BIGINT AS n "
-        "FROM pts WHERE label != -1 GROUP BY label"
+_ASSIGN_SQL = f"{_WITH_ASSIGN} SELECT id, cluster, round(dist, 6) AS dist FROM asg"
+_RECOMPUTE_SQL = (
+    f"WITH pts AS ({_PTS}), cents AS ({_CENTS}), asg AS ({_ASSIGN}), "
+    "j AS (SELECT a.cluster, p.features FROM asg a JOIN pts p ON a.id = p.id), "
+    "expl AS (SELECT cluster, (generate_subscripts(features, 1) - 1)::INTEGER AS pos, "
+    "         unnest(features) AS v FROM j) "
+    "SELECT cluster, pos, round(avg(v), 6) AS mean_val FROM expl GROUP BY cluster, pos"
+)
+
+KMEANS_QUERIES: dict[str, tuple[QueryFn, str]] = {
+    "s2_points_scan": (
+        q_s2_points_scan,
+        f"WITH pts AS ({_PTS}) SELECT id, label, len(features)::INTEGER AS dim FROM pts",
     ),
-    "p4_lookup_ids": f"WITH pts AS ({_PTS}) SELECT id, label FROM pts WHERE id IN ({_SEEDS_SQL})",
+    "p1_drop_label": (
+        q_p1_drop_label,
+        f"WITH pts AS ({_PTS}) SELECT id, round(features[1], 6) AS f0 FROM pts",
+    ),
+    "p3_outlier_filter": (
+        q_p3_outlier_filter,
+        f"WITH pts AS ({_PTS}) SELECT label, count(*)::BIGINT AS n "
+        "FROM pts WHERE label != -1 GROUP BY label",
+    ),
+    "p4_lookup_ids": (
+        q_p4_lookup_ids,
+        f"WITH pts AS ({_PTS}) SELECT id, label FROM pts WHERE id IN ({_SEEDS_SQL})",
+    ),
     "f1_euclidean": (
+        q_f1_euclidean,
         f"WITH pts AS ({_PTS}), seed AS (SELECT features AS centroid FROM pts WHERE id = {SEEDS[0]}) "
         "SELECT p.id, round(list_distance(p.features, s.centroid), 6) AS dist "
-        "FROM pts p CROSS JOIN seed s"
+        "FROM pts p CROSS JOIN seed s",
     ),
     "i2_init_seeds": (
+        q_i2_init_seeds,
         f"WITH pts AS ({_PTS}), cents AS ({_CENTS}) "
-        "SELECT cluster, round(centroid[1], 6) AS c0 FROM cents"
+        "SELECT cluster, round(centroid[1], 6) AS c0 FROM cents",
     ),
-    "j1_assign_join": f"{_WITH_ASSIGN} SELECT id, cluster, round(dist, 6) AS dist FROM asg",
-    "j2_assign_expr": f"{_WITH_ASSIGN} SELECT id, cluster, round(dist, 6) AS dist FROM asg",
-    "a1_cluster_sizes": f"{_WITH_ASSIGN} SELECT cluster, count(*)::BIGINT AS n FROM asg GROUP BY cluster",
-    "a3_recompute": (
-        f"WITH pts AS ({_PTS}), cents AS ({_CENTS}), asg AS ({_ASSIGN}), "
-        "j AS (SELECT a.cluster, p.features FROM asg a JOIN pts p ON a.id = p.id), "
-        "expl AS (SELECT cluster, (generate_subscripts(features, 1) - 1)::INTEGER AS pos, "
-        "         unnest(features) AS v FROM j) "
-        "SELECT cluster, pos, round(avg(v), 6) AS mean_val FROM expl GROUP BY cluster, pos"
+    "j1_assign_join": (q_j1_assign_join, _ASSIGN_SQL),
+    "j2_assign_expr": (q_j2_assign_expr, _ASSIGN_SQL),
+    "a1_cluster_sizes": (
+        q_a1_cluster_sizes,
+        f"{_WITH_ASSIGN} SELECT cluster, count(*)::BIGINT AS n FROM asg GROUP BY cluster",
     ),
+    "a3_recompute": (q_a3_recompute, _RECOMPUTE_SQL),
     # Same oracle text as a3_recompute on purpose: the MLlib Summarizer
     # path must hash-match the exact per-dim mean.
-    "a3_recompute_summarizer": (
-        f"WITH pts AS ({_PTS}), cents AS ({_CENTS}), asg AS ({_ASSIGN}), "
-        "j AS (SELECT a.cluster, p.features FROM asg a JOIN pts p ON a.id = p.id), "
-        "expl AS (SELECT cluster, (generate_subscripts(features, 1) - 1)::INTEGER AS pos, "
-        "         unnest(features) AS v FROM j) "
-        "SELECT cluster, pos, round(avg(v), 6) AS mean_val FROM expl GROUP BY cluster, pos"
-    ),
+    "a3_recompute_summarizer": (q_a3_recompute_summarizer, _RECOMPUTE_SQL),
     "a4_member_ids": (
+        q_a4_member_ids,
         f"{_WITH_ASSIGN} SELECT cluster, string_agg(id::VARCHAR, '|' ORDER BY id) AS members "
-        "FROM asg GROUP BY cluster"
+        "FROM asg GROUP BY cluster",
     ),
-    "a6_distinct_labels": f"WITH pts AS ({_PTS}) SELECT DISTINCT label FROM pts",
-    "j3_comembership": (
-        f"{_WITH_ASSIGN} SELECT cluster, (count(*) * count(*))::BIGINT AS ordered_pairs "
-        "FROM asg GROUP BY cluster"
+    "a6_distinct_labels": (
+        q_a6_distinct_labels,
+        f"WITH pts AS ({_PTS}) SELECT DISTINCT label FROM pts",
     ),
     "a7_jaccard": (
+        q_a7_jaccard,
         f"WITH pts AS ({_PTS}), cents AS ({_CENTS}), asg AS ({_ASSIGN}), "
         "cells AS (SELECT label, cluster, count(*)::BIGINT AS n FROM asg GROUP BY label, cluster), "
         "g AS (SELECT sum(s * s) AS ground1 FROM (SELECT sum(n) AS s FROM cells WHERE label != -1 GROUP BY label) t), "
@@ -595,45 +608,15 @@ ORACLES: dict[str, str] = {
         "b AS (SELECT sum(n * n) AS both1 FROM cells WHERE label != -1 AND cluster != -1) "
         "SELECT both1::BIGINT AS m1, (ground1 + pred1 - 2 * both1)::BIGINT AS m0, "
         "round(both1::DOUBLE / (ground1 + pred1 - both1)::DOUBLE, 6) AS jaccard "
-        "FROM g, p, b"
+        "FROM g, p, b",
     ),
-    "s1_points_tsv_roundtrip": (
-        f"WITH pts AS ({_PTS}) SELECT id, label, round(features[1], 6) AS f0, "
-        "len(features)::INTEGER AS dim FROM pts"
-    ),
-    "s3_centroid_wire_roundtrip": (
-        f"{_WITH_ASSIGN} "
-        "SELECT c.cluster, round(c.centroid[1], 6) AS c0, "
-        "string_agg(a.id::VARCHAR, '|' ORDER BY a.id) AS members, "
-        "count(*)::BIGINT AS n_members "
-        "FROM cents c JOIN asg a ON a.cluster = c.cluster "
-        "GROUP BY c.cluster, c.centroid[1]"
-    ),
-    "s6_final_output_roundtrip": (
-        f"{_WITH_ASSIGN} "
-        "SELECT a.id, a.cluster, round(p.features[1], 6) AS f0, "
-        "len(p.features)::INTEGER AS dim "
-        "FROM asg a JOIN pts p ON a.id = p.id"
-    ),
-    # Flagship value oracle: the registered query runs lloyd_kmeans with
-    # max_iter=10; the oracle unrolls the identical 10 steps in DuckDB.
-    "kmeans_lloyd": _lloyd_oracle_sql(10),
-    "silhouette_by_cluster": _silhouette_sql(),
-    "silhouette_sampled": _silhouette_sampled_sql(),
-    # I1: identical md5 rank on both sides (stable_hash64 ==
-    # ('0x' || substr(md5(s),1,15))::BIGINT), id as the collision tiebreak.
-    "kmeans_mllib": (
-        f"WITH pts AS ({_PTS}) SELECT count(*)::BIGINT AS n_points, "
-        "true AS ok_k, true AS ok_quality FROM pts"
-    ),
-    "i1_init_random": (
-        f"WITH pts AS ({_PTS}), ranked AS ("
-        "SELECT features, CAST(row_number() OVER (ORDER BY "
-        "('0x' || substr(md5(id::VARCHAR || ':42'), 1, 15))::BIGINT, id) AS INTEGER) AS cluster "
-        "FROM pts) "
-        "SELECT cluster, round(features[1], 6) AS c0 FROM ranked WHERE cluster <= 8"
+    "j3_comembership": (
+        q_j3_comembership,
+        f"{_WITH_ASSIGN} SELECT cluster, (count(*) * count(*))::BIGINT AS ordered_pairs "
+        "FROM asg GROUP BY cluster",
     ),
     "c1_one_iteration": (
+        q_c1_one_iteration,
         f"WITH pts AS ({_PTS}), cents AS ({_CENTS}), asg AS ({_ASSIGN}), "
         "j AS (SELECT a.cluster, p.features FROM asg a JOIN pts p ON a.id = p.id), "
         "expl AS (SELECT cluster, generate_subscripts(features, 1) AS pos, unnest(features) AS v FROM j), "
@@ -643,7 +626,48 @@ ORACLES: dict[str, str] = {
         "  SELECT p.id, c.cluster, row_number() OVER (PARTITION BY p.id"
         "         ORDER BY list_distance(p.features, c.centroid), c.cluster) AS rn"
         "  FROM pts p CROSS JOIN cents2 c) WHERE rn = 1) "
-        "SELECT cluster, count(*)::BIGINT AS n FROM asg2 GROUP BY cluster"
+        "SELECT cluster, count(*)::BIGINT AS n FROM asg2 GROUP BY cluster",
+    ),
+    "s1_points_tsv_roundtrip": (
+        q_s1_points_tsv_roundtrip,
+        f"WITH pts AS ({_PTS}) SELECT id, label, round(features[1], 6) AS f0, "
+        "len(features)::INTEGER AS dim FROM pts",
+    ),
+    "s3_centroid_wire_roundtrip": (
+        q_s3_centroid_wire_roundtrip,
+        f"{_WITH_ASSIGN} "
+        "SELECT c.cluster, round(c.centroid[1], 6) AS c0, "
+        "string_agg(a.id::VARCHAR, '|' ORDER BY a.id) AS members, "
+        "count(*)::BIGINT AS n_members "
+        "FROM cents c JOIN asg a ON a.cluster = c.cluster "
+        "GROUP BY c.cluster, c.centroid[1]",
+    ),
+    "s6_final_output_roundtrip": (
+        q_s6_final_output_roundtrip,
+        f"{_WITH_ASSIGN} "
+        "SELECT a.id, a.cluster, round(p.features[1], 6) AS f0, "
+        "len(p.features)::INTEGER AS dim "
+        "FROM asg a JOIN pts p ON a.id = p.id",
+    ),
+    # Flagship value oracle: the registered query runs lloyd_kmeans with
+    # max_iter=10; the oracle unrolls the identical 10 steps in DuckDB.
+    "kmeans_lloyd": (q_kmeans_lloyd, _lloyd_oracle_sql(10)),
+    "silhouette_by_cluster": (q_silhouette, _silhouette_sql()),
+    "silhouette_sampled": (q_silhouette_sampled, _silhouette_sampled_sql()),
+    # I1: identical md5 rank on both sides (stable_hash64 ==
+    # ('0x' || substr(md5(s),1,15))::BIGINT), id as the collision tiebreak.
+    "i1_init_random": (
+        q_i1_init_random,
+        f"WITH pts AS ({_PTS}), ranked AS ("
+        "SELECT features, CAST(row_number() OVER (ORDER BY "
+        "('0x' || substr(md5(id::VARCHAR || ':42'), 1, 15))::BIGINT, id) AS INTEGER) AS cluster "
+        "FROM pts) "
+        "SELECT cluster, round(features[1], 6) AS c0 FROM ranked WHERE cluster <= 8",
+    ),
+    "kmeans_mllib": (
+        q_kmeans_mllib,
+        f"WITH pts AS ({_PTS}) SELECT count(*)::BIGINT AS n_points, "
+        "true AS ok_k, true AS ok_quality FROM pts",
     ),
 }
 
@@ -662,38 +686,14 @@ from k_means_hadoop_spark.operators.round9 import ROUND9_QUERIES
 from k_means_hadoop_spark.operators.round10 import ROUND10_QUERIES
 from k_means_hadoop_spark.operators.round11 import ROUND11_QUERIES
 from k_means_hadoop_spark.operators.round12 import ROUND12_QUERIES
-from k_means_hadoop_spark.registry_pipeline import PIPELINE_ORACLES, PIPELINE_QUERIES
+from k_means_hadoop_spark.registry_pipeline import PIPELINE_QUERIES
 
-QUERIES: dict[str, QueryFn] = {
-    "s2_points_scan": q_s2_points_scan,
-    "p1_drop_label": q_p1_drop_label,
-    "p3_outlier_filter": q_p3_outlier_filter,
-    "p4_lookup_ids": q_p4_lookup_ids,
-    "f1_euclidean": q_f1_euclidean,
-    "i2_init_seeds": q_i2_init_seeds,
-    "j1_assign_join": q_j1_assign_join,
-    "j2_assign_expr": q_j2_assign_expr,
-    "a1_cluster_sizes": q_a1_cluster_sizes,
-    "a3_recompute": q_a3_recompute,
-    "a3_recompute_summarizer": q_a3_recompute_summarizer,
-    "a4_member_ids": q_a4_member_ids,
-    "a6_distinct_labels": q_a6_distinct_labels,
-    "a7_jaccard": q_a7_jaccard,
-    "j3_comembership": q_j3_comembership,
-    "c1_one_iteration": q_c1_one_iteration,
-    "s1_points_tsv_roundtrip": q_s1_points_tsv_roundtrip,
-    "s3_centroid_wire_roundtrip": q_s3_centroid_wire_roundtrip,
-    "s6_final_output_roundtrip": q_s6_final_output_roundtrip,
-    "kmeans_lloyd": q_kmeans_lloyd,  # value oracle: 10-step unrolled CTE (C1-C5)
-    "silhouette_by_cluster": q_silhouette,  # value oracle: decimal-exact means
-    "silhouette_sampled": q_silhouette_sampled,  # r5: the O(m·k·n) scale path, same value discipline
-    "i1_init_random": q_i1_init_random,  # value oracle: portable md5 rank
-    "kmeans_mllib": q_kmeans_mllib,  # r4: quality-contract oracle (WSSSE floor vs Lloyd)
-}
-
-# Every operator family registers (fn, oracle_sql) pairs; the pipeline
-# keeps its two halves in separate dicts, zipped here by name.
+# Every family registers {name: (fn, oracle_sql)} pairs, so a query and
+# its oracle can only be added together.
+QUERIES: dict[str, QueryFn] = {}
+ORACLES: dict[str, str] = {}
 for _family in (
+    KMEANS_QUERIES,
     RELATIONAL_QUERIES,
     TPCH_EXTRA_QUERIES,
     CURATION_QUERIES,
@@ -709,7 +709,7 @@ for _family in (
     ROUND10_QUERIES,
     ROUND11_QUERIES,
     ROUND12_QUERIES,
-    {n: (fn, PIPELINE_ORACLES[n]) for n, fn in PIPELINE_QUERIES.items()},
+    PIPELINE_QUERIES,
 ):
     for _name, (_fn, _sql) in _family.items():
         QUERIES[_name] = _fn

@@ -19,6 +19,8 @@ from k_means_hadoop_spark.functions.hashing import (
     word_ngrams_sql,
 )
 from k_means_hadoop_spark.operators import dedup, similarity, text
+from k_means_hadoop_spark.operators.analytics import _MERGE_SQL
+from k_means_hadoop_spark.operators.pca import _power_iteration_sql, power_iteration_pc1
 from k_means_hadoop_spark.operators.relational import SESSION_WINDOW_SQL
 from k_means_hadoop_spark.partitioning import fan_out
 
@@ -1738,12 +1740,6 @@ LEFT JOIN zc ON zc.doc_id = d.doc_id
 _WDS_SHARD_CACHE: dict[str, str] = {}
 
 
-def _MERGE_SQL_REF() -> str:
-    from k_means_hadoop_spark.operators.analytics import _MERGE_SQL
-
-    return _MERGE_SQL
-
-
 def q_streaming_merge_changelog(spark, sf_dir):
     """Multi-batch changelog apply over versioned snapshots — same
     oracle as the batch MERGE (key-disjoint changelog => partition-
@@ -3085,137 +3081,110 @@ WHERE bit_count(xor(a.simhash, b.simhash)) <= {max_hamming}"""
 
 _KNN_IDS_SQL = ", ".join(str(i) for i in KNN_QUERY_IDS)
 
-def q_power_iteration_pc1(spark, sf_dir):
-    """Dominant eigenvector of the embedding covariance by explicit
-    distributed power iteration — the full-value-oracle complement of
-    the MLlib eigensolver behind pca_project."""
-    from k_means_hadoop_spark.operators.pca import power_iteration_pc1
+# Same oracle for dedup_incremental, dedup_incremental_stored and
+# streaming_ingest_dedup on purpose: the stored variant must produce the
+# identical statuses through the parquet signature store (any roundtrip
+# loss flips the hash), and an availableNow drain is one batch whose
+# appended statuses equal the batch operator's.
+_INCR_SQL = _incremental_sql(NGRAM_N, NGRAM_THRESHOLD, INCR_BATCH_MOD, INCR_BATCH_REM)
 
-    return power_iteration_pc1(spark, sf_dir)
-
-
-def _pi_sql_lazy() -> str:
-    from k_means_hadoop_spark.operators.pca import _power_iteration_sql
-
-    return _power_iteration_sql(64)
-
-
-PIPELINE_ORACLES: dict[str, str] = {
+# Every pipeline query as its (builder, DuckDB oracle SQL) pair.
+PIPELINE_QUERIES: dict = {
     "text_token_counts": (
+        q_token_counts,
         f"SELECT doc_id, len({_TOKS})::INTEGER AS ws_tokens, "
         "len(regexp_extract_all(text, '[A-Za-z]+|[0-9]+|[^A-Za-z0-9\\s]'))::BIGINT AS bpe_tokens "
-        "FROM documents"
+        "FROM documents",
     ),
-    "text_quality_scores": _quality_sql(),
-    "text_lang_id": _lang_id_sql(),
-    "dataset_card": _dataset_card_sql(),
-    "bpe_train_merges": _bpe_merges_sql(BPE_ROUNDS),
-    "bpe_compression": _bpe_compression_sql(BPE_ROUNDS),
+    "text_quality_scores": (q_quality_scores, _quality_sql()),
+    "text_lang_id": (q_lang_id, _lang_id_sql()),
     "langid_confusion": (
+        q_langid_confusion,
         f"WITH p AS ({_lang_id_sql()}) "
         "SELECT d.lang AS true_lang, p.pred_lang, count(*)::BIGINT AS n "
-        "FROM documents d JOIN p ON d.doc_id = p.doc_id GROUP BY 1, 2"
+        "FROM documents d JOIN p ON d.doc_id = p.doc_id GROUP BY 1, 2",
     ),
+    "dataset_card": (q_dataset_card, _dataset_card_sql()),
+    "bpe_train_merges": (q_bpe_train_merges, _bpe_merges_sql(BPE_ROUNDS)),
+    "bpe_compression": (q_bpe_compression, _bpe_compression_sql(BPE_ROUNDS)),
     "tokenizer_fit_bigrams": (
+        q_tokenizer_fit_bigrams,
         "WITH pr AS (SELECT unnest("
         + word_ngrams_all_sql("text", 2)
         + ") AS pair FROM documents) "
         "SELECT pair, count(*)::BIGINT AS n FROM pr "
-        "GROUP BY pair ORDER BY n DESC, pair LIMIT 50"
+        "GROUP BY pair ORDER BY n DESC, pair LIMIT 50",
     ),
     "text_fingerprints": (
+        q_fingerprints,
         "SELECT doc_id, "
         + stable_hash64_sql("regexp_replace(lower(trim(text)), '\\s+', ' ', 'g')")
-        + " AS fp FROM documents"
+        + " AS fp FROM documents",
     ),
-    "text_simhash": f"WITH {_simhash_cte()} SELECT doc_id, simhash FROM sh",
-    "text_repetition_scores": _repetition_sql(),
-    "text_unigram_logprob": _unigram_logprob_sql(),
-    "gopher_quality_gate": _gopher_sql(),
-    "text_bigram_logprob": _bigram_logprob_sql(),
-    "dedup_semantic_cells": _semdedup_sql(SEMDEDUP_THRESHOLD),
-    "knn_signbit_lsh": _knn_signbit_sql(5, KNN_SIGNBIT_BITS),
-    "knn_lsh": _knn_lsh_sql(5),
-    "knn_ivf": _knn_ivf_contract_sql(),
-    "knn_mllib_lsh": _knn_mllib_contract_sql(),
-    "neardup_mllib_minhash": _neardup_mllib_contract_sql(),
-    "approx_top_terms": APPROX_TOP_TERMS_SQL,
-    "knn_pq": _knn_pq_sql(5, PQ_M, PQ_DIM),
-    "knn_ivf_pq": _knn_ivf_pq_sql(5, PQ_M, PQ_DIM, IVFPQ_NPROBE),
-    "compact_shards": COMPACT_SHARDS_SQL,
-    "pca_project": PCA_CONTRACT_SQL,
-    "multimodal_decode_real": _decode_real_sql(),
-    # same oracle on purpose: the tar round trip must decode identically
-    "webdataset_tar_scan": _decode_real_sql(),
-    "wav_frame_energy": _WAV_FRAMES_SQL,
-    "streaming_merge_changelog": _MERGE_SQL_REF(),
-    "power_iteration_pc1": _pi_sql_lazy(),
-    "udtf_ngram_cols": UDTF_NGRAM_COLS_SQL,
-    "codec_roundtrip": _codec_roundtrip_sql(),
-    "dedup_containment": _containment_sql(),
-    "dedup_containment_capped": _containment_capped_sql(),
-    "vocab_coverage": _vocab_coverage_sql(),
-    "bm25_search": _bm25_sql(),
-    "hybrid_retrieval": _hybrid_sql(),
-    "source_lang_entropy": SOURCE_LANG_ENTROPY_SQL,
-    "knn_filtered": _knn_filtered_sql(5),
-    "python_datasource_stream": PYDS_STREAM_SQL,
-    "knn_pq_rerank": _knn_pq_rerank_sql(5, PQ_M, PQ_DIM, PQ_SHORTLIST),
-    "embedding_truncate_renorm": _truncate_renorm_sql(TRUNC_DIM),
-    "streaming_upsert_snapshot": STREAMING_UPSERT_SQL,
-    "streaming_kmeans_foreachbatch": _stream_kmeans_fb_sql(),
+    "text_simhash": (q_simhash, f"WITH {_simhash_cte()} SELECT doc_id, simhash FROM sh"),
+    "text_repetition_scores": (q_repetition_scores, _repetition_sql()),
+    "text_unigram_logprob": (q_unigram_logprob, _unigram_logprob_sql()),
+    "gopher_quality_gate": (q_gopher_gate, _gopher_sql()),
+    "text_bigram_logprob": (q_bigram_logprob, _bigram_logprob_sql()),
+    "dedup_semantic_cells": (q_dedup_semantic_cells, _semdedup_sql(SEMDEDUP_THRESHOLD)),
+    "embedding_truncate_renorm": (q_truncate_renorm, _truncate_renorm_sql(TRUNC_DIM)),
+    "streaming_upsert_snapshot": (q_streaming_upsert_snapshot, STREAMING_UPSERT_SQL),
+    "streaming_kmeans_foreachbatch": (q_streaming_kmeans_foreachbatch, _stream_kmeans_fb_sql()),
     "dedup_exact": (
+        q_dedup_exact,
         "SELECT md5(text) AS text_md5, min(doc_id)::BIGINT AS keep_id, "
-        "count(*)::BIGINT AS n_copies FROM documents GROUP BY md5(text)"
+        "count(*)::BIGINT AS n_copies FROM documents GROUP BY md5(text)",
     ),
-    "dedup_ngram_jaccard": _ngram_jaccard_sql(NGRAM_N, NGRAM_THRESHOLD),
-    "dedup_edit_distance": _edit_distance_sql(EDIT_DIST_MAX),
-    "dedup_edit_verified": _edit_verified_sql(NGRAM_N, EDIT_DIST_MAX),
+    "dedup_ngram_jaccard": (q_ngram_jaccard, _ngram_jaccard_sql(NGRAM_N, NGRAM_THRESHOLD)),
+    "dedup_edit_distance": (q_dedup_edit_distance, _edit_distance_sql(EDIT_DIST_MAX)),
+    "dedup_edit_verified": (q_dedup_edit_verified, _edit_verified_sql(NGRAM_N, EDIT_DIST_MAX)),
     # deliberately the SAME oracle: prefix filtering must be lossless
-    "dedup_prefix_filter": _ngram_jaccard_sql(NGRAM_N, NGRAM_THRESHOLD),
-    "dedup_incremental": _incremental_sql(
-        NGRAM_N, NGRAM_THRESHOLD, INCR_BATCH_MOD, INCR_BATCH_REM
+    "dedup_prefix_filter": (q_dedup_prefix_filter, _ngram_jaccard_sql(NGRAM_N, NGRAM_THRESHOLD)),
+    "dedup_ngram_jaccard_capped": (
+        q_ngram_jaccard_capped,
+        _ngram_jaccard_capped_sql(NGRAM_N, NGRAM_THRESHOLD, NGRAM_MAX_DOC_FREQ),
     ),
-    # Same oracle as dedup_incremental on purpose: the stored variant
-    # must produce the identical statuses through the parquet signature
-    # store, so any roundtrip loss flips the hash.
-    "dedup_incremental_stored": _incremental_sql(
-        NGRAM_N, NGRAM_THRESHOLD, INCR_BATCH_MOD, INCR_BATCH_REM
-    ),
-    "ingest_increment": _ingest_increment_sql(),
-    # Same oracle as dedup_incremental on purpose: an availableNow drain
-    # is one batch, whose appended statuses equal the batch operator's.
-    "streaming_ingest_dedup": _incremental_sql(
-        NGRAM_N, NGRAM_THRESHOLD, INCR_BATCH_MOD, INCR_BATCH_REM
-    ),
-    "dedup_minhash_lsh": _minhash_sql(NGRAM_N),
-    # Same oracle as dedup_minhash_lsh on purpose: the drained min-merge
-    # store must band to the identical candidate set.
-    "streaming_minhash_store": _minhash_sql(NGRAM_N),
-    "minhash_estimate_audit": _minhash_audit_sql(NGRAM_N),
-    "dedup_minhash_verified": _minhash_verified_sql(NGRAM_N, NGRAM_THRESHOLD),
-    "tfidf_top_terms": _tfidf_sql(TFIDF_TOP_K),
-    # Bounded like the query (no-op at correctness scale: corpus is 500
-    # docs < SIMHASH_PAIRS_MAX_ID, so this hash still equals the banded
-    # tier's unbounded oracle and brute==banded is driver-proven).
-    "dedup_simhash_pairs": _simhash_pairs_sql(SIMHASH_MAX_HAMMING, SIMHASH_PAIRS_MAX_ID),
     # Same pair set as dedup_simhash_pairs on purpose: for
     # max_hamming <= bands-1 the banded equi-join is recall-1, so a
     # hash-match PROVES the scale path computes the brute-force pair set.
-    "dedup_simhash_banded": _simhash_pairs_sql(SIMHASH_MAX_HAMMING),
-    "dedup_ngram_jaccard_capped": _ngram_jaccard_capped_sql(
-        NGRAM_N, NGRAM_THRESHOLD, NGRAM_MAX_DOC_FREQ
+    "dedup_simhash_banded": (q_simhash_banded, _simhash_pairs_sql(SIMHASH_MAX_HAMMING)),
+    "dedup_embedding_bucketed": (
+        q_embedding_bucketed,
+        _embedding_bucketed_sql(NEARDUP_COS_THRESHOLD, EMB_LSH_BITS, EMB_LSH_BANDS),
     ),
-    "dedup_embedding_bucketed": _embedding_bucketed_sql(
-        NEARDUP_COS_THRESHOLD, EMB_LSH_BITS, EMB_LSH_BANDS
+    "dedup_incremental": (q_incremental_dedup, _INCR_SQL),
+    "dedup_incremental_stored": (q_incremental_dedup_stored, _INCR_SQL),
+    "ingest_increment": (q_ingest_increment, _ingest_increment_sql()),
+    "streaming_ingest_dedup": (q_streaming_ingest_dedup, _INCR_SQL),
+    "dedup_minhash_lsh": (q_minhash_candidates, _minhash_sql(NGRAM_N)),
+    # Same oracle as dedup_minhash_lsh on purpose: the drained min-merge
+    # store must band to the identical candidate set.
+    "streaming_minhash_store": (q_streaming_minhash_store, _minhash_sql(NGRAM_N)),
+    "minhash_estimate_audit": (q_minhash_estimate_audit, _minhash_audit_sql(NGRAM_N)),
+    "dedup_minhash_verified": (
+        q_minhash_verified,
+        _minhash_verified_sql(NGRAM_N, NGRAM_THRESHOLD),
     ),
-    "dedup_embedding_cosine": f"""
+    "tfidf_top_terms": (q_tfidf_top_terms, _tfidf_sql(TFIDF_TOP_K)),
+    # Bounded like the query (no-op at correctness scale: corpus is 500
+    # docs < SIMHASH_PAIRS_MAX_ID, so this hash still equals the banded
+    # tier's unbounded oracle and brute==banded is driver-proven).
+    "dedup_simhash_pairs": (
+        q_simhash_pairs,
+        _simhash_pairs_sql(SIMHASH_MAX_HAMMING, SIMHASH_PAIRS_MAX_ID),
+    ),
+    "dedup_embedding_cosine": (
+        q_embedding_neardup,
+        f"""
 WITH {_planted_v_sql(NEARDUP_MAX_ID)}
 SELECT a.vid AS a_id, b.vid AS b_id,
        round(list_cosine_similarity(a.vec, b.vec), 6) AS cos_sim
 FROM v a JOIN v b ON a.vid < b.vid
 WHERE round(list_cosine_similarity(a.vec, b.vec), 6) >= {NEARDUP_COS_THRESHOLD}""",
-    "knn_bruteforce": f"""
+    ),
+    "knn_bruteforce": (
+        q_knn_bruteforce,
+        f"""
 WITH v AS (SELECT vec_id::INTEGER AS vid, embedding::DOUBLE[] AS vec FROM embeddings),
 q AS (SELECT vid AS qid, vec AS qvec FROM v WHERE vid IN ({_KNN_IDS_SQL})),
 sims AS (SELECT q.qid, v.vid AS nid, list_cosine_similarity(q.qvec, v.vec) AS sim
@@ -3224,135 +3193,80 @@ ranked AS (SELECT qid, nid, sim,
            CAST(row_number() OVER (PARTITION BY qid ORDER BY sim DESC, nid) AS INTEGER) AS rank
            FROM sims)
 SELECT qid, nid, round(sim, 6) AS cos_sim, rank FROM ranked WHERE rank <= 5""",
-    "chunk_documents": CHUNK_SQL,
-    "prepare_corpus": _prepare_corpus_sql(),
-    "multimodal_decode": MULTIMODAL_SQL,
-    "docs_jsonl_roundtrip": "SELECT doc_id, text, lang, source, n_chars FROM documents",
-    "schema_evolution_merge": SCHEMA_EVO_SQL,
+    ),
+    "knn_signbit_lsh": (q_knn_signbit, _knn_signbit_sql(5, KNN_SIGNBIT_BITS)),
+    "knn_pq": (q_knn_pq, _knn_pq_sql(5, PQ_M, PQ_DIM)),
+    "knn_ivf_pq": (q_knn_ivf_pq, _knn_ivf_pq_sql(5, PQ_M, PQ_DIM, IVFPQ_NPROBE)),
+    "compact_shards": (q_compact_shards, COMPACT_SHARDS_SQL),
+    "dedup_containment": (q_dedup_containment, _containment_sql()),
+    "dedup_containment_capped": (q_dedup_containment_capped, _containment_capped_sql()),
+    "vocab_coverage": (q_vocab_coverage, _vocab_coverage_sql()),
+    "bm25_search": (q_bm25_search, _bm25_sql()),
+    "hybrid_retrieval": (q_hybrid_retrieval, _hybrid_sql()),
+    "source_lang_entropy": (q_source_lang_entropy, SOURCE_LANG_ENTROPY_SQL),
+    "knn_filtered": (q_knn_filtered, _knn_filtered_sql(5)),
+    "udtf_ngram_cols": (q_udtf_ngram_cols, UDTF_NGRAM_COLS_SQL),
+    "codec_roundtrip": (q_codec_roundtrip, _codec_roundtrip_sql()),
+    "python_datasource_stream": (q_python_datasource_stream, PYDS_STREAM_SQL),
+    "knn_pq_rerank": (q_knn_pq_rerank, _knn_pq_rerank_sql(5, PQ_M, PQ_DIM, PQ_SHORTLIST)),
+    "knn_lsh": (q_knn_lsh, _knn_lsh_sql(5)),  # oracle-backed: literal-chain plane dots
+    "knn_ivf": (q_knn_ivf, _knn_ivf_contract_sql()),  # contract oracle: aggregate recall verdict
+    "approx_top_terms": (q_approx_top_terms, APPROX_TOP_TERMS_SQL),  # exact-count (rank, n) ladder
+    # contract oracles: per-query recall / precision+recall verdicts
+    "knn_mllib_lsh": (q_knn_mllib_lsh, _knn_mllib_contract_sql()),
+    "neardup_mllib_minhash": (q_neardup_mllib_minhash, _neardup_mllib_contract_sql()),
+    "chunk_documents": (q_chunk_documents, CHUNK_SQL),
+    "prepare_corpus": (q_prepare_corpus, _prepare_corpus_sql()),
+    "multimodal_decode": (q_multimodal_decode, MULTIMODAL_SQL),
+    "multimodal_decode_real": (q_multimodal_decode_real, _decode_real_sql()),
+    # same oracle on purpose: the tar round trip must decode identically
+    "webdataset_tar_scan": (q_webdataset_tar_scan, _decode_real_sql()),
+    "wav_frame_energy": (q_wav_frame_energy, _WAV_FRAMES_SQL),
+    "streaming_merge_changelog": (q_streaming_merge_changelog, _MERGE_SQL),
+    "docs_jsonl_roundtrip": (
+        q_docs_jsonl_roundtrip,
+        "SELECT doc_id, text, lang, source, n_chars FROM documents",
+    ),
+    "schema_evolution_merge": (q_schema_evolution_merge, SCHEMA_EVO_SQL),
     "lineitem_csv_roundtrip": (
+        q_lineitem_csv_roundtrip,
         "SELECT l_orderkey, l_partkey, l_suppkey, l_linenumber, l_quantity, "
         "l_extendedprice, l_discount, l_tax, l_returnflag, l_linestatus, l_shipdate "
-        "FROM lineitem"
+        "FROM lineitem",
     ),
-    "multimodal_frame_sample": MULTIMODAL_FRAMES_SQL,
-    "quantize_embeddings": QUANTIZE_SQL,
-    "python_datasource_scan": PYDS_SQL,
-    "udtf_tokenize": UDTF_SQL,
-    "multimodal_arrow_stats": MULTIMODAL_ARROW_SQL,
-    "streaming_window_stats": STREAMING_WINDOW_SQL,
-    "streaming_kmeans_assign": _stream_assign_sql(),
-    "streaming_stateful_totals": STREAMING_STATEFUL_SQL,
+    "multimodal_frame_sample": (q_multimodal_frames, MULTIMODAL_FRAMES_SQL),
+    "quantize_embeddings": (q_quantize_embeddings, QUANTIZE_SQL),
+    "python_datasource_scan": (q_python_datasource_scan, PYDS_SQL),
+    "udtf_tokenize": (q_udtf_tokenize, UDTF_SQL),
+    "multimodal_arrow_stats": (q_multimodal_arrow_stats, MULTIMODAL_ARROW_SQL),
+    "streaming_window_stats": (q_streaming_window_stats, STREAMING_WINDOW_SQL),
+    "streaming_kmeans_assign": (q_streaming_kmeans_assign, _stream_assign_sql()),
+    "streaming_stateful_totals": (q_streaming_stateful_totals, STREAMING_STATEFUL_SQL),
     # streaming_tws_user_stats is added conditionally below — its driver
     # worker needs google.protobuf, absent from this container.
-    "streaming_dedup_keys": STREAMING_DEDUP_SQL,
-    "streaming_enrich_join": STREAMING_ENRICH_SQL,
-    "streaming_interval_join": STREAMING_INTERVAL_JOIN_SQL,
-    "streaming_outer_interval_join": STREAMING_OUTER_JOIN_SQL,
-    "top_terms_corpus": _top_terms_sql(50),
-    "streaming_session_windows": SESSION_WINDOW_SQL,
-    "unpivot_quality_metrics": _unpivot_quality_sql(),
-    "dedup_components": _components_sql(),
-    "dedup_survivors": _survivors_sql(),
-    "dedup_edit_components": _edit_survivors_sql(),
-}
-
-PIPELINE_QUERIES = {
-    "text_token_counts": q_token_counts,
-    "text_quality_scores": q_quality_scores,
-    "text_lang_id": q_lang_id,
-    "langid_confusion": q_langid_confusion,
-    "dataset_card": q_dataset_card,
-    "bpe_train_merges": q_bpe_train_merges,
-    "bpe_compression": q_bpe_compression,
-    "tokenizer_fit_bigrams": q_tokenizer_fit_bigrams,
-    "text_fingerprints": q_fingerprints,
-    "text_simhash": q_simhash,
-    "text_repetition_scores": q_repetition_scores,
-    "text_unigram_logprob": q_unigram_logprob,
-    "gopher_quality_gate": q_gopher_gate,
-    "text_bigram_logprob": q_bigram_logprob,
-    "dedup_semantic_cells": q_dedup_semantic_cells,
-    "embedding_truncate_renorm": q_truncate_renorm,
-    "streaming_upsert_snapshot": q_streaming_upsert_snapshot,
-    "streaming_kmeans_foreachbatch": q_streaming_kmeans_foreachbatch,
-    "dedup_exact": q_dedup_exact,
-    "dedup_ngram_jaccard": q_ngram_jaccard,
-    "dedup_edit_distance": q_dedup_edit_distance,
-    "dedup_edit_verified": q_dedup_edit_verified,
-    "dedup_prefix_filter": q_dedup_prefix_filter,
-    "dedup_ngram_jaccard_capped": q_ngram_jaccard_capped,
-    "dedup_simhash_banded": q_simhash_banded,
-    "dedup_embedding_bucketed": q_embedding_bucketed,
-    "dedup_incremental": q_incremental_dedup,
-    "dedup_incremental_stored": q_incremental_dedup_stored,
-    "ingest_increment": q_ingest_increment,
-    "streaming_ingest_dedup": q_streaming_ingest_dedup,
-    "dedup_minhash_lsh": q_minhash_candidates,
-    "streaming_minhash_store": q_streaming_minhash_store,
-    "minhash_estimate_audit": q_minhash_estimate_audit,
-    "dedup_minhash_verified": q_minhash_verified,
-    "tfidf_top_terms": q_tfidf_top_terms,
-    "dedup_simhash_pairs": q_simhash_pairs,
-    "dedup_embedding_cosine": q_embedding_neardup,
-    "knn_bruteforce": q_knn_bruteforce,
-    "knn_signbit_lsh": q_knn_signbit,
-    "knn_pq": q_knn_pq,
-    "knn_ivf_pq": q_knn_ivf_pq,
-    "compact_shards": q_compact_shards,
-    "dedup_containment": q_dedup_containment,
-    "dedup_containment_capped": q_dedup_containment_capped,
-    "vocab_coverage": q_vocab_coverage,
-    "bm25_search": q_bm25_search,
-    "hybrid_retrieval": q_hybrid_retrieval,
-    "source_lang_entropy": q_source_lang_entropy,
-    "knn_filtered": q_knn_filtered,
-    "udtf_ngram_cols": q_udtf_ngram_cols,
-    "codec_roundtrip": q_codec_roundtrip,
-    "python_datasource_stream": q_python_datasource_stream,
-    "knn_pq_rerank": q_knn_pq_rerank,
-    "knn_lsh": q_knn_lsh,  # oracle-backed: literal-chain plane dots
-    "knn_ivf": q_knn_ivf,  # contract oracle: aggregate recall verdict
-    "approx_top_terms": q_approx_top_terms,  # exact-count (rank, n) ladder
-    "knn_mllib_lsh": q_knn_mllib_lsh,  # contract oracle: per-query recall verdict
-    "neardup_mllib_minhash": q_neardup_mllib_minhash,  # contract oracle: precision+recall verdicts
-    "chunk_documents": q_chunk_documents,
-    "prepare_corpus": q_prepare_corpus,
-    "multimodal_decode": q_multimodal_decode,
-    "multimodal_decode_real": q_multimodal_decode_real,
-    "webdataset_tar_scan": q_webdataset_tar_scan,
-    "wav_frame_energy": q_wav_frame_energy,
-    "streaming_merge_changelog": q_streaming_merge_changelog,
-    "docs_jsonl_roundtrip": q_docs_jsonl_roundtrip,
-    "schema_evolution_merge": q_schema_evolution_merge,
-    "lineitem_csv_roundtrip": q_lineitem_csv_roundtrip,
-    "multimodal_frame_sample": q_multimodal_frames,
-    "quantize_embeddings": q_quantize_embeddings,
-    "python_datasource_scan": q_python_datasource_scan,
-    "udtf_tokenize": q_udtf_tokenize,
-    "multimodal_arrow_stats": q_multimodal_arrow_stats,
-    "streaming_window_stats": q_streaming_window_stats,
-    "streaming_kmeans_assign": q_streaming_kmeans_assign,
-    "streaming_stateful_totals": q_streaming_stateful_totals,
-    "streaming_dedup_keys": q_streaming_dedup_keys,
-    "streaming_enrich_join": q_streaming_enrich_join,
-    "streaming_interval_join": q_streaming_interval_join,
-    "streaming_outer_interval_join": q_streaming_outer_interval_join,
-    "top_terms_corpus": q_top_terms,
-    "streaming_session_windows": q_streaming_session_windows,
-    "unpivot_quality_metrics": q_unpivot_quality,
-    "dedup_components": q_dedup_components,
-    "dedup_survivors": q_dedup_survivors,
-    "dedup_edit_components": q_dedup_edit_components,
-    "pca_project": q_pca_project,  # r4: spectral-contract oracle (total var + verdicts)
-    "power_iteration_pc1": q_power_iteration_pc1,  # r5: full value oracle (unrolled matvec CTE)
+    "streaming_dedup_keys": (q_streaming_dedup_keys, STREAMING_DEDUP_SQL),
+    "streaming_enrich_join": (q_streaming_enrich_join, STREAMING_ENRICH_SQL),
+    "streaming_interval_join": (q_streaming_interval_join, STREAMING_INTERVAL_JOIN_SQL),
+    "streaming_outer_interval_join": (q_streaming_outer_interval_join, STREAMING_OUTER_JOIN_SQL),
+    "top_terms_corpus": (q_top_terms, _top_terms_sql(50)),
+    "streaming_session_windows": (q_streaming_session_windows, SESSION_WINDOW_SQL),
+    "unpivot_quality_metrics": (q_unpivot_quality, _unpivot_quality_sql()),
+    "dedup_components": (q_dedup_components, _components_sql()),
+    "dedup_survivors": (q_dedup_survivors, _survivors_sql()),
+    "dedup_edit_components": (q_dedup_edit_components, _edit_survivors_sql()),
+    "pca_project": (q_pca_project, PCA_CONTRACT_SQL),  # spectral-contract oracle
+    # Full-value complement of pca_project's MLlib eigensolver: explicit
+    # distributed power iteration against an unrolled matvec CTE.
+    "power_iteration_pc1": (power_iteration_pc1, _power_iteration_sql(64)),
 }
 
 if _has_protobuf():  # pragma: no cover — absent in this container
-    PIPELINE_QUERIES["streaming_tws_user_stats"] = q_streaming_tws_stats
-    PIPELINE_ORACLES["streaming_tws_user_stats"] = STREAMING_TWS_SQL
+    PIPELINE_QUERIES["streaming_tws_user_stats"] = (q_streaming_tws_stats, STREAMING_TWS_SQL)
 else:
     # Same name, constant capability marker carrying the skip reason —
     # oracle-backed (round-12 verdict item 6) so the correctness sampler
     # can never surface an err=no_oracle row for it.
-    PIPELINE_QUERIES["streaming_tws_user_stats"] = q_streaming_tws_capability
-    PIPELINE_ORACLES["streaming_tws_user_stats"] = STREAMING_TWS_CAPABILITY_SQL
+    PIPELINE_QUERIES["streaming_tws_user_stats"] = (
+        q_streaming_tws_capability,
+        STREAMING_TWS_CAPABILITY_SQL,
+    )

@@ -27,7 +27,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from k_means_hadoop_spark.operators.assign import Centroids, nearest_centroid
+from k_means_hadoop_spark.operators.assign import Centroids, assign_expr
 
 def _events_schema(ts_type: T.DataType) -> T.StructType:
     return T.StructType(
@@ -87,18 +87,9 @@ def featurize_events(events: DataFrame) -> DataFrame:
 
 def stream_assign(events: DataFrame, centroids: Centroids) -> DataFrame:
     """Stateless per-event nearest-centroid assignment (stream-safe:
-    narrow projection, no shuffle, no state).  The argmin struct is
-    materialized once in an intermediate column so the k×d expression
-    tree appears once per row, not once per output column (same
-    restructure as ``assign_expr``)."""
-    best = nearest_centroid("features", centroids)
-    return (
-        featurize_events(events)
-        .withColumn("_best", best)
-        .withColumn("cluster", F.col("_best").getField("cluster"))
-        .withColumn("dist", F.col("_best").getField("dist"))
-        .drop("_best")
-    )
+    narrow projection, no shuffle, no state) — the batch ``assign_expr``
+    over the featurized events."""
+    return assign_expr(featurize_events(events), centroids)
 
 
 def windowed_event_stats(
@@ -134,7 +125,6 @@ class StreamingKMeansState:
     def update_from_batch(self, batch_df: DataFrame) -> None:
         """Mini-batch update: assign batch to current centroids, then
         c ← (1-α)·c + α·batch_mean for clusters that received points."""
-        from k_means_hadoop_spark.operators.assign import assign_expr
         from k_means_hadoop_spark.operators.recompute import recompute_centroids
 
         if not batch_df.take(1):

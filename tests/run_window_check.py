@@ -37,30 +37,21 @@ def main() -> int:
     con = duck_connection(sf_dir)
 
     names = only if only else list(registry.QUERIES)[:n]
-    n_pass = n_fail = n_rows_only = 0
+    n_pass = n_fail = 0
     for name in names:
-        fn = registry.QUERIES[name]
         t0 = time.time()
         try:
-            df = fn(spark, sf_dir)
-            if name in registry.ORACLES:
-                ok, msg = compare(df, con, registry.ORACLES[name])
-                dt = time.time() - t0
-                status = "PASS" if ok else "FAIL"
-                if ok:
-                    n_pass += 1
-                else:
-                    n_fail += 1
-                print(f"{status} {name} ({dt:.1f}s) {msg if not ok else ''}", flush=True)
+            ok, msg = compare(registry.QUERIES[name](spark, sf_dir), con, registry.ORACLES[name])
+            dt = time.time() - t0
+            if ok:
+                n_pass += 1
             else:
-                rows = df.count()
-                dt = time.time() - t0
-                n_rows_only += 1
-                print(f"ROWS {name} ({dt:.1f}s) rows={rows}", flush=True)
+                n_fail += 1
+            print(f"{'PASS' if ok else 'FAIL'} {name} ({dt:.1f}s) {msg if not ok else ''}", flush=True)
         except Exception as e:  # noqa: BLE001 - report and continue
             n_fail += 1
             print(f"ERR  {name} ({time.time() - t0:.1f}s) {type(e).__name__}: {e}", flush=True)
-    print(f"\nsummary: pass={n_pass} rows_only={n_rows_only} fail={n_fail}", flush=True)
+    print(f"\nsummary: pass={n_pass} fail={n_fail}", flush=True)
     return 1 if n_fail else 0
 
 

@@ -32,12 +32,6 @@ def test_oracle_parity(name, spark, sf_dir, duck):
     assert ok, f"{name}: {msg}"
 
 
-def test_rows_only_queries_run(spark, sf_dir):
-    for name in set(_QUERIES) - set(_ORACLES):
-        df = _QUERIES[name](spark, sf_dir)
-        assert df.count() > 0, f"{name}: rows-only entry returned 0 rows (vacuous)"
-
-
 def test_entry_smoke(spark):
     df = e.entry(spark)
     assert df.count() > 0

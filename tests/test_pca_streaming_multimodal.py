@@ -88,11 +88,9 @@ def test_stream_assign(spark, event_dir, tmp_path, sf_dir):
     # batch/stream parity: same expression on the same rows, same result
     from k_means_hadoop_spark.sources.events import load_events
     from k_means_hadoop_spark.streaming.stream_kmeans import featurize_events
-    from k_means_hadoop_spark.operators.assign import nearest_centroid
+    from k_means_hadoop_spark.operators.assign import assign_expr
 
-    batch = featurize_events(load_events(spark, sf_dir))
-    best = nearest_centroid("features", CENTS_2D)
-    batch_out = batch.withColumn("cluster", best["cluster"])
+    batch_out = assign_expr(featurize_events(load_events(spark, sf_dir)), CENTS_2D)
     b = {r["id"]: r["cluster"] for r in batch_out.collect()}
     s = {r["id"]: r["cluster"] for r in got.collect()}
     assert b == s
@@ -323,8 +321,7 @@ def test_tws_registry_entry_always_present(spark, sf_dir):
     the correctness sampler must never draw an err=no_oracle row)."""
     from k_means_hadoop_spark import registry_pipeline as rp
 
-    fn = rp.PIPELINE_QUERIES["streaming_tws_user_stats"]
-    assert "streaming_tws_user_stats" in rp.PIPELINE_ORACLES
+    fn, sql = rp.PIPELINE_QUERIES["streaming_tws_user_stats"]
     if not rp._has_protobuf():
         rows = fn(spark, sf_dir).collect()
         assert len(rows) == 1 and rows[0]["available"] is False
@@ -332,11 +329,7 @@ def test_tws_registry_entry_always_present(spark, sf_dir):
         # the constant oracle must hash-match the capability row
         from oracle_harness import compare, duck_connection
 
-        ok, status = compare(
-            fn(spark, sf_dir),
-            duck_connection(sf_dir),
-            rp.PIPELINE_ORACLES["streaming_tws_user_stats"],
-        )
+        ok, status = compare(fn(spark, sf_dir), duck_connection(sf_dir), sql)
         assert ok, status
 
 
@@ -436,15 +429,11 @@ def test_tws_registration_tracks_protobuf_capability():
     except ImportError:
         has_pb = False
     assert rp._has_protobuf() == has_pb
-    fn = rp.PIPELINE_QUERIES["streaming_tws_user_stats"]
     # both branches are oracle-backed (round-12 verdict item 6)
-    assert "streaming_tws_user_stats" in rp.PIPELINE_ORACLES
+    fn, sql = rp.PIPELINE_QUERIES["streaming_tws_user_stats"]
     if has_pb:
         assert fn is rp.q_streaming_tws_stats
-        assert rp.PIPELINE_ORACLES["streaming_tws_user_stats"] is rp.STREAMING_TWS_SQL
+        assert sql is rp.STREAMING_TWS_SQL
     else:
         assert fn is rp.q_streaming_tws_capability
-        assert (
-            rp.PIPELINE_ORACLES["streaming_tws_user_stats"]
-            is rp.STREAMING_TWS_CAPABILITY_SQL
-        )
+        assert sql is rp.STREAMING_TWS_CAPABILITY_SQL
