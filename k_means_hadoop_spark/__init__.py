@@ -20,8 +20,19 @@ Design stance (SURVEY.md §7):
   handle skew, keep scans pruned and filters pushed.
 """
 
+import sys
+
+from pyspark import cloudpickle
+
 from k_means_hadoop_spark.session import get_spark
 from k_means_hadoop_spark.operators.kmeans import KMeansResult, lloyd_kmeans
+
+# Worker code (mapInPandas kernels, UDTF and Data Source classes, state
+# functions) is cloudpickled BY REFERENCE by default, which needs this
+# package on every worker's sys.path.  Registering the package ships
+# every submodule's functions and classes by value instead, so the
+# engine runs wherever the driver is launched from.
+cloudpickle.register_pickle_by_value(sys.modules[__name__])
 
 __all__ = ["get_spark", "lloyd_kmeans", "KMeansResult"]
 

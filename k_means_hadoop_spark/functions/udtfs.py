@@ -41,22 +41,8 @@ class TokenizeUDTF:
             yield i, tok
 
 
-def _pickle_by_value() -> None:
-    """UDTF classes are cloudpickled to worker subprocesses (including
-    the plan-time analyze worker); by-reference pickling would require
-    this package on every worker's sys.path.  Registering the module
-    for pickle-by-value ships the class definitions inside the pickle —
-    same portability fix as sources/python_datasource.py."""
-    import sys
-
-    from pyspark import cloudpickle
-
-    cloudpickle.register_pickle_by_value(sys.modules[__name__])
-
-
 def register(spark) -> None:
     """Idempotent session registration under the SQL name ``tokenize``."""
-    _pickle_by_value()
     spark.udtf.register("tokenize", TokenizeUDTF)
 
 
@@ -91,5 +77,4 @@ class NgramColumnsUDTF:
 def register_ngram_cols(spark) -> None:
     from pyspark.sql.functions import udtf as _udtf
 
-    _pickle_by_value()
     spark.udtf.register("ngram_cols", _udtf(NgramColumnsUDTF))

@@ -24,21 +24,11 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
+
+from k_means_hadoop_spark.operators.relational import _dec, _t
 from k_means_hadoop_spark.partitioning import truncate_lineage
 
 # ------------------------------------------------------------------ helpers
-
-
-def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    if name == "events":
-        from k_means_hadoop_spark.sources.events import load_events
-
-        return load_events(spark, sf_dir)
-    return spark.read.parquet(f"{sf_dir}/{name}.parquet")
-
-
-def _dec(c: str) -> F.Column:
-    return F.col(c).cast("decimal(18,4)")
 
 
 def _dec14(c: str) -> F.Column:

@@ -653,12 +653,7 @@ def _avg_ranks(df: DataFrame, value_col: str, out_col: str) -> DataFrame:
 def spearman_quality_logprob(spark: SparkSession, sf_dir: str) -> DataFrame:
     """One row (n_docs, rho) — exact tie-aware Spearman correlation of
     the heuristic quality score and the unigram-LM logprob."""
-    return _spearman_over_docs(_docs(spark, sf_dir))
-
-
-def _spearman_over_docs(docs: DataFrame) -> DataFrame:
-    """Body split out so tools/scale_probe_spearman.py can feed an
-    in-plan-amplified docs relation through the identical plan."""
+    docs = _docs(spark, sf_dir)
     q = text.quality_scores(docs).select("doc_id", "quality")
     lp = text.unigram_logprob(docs).select("doc_id", "avg_logprob")
     # cache the joined scores: d is referenced three times (both rank

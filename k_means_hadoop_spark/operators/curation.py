@@ -1,7 +1,9 @@
 """Corpus-curation operators: the selection/splitting/outlier-control
 steps a large-scale training-data pipeline runs between dedup and
 tokenization (beyond-reference — SURVEY.md §2.9; the reference engine
-has no document pipeline at all).
+has no document pipeline at all), plus the two learned-selection
+steps: importance reweighting toward a target mixture and a
+decision-stump quality model.
 
 Scale notes:
 - the train/val/test split is a *deterministic arithmetic hash* on the
@@ -21,6 +23,10 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
+
+from k_means_hadoop_spark.operators.relational import _t
+from k_means_hadoop_spark.operators.trends import _FL6_SQL, _fl6
+from k_means_hadoop_spark.partitioning import truncate_lineage_lazy
 
 
 def _docs(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1286,6 +1292,186 @@ SELECT lang, avail AS avail_tokens, round(target, 6) AS target_tokens,
 FROM fin
 """
 
+# --------------------------------------------- importance reweighting
+#
+# Domain reweighting to a uniform language target (the DoReMi-style
+# mixture correction in its closed static form): each language gets
+# weight w_l = N/(L·n_l) so the weighted corpus is language-balanced;
+# the effective sample size (Σw)²/Σw² says how much data survives the
+# reweight.  Weights are per-lang floats (one division each, floored),
+# and the ESS numerator/denominator are exact decimal sums of those
+# floored weights — no cross-group float accumulation.
+
+
+def importance_weights_mixture(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """(lang, n_docs, weight, ess_share) — per-language reweighting to
+    the uniform target + each language's share of the global ESS."""
+    d = _t(spark, sf_dir, "documents")
+    nl = d.groupBy("lang").agg(F.count(F.lit(1)).alias("n_docs"))
+    tot = nl.agg(
+        F.sum("n_docs").alias("n"), F.count(F.lit(1)).alias("n_langs")
+    )
+    wexpr = (
+        "CAST(n AS DOUBLE) / (CAST(n_langs AS DOUBLE) * CAST(n_docs AS DOUBLE))"
+    )
+    wl = nl.crossJoin(F.broadcast(tot)).select(
+        "lang",
+        "n_docs",
+        "n",
+        F.expr(f"CAST({_FL6_SQL.format(x=wexpr)} AS DECIMAL(18,6))").alias("w6"),
+    )
+    # ESS = (Σ n_l·w_l)² / (Σ n_l·w_l²) over the floored weights; each
+    # language's share is n_l·w_l² / Σ n_l·w_l² — exact decimals until
+    # the one division.
+    sums = wl.agg(
+        F.sum(F.col("n_docs").cast("decimal(38,6)") * F.col("w6")).alias("s1"),
+        F.sum(
+            F.col("n_docs").cast("decimal(38,6)") * F.col("w6") * F.col("w6")
+        ).alias("s2"),
+    )
+    share = (
+        "CAST(n_docs AS DOUBLE) * CAST(w6 AS DOUBLE) * CAST(w6 AS DOUBLE)"
+        " / CAST(s2 AS DOUBLE)"
+    )
+    return wl.crossJoin(F.broadcast(sums)).select(
+        "lang",
+        F.col("n_docs").cast("bigint").alias("n_docs"),
+        F.col("w6").cast("double").alias("weight"),
+        _fl6(F.expr(share)).alias("ess_share"),
+    )
+
+
+IMPORTANCE_SQL = """
+WITH nl AS (SELECT lang, count(*)::BIGINT AS n_docs FROM documents GROUP BY 1),
+tot AS (SELECT SUM(n_docs)::BIGINT AS n, count(*)::BIGINT AS n_langs FROM nl),
+wl AS (SELECT lang, n_docs,
+              CAST({w} AS DECIMAL(18,6)) AS w6
+       FROM nl CROSS JOIN tot),
+sums AS (SELECT SUM(CAST(n_docs AS DECIMAL(38,6)) * w6) AS s1,
+                SUM(CAST(n_docs AS DECIMAL(38,6)) * w6 * w6) AS s2
+         FROM wl)
+SELECT lang, n_docs, CAST(w6 AS DOUBLE) AS weight,
+       {share} AS ess_share
+FROM wl CROSS JOIN sums
+""".format(
+    w=_FL6_SQL.format(
+        x="CAST(n AS DOUBLE) / (CAST(n_langs AS DOUBLE) * CAST(n_docs AS DOUBLE))"
+    ),
+    share=_FL6_SQL.format(
+        x="CAST(n_docs AS DOUBLE) * CAST(w6 AS DOUBLE) * CAST(w6 AS DOUBLE)"
+        " / CAST(s2 AS DOUBLE)"
+    ),
+)
+
+
+# --------------------------------------------- decision stump (CART)
+#
+# The best single split of document length predicting the quality
+# gate (quality >= 0.5) by weighted Gini impurity — the closed-form
+# first node of a CART tree, and the exact-arithmetic template for
+# histogram-based split finding (what LightGBM-style trainers do per
+# feature).  Candidate thresholds are the distinct n_chars values
+# (histogram-sized); cumulative class counts come from one prefix
+# pass; each candidate's impurity spends its two in-branch divisions
+# and is floored to the 6dp grid, so the argmin (with smallest-
+# threshold tiebreak) is deterministic.
+
+
+def decision_stump_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """One row (threshold, n_left, n_right, pos_left, pos_right,
+    impurity) — the Gini-optimal n_chars split for quality >= 0.5."""
+    from k_means_hadoop_spark.operators import text as text_ops
+    from k_means_hadoop_spark.partitioning import prefix_sum
+
+    docs = _t(spark, sf_dir, "documents")
+    q = text_ops.quality_scores(docs).select(
+        "doc_id",
+        "n_chars",
+        (F.col("quality") >= 0.5).cast("int").alias("y"),
+    )
+    # materialize the histogram once: prefix_sum's range-bound sampling
+    # would otherwise re-run the quality pipeline per evaluation (the
+    # quantile_normalize lesson); the histogram is distinct-value-sized
+    hist = q.groupBy("n_chars").agg(
+        F.count(F.lit(1)).alias("m"), F.sum("y").alias("p")
+    ).transform(truncate_lineage_lazy)
+    tot = hist.agg(
+        F.sum("m").alias("n"), F.sum("p").alias("pos")
+    )
+    cum_m = prefix_sum(hist, "m", [F.col("n_chars").asc()], out_col="cm")
+    cum = prefix_sum(
+        cum_m, "p", [F.col("n_chars").asc()], out_col="cp"
+    ).select("n_chars", "cm", "cp")
+    # weighted Gini: N - A/n_l - B/n_r with A = pos_l² + neg_l², etc.
+    imp = (
+        "CAST(n AS DOUBLE)"
+        " - (CAST(cp AS DOUBLE) * CAST(cp AS DOUBLE)"
+        "    + CAST(cm - cp AS DOUBLE) * CAST(cm - cp AS DOUBLE)) / CAST(cm AS DOUBLE)"
+        " - (CAST(pos - cp AS DOUBLE) * CAST(pos - cp AS DOUBLE)"
+        "    + CAST((n - cm) - (pos - cp) AS DOUBLE)"
+        "      * CAST((n - cm) - (pos - cp) AS DOUBLE)) / CAST(n - cm AS DOUBLE)"
+    )
+    cand = (
+        cum.crossJoin(F.broadcast(tot))
+        .where(F.col("cm") < F.col("n"))  # both sides non-empty
+        .select(
+            F.col("n_chars").alias("threshold"),
+            F.col("cm").cast("bigint").alias("n_left"),
+            (F.col("n") - F.col("cm")).cast("bigint").alias("n_right"),
+            F.col("cp").cast("bigint").alias("pos_left"),
+            (F.col("pos") - F.col("cp")).cast("bigint").alias("pos_right"),
+            F.expr(
+                f"CAST({_FL6_SQL.format(x=imp)} AS DECIMAL(28,6))"
+            ).alias("imp6"),
+        )
+    )
+    w = Window.orderBy(F.col("imp6").asc(), F.col("threshold").asc())
+    return (
+        cand.withColumn("rn", F.row_number().over(w))
+        .where(F.col("rn") == 1)
+        .select(
+            F.col("threshold").cast("bigint").alias("threshold"),
+            "n_left",
+            "n_right",
+            "pos_left",
+            "pos_right",
+            F.col("imp6").cast("double").alias("impurity"),
+        )
+    )
+
+
+def _stump_sql() -> str:
+    from k_means_hadoop_spark.registry_pipeline import _quality_sql
+
+    imp = (
+        "CAST(n AS DOUBLE)"
+        " - (CAST(cp AS DOUBLE) * CAST(cp AS DOUBLE)"
+        "    + CAST(cm - cp AS DOUBLE) * CAST(cm - cp AS DOUBLE)) / CAST(cm AS DOUBLE)"
+        " - (CAST(pos - cp AS DOUBLE) * CAST(pos - cp AS DOUBLE)"
+        "    + CAST((n - cm) - (pos - cp) AS DOUBLE)"
+        "      * CAST((n - cm) - (pos - cp) AS DOUBLE)) / CAST(n - cm AS DOUBLE)"
+    )
+    return f"""
+WITH q AS (SELECT doc_id, n_chars, (quality >= 0.5)::INT AS y
+           FROM ({_quality_sql()})),
+hist AS (SELECT n_chars, count(*)::BIGINT AS m, SUM(y)::BIGINT AS p
+         FROM q GROUP BY 1),
+tot AS (SELECT SUM(m)::BIGINT AS n, SUM(p)::BIGINT AS pos FROM hist),
+cum AS (SELECT n_chars,
+               SUM(m) OVER (ORDER BY n_chars) AS cm,
+               SUM(p) OVER (ORDER BY n_chars) AS cp
+        FROM hist),
+cand AS (SELECT n_chars AS threshold, cm::BIGINT AS n_left,
+                (n - cm)::BIGINT AS n_right, cp::BIGINT AS pos_left,
+                (pos - cp)::BIGINT AS pos_right,
+                CAST({_FL6_SQL.format(x=imp)} AS DECIMAL(28,6)) AS imp6
+         FROM cum CROSS JOIN tot WHERE cm < n)
+SELECT threshold, n_left, n_right, pos_left, pos_right,
+       CAST(imp6 AS DOUBLE) AS impurity
+FROM cand ORDER BY imp6 ASC, threshold ASC LIMIT 1
+"""
+
+
 CURATION_QUERIES = {
     "split_train_val": (split_train_val, SPLIT_SQL),
     "dataset_mixture_plan": (dataset_mixture_plan, MIXTURE_PLAN_SQL),
@@ -1310,4 +1496,6 @@ CURATION_QUERIES = {
     # a within-tolerance/contract verdict the oracle asserts as true.
     "stratified_sample_langs": (stratified_sample_langs, STRATIFIED_SQL),
     "quality_classifier": (quality_classifier_agreement, _qc_agreement_sql()),
+    "importance_weights_mixture": (importance_weights_mixture, IMPORTANCE_SQL),
+    "decision_stump_quality": (decision_stump_quality, _stump_sql()),
 }

@@ -113,6 +113,37 @@ def ngram_jaccard_pairs(
     )
 
 
+def _verify_jaccard(
+    cand: DataFrame, docs: DataFrame, n: int, text_col: str, threshold: float
+) -> DataFrame:
+    """(a_id, b_id, jaccard) for the candidate pairs whose EXACT n-gram
+    Jaccard is ≥ ``threshold``.
+
+    Per-doc shingle ARRAYS, not the exploded table: candidates join
+    twice on doc_id (narrow keys + one doc-sized array column) and
+    |A∩B| is computed row-locally with array_intersect — no second
+    explode, no per-shingle join fan-out, no extra aggregation, and
+    |A| / |B| fall out of F.size instead of two more count joins.  The
+    arrays are bounded by document length, so the shuffle rows stay
+    small even when a candidate doc appears in many pairs.  word_ngrams
+    arrays are distinct, so size(array_intersect) equals the
+    exploded-join common count exactly; result-set equality with
+    ngram_jaccard_pairs stays pinned in tests/test_analytics.py."""
+    doc_sh = docs.select(
+        "doc_id", word_ngrams(F.col(text_col), n).alias("sh_arr")
+    )
+    a_sh = doc_sh.select(F.col("doc_id").alias("a_id"), F.col("sh_arr").alias("sa"))
+    b_sh = doc_sh.select(F.col("doc_id").alias("b_id"), F.col("sh_arr").alias("sb"))
+    common = F.size(F.array_intersect("sa", "sb"))
+    jac = common.cast("double") / (F.size("sa") + F.size("sb") - common)
+    return (
+        cand.join(a_sh, "a_id")
+        .join(b_sh, "b_id")
+        .select("a_id", "b_id", F.round(jac, 6).alias("jaccard"))
+        .filter(F.col("jaccard") >= threshold)
+    )
+
+
 def prefix_filtered_jaccard(
     docs: DataFrame, n: int = 3, threshold: float = 0.7, text_col: str = "text"
 ) -> DataFrame:
@@ -174,28 +205,7 @@ def prefix_filtered_jaccard(
         )
         .distinct()
     )
-    # Verification (round-12): per-doc shingle ARRAYS, not the exploded
-    # table — the ``minhash_verified_pairs`` pattern.  Candidates join
-    # twice on doc_id (narrow keys + one doc-sized array column) and
-    # |A∩B| is computed row-locally with array_intersect: no second
-    # explode, no per-shingle join fan-out, no extra aggregation, and
-    # |A| / |B| fall out of F.size instead of two more count joins.
-    # word_ngrams arrays are distinct, so size(array_intersect) equals
-    # the exploded-join common count exactly; result-set equality with
-    # ngram_jaccard_pairs stays pinned in tests/test_analytics.py.
-    doc_sh = docs.select(
-        "doc_id", word_ngrams(F.col(text_col), n).alias("sh_arr")
-    )
-    a_sh = doc_sh.select(F.col("doc_id").alias("a_id"), F.col("sh_arr").alias("sa"))
-    b_sh = doc_sh.select(F.col("doc_id").alias("b_id"), F.col("sh_arr").alias("sb"))
-    common = F.size(F.array_intersect("sa", "sb"))
-    jac = common.cast("double") / (F.size("sa") + F.size("sb") - common)
-    return (
-        cand.join(a_sh, "a_id")
-        .join(b_sh, "b_id")
-        .select("a_id", "b_id", F.round(jac, 6).alias("jaccard"))
-        .filter(F.col("jaccard") >= threshold)
-    )
+    return _verify_jaccard(cand, docs, n, text_col, threshold)
 
 
 def minhash_signatures(docs: DataFrame, n: int = 3, text_col: str = "text") -> DataFrame:
@@ -287,25 +297,7 @@ def minhash_verified_pairs(
     so the quadratic verification cost collapses to
     O(candidates · shingles/doc)."""
     cand = minhash_lsh_candidates(docs, n, bands, text_col)
-    # Per-doc shingle ARRAYS, not the exploded table: verification then
-    # joins candidates twice on doc_id (narrow keys + one array column)
-    # and computes |A∩B| row-locally with array_intersect — no second
-    # explode, no per-shingle join fan-out, no extra aggregation.  The
-    # arrays are doc-sized (bounded by document length), so the shuffle
-    # rows stay small even when a candidate doc appears in many pairs.
-    doc_sh = docs.select(
-        "doc_id", word_ngrams(F.col(text_col), n).alias("sh_arr")
-    )
-    a_sh = doc_sh.select(F.col("doc_id").alias("a_id"), F.col("sh_arr").alias("sa"))
-    b_sh = doc_sh.select(F.col("doc_id").alias("b_id"), F.col("sh_arr").alias("sb"))
-    common = F.size(F.array_intersect("sa", "sb"))
-    jac = common.cast("double") / (F.size("sa") + F.size("sb") - common)
-    return (
-        cand.join(a_sh, "a_id")
-        .join(b_sh, "b_id")
-        .select("a_id", "b_id", F.round(jac, 6).alias("jaccard"))
-        .filter(F.col("jaccard") >= threshold)
-    )
+    return _verify_jaccard(cand, docs, n, text_col, threshold)
 
 
 def edit_distance_pairs(

@@ -1,8 +1,12 @@
-"""Round-6 graph-mining, text-mining, and embedding additions
+"""Graph-mining, text-mining, and embedding operators
 (beyond-reference — SURVEY.md §2.9): HITS hubs/authorities on the
-customer-part bipartite graph, resource-allocation link prediction on
-the co-purchase graph, Flesch readability, per-document character
-entropy, and a Johnson-Lindenstrauss sign random projection.
+customer-part bipartite graph, personalized PageRank, resource-
+allocation and Adamic-Adar link prediction, local clustering
+coefficients and degree assortativity on the co-purchase graph,
+Flesch readability, per-document character entropy, MATTR lexical
+diversity, stupid-backoff trigram scores, Monroe log-odds terms per
+language, negative-sampling pairs, and a Johnson-Lindenstrauss sign
+random projection.
 
 Determinism conventions as in operators/trends.py; the iterative HITS
 scores are re-stabilized to DECIMAL(18,6) after every normalization
@@ -24,7 +28,7 @@ from k_means_hadoop_spark.operators.analytics import (
 from k_means_hadoop_spark.operators.relational import _t
 from k_means_hadoop_spark.operators.trends import _FL6_SQL, _fl6
 
-from k_means_hadoop_spark.partitioning import truncate_lineage
+from k_means_hadoop_spark.partitioning import truncate_lineage, truncate_lineage_lazy
 
 # --------------------------------------------- HITS hubs/authorities
 #
@@ -862,6 +866,380 @@ r{i} AS (SELECT t.part,
     )
 
 
+# --------------------------------------------- stupid backoff trigrams
+#
+# Brants et al. 2007's web-scale LM smoothing: score(w3 | w1 w2) =
+# c3/c2 when the trigram was seen, else 0.4 · c2(w2 w3)/c1(w2) — the
+# no-normalization backoff that made distributed trigram LMs tractable.
+# The query scores the top-bigram × top-unigram continuation grid, so
+# BOTH branches are exercised (unseen continuations back off).  All
+# counts are exact; the branch is on integer presence; each score
+# spends one division + the constant α multiply, then the 6dp floor.
+
+_SB_BIGRAMS = 20
+_SB_UNIGRAMS = 5
+_SB_ALPHA = 0.4
+
+
+def stupid_backoff_trigrams(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """(w1, w2, w3, c3, backed_off, score) over the top-{b} bigram ×
+    top-{u} unigram grid."""
+    from k_means_hadoop_spark.operators import text as text_ops
+
+    docs = _t(spark, sf_dir, "documents")
+    toks = F.filter(text_ops._tokens(F.col("text")), lambda x: x != "")
+    t = docs.select(toks.alias("toks")).where(F.size("toks") >= 3)
+    tri_len = F.size("toks") - 2
+    tris = t.select(
+        F.explode(
+            F.zip_with(
+                F.slice("toks", 1, tri_len),
+                F.zip_with(
+                    F.slice("toks", 2, tri_len),
+                    F.slice("toks", 3, tri_len),
+                    lambda b, c: F.struct(b.alias("w2"), c.alias("w3")),
+                ),
+                lambda a, bc: F.struct(
+                    a.alias("w1"), bc["w2"].alias("w2"), bc["w3"].alias("w3")
+                ),
+            )
+        ).alias("g")
+    ).select("g.w1", "g.w2", "g.w3")
+    c3 = tris.groupBy("w1", "w2", "w3").agg(F.count(F.lit(1)).alias("c3"))
+    # bigram/unigram counts over the SAME token stream (all positions)
+    t2 = docs.select(toks.alias("toks")).where(F.size("toks") >= 2)
+    pair_len = F.size("toks") - 1
+    bis = t2.select(
+        F.explode(
+            F.zip_with(
+                F.slice("toks", 1, pair_len),
+                F.slice("toks", 2, pair_len),
+                lambda a, b: F.struct(a.alias("w1"), b.alias("w2")),
+            )
+        ).alias("g")
+    ).select("g.w1", "g.w2")
+    c2 = bis.groupBy("w1", "w2").agg(F.count(F.lit(1)).alias("c2"))
+    unis = docs.select(F.explode(toks).alias("w"))
+    c1 = unis.groupBy("w").agg(F.count(F.lit(1)).alias("c1"))
+
+    top_bi = c2.orderBy(
+        F.col("c2").desc(), F.col("w1").asc(), F.col("w2").asc()
+    ).limit(_SB_BIGRAMS)
+    top_u = (
+        c1.orderBy(F.col("c1").desc(), F.col("w").asc())
+        .limit(_SB_UNIGRAMS)
+        .select(F.col("w").alias("w3"))
+    )
+    grid = top_bi.crossJoin(F.broadcast(top_u))
+    c2b = c2.select(
+        F.col("w1").alias("w2"), F.col("w2").alias("w3"), F.col("c2").alias("c2b")
+    )
+    c1b = c1.select(F.col("w").alias("w2"), F.col("c1").alias("c1_w2"))
+    j = (
+        grid.join(c3, ["w1", "w2", "w3"], "left")
+        .join(c2b, ["w2", "w3"], "left")
+        .join(c1b, "w2")
+    )
+    score = (
+        "CASE WHEN c3 IS NOT NULL THEN CAST(c3 AS DOUBLE) / CAST(c2 AS DOUBLE)"
+        f" WHEN c2b IS NOT NULL THEN {_SB_ALPHA} * (CAST(c2b AS DOUBLE) / CAST(c1_w2 AS DOUBLE))"
+        " ELSE CAST(0 AS DOUBLE) END"
+    )
+    return j.select(
+        "w1",
+        "w2",
+        "w3",
+        F.coalesce(F.col("c3"), F.lit(0)).cast("bigint").alias("c3"),
+        F.col("c3").isNull().alias("backed_off"),
+        _fl6(F.expr(score)).alias("score"),
+    )
+
+
+stupid_backoff_trigrams.__doc__ = stupid_backoff_trigrams.__doc__.format(
+    b=_SB_BIGRAMS, u=_SB_UNIGRAMS
+)
+
+
+def _sb_sql() -> str:
+    from k_means_hadoop_spark.registry_pipeline import _TOKS
+
+    score = _FL6_SQL.format(
+        x="CASE WHEN c3 IS NOT NULL THEN CAST(c3 AS DOUBLE) / CAST(c2 AS DOUBLE)"
+        f" WHEN c2b IS NOT NULL THEN {_SB_ALPHA} * (CAST(c2b AS DOUBLE) / CAST(c1_w2 AS DOUBLE))"
+        " ELSE CAST(0 AS DOUBLE) END"
+    )
+    return f"""
+WITH t AS (SELECT list_filter({_TOKS}, x -> x != '') AS toks FROM documents),
+tris AS (
+  SELECT unnest(list_transform(range(1, len(toks) - 1),
+           i -> {{'w1': toks[i], 'w2': toks[i + 1], 'w3': toks[i + 2]}}),
+         recursive := true)
+  FROM t WHERE len(toks) >= 3),
+c3 AS (SELECT w1, w2, w3, count(*)::BIGINT AS c3 FROM tris GROUP BY 1, 2, 3),
+bis AS (
+  SELECT unnest(list_transform(range(1, len(toks)),
+           i -> {{'w1': toks[i], 'w2': toks[i + 1]}}), recursive := true)
+  FROM t WHERE len(toks) >= 2),
+c2 AS (SELECT w1, w2, count(*)::BIGINT AS c2 FROM bis GROUP BY 1, 2),
+c1 AS (SELECT w, count(*)::BIGINT AS c1
+       FROM (SELECT unnest(toks) AS w FROM t) GROUP BY 1),
+top_bi AS (SELECT * FROM c2 ORDER BY c2 DESC, w1, w2 LIMIT {_SB_BIGRAMS}),
+top_u AS (SELECT w AS w3 FROM c1 ORDER BY c1 DESC, w LIMIT {_SB_UNIGRAMS}),
+grid AS (SELECT * FROM top_bi CROSS JOIN top_u),
+j AS (SELECT g.w1, g.w2, g.w3, g.c2, c3.c3,
+             cb.c2 AS c2b, cu.c1 AS c1_w2
+      FROM grid g
+      LEFT JOIN c3 ON c3.w1 = g.w1 AND c3.w2 = g.w2 AND c3.w3 = g.w3
+      LEFT JOIN c2 cb ON cb.w1 = g.w2 AND cb.w2 = g.w3
+      JOIN c1 cu ON cu.w = g.w2)
+SELECT w1, w2, w3, COALESCE(c3, 0)::BIGINT AS c3,
+       (c3 IS NULL) AS backed_off,
+       {score} AS score
+FROM j
+"""
+
+
+# --------------------------------------------- Adamic-Adar link score
+#
+# resource_allocation_links' sibling with the 1/ln(deg) weight —
+# the standard link-prediction index that discounts hub neighbors
+# logarithmically instead of linearly.  Per-neighbor weights are
+# floored to the 6dp decimal grid ONCE (one division each), so the
+# per-pair sums are exact decimal adds in any order.
+
+_AA_TOP = 30
+
+
+def adamic_adar_links(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """(u, v, n_common, aa) — top-{k} non-edges by Adamic-Adar score
+    on the co-purchase graph."""
+
+    e = _copurchase_edges(spark, sf_dir)
+    nbrs = e.select(
+        F.col("pa").alias("node"), F.col("pb").alias("nbr")
+    ).unionByName(e.select(F.col("pb").alias("node"), F.col("pa").alias("nbr")))
+    deg = nbrs.groupBy("node").agg(F.count(F.lit(1)).alias("deg"))
+    # deg-1 nodes can never be the shared neighbor of two distinct
+    # endpoints, so excluding them is semantics-free — and required:
+    # their ln(deg) = 0 weight would divide by zero before the join
+    # could filter them out (hit at sf0.1).
+    wz = deg.where(F.col("deg") >= 2).select(
+        F.col("node").alias("z"),
+        F.expr(
+            "CAST("
+            + _FL6_SQL.format(x="CAST(1 AS DOUBLE) / ln(CAST(deg AS DOUBLE))")
+            + " AS DECIMAL(18,6))"
+        ).alias("w6"),
+    )
+    n1 = nbrs.select(F.col("nbr").alias("u"), F.col("node").alias("z"))
+    n2 = nbrs.select(F.col("nbr").alias("v"), F.col("node").alias("z2"))
+    cand = (
+        n1.join(n2, (F.col("z") == F.col("z2")) & (F.col("u") < F.col("v")))
+        .join(F.broadcast(wz), "z")
+        .groupBy("u", "v")
+        .agg(
+            F.count(F.lit(1)).cast("bigint").alias("n_common"),
+            F.sum("w6").alias("aa6"),
+        )
+    )
+    new_links = cand.join(
+        e, (cand.u == e.pa) & (cand.v == e.pb), "left_anti"
+    )
+    w = Window.orderBy(F.col("aa6").desc(), F.col("u"), F.col("v"))
+    return (
+        new_links.withColumn("rn", F.row_number().over(w))
+        .filter(F.col("rn") <= _AA_TOP)
+        .select("u", "v", "n_common", F.col("aa6").cast("double").alias("aa"))
+    )
+
+
+adamic_adar_links.__doc__ = adamic_adar_links.__doc__.format(k=_AA_TOP)
+
+
+def _aa_sql() -> str:
+
+    return (
+        "WITH "
+        + _EDGES_CTE.strip()
+        + """,
+nbrs AS (SELECT pa AS node, pb AS nbr FROM e
+         UNION ALL SELECT pb, pa FROM e),
+deg AS (SELECT node, count(*)::BIGINT AS deg FROM nbrs GROUP BY 1),
+wz AS (SELECT node AS z, CAST({w6} AS DECIMAL(18,6)) AS w6 FROM deg WHERE deg >= 2),
+cand AS (
+  SELECT n1.nbr AS u, n2.nbr AS v,
+         count(*)::BIGINT AS n_common, SUM(w6) AS aa6
+  FROM nbrs n1 JOIN nbrs n2 ON n2.node = n1.node AND n1.nbr < n2.nbr
+  JOIN wz ON wz.z = n1.node
+  GROUP BY 1, 2),
+new_links AS (
+  SELECT * FROM cand
+  WHERE NOT EXISTS (SELECT 1 FROM e WHERE e.pa = cand.u AND e.pb = cand.v))
+SELECT u, v, n_common, CAST(aa6 AS DOUBLE) AS aa
+FROM new_links
+ORDER BY aa6 DESC, u, v
+LIMIT {k}
+""".format(
+            w6=_FL6_SQL.format(
+                x="CAST(1 AS DOUBLE) / ln(CAST(deg AS DOUBLE))"
+            ),
+            k=_AA_TOP,
+        )
+    )
+
+
+# --------------------------------------------- local clustering coeff
+#
+# Per-node clustering coefficient on the co-purchase graph:
+# C(v) = 2·tri(v) / (deg(v)·(deg(v)−1)).  Triangles enumerate once in
+# canonical a<b<c orientation (edge ⋈ edge ⋈ edge — the standard
+# distributed triangle plan; shuffle ∝ Σ deg², bounded subgraph), then
+# each triangle credits its three corners; exact integers until one
+# division per node.
+
+
+def clustering_coefficient_nodes(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """(node, deg, triangles, coeff) for nodes with deg >= 2."""
+
+    e = _copurchase_edges(spark, sf_dir).transform(truncate_lineage_lazy)
+    e1 = e.select(F.col("pa").alias("a"), F.col("pb").alias("b"))
+    e2 = e.select(F.col("pa").alias("b2"), F.col("pb").alias("c"))
+    wedges = e1.join(e2, F.col("b") == F.col("b2")).select("a", "b", "c")
+    e3 = e.select(F.col("pa").alias("a3"), F.col("pb").alias("c3"))
+    tris = wedges.join(
+        e3, (F.col("a") == F.col("a3")) & (F.col("c") == F.col("c3"))
+    ).select("a", "b", "c")
+    corners = (
+        tris.select(F.col("a").alias("node"))
+        .unionAll(tris.select(F.col("b").alias("node")))
+        .unionAll(tris.select(F.col("c").alias("node")))
+    )
+    tcount = corners.groupBy("node").agg(F.count(F.lit(1)).alias("triangles"))
+    nbrs = e.select(
+        F.col("pa").alias("node"), F.col("pb").alias("nbr")
+    ).unionByName(e.select(F.col("pb").alias("node"), F.col("pa").alias("nbr")))
+    deg = nbrs.groupBy("node").agg(F.count(F.lit(1)).alias("deg"))
+    c = (
+        "CAST(2 AS DOUBLE) * CAST(triangles AS DOUBLE)"
+        " / (CAST(deg AS DOUBLE) * CAST(deg - 1 AS DOUBLE))"
+    )
+    return (
+        deg.where(F.col("deg") >= 2)
+        .join(tcount, "node", "left")
+        .fillna(0, subset=["triangles"])
+        .select(
+            F.col("node").cast("bigint").alias("node"),
+            F.col("deg").cast("bigint").alias("deg"),
+            F.col("triangles").cast("bigint").alias("triangles"),
+            _fl6(F.expr(c)).alias("coeff"),
+        )
+    )
+
+
+def _cc_sql() -> str:
+
+    return (
+        "WITH "
+        + _EDGES_CTE.strip()
+        + """,
+tris AS (SELECT e1.pa AS a, e1.pb AS b, e2.pb AS c
+         FROM e e1 JOIN e e2 ON e2.pa = e1.pb
+         JOIN e e3 ON e3.pa = e1.pa AND e3.pb = e2.pb),
+corners AS (SELECT a AS node FROM tris
+            UNION ALL SELECT b FROM tris
+            UNION ALL SELECT c FROM tris),
+tcount AS (SELECT node, count(*)::BIGINT AS triangles FROM corners GROUP BY 1),
+nbrs AS (SELECT pa AS node, pb AS nbr FROM e
+         UNION ALL SELECT pb, pa FROM e),
+deg AS (SELECT node, count(*)::BIGINT AS deg FROM nbrs GROUP BY 1)
+SELECT deg.node::BIGINT AS node, deg.deg::BIGINT AS deg,
+       COALESCE(tcount.triangles, 0)::BIGINT AS triangles,
+       {c} AS coeff
+FROM deg LEFT JOIN tcount ON tcount.node = deg.node
+WHERE deg.deg >= 2
+""".format(
+            c=_FL6_SQL.format(
+                x="CAST(2 AS DOUBLE) * CAST(COALESCE(tcount.triangles, 0) AS DOUBLE)"
+                " / (CAST(deg.deg AS DOUBLE) * CAST(deg.deg - 1 AS DOUBLE))"
+            )
+        )
+    )
+
+
+# --------------------------------------------- log-odds terms (Monroe)
+#
+# "Fightin' words": which terms distinguish the English corpus slice
+# from the rest — the Dirichlet(+1)-smoothed log-odds-ratio
+# lor(t) = ln( (c1+1)(n2−c2+1) / ((n1−c1+1)(c2+1)) ).  Every factor is
+# an exact BIGINT, so the single ln argument is ONE exact-operand IEEE
+# division; the result floors to the 6dp grid.  Term-grain map +
+# aggregate; the top-20 cut is Spark's TakeOrdered (distributed
+# top-k, no global sort) with the term string as the deterministic
+# tiebreak.
+
+_LO_TOPK = 20
+
+
+def log_odds_terms_langs(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """(term, c_en, c_rest, lor) — top-20 most English-associated
+    terms by smoothed log-odds."""
+    from k_means_hadoop_spark.operators import text
+    from k_means_hadoop_spark.operators.corpus_extra import _docs
+
+    d = _docs(spark, sf_dir).select(
+        (F.col("lang") == "en").cast("int").alias("is_en"), "text"
+    )
+    toks = F.filter(text._tokens(F.col("text")), lambda x: x != "")
+    tf = (
+        d.select("is_en", F.explode(toks).alias("term"))
+        .groupBy("term")
+        .agg(
+            F.sum("is_en").alias("c1"),
+            F.sum(1 - F.col("is_en")).alias("c2"),
+        )
+    )
+    tot = tf.agg(F.sum("c1").alias("n1"), F.sum("c2").alias("n2"))
+    lor = _FL6_SQL.format(
+        x="ln(CAST((c1 + 1) * (n2 - c2 + 1) AS DOUBLE)"
+        " / CAST((n1 - c1 + 1) * (c2 + 1) AS DOUBLE))"
+    )
+    scored = tf.crossJoin(F.broadcast(tot)).select(
+        "term",
+        F.col("c1").cast("bigint").alias("c_en"),
+        F.col("c2").cast("bigint").alias("c_rest"),
+        F.expr(lor).alias("lor"),
+    )
+    return scored.orderBy(F.col("lor").desc(), F.col("term").asc()).limit(
+        _LO_TOPK
+    )
+
+
+def _log_odds_sql() -> str:
+    from k_means_hadoop_spark.registry_pipeline import _TOKS
+
+    lor = _FL6_SQL.format(
+        x="ln(CAST((c1 + 1) * (n2 - c2 + 1) AS DOUBLE)"
+        " / CAST((n1 - c1 + 1) * (c2 + 1) AS DOUBLE))"
+    )
+    return f"""
+WITH d AS (SELECT CASE WHEN lang = 'en' THEN 1 ELSE 0 END AS is_en, text
+           FROM documents),
+tf AS (SELECT tok AS term,
+              SUM(is_en)::BIGINT AS c1,
+              SUM(1 - is_en)::BIGINT AS c2
+       FROM (SELECT is_en,
+                    unnest(list_filter({_TOKS}, x -> x != '')) AS tok
+             FROM d)
+       GROUP BY 1),
+tot AS (SELECT SUM(c1)::BIGINT AS n1, SUM(c2)::BIGINT AS n2 FROM tf)
+SELECT term, c1 AS c_en, c2 AS c_rest,
+       {lor} AS lor
+FROM tf CROSS JOIN tot
+ORDER BY lor DESC, term ASC
+LIMIT {_LO_TOPK}
+"""
+
+
 MINING_QUERIES = {
     "hits_copurchase": (hits_copurchase, _hits_sql()),
     "resource_allocation_links": (resource_allocation_links, RA_SQL),
@@ -872,4 +1250,8 @@ MINING_QUERIES = {
     "mattr_docs": (mattr_docs, MATTR_SQL),
     "negative_sampling_pairs": (negative_sampling_pairs, NEG_SAMPLING_SQL),
     "pagerank_personalized": (pagerank_personalized, _ppr_sql()),
+    "stupid_backoff_trigrams": (stupid_backoff_trigrams, _sb_sql()),
+    "adamic_adar_links": (adamic_adar_links, _aa_sql()),
+    "clustering_coefficient_nodes": (clustering_coefficient_nodes, _cc_sql()),
+    "log_odds_terms_langs": (log_odds_terms_langs, _log_odds_sql()),
 }

@@ -240,23 +240,6 @@ REAL_DECODE_SCHEMA = T.StructType(
 )
 
 
-def _pickle_by_value() -> None:
-    """The real-decode kernels import functions/codecs; cloudpickle
-    ships module-level closures BY REFERENCE, which breaks on any
-    driver not launched from the repo root (the off-path failure
-    run_window_check exercises from /tmp).  Register this module AND
-    the codecs module for pickle-by-value so the kernels ship inside
-    the plan — the stateful.py / udtfs.py portability fix."""
-    import sys
-
-    from pyspark import cloudpickle
-
-    from k_means_hadoop_spark.functions import codecs
-
-    cloudpickle.register_pickle_by_value(sys.modules[__name__])
-    cloudpickle.register_pickle_by_value(codecs)
-
-
 def decode_media_real(media: DataFrame, thumb: tuple[int, int] = (4, 3)) -> DataFrame:
     """REAL decode of BMP images and PCM-WAV audio payloads: pixels and
     samples are parsed from the actual bytes (not metadata), images get
@@ -272,7 +255,6 @@ def decode_media_real(media: DataFrame, thumb: tuple[int, int] = (4, 3)) -> Data
 
     from k_means_hadoop_spark.functions import codecs
 
-    _pickle_by_value()
     tw, th = thumb
 
     def _batches(it: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
@@ -377,7 +359,6 @@ def synthesize_codec_media(
 
     from k_means_hadoop_spark.functions import codecs
 
-    _pickle_by_value()
     out_schema = T.StructType(
         [
             T.StructField("media_id", T.LongType(), False),
@@ -452,7 +433,6 @@ def wav_frame_features(media: DataFrame, frame: int = 16) -> DataFrame:
 
     from k_means_hadoop_spark.functions import codecs
 
-    _pickle_by_value()
     audio = media.filter(F.col("kind") == "audio").select("media_id", "payload")
 
     def _batches(it: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:

@@ -8,6 +8,11 @@ Spark-first: ``StandardScaler(withMean=True, withStd=False)`` (N2) →
 eigensolve on the driver (d×d only), exactly the right split at 100 TB
 (n never leaves the cluster, d×d is tiny).
 
+The dominant component is also computed twice by explicit distributed
+linear algebra: ``power_iteration_pc1`` (exact decimals, the value
+oracle) and ``power_iteration_pc1_float`` (one Arrow-batched Gram pass
+plus a driver-local eigensolve, the scale path, checked by contract).
+
 Eigenvector SIGN is indeterminate across implementations (the notebook
 inherits numpy's convention); downstream consumers (plotting) are
 sign-invariant, so parity is defined up to per-component sign.
@@ -15,8 +20,13 @@ sign-invariant, so parity is defined up to per-component sign.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from typing import Iterator
+
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+
+from k_means_hadoop_spark.operators.relational import _t
+from k_means_hadoop_spark.operators.trends import _FL6_SQL
 from k_means_hadoop_spark.partitioning import truncate_lineage
 
 
@@ -286,3 +296,175 @@ def _power_iteration_sql(d: int = 64) -> str:
         + f" SELECT v.j AS pos, CAST(v.val AS DOUBLE) AS loading, lam.eigenvalue"
         f" FROM {prev} v CROSS JOIN lam"
     )
+
+
+# ------------------------------------------- float-path power iteration
+#
+# The SCALE path for the dominant principal component (r5 verdict item
+# 2): the exact-decimal ``power_iteration_pc1`` is the value oracle —
+# auditable cross-engine, but decimal arithmetic makes its corpus pass
+# ~6 s at sf0.1.  This variant does what a production Spark job would:
+#
+#   1. ONE Arrow-batched pass computes the Gram matrix — numpy
+#      ``X.T @ X`` per batch inside ``mapInPandas`` (BLAS, not a d²
+#      row explode), partials summed on the driver.  Only d×d values
+#      ever cross the network; corpus size only affects the scan.
+#   2. The d×d eigensolve runs driver-local (numpy.linalg.eigh) — the
+#      same split MLlib's PCA uses, exactly right at 100 TB.
+#   3. Float sums are partial-agg-order dependent, so the eigenpair is
+#      NOT hash-comparable; the emitted row is the CONTRACT the
+#      eigensolve must satisfy against exactly-verified quantities:
+#      trace6 / maxvar6 / top_var_pos come from the decimal pass (hard
+#      hash-checked values tying the float path to the data), and the
+#      booleans are mathematically guaranteed for a correct dominant
+#      eigenpair of the true covariance: residual ‖Cv−λv‖ ≤ 1e-6·λ,
+#      λ > 0, max_i cov_ii ≤ λ ≤ trace (Rayleigh bounds).
+#
+# tests/test_round7_ops.py additionally pins the float eigenvector
+# against the exact-decimal path (direction cosine / λ ratio).
+"""Cites reference PCA_Plot.ipynb cell-0 (covariance + eig) for the
+semantics; the distributed Gram split is the Spark-first re-design."""
+
+
+def _gram_partials(emb: DataFrame, d: int) -> list:
+    """Collect per-batch (n, colsum, gram) partials — ≤ one small row
+    per Arrow batch; the corpus never reaches the driver."""
+    import numpy as np
+    import pandas as pd
+
+    def _batches(it: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
+        for pdf in it:
+            if not len(pdf):
+                continue
+            X = np.array(pdf["embedding"].tolist(), dtype=np.float64)
+            yield pd.DataFrame(
+                {
+                    "n_b": [len(X)],
+                    "s_b": [X.sum(axis=0).tolist()],
+                    "g_b": [(X.T @ X).ravel().tolist()],
+                }
+            )
+
+    schema = "n_b bigint, s_b array<double>, g_b array<double>"
+    return emb.mapInPandas(_batches, schema=schema).collect()
+
+
+def power_iteration_pc1_float(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """One row (d, n, trace6, maxvar6, top_var_pos, lam_pos,
+    lam_le_trace, lam_ge_maxvar, residual_ok) — the float-path dominant
+    eigenpair contract (see module comment)."""
+    import numpy as np
+
+    emb = _t(spark, sf_dir, "embeddings").select("embedding")
+    first = emb.first()
+    d = len(first["embedding"]) if first else 0
+
+    parts = _gram_partials(emb, d)
+    n = int(sum(p["n_b"] for p in parts))
+    if n <= 0 or d <= 0:
+        # an empty table would otherwise surface as a divide-by-zero in
+        # the covariance and NaNs in the injected CAST({n} AS DOUBLE)
+        # SQL — fail loudly instead (the random_projection_jl pattern)
+        raise ValueError(
+            f"power_iteration_pc1_float: embeddings table is empty "
+            f"(n={n}, d={d}); the covariance and the var6 oracle "
+            "expression require n > 0 and d > 0"
+        )
+    s = np.zeros(d)
+    G = np.zeros((d, d))
+    for p in parts:
+        s += np.array(p["s_b"])
+        G += np.array(p["g_b"]).reshape(d, d)
+    cov = (G - np.outer(s, s) / n) / n
+    vals, vecs = np.linalg.eigh((cov + cov.T) / 2.0)
+    lam = float(vals[-1])
+    v = vecs[:, -1]
+    residual = float(np.linalg.norm(cov @ v - lam * v))
+    trace_f = float(np.trace(cov))
+    maxvar_f = float(np.max(np.diag(cov)))
+    checks = {
+        "lam_pos": bool(lam > 0),
+        "lam_le_trace": bool(lam <= trace_f * (1 + 1e-9) + 1e-12),
+        "lam_ge_maxvar": bool(lam >= maxvar_f * (1 - 1e-9) - 1e-12),
+        "residual_ok": bool(residual <= 1e-6 * max(abs(lam), 1e-30)),
+    }
+
+    # exact side: per-dim variances from decimal sums — the hash-checked
+    # values (one double division each, then the floor-6dp decimal grid)
+    e9 = F.transform(
+        F.col("embedding"),
+        lambda x: F.round(x.cast("double"), 9).cast("decimal(18,9)"),
+    )
+    per_dim = (
+        emb.select(F.posexplode(e9).alias("i", "x"))
+        .groupBy("i")
+        .agg(F.sum("x").alias("s"), F.sum(F.col("x") * F.col("x")).alias("q"))
+    )
+    var6 = (
+        "CAST(floor((CAST(q AS DOUBLE) - CAST(s AS DOUBLE) * CAST(s AS DOUBLE)"
+        f" / CAST({n} AS DOUBLE)) / CAST({n} AS DOUBLE)"
+        " * CAST(1000000 AS DOUBLE) + CAST(0.5 AS DOUBLE)) / CAST(1000000 AS DOUBLE)"
+        " AS DECIMAL(18,6))"
+    )
+    pv = per_dim.select("i", F.expr(var6).alias("v6"))
+    exact = pv.agg(
+        F.sum("v6").cast("decimal(28,6)").alias("trace6"),
+        F.max("v6").cast("decimal(18,6)").alias("maxvar6"),
+    )
+    top_pos = (
+        pv.orderBy(F.col("v6").desc(), F.col("i").asc())
+        .limit(1)
+        .select(F.col("i").cast("int").alias("top_var_pos"))
+    )
+    flags = spark.createDataFrame(
+        [
+            (
+                int(d),
+                int(n),
+                checks["lam_pos"],
+                checks["lam_le_trace"],
+                checks["lam_ge_maxvar"],
+                checks["residual_ok"],
+            )
+        ],
+        "d int, n bigint, lam_pos boolean, lam_le_trace boolean,"
+        " lam_ge_maxvar boolean, residual_ok boolean",
+    )
+    return (
+        flags.crossJoin(F.broadcast(exact))
+        .crossJoin(F.broadcast(top_pos))
+        .select(
+            "d",
+            "n",
+            "trace6",
+            "maxvar6",
+            "top_var_pos",
+            "lam_pos",
+            "lam_le_trace",
+            "lam_ge_maxvar",
+            "residual_ok",
+        )
+    )
+
+
+def _pi_float_sql() -> str:
+    var6 = _FL6_SQL.format(
+        x="(CAST(q AS DOUBLE) - CAST(s AS DOUBLE) * CAST(s AS DOUBLE)"
+        " / CAST(nr.n AS DOUBLE)) / CAST(nr.n AS DOUBLE)"
+    )
+    return f"""
+WITH base AS (SELECT list_transform(embedding::DOUBLE[],
+                x -> CAST(round(x, 9) AS DECIMAL(18,9))) AS e FROM embeddings),
+nr AS (SELECT count(*)::BIGINT AS n FROM base),
+expl AS (SELECT (generate_subscripts(e, 1) - 1)::INT AS i, unnest(e) AS x FROM base),
+per_dim AS (SELECT i, SUM(x) AS s, SUM(x * x) AS q FROM expl GROUP BY 1),
+pv AS (SELECT i, CAST({var6} AS DECIMAL(18,6)) AS v6 FROM per_dim CROSS JOIN nr)
+SELECT (SELECT count(*)::INT FROM per_dim) AS d,
+       (SELECT n FROM nr) AS n,
+       CAST(SUM(v6) AS DECIMAL(28,6)) AS trace6,
+       CAST(MAX(v6) AS DECIMAL(18,6)) AS maxvar6,
+       (SELECT i::INT FROM pv ORDER BY v6 DESC, i ASC LIMIT 1) AS top_var_pos,
+       true AS lam_pos, true AS lam_le_trace,
+       true AS lam_ge_maxvar, true AS residual_ok
+FROM pv
+"""

@@ -1,4 +1,5 @@
-"""Deterministic probabilistic-sketch operators with FULL value oracles.
+"""Deterministic probabilistic-sketch and streaming-summary operators
+with FULL value oracles.
 
 The registry's other sketch entries (HLL, approx percentile/top-k,
 MLlib MinHash) carry contract oracles because their registers are
@@ -20,14 +21,19 @@ map-side-combinable aggregation over d·N hash rows, probes join the
 (tiny, broadcast) counter table.  At 100 TB the counter matrix is the
 mergeable per-partition state CMS exists for — w·d integers per
 executor, merged by addition.
+
+The streaming faces (CMS, Bloom, HLL merges and the exact top-k users)
+drain a micro-batch stream and must reproduce the batch result
+exactly, so each shares its batch oracle.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from k_means_hadoop_spark.functions.hashing import stable_hash64, stable_hash64_sql
+from k_means_hadoop_spark.operators.relational import _t
 
 CMS_D = 4
 # w=16 is the FIXTURE-scale width: small enough that the 15-user sf0.001
@@ -688,3 +694,79 @@ FROM e
 
 SKETCH_QUERIES["hll_portable_registers"] = (hll_portable_registers, _hll_sql())
 SKETCH_QUERIES["streaming_hll_merge"] = (streaming_hll_merge, _hll_sql())
+
+
+# --------------------------------------------- streaming exact top-k
+#
+# Exact heavy users from a stream: per-micro-batch (user_id, count)
+# partials written idempotently (batch_id-partitioned dynamic
+# overwrite), merged by sum — counts are fully mergeable, so the
+# drained result equals batch GROUP BY + top-k exactly and shares its
+# oracle (the sum-merge law, proven the same way the sketch faces
+# prove theirs).  Shuffle per batch ∝ distinct users in the batch.
+
+_TOPK_USERS = 10
+
+
+def streaming_topk_users(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """(user_id, n_events) — exact top-{k} users by event count,
+    computed as a streaming count-merge drained with availableNow."""
+    from k_means_hadoop_spark.session import scratch_dir
+
+    ev = _t(spark, sf_dir, "events").select("user_id")
+    src = scratch_dir("topk_src")
+    store = scratch_dir("topk_store")
+    ev.repartition(4).write.mode("overwrite").parquet(src)
+
+    def _merge_batch(batch_df: DataFrame, batch_id: int) -> None:
+        (
+            batch_df.groupBy("user_id")
+            .agg(F.count(F.lit(1)).alias("n"))
+            .withColumn("batch_id", F.lit(batch_id))
+            .write.mode("overwrite")
+            .partitionBy("batch_id")
+            .option("partitionOverwriteMode", "dynamic")
+            .parquet(store)
+        )
+
+    stream = (
+        spark.readStream.schema(ev.schema)
+        .option("maxFilesPerTrigger", 1)
+        .parquet(src)
+    )
+    q = (
+        stream.writeStream.foreachBatch(_merge_batch)
+        .option("checkpointLocation", scratch_dir("topk_ckpt"))
+        .trigger(availableNow=True)
+        .start()
+    )
+    q.awaitTermination()
+    merged = (
+        spark.read.parquet(store)
+        .groupBy("user_id")
+        .agg(F.sum("n").alias("n_events"))
+    )
+    w = Window.orderBy(F.col("n_events").desc(), F.col("user_id").asc())
+    return (
+        merged.withColumn("rn", F.row_number().over(w))
+        .where(F.col("rn") <= _TOPK_USERS)
+        .select(
+            F.col("user_id").cast("bigint").alias("user_id"),
+            F.col("n_events").cast("bigint").alias("n_events"),
+        )
+    )
+
+
+streaming_topk_users.__doc__ = streaming_topk_users.__doc__.format(
+    k=_TOPK_USERS
+)
+
+TOPK_USERS_SQL = f"""
+SELECT user_id, count(*)::BIGINT AS n_events
+FROM events GROUP BY 1
+ORDER BY n_events DESC, user_id ASC
+LIMIT {_TOPK_USERS}
+"""
+
+
+SKETCH_QUERIES["streaming_topk_users"] = (streaming_topk_users, TOPK_USERS_SQL)

@@ -1,7 +1,8 @@
 """Additional TPC-H-shaped query plans (beyond-reference: the reference
 has no relational surface at all — SURVEY.md §2.3/§2.9; these widen the
 general-engine query shapes: EXISTS/NOT-EXISTS decorrelation, disjunctive
-multi-table predicates, having-subquery joins, conditional aggregation).
+multi-table predicates, having-subquery joins, conditional aggregation,
+relational division).
 
 The driver star schema is reduced TPC-H (no partsupp; lineitem lacks
 commitdate/receiptdate/shipmode; customer lacks phone), so each query
@@ -673,6 +674,48 @@ WHERE s_nationkey < 10
 """
 
 
+# --------------------------------------------- relational division
+#
+# The classic "FOR ALL" operator SQL lacks natively: customers whose
+# orders cover EVERY order priority — division of orders by the
+# priority domain.  Expressed the scalable way (distinct-count equals
+# domain size: two partial-agg shuffles), not the nested NOT EXISTS
+# double negation (whose naive plan is a per-customer correlated
+# scan).
+
+
+def relational_division_priorities(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """(c_custkey, n_orders, n_priorities) — customers whose orders
+    span every distinct o_orderpriority value."""
+    o = _t(spark, sf_dir, "orders")
+    dom = o.agg(F.countDistinct("o_orderpriority").alias("n_dom"))
+    per = o.groupBy("o_custkey").agg(
+        F.count(F.lit(1)).alias("n_orders"),
+        F.countDistinct("o_orderpriority").alias("n_priorities"),
+    )
+    return (
+        per.crossJoin(F.broadcast(dom))
+        .where(F.col("n_priorities") == F.col("n_dom"))
+        .select(
+            F.col("o_custkey").cast("bigint").alias("c_custkey"),
+            F.col("n_orders").cast("bigint").alias("n_orders"),
+            F.col("n_priorities").cast("int").alias("n_priorities"),
+        )
+    )
+
+
+DIVISION_SQL = """
+WITH dom AS (SELECT count(DISTINCT o_orderpriority)::BIGINT AS n_dom FROM orders),
+per AS (SELECT o_custkey, count(*)::BIGINT AS n_orders,
+               count(DISTINCT o_orderpriority)::BIGINT AS n_priorities
+        FROM orders GROUP BY 1)
+SELECT o_custkey::BIGINT AS c_custkey, n_orders,
+       n_priorities::INT AS n_priorities
+FROM per CROSS JOIN dom
+WHERE n_priorities = n_dom
+"""
+
+
 TPCH_EXTRA_QUERIES.update(
     {
         "q8_market_share": (q8_market_share, Q8_SQL),
@@ -682,5 +725,9 @@ TPCH_EXTRA_QUERIES.update(
         "q15_top_supplier": (q15_top_supplier, Q15_SQL),
         "q16_supplier_part_counts": (q16_supplier_part_counts, Q16_SQL),
         "q20_promo_part_suppliers": (q20_promo_part_suppliers, Q20_SQL),
+        "relational_division_priorities": (
+            relational_division_priorities,
+            DIVISION_SQL,
+        ),
     }
 )

@@ -680,12 +680,7 @@ from k_means_hadoop_spark.operators.tpch_extra import TPCH_EXTRA_QUERIES
 from k_means_hadoop_spark.operators.trends import TRENDS_QUERIES
 from k_means_hadoop_spark.operators.stats_extra import STATS_EXTRA_QUERIES
 from k_means_hadoop_spark.operators.mining import MINING_QUERIES
-from k_means_hadoop_spark.operators.round7 import ROUND7_QUERIES
-from k_means_hadoop_spark.operators.round8 import ROUND8_QUERIES
-from k_means_hadoop_spark.operators.round9 import ROUND9_QUERIES
-from k_means_hadoop_spark.operators.round10 import ROUND10_QUERIES
-from k_means_hadoop_spark.operators.round11 import ROUND11_QUERIES
-from k_means_hadoop_spark.operators.round12 import ROUND12_QUERIES
+from k_means_hadoop_spark.operators.containers import CONTAINER_QUERIES
 from k_means_hadoop_spark.registry_pipeline import PIPELINE_QUERIES
 
 # Every family registers {name: (fn, oracle_sql)} pairs, so a query and
@@ -703,12 +698,7 @@ for _family in (
     TRENDS_QUERIES,
     STATS_EXTRA_QUERIES,
     MINING_QUERIES,
-    ROUND7_QUERIES,
-    ROUND8_QUERIES,
-    ROUND9_QUERIES,
-    ROUND10_QUERIES,
-    ROUND11_QUERIES,
-    ROUND12_QUERIES,
+    CONTAINER_QUERIES,
     PIPELINE_QUERIES,
 ):
     for _name, (_fn, _sql) in _family.items():

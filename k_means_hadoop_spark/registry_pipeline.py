@@ -20,7 +20,12 @@ from k_means_hadoop_spark.functions.hashing import (
 )
 from k_means_hadoop_spark.operators import dedup, similarity, text
 from k_means_hadoop_spark.operators.analytics import _MERGE_SQL
-from k_means_hadoop_spark.operators.pca import _power_iteration_sql, power_iteration_pc1
+from k_means_hadoop_spark.operators.pca import (
+    _pi_float_sql,
+    _power_iteration_sql,
+    power_iteration_pc1,
+    power_iteration_pc1_float,
+)
 from k_means_hadoop_spark.operators.relational import SESSION_WINDOW_SQL
 from k_means_hadoop_spark.partitioning import fan_out
 
@@ -3258,6 +3263,9 @@ SELECT qid, nid, round(sim, 6) AS cos_sim, rank FROM ranked WHERE rank <= 5""",
     # Full-value complement of pca_project's MLlib eigensolver: explicit
     # distributed power iteration against an unrolled matvec CTE.
     "power_iteration_pc1": (power_iteration_pc1, _power_iteration_sql(64)),
+    # Float-path (Gram + eigh) scale variant, checked against the exact
+    # path above by its contract row.
+    "power_iteration_pc1_float": (power_iteration_pc1_float, _pi_float_sql()),
 }
 
 if _has_protobuf():  # pragma: no cover — absent in this container

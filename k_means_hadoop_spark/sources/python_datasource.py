@@ -63,17 +63,9 @@ def register(spark) -> None:
     """Idempotent registration of the custom format with the session.
 
     The DataSource class is cloudpickled to the worker that instantiates
-    it; by default classes pickle BY REFERENCE, which requires this
-    package on every worker's sys.path (true under pytest from the repo
-    root, false for any harness launched elsewhere).  Registering the
-    module for pickle-by-value ships the class definition inside the
-    pickle itself, so the source works wherever the driver runs from —
-    the portability a connector seam must have."""
-    import sys
-
-    from pyspark import cloudpickle
-
-    cloudpickle.register_pickle_by_value(sys.modules[__name__])
+    it and ships by value under the package-wide pickling rule
+    (``k_means_hadoop_spark/__init__.py``), so the source works wherever
+    the driver runs from — the portability a connector seam must have."""
     spark.dataSource.register(ArithSeqDataSource)
 
 
@@ -139,12 +131,7 @@ class ArithSeqStreamDataSource(DataSource):
 
 
 def register_stream(spark) -> None:
-    """Pickle-by-value registration, as in ``register``."""
-    import sys
-
-    from pyspark import cloudpickle
-
-    cloudpickle.register_pickle_by_value(sys.modules[__name__])
+    """Idempotent registration of the streaming source, as in ``register``."""
     spark.dataSource.register(ArithSeqStreamDataSource)
 
 

@@ -79,13 +79,7 @@ class TarShardDataSource(DataSource):
 
 
 def register(spark) -> None:
-    """Idempotent registration; pickle-by-value for off-path drivers
-    (same portability contract as the arith_seq source)."""
-    import sys
-
-    from pyspark import cloudpickle
-
-    cloudpickle.register_pickle_by_value(sys.modules[__name__])
+    """Idempotent registration of the source with the session."""
     spark.dataSource.register(TarShardDataSource)
 
 

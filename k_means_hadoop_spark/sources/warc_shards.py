@@ -16,7 +16,7 @@ parallelism with no code change.
 
 The document id rides in the WARC-Record-ID urn
 (``<urn:uuid:wet-XXXXXXXX>``, hex), the same id convention
-``operators/round12.warc_wet_stats`` roundtrips in memory —
+``operators/containers.warc_wet_stats`` roundtrips in memory —
 ``warc_shard_scan`` chains this source over staged shards and
 hash-matches payload bytes + md5 against the REAL documents table,
 proving on-disk framing end to end.
@@ -29,12 +29,11 @@ import os
 from pyspark.sql.datasource import DataSource, DataSourceReader, InputPartition
 
 # Module-level binding, NOT an in-method import: the reader executes on
-# workers that may not have the repo on sys.path (run_window_check's
-# /tmp portability contract).  register() pickles this module AND the
-# codecs module by value, and cloudpickle resolves the reader's global
-# reference to the by-value copy — a runtime `import k_means_...` in
-# read() would instead re-resolve by NAME and raise ModuleNotFoundError
-# off-path (the round-12 sweep caught exactly that).
+# workers that may not have the repo on sys.path.  The package pickles
+# by value (``k_means_hadoop_spark/__init__.py``), and cloudpickle
+# resolves the reader's global reference to the by-value copy — a
+# runtime `import k_means_...` in read() would instead re-resolve by
+# NAME and raise ModuleNotFoundError off-path.
 from k_means_hadoop_spark.functions import codecs
 
 _WET_INFO_PAYLOAD = b"Software-Info: k-means-hadoop-spark-wet\r\n"
@@ -114,15 +113,7 @@ class WarcShardDataSource(DataSource):
 
 
 def register(spark) -> None:
-    """Idempotent registration; pickle-by-value for off-path drivers
-    (same portability contract as tar_shards, plus the codecs module
-    the reader walks the shard bytes with)."""
-    import sys
-
-    from pyspark import cloudpickle
-
-    cloudpickle.register_pickle_by_value(sys.modules[__name__])
-    cloudpickle.register_pickle_by_value(codecs)
+    """Idempotent registration of the source with the session."""
     spark.dataSource.register(WarcShardDataSource)
 
 

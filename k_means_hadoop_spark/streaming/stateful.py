@@ -33,25 +33,9 @@ def _update_user_totals(key, pdfs, state: GroupState):
     yield pd.DataFrame({"user_id": [key[0]], "n_events": [n], "sum_value": [s]})
 
 
-def _pickle_by_value() -> None:
-    """State-update kernels are cloudpickled to Python workers; a
-    module-level function pickles BY REFERENCE, which requires this
-    package on every worker's sys.path (true when the driver launches
-    from the repo root, false anywhere else — the failure only
-    surfaces off-path).  Register the module for pickle-by-value so
-    the kernel ships inside the plan — same portability fix as
-    sources/python_datasource.py and functions/udtfs.py."""
-    import sys
-
-    from pyspark import cloudpickle
-
-    cloudpickle.register_pickle_by_value(sys.modules[__name__])
-
-
 def stateful_user_totals(events: DataFrame) -> DataFrame:
     """Streaming DataFrame of per-user running totals (update semantics:
     one refreshed row per user per micro-batch it appears in)."""
-    _pickle_by_value()
     return events.groupBy("user_id").applyInPandasWithState(
         _update_user_totals,
         outputStructType=OUTPUT_SCHEMA,
@@ -117,7 +101,6 @@ def _make_processor():
 def tws_user_stats(events: DataFrame) -> DataFrame:
     """Streaming per-user (n_events, sum_value, n_types) via
     transformWithStateInPandas (update semantics)."""
-    _pickle_by_value()
     return events.groupBy("user_id").transformWithStateInPandas(
         _make_processor(),
         outputStructType=TWS_OUTPUT_SCHEMA,

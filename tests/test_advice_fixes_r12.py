@@ -13,25 +13,25 @@
 from __future__ import annotations
 
 from k_means_hadoop_spark.functions import codecs
-from k_means_hadoop_spark.operators import round11
+from k_means_hadoop_spark.operators import containers
 
 
 def test_warc_ingest_non_ascii_text_yields_parse_ok_false(spark, sf_dir):
     """A non-ASCII text row flows through the kernel as parse_ok=False
     instead of raising UnicodeEncodeError out of the Spark task.  The
     shipped fixtures are ASCII-pinned, so the hostile row is planted by
-    routing the operator's table read to a crafted frame (round11
+    routing the operator's table read to a crafted frame (containers
     imported ``_t`` by name, so the patch targets ITS binding)."""
     docs = spark.createDataFrame(
         [(5, "plain ascii"), (16, "smart “quotes”")],
         "doc_id bigint, text string",
     )
-    orig = round11._t
+    orig = containers._t
     try:
-        round11._t = lambda sp, sd, name: docs
-        out = round11.warc_ingest_stats(spark, sf_dir).collect()
+        containers._t = lambda sp, sd, name: docs
+        out = containers.warc_ingest_stats(spark, sf_dir).collect()
     finally:
-        round11._t = orig
+        containers._t = orig
     by_id = {r["media_id"]: r for r in out}
     assert by_id[5]["parse_ok"] is True
     assert by_id[5]["record_types"] == "warcinfo,response"

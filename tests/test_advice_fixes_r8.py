@@ -33,10 +33,10 @@ _REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 def test_holm_docstring_states_actual_alpha():
     """ADVICE 1: the docstring must state the alpha the code uses."""
-    from k_means_hadoop_spark.operators import round7
+    from k_means_hadoop_spark.operators import stats_extra
 
-    doc = round7.holm_bonferroni_nation_acctbal.__doc__
-    alpha = round7._HOLM_A_NUM / round7._HOLM_A_DEN
+    doc = stats_extra.holm_bonferroni_nation_acctbal.__doc__
+    alpha = stats_extra._HOLM_A_NUM / stats_extra._HOLM_A_DEN
     assert f"{alpha}" in doc, "docstring no longer states the code's alpha"
     assert "0.05" not in doc.split("unreachable")[0].split("(see")[0], (
         "docstring still claims the unreachable 0.05 as the operating alpha"
@@ -60,7 +60,7 @@ def _events_parquet(tmp_path, rows):
 def test_friedman_incomplete_blocks_raise(spark, tmp_path):
     """ADVICE 2: a fixture with a missing (block, treatment) cell must
     raise, not silently rank over the present treatments only."""
-    from k_means_hadoop_spark.operators.round7 import friedman_event_dow
+    from k_means_hadoop_spark.operators.stats_extra import friedman_event_dow
 
     # block b=0 (2024-01-01) has types A and B; block b=1 (2024-01-02)
     # has only A -> 3 cells for 2 blocks x 2 treatments
@@ -96,7 +96,7 @@ def test_friedman_fixture_blocks_complete():
 def test_power_iteration_float_empty_guard(spark, tmp_path):
     """ADVICE 3: an empty embeddings table raises a descriptive error
     instead of a divide-by-zero / NaN cascade."""
-    from k_means_hadoop_spark.operators.round7 import power_iteration_pc1_float
+    from k_means_hadoop_spark.operators.pca import power_iteration_pc1_float
 
     pd.DataFrame(
         {"vec_id": pd.Series([], dtype="int64"),
@@ -125,7 +125,7 @@ def test_bench_gate_is_explicit_flag():
 def test_haar_short_span_raises_valueerror(spark, tmp_path):
     """ADVICE 5: a fixture with fewer than _HAAR_N usable days must
     raise ValueError (assert would vanish under python -O)."""
-    from k_means_hadoop_spark.operators.round7 import haar_wavelet_daily
+    from k_means_hadoop_spark.operators.trends import haar_wavelet_daily
 
     d = _events_parquet(
         tmp_path,
@@ -137,7 +137,7 @@ def test_haar_short_span_raises_valueerror(spark, tmp_path):
 
 def test_haar_fixture_span():
     """The shipped fixtures provide >= _HAAR_N distinct event days."""
-    from k_means_hadoop_spark.operators.round7 import _HAAR_N
+    from k_means_hadoop_spark.operators.trends import _HAAR_N
 
     con = duckdb.connect()
     for d in SF_DIRS:

@@ -38,7 +38,7 @@ def _docs_parquet(tmp_path, sources):
 
 def test_hypergeom_single_source_raises(spark, tmp_path):
     """ADVICE 2: one distinct source -> loud ValueError, not NaN rows."""
-    from k_means_hadoop_spark.operators.round8 import (
+    from k_means_hadoop_spark.operators.stats_extra import (
         hypergeom_enrichment_sources,
     )
 
@@ -52,7 +52,7 @@ def test_hypergeom_single_source_raises(spark, tmp_path):
 def test_hypergeom_empty_corpus_raises(spark, tmp_path):
     """Round 10: the empty-corpus arm rides a unioned 1-row branch of
     the tot aggregate, so even ZERO per-source rows raise loudly."""
-    from k_means_hadoop_spark.operators.round8 import (
+    from k_means_hadoop_spark.operators.stats_extra import (
         hypergeom_enrichment_sources,
     )
 
@@ -63,7 +63,7 @@ def test_hypergeom_empty_corpus_raises(spark, tmp_path):
 
 def test_hypergeom_two_sources_pass(spark, tmp_path):
     """The guard must NOT fire on a healthy 2-source corpus."""
-    from k_means_hadoop_spark.operators.round8 import (
+    from k_means_hadoop_spark.operators.stats_extra import (
         hypergeom_enrichment_sources,
     )
 
@@ -81,9 +81,9 @@ def test_page_trend_documents_tie_variance_caveat():
     test_page_trend_against_local_reference)."""
     import inspect
 
-    from k_means_hadoop_spark.operators import round8
+    from k_means_hadoop_spark.operators import trends
 
-    src = inspect.getsource(round8)
+    src = inspect.getsource(trends)
     blurb = src.split("def page_trend_event_dow")[0]
     assert "tie-corrected" in blurb and "Var(L)" in blurb, (
         "page_trend tie-corrected variance is no longer documented"

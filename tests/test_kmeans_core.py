@@ -9,7 +9,6 @@ from __future__ import annotations
 import math
 
 import pytest
-from pyspark.sql import functions as F
 
 from k_means_hadoop_spark.operators.assign import assign_expr, assign_join
 from k_means_hadoop_spark.operators.evaluation import contingency, jaccard_reference, wssse

@@ -14,7 +14,6 @@ from k_means_hadoop_spark.operators.multimodal import (
     media_from_documents,
 )
 from k_means_hadoop_spark.operators.pca import explained_variance, pca_project
-from k_means_hadoop_spark.sources.points import points_from_embeddings
 from k_means_hadoop_spark.streaming.stream_kmeans import (
     StreamingKMeansState,
     read_event_stream,

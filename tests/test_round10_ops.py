@@ -12,7 +12,7 @@ from __future__ import annotations
 import pytest
 
 from k_means_hadoop_spark.functions import codecs
-from k_means_hadoop_spark.operators.round10 import _mkv_plant
+from k_means_hadoop_spark.operators.containers import _mkv_plant
 
 
 def _blob(did: int) -> bytes:
@@ -165,7 +165,7 @@ def test_mkv_sniff_format():
 
 
 def _ogg_blob(did: int) -> bytes:
-    from k_means_hadoop_spark.operators.round10 import _ogg_plant
+    from k_means_hadoop_spark.operators.containers import _ogg_plant
 
     w = _ogg_plant(did)
     return codecs.encode_ogg(w["serial"], w["packets"])
@@ -180,7 +180,7 @@ def test_ogg_crc_reference_vector():
 
 @pytest.mark.parametrize("did", [0, 1, 2, 3, 6, 13, 999983])
 def test_ogg_roundtrip_bit_exact(did):
-    from k_means_hadoop_spark.operators.round10 import _ogg_plant
+    from k_means_hadoop_spark.operators.containers import _ogg_plant
 
     w = _ogg_plant(did)
     p = codecs.parse_ogg(_ogg_blob(did))

@@ -113,14 +113,14 @@ def test_documents_fixture_is_single_byte(spark, sf):
 
 
 def _zip_blob(did: int) -> bytes:
-    from k_means_hadoop_spark.operators.round11 import _zip_plant
+    from k_means_hadoop_spark.operators.containers import _zip_plant
 
     return codecs.encode_zip(_zip_plant(did))
 
 
 @pytest.mark.parametrize("did", [7, 18, 29, 40, 12345, 999983])
 def test_zip_roundtrip_bit_exact(did):
-    from k_means_hadoop_spark.operators.round11 import _zip_plant
+    from k_means_hadoop_spark.operators.containers import _zip_plant
 
     want = _zip_plant(did)
     p = codecs.parse_zip(_zip_blob(did))
@@ -143,7 +143,7 @@ def test_zip_stdlib_reads_ours():
     blob = _zip_blob(7)
     zf = zipfile.ZipFile(io.BytesIO(blob))
     assert zf.testzip() is None
-    from k_means_hadoop_spark.operators.round11 import _zip_plant
+    from k_means_hadoop_spark.operators.containers import _zip_plant
 
     for m in _zip_plant(7):
         assert zf.read(m["name"]) == m["data"]
@@ -180,7 +180,7 @@ def test_zip_comment_roundtrip():
 
 def test_zip_crc_corruption_rejected():
     blob = _zip_blob(7)
-    from k_means_hadoop_spark.operators.round11 import _zip_plant
+    from k_means_hadoop_spark.operators.containers import _zip_plant
 
     stored = next(m for m in _zip_plant(7) if m["method"] == "stored")
     bad = bytearray(blob)
@@ -268,14 +268,14 @@ def test_zip_roundtrip_fuzz():
 
 
 def _gzip_blob(did: int) -> bytes:
-    from k_means_hadoop_spark.operators.round11 import _gzip_plant
+    from k_means_hadoop_spark.operators.containers import _gzip_plant
 
     return codecs.encode_gzip(_gzip_plant(did))
 
 
 @pytest.mark.parametrize("did", [3, 14, 25, 36, 12344, 999982])
 def test_gzip_roundtrip_bit_exact(did):
-    from k_means_hadoop_spark.operators.round11 import _gzip_plant
+    from k_means_hadoop_spark.operators.containers import _gzip_plant
 
     want = _gzip_plant(did)
     p = codecs.parse_gzip(_gzip_blob(did))
@@ -289,7 +289,7 @@ def test_gzip_stdlib_reads_ours():
     the concatenated payloads (the Common Crawl reader behavior)."""
     import gzip as gz
 
-    from k_means_hadoop_spark.operators.round11 import _gzip_plant
+    from k_means_hadoop_spark.operators.containers import _gzip_plant
 
     did = 2 * 11 + 3
     assert gz.decompress(_gzip_blob(did)) == b"".join(
@@ -582,14 +582,14 @@ def test_warc_roundtrip_fuzz():
 
 
 def _tar_blob(did: int) -> bytes:
-    from k_means_hadoop_spark.operators.round11 import _tar_plant
+    from k_means_hadoop_spark.operators.containers import _tar_plant
 
     return codecs.encode_tar(_tar_plant(did))
 
 
 @pytest.mark.parametrize("did", [9, 20, 31, 42, 12343, 999981])
 def test_tar_roundtrip_bit_exact(did):
-    from k_means_hadoop_spark.operators.round11 import _tar_plant
+    from k_means_hadoop_spark.operators.containers import _tar_plant
 
     want = _tar_plant(did)
     p = codecs.parse_tar(_tar_blob(did))
@@ -603,7 +603,7 @@ def test_tar_stdlib_reads_ours():
     import io
     import tarfile
 
-    from k_means_hadoop_spark.operators.round11 import _tar_plant
+    from k_means_hadoop_spark.operators.containers import _tar_plant
 
     tf = tarfile.open(fileobj=io.BytesIO(_tar_blob(9)))
     for m in _tar_plant(9):

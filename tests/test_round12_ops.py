@@ -25,7 +25,7 @@ import os
 import pytest
 
 from k_means_hadoop_spark.functions import codecs
-from k_means_hadoop_spark.operators.round12 import _ogg_codec_plant
+from k_means_hadoop_spark.operators.containers import _ogg_codec_plant
 
 
 # ------------------------------------------------- 1. OpusHead / Vorbis
@@ -266,7 +266,7 @@ def test_wet_record_shape_roundtrip():
     """The WET two-record shape: warcinfo (application/warc-fields) +
     conversion (text/plain) whose payload is the extracted text, one
     gzip member per record, WARC-Refers-To linking back."""
-    from k_means_hadoop_spark.operators.round12 import _WET_INFO_PAYLOAD
+    from k_means_hadoop_spark.operators.containers import _WET_INFO_PAYLOAD
 
     body = b"Extracted plain text.\nSecond line."
     info = codecs.encode_warc_record(
@@ -295,17 +295,17 @@ def test_wet_record_shape_roundtrip():
 def test_wet_stats_non_ascii_yields_parse_ok_false(spark, sf_dir):
     """Same hostile-row contract as warc_ingest_stats (the r12 ADVICE
     fix): a non-ASCII text emits parse_ok=False, not a task failure."""
-    from k_means_hadoop_spark.operators import round12
+    from k_means_hadoop_spark.operators import containers
 
     docs = spark.createDataFrame(
         [(2, "ascii text"), (13, "naïve café")], "doc_id bigint, text string"
     )
-    orig = round12._t
+    orig = containers._t
     try:
-        round12._t = lambda sp, sd, name: docs
-        out = round12.warc_wet_stats(spark, sf_dir).collect()
+        containers._t = lambda sp, sd, name: docs
+        out = containers.warc_wet_stats(spark, sf_dir).collect()
     finally:
-        round12._t = orig
+        containers._t = orig
     by_id = {r["media_id"]: r for r in out}
     assert by_id[2]["parse_ok"] is True
     assert by_id[2]["record_types"] == "warcinfo,conversion"
@@ -407,9 +407,9 @@ def test_warc_shards_reader_has_no_runtime_package_import():
 
     # same seam for the worker-side plant helper (the sweep's second
     # off-path failure): module-level codecs binding, no runtime import
-    import k_means_hadoop_spark.operators.round12 as r12
+    import k_means_hadoop_spark.operators.containers as containers
 
-    assert r12.codecs is codecs
+    assert containers.codecs is codecs
     plant_imports = {
         i.argval
         for i in dis.get_instructions(_ogg_codec_plant)
@@ -418,6 +418,44 @@ def test_warc_shards_reader_has_no_runtime_package_import():
     assert not any(
         str(n).startswith("k_means_hadoop_spark") for n in plant_imports
     )
+
+
+def test_package_import_ships_worker_code_by_value(tmp_path):
+    """Importing the package alone registers it pickle-by-value: a plain
+    module-level codecs function pickled by one interpreter loads and
+    runs in a second one whose cwd and sys.path hold no copy of the
+    package — the situation of a worker launched off the repo root."""
+    import subprocess
+    import sys
+
+    repo_root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    dump = (
+        "import sys\n"
+        "sys.path.insert(0, sys.argv[1])\n"
+        "import k_means_hadoop_spark\n"
+        "from pyspark import cloudpickle\n"
+        "from k_means_hadoop_spark.functions import codecs\n"
+        "sys.stdout.buffer.write(cloudpickle.dumps((codecs.encode_wav, codecs.decode_wav)))\n"
+    )
+    load = (
+        "import importlib.util, pickle, sys\n"
+        "import numpy as np\n"
+        "assert importlib.util.find_spec('k_means_hadoop_spark') is None\n"
+        "enc, dec = pickle.loads(sys.stdin.buffer.read())\n"
+        "samples, rate = dec(enc(np.arange(-3, 4, dtype=np.int16), 8000))\n"
+        "print(rate, samples.tolist())\n"
+    )
+    env = {k: v for k, v in os.environ.items() if k != "PYTHONPATH"}
+    blob = subprocess.run(
+        [sys.executable, "-c", dump, repo_root],
+        capture_output=True, timeout=120, env=env, check=True,
+    ).stdout
+    r = subprocess.run(
+        [sys.executable, "-c", load],
+        input=blob, capture_output=True, timeout=120, env=env, cwd=tmp_path,
+    )
+    assert r.returncode == 0, r.stderr.decode()[-2000:]
+    assert r.stdout.decode().split() == ["8000", "[-3,", "-2,", "-1,", "0,", "1,", "2,", "3]"]
 
 
 def test_record_doc_id_urn():

@@ -16,7 +16,7 @@ def test_power_iteration_float_matches_exact_direction(spark, sf_dir):
     1 − ε²/2 ≈ 1 − 5e-5, not the 1e-6 an exact eigensolver pair would
     give; the λ ratio is quadratically less sensitive."""
     from k_means_hadoop_spark.operators.pca import power_iteration_pc1
-    from k_means_hadoop_spark.operators.round7 import _gram_partials
+    from k_means_hadoop_spark.operators.pca import _gram_partials
 
     exact = power_iteration_pc1(spark, sf_dir).orderBy("pos").collect()
     v_exact = np.array([r["loading"] for r in exact])
@@ -50,7 +50,7 @@ def test_haar_parseval(spark, sf_dir):
     integers divided by powers of two — lossless in binary)."""
     from pyspark.sql import functions as F
 
-    from k_means_hadoop_spark.operators.round7 import (
+    from k_means_hadoop_spark.operators.trends import (
         _HAAR_N,
         haar_wavelet_daily,
     )
@@ -72,7 +72,7 @@ def test_haar_parseval(spark, sf_dir):
 def test_decision_stump_beats_base_impurity(spark, sf_dir):
     """The chosen split's weighted Gini must not exceed the unsplit
     (root) impurity — the CART split-gain guarantee."""
-    from k_means_hadoop_spark.operators.round7 import decision_stump_quality
+    from k_means_hadoop_spark.operators.curation import decision_stump_quality
 
     r = decision_stump_quality(spark, sf_dir).collect()[0]
     n = r["n_left"] + r["n_right"]
@@ -87,7 +87,7 @@ def test_holm_planted_rejections(spark, sf_dir):
     """The planted outlier groups drive the step-down's rejection
     branch; natural nations all stay non-significant, and rejections
     form a prefix of the p-ranking (the step-down property)."""
-    from k_means_hadoop_spark.operators.round7 import (
+    from k_means_hadoop_spark.operators.stats_extra import (
         holm_bonferroni_nation_acctbal,
     )
 
@@ -158,7 +158,7 @@ def test_png_codec_roundtrip_and_filters():
 def test_power_iteration_float_contract_row(spark, sf_dir):
     """One row, all four contract booleans true, trace >= maxvar > 0
     (exact-field parity itself is covered by the oracle gate)."""
-    from k_means_hadoop_spark.operators.round7 import power_iteration_pc1_float
+    from k_means_hadoop_spark.operators.pca import power_iteration_pc1_float
 
     rows = power_iteration_pc1_float(spark, sf_dir).collect()
     assert len(rows) == 1

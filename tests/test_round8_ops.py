@@ -51,7 +51,7 @@ def test_gif_container_roundtrip_and_rejects():
 def test_gif_decode_stats_roundtrip_flag(spark, sf_dir):
     """Every planted image must survive the encode→decode roundtrip
     (decode_ok is the in-query proof the oracle cannot see)."""
-    from k_means_hadoop_spark.operators.round8 import gif_decode_stats
+    from k_means_hadoop_spark.operators.containers import gif_decode_stats
 
     rows = gif_decode_stats(spark, sf_dir).collect()
     assert rows, "no planted GIF rows"
@@ -67,7 +67,7 @@ def test_page_incomplete_blocks_raise(spark, tmp_path):
     pattern): a missing (block, treatment) cell must raise."""
     import pandas as pd
 
-    from k_means_hadoop_spark.operators.round8 import page_trend_event_dow
+    from k_means_hadoop_spark.operators.trends import page_trend_event_dow
 
     rows = [
         ("2024-01-01 01:00:00", "A"),
@@ -93,7 +93,7 @@ def test_mann_kendall_against_local_reference(spark, sf_dir):
     series with plain Python — the definition, not the SQL."""
     import math
 
-    from k_means_hadoop_spark.operators.round8 import mann_kendall_daily
+    from k_means_hadoop_spark.operators.trends import mann_kendall_daily
 
     daily = (
         spark.read.parquet(f"{sf_dir}/events.parquet")
@@ -133,7 +133,7 @@ def test_page_trend_against_local_reference(spark, sf_dir):
     import math
     from collections import Counter
 
-    from k_means_hadoop_spark.operators.round8 import page_trend_event_dow
+    from k_means_hadoop_spark.operators.trends import page_trend_event_dow
 
     cells = (
         spark.read.parquet(f"{sf_dir}/events.parquet")
@@ -183,7 +183,7 @@ def test_page_trend_fully_tied_raises_in_plan(spark, tmp_path):
         rows.append((f"2024-01-{d:02d} 01:00:00", "A"))
         rows.append((f"2024-01-{d:02d} 02:00:00", "B"))
     _write_events(tmp_path, rows)
-    from k_means_hadoop_spark.operators.round8 import page_trend_event_dow
+    from k_means_hadoop_spark.operators.trends import page_trend_event_dow
 
     df = page_trend_event_dow(spark, str(tmp_path))
     with pytest.raises(Exception, match="fully\\s+tied"):
@@ -195,7 +195,7 @@ def test_ljung_box_nonnegative_and_reference(spark, sf_dir):
     rational A_k/B definition in Python floats — and Q >= 0 always."""
     import math
 
-    from k_means_hadoop_spark.operators.round8 import (
+    from k_means_hadoop_spark.operators.trends import (
         _LB_LAGS,
         ljung_box_daily,
     )
@@ -226,7 +226,7 @@ def test_ljung_box_nonnegative_and_reference(spark, sf_dir):
 
 def test_kendall_grid_bounds(spark, sf_dir):
     """|tau_b| <= 1 and C + D can never exceed the untied pair count."""
-    from k_means_hadoop_spark.operators.round8 import (
+    from k_means_hadoop_spark.operators.stats_extra import (
         kendall_tau_grid_qty_disc,
     )
 
@@ -243,7 +243,7 @@ def test_kendall_grid_bounds(spark, sf_dir):
 def test_lorenz_monotone_and_total(spark, sf_dir):
     """Lorenz cumulative share is nondecreasing, convex-ish by decile
     construction, and ends at exactly 1."""
-    from k_means_hadoop_spark.operators.round8 import lorenz_spend_deciles
+    from k_means_hadoop_spark.operators.stats_extra import lorenz_spend_deciles
 
     rows = lorenz_spend_deciles(spark, sf_dir).orderBy("decile").collect()
     assert [r["decile"] for r in rows] == list(range(len(rows)))
@@ -256,7 +256,7 @@ def test_lorenz_monotone_and_total(spark, sf_dir):
 def test_permutation_entropy_bounds(spark, sf_dir):
     """0 <= h_norm <= 1, at most 6 ordinal patterns of order 3, and
     m = n_days - 2 windows."""
-    from k_means_hadoop_spark.operators.round8 import (
+    from k_means_hadoop_spark.operators.trends import (
         permutation_entropy_daily,
     )
 
@@ -275,7 +275,7 @@ def test_permutation_entropy_bounds(spark, sf_dir):
 def test_theil_u_bounds(spark, sf_dir):
     """0 <= U <= 1 and H(lang|source) <= H(lang) (conditioning never
     increases entropy — up to the 6dp grid)."""
-    from k_means_hadoop_spark.operators.round8 import theil_u_lang_source
+    from k_means_hadoop_spark.operators.stats_extra import theil_u_lang_source
 
     r = theil_u_lang_source(spark, sf_dir).first()
     assert -1e-6 <= r["theil_u"] <= 1 + 1e-6
@@ -285,7 +285,7 @@ def test_theil_u_bounds(spark, sf_dir):
 def test_hypergeom_znum_telescopes(spark, sf_dir):
     """Σ_s (N·k_s − n_s·K) = N·K − K·N = 0 exactly — the enrichment
     numerators must cancel across sources (exact-integer identity)."""
-    from k_means_hadoop_spark.operators.round8 import (
+    from k_means_hadoop_spark.operators.stats_extra import (
         _HG_CHARS,
         hypergeom_enrichment_sources,
     )
@@ -303,7 +303,7 @@ def test_log_odds_topk_shape(spark, sf_dir):
     """Exactly 20 rows, lor ordered (desc, term asc), and the top
     term is genuinely en-associated (positive log-odds — a RATE
     statement: c_en/n1 beats c_rest/n2, not a raw-count one)."""
-    from k_means_hadoop_spark.operators.round8 import (
+    from k_means_hadoop_spark.operators.mining import (
         _LO_TOPK,
         log_odds_terms_langs,
     )
@@ -426,7 +426,7 @@ def test_jpeg_decode_stats_roundtrip_flag(spark, sf_dir):
     """Every planted block-constant image must survive the lossy codec
     bit-exactly (the DC-only / even-value construction) — decode_ok is
     the in-query proof the oracle cannot see."""
-    from k_means_hadoop_spark.operators.round8 import jpeg_decode_stats
+    from k_means_hadoop_spark.operators.containers import jpeg_decode_stats
 
     rows = jpeg_decode_stats(spark, sf_dir).collect()
     assert rows, "no planted JPEG rows"
@@ -548,7 +548,7 @@ def _build_runs_no_jobs(spark, fn, *args, table="events"):
 
 
 def test_mann_kendall_single_day_raises(spark, tmp_path):
-    from k_means_hadoop_spark.operators.round8 import mann_kendall_daily
+    from k_means_hadoop_spark.operators.trends import mann_kendall_daily
 
     _write_events(tmp_path, [("2024-01-01 01:00:00", "A")] * 3)
     df = _build_runs_no_jobs(spark, mann_kendall_daily, spark, str(tmp_path))
@@ -557,7 +557,7 @@ def test_mann_kendall_single_day_raises(spark, tmp_path):
 
 
 def test_ljung_box_short_and_constant_raise(spark, tmp_path):
-    from k_means_hadoop_spark.operators.round8 import ljung_box_daily
+    from k_means_hadoop_spark.operators.trends import ljung_box_daily
 
     _write_events(
         tmp_path, [(f"2024-01-0{d} 01:00:00", "A") for d in range(1, 6)]
@@ -575,7 +575,7 @@ def test_ljung_box_short_and_constant_raise(spark, tmp_path):
 
 
 def test_permutation_entropy_two_days_raises(spark, tmp_path):
-    from k_means_hadoop_spark.operators.round8 import (
+    from k_means_hadoop_spark.operators.trends import (
         permutation_entropy_daily,
     )
 
@@ -593,7 +593,7 @@ def test_permutation_entropy_two_days_raises(spark, tmp_path):
 def test_page_single_treatment_raises(spark, tmp_path):
     """k = 1 is complete-blocks-valid but rank-degenerate — the shared
     guard (now also protecting Friedman) must reject it."""
-    from k_means_hadoop_spark.operators.round8 import page_trend_event_dow
+    from k_means_hadoop_spark.operators.trends import page_trend_event_dow
 
     _write_events(
         tmp_path,
@@ -609,7 +609,7 @@ def test_page_single_treatment_raises(spark, tmp_path):
 def test_theil_u_single_language_raises(spark, tmp_path):
     import pandas as pd
 
-    from k_means_hadoop_spark.operators.round8 import theil_u_lang_source
+    from k_means_hadoop_spark.operators.stats_extra import theil_u_lang_source
 
     pd.DataFrame(
         {
@@ -628,7 +628,7 @@ def test_theil_u_single_language_raises(spark, tmp_path):
 def test_kendall_grid_constant_marginal_raises(spark, tmp_path):
     import pandas as pd
 
-    from k_means_hadoop_spark.operators.round8 import (
+    from k_means_hadoop_spark.operators.stats_extra import (
         kendall_tau_grid_qty_disc,
     )
 
@@ -646,7 +646,7 @@ def test_kendall_grid_constant_marginal_raises(spark, tmp_path):
 def test_hypergeom_nonsplitting_gate_raises(spark, tmp_path):
     import pandas as pd
 
-    from k_means_hadoop_spark.operators.round8 import (
+    from k_means_hadoop_spark.operators.stats_extra import (
         hypergeom_enrichment_sources,
     )
 

@@ -15,7 +15,7 @@ import struct
 import pytest
 
 from k_means_hadoop_spark.functions import codecs
-from k_means_hadoop_spark.operators.round9 import _mp4_plant
+from k_means_hadoop_spark.operators.containers import _mp4_plant
 
 
 def _blob(did: int, **kw) -> bytes:
@@ -199,14 +199,14 @@ def test_mp4_roundtrip_fuzz():
 
 
 def _fblob(did: int) -> bytes:
-    from k_means_hadoop_spark.operators.round9 import _fmp4_plant
+    from k_means_hadoop_spark.operators.containers import _fmp4_plant
 
     return codecs.encode_fmp4(30, 1, _fmp4_plant(did))
 
 
 @pytest.mark.parametrize("did", [0, 1, 2, 7, 12345])
 def test_fmp4_roundtrip_bit_exact(did):
-    from k_means_hadoop_spark.operators.round9 import _fmp4_plant
+    from k_means_hadoop_spark.operators.containers import _fmp4_plant
 
     frags = _fmp4_plant(did)
     parsed = codecs.parse_fmp4(_fblob(did))
@@ -225,7 +225,7 @@ def test_fmp4_init_segment_prefix_parses_empty():
     a VALID zero-fragment stream, and any cut that severs a fragment
     either drops whole trailing fragments or raises ValueError —
     never yields corrupt samples."""
-    from k_means_hadoop_spark.operators.round9 import _fmp4_plant
+    from k_means_hadoop_spark.operators.containers import _fmp4_plant
 
     blob = _fblob(3)
     full = codecs.parse_fmp4(blob)["fragments"]
