@@ -10,11 +10,35 @@ vs xxhash64 is a few extra ns/row inside codegen; swap to
 
 from __future__ import annotations
 
+import re
+
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
 # Mersenne prime 2^61 - 1: modulus for the universal-hash family used by MinHash.
 MERSENNE_61 = (1 << 61) - 1
+
+# The whitespace-token rule: trim spaces, lower-case, split on runs of
+# Java's \s, which is [ \t\n\x0B\f\r] (Spark's regex engine).  The
+# other two engines need it spelled differently:
+# - DuckDB's RE2 \s lacks \x0B, so oracle texts use SQL_WS, which
+#   adds \v (RE2's name for \x0B);
+# - Python's str \s (and str.strip()) also match Unicode separators
+#   such as \x1c-\x1f, \xa0 and \u2003, so Python kernels split on
+#   the ASCII class below and strip spaces only, as Spark's trim does.
+SQL_WS = r"[\s\v]"
+PY_WS = re.compile(r"\s+", re.ASCII)
+
+
+def tokens(c: Column | str) -> Column:
+    """Whitespace tokens of a string column (see the rule above)."""
+    c = F.col(c) if isinstance(c, str) else c
+    return F.split(F.lower(F.trim(c)), r"\s+")
+
+
+def tokens_sql(expr: str) -> str:
+    """DuckDB SQL text computing the same list as ``tokens``."""
+    return f"string_split_regex(lower(trim({expr})), '{SQL_WS}+')"
 
 
 def stable_hash64(c: Column | str, fast: bool = False) -> Column:
@@ -89,7 +113,7 @@ def word_ngrams_all(text: Column | str, n: int) -> Column:
 
 def word_ngrams_all_sql(text_expr: str, n: int) -> str:
     """DuckDB SQL producing the same non-distinct window list."""
-    toks = f"string_split_regex(lower(trim({text_expr})), '\\s+')"
+    toks = tokens_sql(text_expr)
     return (
         f"list_transform(range(0, greatest(len({toks}) - {n} + 1, 0)), "
         f"i -> array_to_string(array_slice({toks}, i + 1, i + {n}), ' '))"
@@ -98,7 +122,7 @@ def word_ngrams_all_sql(text_expr: str, n: int) -> str:
 
 def word_ngrams_sql(text_expr: str, n: int) -> str:
     """DuckDB SQL producing the same distinct word n-gram list."""
-    toks = f"string_split_regex(lower(trim({text_expr})), '\\s+')"
+    toks = tokens_sql(text_expr)
     return (
         f"list_distinct(list_transform(range(0, greatest(len({toks}) - {n} + 1, 0)), "
         f"i -> array_to_string(array_slice({toks}, i + 1, i + {n}), ' ')))"

@@ -18,17 +18,18 @@ genuinely imperative.
 
 from __future__ import annotations
 
-import re
-
 from pyspark.sql.functions import udtf
 
-# \s+ (not str.split) so the Python kernel and the regex-split oracle
-# agree on what counts as whitespace: str.split() also splits on
-# \x1c-\x1f file/group separators, which regex \s does not.  Empty
-# tokens are filtered (they only arise from empty/whitespace-only
-# input, where the filtered list is empty) — matching word_ngrams
-# semantics; the oracle filters '' the same way.
-_WS = re.compile(r"\s+")
+from k_means_hadoop_spark.functions.hashing import PY_WS
+
+# The kernels apply hashing's whitespace-token rule in Python: PY_WS is
+# Java's \s class (an ASCII-only \s, so \x1c-\x1f, \xa0 and \u2003
+# stay inside tokens as they do in Spark and DuckDB), and strip(" ")
+# trims spaces only, as Spark's trim does.  Empty tokens are dropped:
+# they come from empty or whitespace-only input and from a tab or
+# newline at either end, which trim keeps.  tokenize numbers tokens
+# before dropping them, as its oracle does; ngram_cols windows the
+# kept tokens, as its oracle does.
 
 
 @udtf(returnType="pos int, token string")
@@ -36,9 +37,9 @@ class TokenizeUDTF:
     def eval(self, text: str):
         if text is None:
             return
-        toks = [t for t in _WS.split(text.lower().strip()) if t]
-        for i, tok in enumerate(toks):
-            yield i, tok
+        for i, tok in enumerate(PY_WS.split(text.lower().strip(" "))):
+            if tok:
+                yield i, tok
 
 
 def register(spark) -> None:
@@ -69,12 +70,10 @@ class NgramColumnsUDTF:
     def eval(self, text: str, n: int):
         if text is None:
             return
-        toks = [t for t in _WS.split(text.lower().strip()) if t]
+        toks = [t for t in PY_WS.split(text.lower().strip(" ")) if t]
         for i in range(max(len(toks) - n + 1, 0)):
             yield (i, *toks[i : i + n])
 
 
 def register_ngram_cols(spark) -> None:
-    from pyspark.sql.functions import udtf as _udtf
-
-    spark.udtf.register("ngram_cols", _udtf(NgramColumnsUDTF))
+    spark.udtf.register("ngram_cols", udtf(NgramColumnsUDTF))

@@ -20,12 +20,27 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from k_means_hadoop_spark.functions.hashing import word_ngrams, word_ngrams_sql
+from k_means_hadoop_spark.functions.hashing import (
+    stable_hash64,
+    stable_hash64_sql,
+    tokens,
+    tokens_sql,
+    word_ngrams,
+    word_ngrams_sql,
+)
 from k_means_hadoop_spark.operators import text
-from k_means_hadoop_spark.partitioning import fan_out, truncate_lineage, truncate_lineage_lazy
+from k_means_hadoop_spark.operators.text import _gopher_sql, _quality_sql, _unigram_logprob_sql
+from k_means_hadoop_spark.partitioning import (
+    fan_out,
+    prefix_sum,
+    truncate_lineage,
+    truncate_lineage_lazy,
+)
 
 
 def _docs(spark: SparkSession, sf_dir: str) -> DataFrame:
+    # fan_out: the test parquet is a single row-group (one input split);
+    # without it every shingle/hash pipeline below runs on ONE core.
     return fan_out(spark.read.parquet(f"{sf_dir}/documents.parquet"))
 
 
@@ -49,8 +64,6 @@ def curriculum_schedule(spark: SparkSession, sf_dir: str) -> DataFrame:
     highest-quality documents up to 1/4 of total tokens, and so on.
     A document's phase is decided by the cumulative tokens BEFORE it,
     so phases are contiguous in the quality ordering."""
-    from k_means_hadoop_spark.partitioning import prefix_sum
-
     q = text.quality_scores(_docs(spark, sf_dir)).select(
         "doc_id", "n_tokens", "quality"
     )
@@ -72,8 +85,6 @@ def curriculum_schedule(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _curriculum_sql() -> str:
-    from k_means_hadoop_spark.registry_pipeline import _quality_sql
-
     return f"""
 WITH q AS (SELECT doc_id, n_tokens, quality FROM ({_quality_sql()})),
 t AS (SELECT SUM(n_tokens)::BIGINT AS total FROM q),
@@ -100,8 +111,6 @@ def perplexity_buckets(spark: SparkSession, sf_dir: str) -> DataFrame:
     head/middle/tail, best scores first.  At 100 TB the global ntile
     sort is replaced by a sampled-quantile cut; the fixture-exact form
     keeps the oracle total."""
-    from k_means_hadoop_spark.partitioning import prefix_sum
-
     lp = text.unigram_logprob(_docs(spark, sf_dir))
     # distributed rank (two-phase prefix count) + the exact ntile
     # closed form bucket(r) = ((r−1)·n) div N + 1 — no global window
@@ -125,8 +134,6 @@ def perplexity_buckets(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _perplexity_sql() -> str:
-    from k_means_hadoop_spark.registry_pipeline import _unigram_logprob_sql
-
     return f"""
 WITH lp AS ({_unigram_logprob_sql()}),
 r AS (SELECT doc_id, n_tokens, avg_logprob,
@@ -312,7 +319,7 @@ _PMI_TOP = 40
 def pmi_bigrams(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(w1, w2, n_pair, pmi) — the 40 most frequent adjacent token
     pairs with ln(P(w1,w2) / (P(w1)·P(w2)))."""
-    toks = F.filter(text._tokens(F.col("text")), lambda x: x != "")
+    toks = F.filter(tokens("text"), lambda x: x != "")
     base = _docs(spark, sf_dir).select("doc_id", toks.alias("toks"))
     n = F.size("toks")
     # clamp: n=0 (whitespace-only doc) would make the slice length -1,
@@ -363,10 +370,8 @@ def pmi_bigrams(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _pmi_sql() -> str:
-    from k_means_hadoop_spark.registry_pipeline import _TOKS
-
     return f"""
-WITH t AS (SELECT doc_id, list_filter({_TOKS}, x -> x != '') AS toks FROM documents),
+WITH t AS (SELECT doc_id, list_filter({tokens_sql('text')}, x -> x != '') AS toks FROM documents),
 pairs AS (
   SELECT unnest(list_transform(range(1, len(toks)),
                 i -> {{'w1': toks[i], 'w2': toks[i + 1]}}), recursive := true)
@@ -438,8 +443,6 @@ def quality_length_slopes(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _slopes_sql() -> str:
-    from k_means_hadoop_spark.registry_pipeline import _quality_sql
-
     return f"""
 WITH q AS (SELECT doc_id, quality FROM ({_quality_sql()})),
 d AS (SELECT lang,
@@ -485,8 +488,6 @@ def auc_quality_vs_gopher(spark: SparkSession, sf_dir: str) -> DataFrame:
     rank Gopher-passing documents above failing ones?  (Measured ~0.9:
     the two signals agree strongly but not perfectly — exactly the
     separation a calibration review wants quantified.)"""
-    from k_means_hadoop_spark.partitioning import prefix_sum
-
     docs = _docs(spark, sf_dir)
     q = text.quality_scores(docs).select("doc_id", "quality")
     g = text.gopher_quality_gate(docs).select(
@@ -514,8 +515,6 @@ def auc_quality_vs_gopher(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _auc_sql() -> str:
-    from k_means_hadoop_spark.registry_pipeline import _gopher_sql, _quality_sql
-
     return f"""
 WITH q AS (SELECT doc_id, quality FROM ({_quality_sql()})),
 g AS (SELECT doc_id, CASE WHEN verdict THEN 1 ELSE 0 END AS pos
@@ -547,8 +546,6 @@ SELECT n_pos, n_neg, {_AUC_EXPR} AS auc FROM t
 def classifier_calibration(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(decile, n, mean_score, frac_pos, brier) — quality-score deciles
     (1 = best scores) against the Gopher verdict."""
-    from k_means_hadoop_spark.partitioning import prefix_sum
-
     docs = _docs(spark, sf_dir)
     q = text.quality_scores(docs).select("doc_id", "quality")
     g = text.gopher_quality_gate(docs).select(
@@ -589,8 +586,6 @@ def classifier_calibration(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _calibration_sql() -> str:
-    from k_means_hadoop_spark.registry_pipeline import _gopher_sql, _quality_sql
-
     return f"""
 WITH q AS (SELECT doc_id, quality FROM ({_quality_sql()})),
 g AS (SELECT doc_id, CASE WHEN verdict THEN 1 ELSE 0 END AS pos
@@ -635,8 +630,6 @@ _SPEARMAN_FORMULA = (
 def _avg_ranks(df: DataFrame, value_col: str, out_col: str) -> DataFrame:
     """(value_col, out_col) — tie-averaged ascending rank per DISTINCT
     value, exact half-integers, via the histogram + prefix sum."""
-    from k_means_hadoop_spark.partitioning import prefix_sum
-
     hist = df.groupBy(value_col).agg(F.count(F.lit(1)).alias("m"))
     cum = prefix_sum(hist, "m", [F.col(value_col).asc()], out_col="cumm")
     # avg rank = B + (m+1)/2 = cumm - m + (m+1)/2; ×2 stays integral
@@ -686,11 +679,6 @@ def spearman_quality_logprob(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _spearman_sql() -> str:
-    from k_means_hadoop_spark.registry_pipeline import (
-        _quality_sql,
-        _unigram_logprob_sql,
-    )
-
     def ranks(src: str, col: str, out: str) -> str:
         return f"""
 SELECT {col},
@@ -730,8 +718,6 @@ SELECT n AS n_docs, {_SPEARMAN_FORMULA} AS rho FROM sums
 def ks_quality_halves(spark: SparkSession, sf_dir: str) -> DataFrame:
     """One row (n_even, n_odd, ks_d) — sup |F_even − F_odd| over the
     quality score."""
-    from k_means_hadoop_spark.partitioning import prefix_sum
-
     d = text.quality_scores(_docs(spark, sf_dir)).select(
         "doc_id", "quality", (F.col("doc_id") % 2 == 0).cast("int").alias("even")
     )
@@ -760,8 +746,6 @@ def ks_quality_halves(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _ks_sql() -> str:
-    from k_means_hadoop_spark.registry_pipeline import _quality_sql
-
     return f"""
 WITH q AS (SELECT doc_id, quality FROM ({_quality_sql()})),
 d AS (SELECT quality, CASE WHEN doc_id % 2 = 0 THEN 1 ELSE 0 END AS even FROM q),
@@ -1007,8 +991,6 @@ def welch_ttest_langs(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _welch_sql() -> str:
-    from k_means_hadoop_spark.registry_pipeline import _quality_sql
-
     return f"""
 WITH q AS (SELECT doc_id, quality FROM ({_quality_sql()})),
 d AS (SELECT doc_id, lang, CAST(quality AS DECIMAL(12,6)) AS quality
@@ -1317,7 +1299,7 @@ FROM documents WHERE doc_id <= 24
 
 def vocab_richness_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     """One row (n_tokens, v_types, f1, f2, chao1, unseen_mass)."""
-    toks = F.filter(text._tokens(F.col("text")), lambda x: x != "")
+    toks = F.filter(tokens("text"), lambda x: x != "")
     tf = (
         _planted_tail_docs(_docs(spark, sf_dir))
         .select(F.explode(toks).alias("tok"))
@@ -1356,7 +1338,7 @@ def vocab_richness_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
 def good_turing_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(r, n_r, r_star) for r ≤ 10 — the Good-Turing adjusted-count
     table (r_star NULL where N_{r+1} is absent)."""
-    toks = F.filter(text._tokens(F.col("text")), lambda x: x != "")
+    toks = F.filter(tokens("text"), lambda x: x != "")
     tf = (
         _planted_tail_docs(_docs(spark, sf_dir))
         .select(F.explode(toks).alias("tok"))
@@ -1382,8 +1364,6 @@ def good_turing_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _vocab_richness_sql() -> str:
-    from k_means_hadoop_spark.registry_pipeline import _TOKS
-
     chao1 = (
         "CAST(v_types AS DOUBLE) + CAST(f1 AS DOUBLE) * CAST(f1 - 1 AS DOUBLE)"
         " / (CAST(2 AS DOUBLE) * CAST(f2 + 1 AS DOUBLE))"
@@ -1392,7 +1372,7 @@ def _vocab_richness_sql() -> str:
 WITH d AS ({_PLANT_SQL}),
 tf AS (
   SELECT tok, count(*)::BIGINT AS r FROM (
-    SELECT unnest(list_filter({_TOKS}, x -> x != '')) AS tok FROM d)
+    SELECT unnest(list_filter({tokens_sql('text')}, x -> x != '')) AS tok FROM d)
   GROUP BY tok),
 a AS (SELECT SUM(r)::BIGINT AS n_tokens, count(*)::BIGINT AS v_types,
              SUM(CASE WHEN r = 1 THEN 1 ELSE 0 END)::BIGINT AS f1,
@@ -1409,13 +1389,11 @@ FROM a
 
 
 def _gt_sql() -> str:
-    from k_means_hadoop_spark.registry_pipeline import _TOKS
-
     return f"""
 WITH d AS ({_PLANT_SQL}),
 tf AS (
   SELECT tok, count(*)::BIGINT AS r FROM (
-    SELECT unnest(list_filter({_TOKS}, x -> x != '')) AS tok FROM d)
+    SELECT unnest(list_filter({tokens_sql('text')}, x -> x != '')) AS tok FROM d)
   GROUP BY tok),
 fof AS (SELECT r, count(*)::BIGINT AS n_r FROM tf GROUP BY r)
 SELECT f.r, f.n_r,
@@ -1461,7 +1439,6 @@ _POIS_W = (
 def bootstrap_ci_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
     """One row (n_docs, mean_quality, ci_lo, ci_hi) — Poissonized
     bootstrap 90% CI of the mean quality score, 50 replicates."""
-    from k_means_hadoop_spark.functions.hashing import stable_hash64
     from pyspark.sql import Window
 
     q = text.quality_scores(_docs(spark, sf_dir)).select(
@@ -1504,9 +1481,6 @@ def bootstrap_ci_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _bootstrap_sql() -> str:
-    from k_means_hadoop_spark.functions.hashing import stable_hash64_sql
-    from k_means_hadoop_spark.registry_pipeline import _quality_sql
-
     h = stable_hash64_sql("(doc_id::VARCHAR || ':boot:' || b::VARCHAR)")
     r6 = "floor({x} * CAST(1000000 AS DOUBLE) + CAST(0.5 AS DOUBLE)) / CAST(1000000 AS DOUBLE)"
     return f"""
@@ -1550,9 +1524,7 @@ def umass_topic_coherence(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(source, n_pairs, coherence) per source pseudo-topic."""
     from pyspark.sql import Window
 
-    from k_means_hadoop_spark.partitioning import prefix_sum
-
-    toks = F.filter(text._tokens(F.col("text")), lambda x: x != "")
+    toks = F.filter(tokens("text"), lambda x: x != "")
     d = _docs(spark, sf_dir)
     # dt feeds FOUR consumers (per-source counts, document frequency,
     # and both sides of the co-occurrence join); materialize the
@@ -1663,8 +1635,6 @@ def umass_topic_coherence(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _umass_sql() -> str:
-    from k_means_hadoop_spark.registry_pipeline import _TOKS
-
     term = (
         "CAST(floor(ln((CAST(COALESCE(c.d_ij, 0) AS DOUBLE) + CAST(1 AS DOUBLE))"
         " / CAST(dw.d_w AS DOUBLE)) * 1000000 + 0.5) / 1000000"
@@ -1673,7 +1643,7 @@ def _umass_sql() -> str:
     return f"""
 WITH dt AS (
   SELECT DISTINCT doc_id, source, tok FROM (
-    SELECT doc_id, source, unnest(list_filter({_TOKS}, x -> x != '')) AS tok
+    SELECT doc_id, source, unnest(list_filter({tokens_sql('text')}, x -> x != '')) AS tok
     FROM documents)),
 per_src AS (SELECT source, tok, count(*)::BIGINT AS cnt FROM dt GROUP BY source, tok),
 tt AS (SELECT source, tok, rk FROM (
@@ -1714,7 +1684,7 @@ _GROWTH_STEPS = 10
 
 def vocab_growth_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(step, n_docs, vocab) for step = 1..10 (deciles of doc_id order)."""
-    toks = F.filter(text._tokens(F.col("text")), lambda x: x != "")
+    toks = F.filter(tokens("text"), lambda x: x != "")
     d = _docs(spark, sf_dir)
     n_docs_df = d.agg(F.count(F.lit(1)).alias("n_total"))
     first = (
@@ -1755,14 +1725,12 @@ def vocab_growth_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _growth_sql() -> str:
-    from k_means_hadoop_spark.registry_pipeline import _TOKS
-
     return f"""
 WITH d AS (SELECT doc_id, text FROM documents),
 nt AS (SELECT count(*)::BIGINT AS n_total FROM d),
 first AS (
   SELECT tok, MIN(doc_id)::BIGINT AS first_doc FROM (
-    SELECT doc_id, unnest(list_filter({_TOKS}, x -> x != '')) AS tok FROM d)
+    SELECT doc_id, unnest(list_filter({tokens_sql('text')}, x -> x != '')) AS tok FROM d)
   GROUP BY tok),
 steps AS (SELECT CAST(range + 1 AS BIGINT) AS step FROM range({_GROWTH_STEPS}))
 SELECT s.step,
@@ -1801,7 +1769,7 @@ def zipf_slope_fit(spark: SparkSession, sf_dir: str) -> DataFrame:
     the top-200 terms."""
     from pyspark.sql import Window
 
-    toks = F.filter(text._tokens(F.col("text")), lambda x: x != "")
+    toks = F.filter(tokens("text"), lambda x: x != "")
     tf = (
         _docs(spark, sf_dir)
         .select(F.explode(toks).alias("tok"))
@@ -1848,12 +1816,10 @@ def zipf_slope_fit(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _zipf_sql() -> str:
-    from k_means_hadoop_spark.registry_pipeline import _TOKS
-
     return f"""
 WITH tf AS (
   SELECT tok, count(*)::BIGINT AS c FROM (
-    SELECT unnest(list_filter({_TOKS}, x -> x != '')) AS tok FROM documents)
+    SELECT unnest(list_filter({tokens_sql('text')}, x -> x != '')) AS tok FROM documents)
   GROUP BY tok ORDER BY c DESC, tok ASC LIMIT {_ZIPF_TOP}),
 pts AS (
   SELECT CAST(floor(ln(CAST(row_number() OVER (ORDER BY c DESC, tok ASC) AS DOUBLE))
@@ -1886,7 +1852,7 @@ _JSD_A, _JSD_B = "en", "de"
 
 def js_divergence_langs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """One row (n_terms, jsd_bits) for the en-vs-de unigram JSD."""
-    toks = F.filter(text._tokens(F.col("text")), lambda x: x != "")
+    toks = F.filter(tokens("text"), lambda x: x != "")
     d = _docs(spark, sf_dir).where(F.col("lang").isin(_JSD_A, _JSD_B))
     cnt = (
         d.select("lang", F.explode(toks).alias("tok"))
@@ -1924,8 +1890,6 @@ def js_divergence_langs(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _jsd_sql() -> str:
-    from k_means_hadoop_spark.registry_pipeline import _TOKS
-
     term = (
         "CAST(floor(("
         " CASE WHEN ta = 0 OR tb = 0 THEN 0.0"
@@ -1945,7 +1909,7 @@ cnt AS (
   SELECT tok,
          SUM(CASE WHEN lang = '{_JSD_A}' THEN 1 ELSE 0 END)::BIGINT AS ca,
          SUM(CASE WHEN lang = '{_JSD_B}' THEN 1 ELSE 0 END)::BIGINT AS cb
-  FROM (SELECT lang, unnest(list_filter({_TOKS}, x -> x != '')) AS tok FROM d)
+  FROM (SELECT lang, unnest(list_filter({tokens_sql('text')}, x -> x != '')) AS tok FROM d)
   GROUP BY tok),
 tot AS (SELECT SUM(ca)::BIGINT AS ta, SUM(cb)::BIGINT AS tb,
                count(*)::BIGINT AS n_terms FROM cnt)
@@ -1988,7 +1952,7 @@ _KN_R6 = (
 def kneser_ney_bigrams(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(w1, w2, c12, pkn) — interpolated KN probability for the top-40
     adjacent token pairs."""
-    toks = F.filter(text._tokens(F.col("text")), lambda x: x != "")
+    toks = F.filter(tokens("text"), lambda x: x != "")
     base = _docs(spark, sf_dir).select("doc_id", toks.alias("toks"))
     n = F.size("toks")
     pair_len = F.greatest(n - F.lit(1), F.lit(0))
@@ -2024,10 +1988,8 @@ def kneser_ney_bigrams(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _kn_sql() -> str:
-    from k_means_hadoop_spark.registry_pipeline import _TOKS
-
     return f"""
-WITH t AS (SELECT doc_id, list_filter({_TOKS}, x -> x != '') AS toks FROM documents),
+WITH t AS (SELECT doc_id, list_filter({tokens_sql('text')}, x -> x != '') AS toks FROM documents),
 pairs AS (
   SELECT unnest(list_transform(range(1, len(toks)),
                 i -> {{'w1': toks[i], 'w2': toks[i + 1]}}), recursive := true)
@@ -2068,8 +2030,6 @@ def quantile_normalize_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
     decimal→double widening of ``quality`` is order-preserving (6dp
     grid vs 2e-16 ulp — no collisions), so the ordinal ranking is
     unchanged from the two-pass form."""
-    from k_means_hadoop_spark.partitioning import prefix_sum
-
     docs = _docs(spark, sf_dir)
     q = text.quality_scores(docs).select("doc_id", "quality")
     lp = text.unigram_logprob(docs).select("doc_id", "avg_logprob")
@@ -2114,11 +2074,6 @@ def quantile_normalize_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _qn_sql() -> str:
-    from k_means_hadoop_spark.registry_pipeline import (
-        _quality_sql,
-        _unigram_logprob_sql,
-    )
-
     return f"""
 WITH q AS (SELECT doc_id, quality FROM ({_quality_sql()})),
 lp AS (SELECT doc_id, avg_logprob FROM ({_unigram_logprob_sql()})),
@@ -2146,8 +2101,6 @@ _CONF_ALPHA = 0.1
 def conformal_quality_floor(spark: SparkSession, sf_dir: str) -> DataFrame:
     """One row (n_cal, n_test, k, threshold, coverage) — the conformal
     alpha-floor and its held-out coverage (expected ≈ 1 − alpha)."""
-    from k_means_hadoop_spark.partitioning import prefix_sum
-
     q = text.quality_scores(_docs(spark, sf_dir)).select("doc_id", "quality")
     cal = q.where(F.col("doc_id") % 2 == 0)
     test = q.where(F.col("doc_id") % 2 == 1)
@@ -2191,8 +2144,6 @@ def conformal_quality_floor(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _conformal_sql() -> str:
-    from k_means_hadoop_spark.registry_pipeline import _quality_sql
-
     return f"""
 WITH q AS (SELECT doc_id, quality FROM ({_quality_sql()})),
 cal AS (SELECT quality FROM q WHERE doc_id % 2 = 0),

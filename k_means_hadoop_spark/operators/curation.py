@@ -24,13 +24,24 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from k_means_hadoop_spark.functions.hashing import (
+    stable_hash64,
+    stable_hash64_sql,
+    tokens,
+    tokens_sql,
+    word_ngrams,
+    word_ngrams_sql,
+)
+from k_means_hadoop_spark.operators import text
+from k_means_hadoop_spark.operators.dedup import (
+    _minhash_verified_sql,
+    exact_duplicates,
+    minhash_verified_pairs,
+)
 from k_means_hadoop_spark.operators.relational import _t
+from k_means_hadoop_spark.operators.text import _quality_sql, quality_expr
 from k_means_hadoop_spark.operators.trends import _FL6_SQL, _fl6
-from k_means_hadoop_spark.partitioning import truncate_lineage_lazy
-
-
-def _docs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return spark.read.parquet(f"{sf_dir}/documents.parquet")
+from k_means_hadoop_spark.partitioning import prefix_sum, truncate_lineage_lazy
 
 
 # ------------------------------------------------------------- split / mix
@@ -48,7 +59,7 @@ def split_train_val(spark: SparkSession, sf_dir: str) -> DataFrame:
     as per-(source, split) document counts and character volume.  The
     split column is a pure row-local expression (no shuffle, no RNG
     state); the only Exchange is the final small aggregation."""
-    docs = _docs(spark, sf_dir)
+    docs = _t(spark, sf_dir, "documents")
     bucket = (F.col("doc_id") * F.lit(_SPLIT_MULT)) % F.lit(_SPLIT_BUCKETS)
     split = (
         F.when(bucket < _TRAIN_LT, "train")
@@ -87,7 +98,7 @@ def quota_per_source(spark: SparkSession, sf_dir: str) -> DataFrame:
     per group (doc_id ascending tiebreak), the standard guard against a
     single domain dominating a web-scale corpus.  One hash partitioning
     serves both the ranking window and the final aggregate."""
-    docs = _docs(spark, sf_dir)
+    docs = _t(spark, sf_dir, "documents")
     w = Window.partitionBy("source", "lang").orderBy(
         F.col("n_chars").desc(), F.col("doc_id").asc()
     )
@@ -129,7 +140,7 @@ def histogram_doc_lengths(spark: SparkSession, sf_dir: str) -> DataFrame:
     length — the distribution check run before choosing chunking /
     truncation limits.  Integer ``div`` on both engines (float division
     would bucket 49.999… differently)."""
-    docs = _docs(spark, sf_dir)
+    docs = _t(spark, sf_dir, "documents")
     return (
         docs.select(
             F.expr(f"n_chars div {_BUCKET_CHARS}").alias("bucket"),
@@ -207,7 +218,7 @@ def mix_sources_weighted(spark: SparkSession, sf_dir: str) -> DataFrame:
     are a 20-row dimension broadcast to the scan — the corpus itself is
     only shuffled once, for the final report aggregate.  This is the
     'data mixing' step that rebalances web-crawl dumps before training."""
-    docs = _docs(spark, sf_dir)
+    docs = _t(spark, sf_dir, "documents")
     weights = spark.createDataFrame(
         [(s, w) for s, w in sorted(_MIX_WEIGHTS.items())], "source string, keep_pm int"
     )
@@ -254,7 +265,7 @@ def temperature_sample_langs(spark: SparkSession, sf_dir: str) -> DataFrame:
     row-local arithmetic hash as the split (reproducible, no RNG state).
     All threshold math is IEEE correctly-rounded ops (divide, sqrt,
     multiply, floor), so Spark and DuckDB agree bit-for-bit."""
-    docs = _docs(spark, sf_dir)
+    docs = _t(spark, sf_dir, "documents")
     counts = docs.groupBy("lang").agg(F.count(F.lit(1)).alias("n_total"))
     min_cnt = counts.agg(F.min("n_total").alias("min_total"))
     rates = counts.crossJoin(F.broadcast(min_cnt)).select(
@@ -303,8 +314,8 @@ def pack_sequences(spark: SparkSession, sf_dir: str) -> DataFrame:
     window; every downstream column is row-local arithmetic.  At 100 TB
     the per-source streams are independent — exactly how a tokenizer
     sharding job would consume them."""
-    docs = _docs(spark, sf_dir)
-    n_toks = F.size(F.split(F.lower(F.trim(F.col("text"))), r"\s+")).cast("bigint")
+    docs = _t(spark, sf_dir, "documents")
+    n_toks = F.size(tokens("text")).cast("bigint")
     w = (
         Window.partitionBy("source")
         .orderBy("doc_id")
@@ -320,7 +331,7 @@ def pack_sequences(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 PACK_SQL = f"""
 WITH t AS (SELECT doc_id, source,
-                  len(string_split_regex(lower(trim(text)), '\\s+'))::BIGINT AS n_toks
+                  len({tokens_sql('text')})::BIGINT AS n_toks
            FROM documents)
 SELECT doc_id, source, n_toks,
        COALESCE(sum(n_toks) OVER (PARTITION BY source ORDER BY doc_id
@@ -352,9 +363,7 @@ def decontaminate_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
     too big to broadcast, the same plan degrades gracefully to a
     shuffled semi join; shingles are distinct per doc (word_ngrams), so
     count(*) is exactly the distinct overlap count."""
-    from k_means_hadoop_spark.functions.hashing import word_ngrams
-
-    docs = _docs(spark, sf_dir)
+    docs = _t(spark, sf_dir, "documents")
     sh = docs.select(
         "doc_id", F.explode(word_ngrams(F.col("text"), _DECON_N)).alias("shingle")
     )
@@ -370,8 +379,6 @@ def decontaminate_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _decontam_sql() -> str:
-    from k_means_hadoop_spark.functions.hashing import word_ngrams_sql
-
     grams = word_ngrams_sql("text", _DECON_N)
     return f"""
 WITH sh AS (SELECT doc_id, unnest({grams}) AS shingle FROM documents),
@@ -421,8 +428,6 @@ def _boiler_counts(docs: DataFrame, df_threshold: int) -> DataFrame:
     then one partial-aggregated per-doc aggregate.  Used by both
     ``boilerplate_spans`` and ``curate_corpus_release`` so the df
     semantics can never diverge between them."""
-    from k_means_hadoop_spark.functions.hashing import word_ngrams
-
     sh = docs.select(
         "doc_id", F.explode(word_ngrams(F.col("text"), _BOILER_N)).alias("shingle")
     )
@@ -440,8 +445,6 @@ def _boiler_counts_sql(docs_cte: str, df_threshold: int) -> str:
     """CTE chain ending in ``bcounts(doc_id, n_shingles, n_boiler)`` —
     DuckDB mirror of ``_boiler_counts`` over the named docs CTE (which
     must expose doc_id and text)."""
-    from k_means_hadoop_spark.functions.hashing import word_ngrams_sql
-
     grams = word_ngrams_sql("text", _BOILER_N)
     return f"""bsh AS (SELECT doc_id, unnest({grams}) AS shingle FROM {docs_cte}),
 bdf AS (SELECT doc_id, count(*) OVER (PARTITION BY shingle) AS df FROM bsh),
@@ -469,7 +472,7 @@ def boilerplate_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale shape: ONE corpus scan via the shared ``_boiler_counts``
     core.  No join, no all-pairs structure anywhere."""
-    docs = _docs(spark, sf_dir).select(
+    docs = _t(spark, sf_dir, "documents").select(
         "doc_id",
         F.when(
             F.col("doc_id") % 7 == 0, F.concat(F.col("text"), F.lit(" " + _BOILER_PLANT))
@@ -584,7 +587,7 @@ def pii_redact_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     wrong pattern, wrong order, or missed occurrence flips the driver
     hash.  Row-local regex only: zero shuffles, a pure map over the
     scan at 100 TB."""
-    docs = _docs(spark, sf_dir)
+    docs = _t(spark, sf_dir, "documents")
     planted = _pii_planted_expr()
     clean = _pii_clean_expr(planted)
     return (
@@ -643,9 +646,7 @@ def leakage_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     the md5-grouping form of this audit would be vacuous — near-dup
     leakage is also the form that catches paraphrase-level leaks at
     100 TB.)"""
-    from k_means_hadoop_spark.operators.dedup import minhash_verified_pairs
-
-    pairs = minhash_verified_pairs(_docs(spark, sf_dir), n=3, threshold=0.7)
+    pairs = minhash_verified_pairs(_t(spark, sf_dir, "documents"), n=3, threshold=0.7)
     return (
         pairs.withColumn("split_a", _split_expr("a_id"))
         .withColumn("split_b", _split_expr("b_id"))
@@ -655,8 +656,6 @@ def leakage_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _leakage_sql() -> str:
-    from k_means_hadoop_spark.registry_pipeline import _minhash_verified_sql
-
     return f"""
 WITH ver AS ({_minhash_verified_sql(3, 0.7)})
 SELECT a_id, b_id,
@@ -688,9 +687,7 @@ def sample_weighted_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     (TakeOrderedAndProject) — no global sort, no shuffle of the corpus.
     Keys are rounded to 9 decimals with doc_id as tie-break so the
     boundary of the top-k set is cross-engine deterministic."""
-    from k_means_hadoop_spark.functions.hashing import stable_hash64
-
-    docs = _docs(spark, sf_dir)
+    docs = _t(spark, sf_dir, "documents")
     h = stable_hash64(F.concat(F.lit(_WS_SALT), F.col("doc_id").cast("string")))
     u = ((h % _WS_MOD) + 1).cast("double") / F.lit(float(_WS_MOD + 1))
     skey = F.round(F.log(u) / F.col("n_chars").cast("double"), 9)
@@ -702,8 +699,6 @@ def sample_weighted_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _sample_weighted_sql() -> str:
-    from k_means_hadoop_spark.functions.hashing import stable_hash64_sql
-
     h = stable_hash64_sql(f"'{_WS_SALT}' || doc_id::VARCHAR")
     return f"""
 WITH s AS (SELECT doc_id, n_chars,
@@ -730,9 +725,7 @@ def shuffle_shards(spark: SparkSession, sf_dir: str) -> DataFrame:
     parallel, and a trainer streams shards in index order.  Sorting
     within shards by the same hash keeps the composite order
     (shard, pos) a uniform permutation of the corpus."""
-    docs = _docs(spark, sf_dir)
-    from k_means_hadoop_spark.functions.hashing import stable_hash64
-
+    docs = _t(spark, sf_dir, "documents")
     h = stable_hash64(F.concat(F.lit(SHUFFLE_SALT), F.col("doc_id").cast("string")))
     w = Window.partitionBy("shard").orderBy("h", "doc_id")
     return (
@@ -744,8 +737,6 @@ def shuffle_shards(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _shuffle_shards_sql() -> str:
-    from k_means_hadoop_spark.functions.hashing import stable_hash64_sql
-
     h = stable_hash64_sql(f"'{SHUFFLE_SALT}' || doc_id::VARCHAR")
     return f"""
 WITH h AS (SELECT doc_id, {h} AS h FROM documents)
@@ -773,7 +764,7 @@ def stratified_sample_langs(spark: SparkSession, sf_dir: str) -> DataFrame:
     cross-engine-reproducible — use that form when reproducibility
     across engines matters more than statistical independence from the
     key."""
-    docs = _docs(spark, sf_dir)
+    docs = _t(spark, sf_dir, "documents")
     sampled_counts = (
         docs.stat.sampleBy("lang", SAMPLE_FRACTIONS, seed=SAMPLE_SEED)
         .groupBy("lang")
@@ -823,11 +814,8 @@ def curate_corpus_full(spark: SparkSession, sf_dir: str) -> DataFrame:
     corpus-sized stream is scanned once per independent probe — there
     is no driver-side orchestration between stages to lose pushdowns
     across."""
-    from k_means_hadoop_spark.operators import text as text_ops
-    from k_means_hadoop_spark.operators.dedup import exact_duplicates, minhash_verified_pairs
-
-    docs = _docs(spark, sf_dir)
-    quality = text_ops.quality_scores(docs).select("doc_id", "quality")
+    docs = _t(spark, sf_dir, "documents")
+    quality = text.quality_scores(docs).select("doc_id", "quality")
     keep_exact = exact_duplicates(docs).select(F.col("keep_id").alias("doc_id"))
     neardup_drop = (
         minhash_verified_pairs(docs, n=3, threshold=0.7)
@@ -843,7 +831,7 @@ def curate_corpus_full(spark: SparkSession, sf_dir: str) -> DataFrame:
         .join(contaminated, "doc_id", "left_anti")
         .filter(F.col("doc_id") % _BENCH_MOD != 0)
     )
-    n_toks = F.size(F.split(F.lower(F.trim(F.col("text"))), r"\s+"))
+    n_toks = F.size(tokens("text"))
     return (
         kept.withColumn("split", _split_expr("doc_id"))
         .groupBy("split")
@@ -855,14 +843,8 @@ def curate_corpus_full(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _curate_full_sql() -> str:
-    from k_means_hadoop_spark.functions.hashing import word_ngrams_sql
-    from k_means_hadoop_spark.registry_pipeline import (
-        _minhash_verified_sql,
-        _quality_sql,
-    )
-
     grams = word_ngrams_sql("text", _DECON_N)
-    toks = "string_split_regex(lower(trim(text)), '\\s+')"
+    toks = tokens_sql("text")
     return f"""
 WITH q AS (SELECT doc_id, quality FROM ({_quality_sql()}) t),
 keepx AS (SELECT min(doc_id) AS doc_id FROM documents GROUP BY md5(text)),
@@ -901,11 +883,8 @@ def curate_corpus_release(spark: SparkSession, sf_dir: str) -> DataFrame:
     count()-window form, redaction is a row-local expression on the
     kept stream, and Catalyst plans all gates together — no driver
     orchestration between stages."""
-    from k_means_hadoop_spark.operators import text as text_ops
-    from k_means_hadoop_spark.operators.dedup import exact_duplicates, minhash_verified_pairs
-
-    docs = _docs(spark, sf_dir)
-    quality = text_ops.quality_scores(docs).select("doc_id", "quality")
+    docs = _t(spark, sf_dir, "documents")
+    quality = text.quality_scores(docs).select("doc_id", "quality")
     keep_exact = exact_duplicates(docs).select(F.col("keep_id").alias("doc_id"))
     neardup_drop = (
         minhash_verified_pairs(docs, n=3, threshold=0.7)
@@ -930,7 +909,7 @@ def curate_corpus_release(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(F.col("doc_id") % _BENCH_MOD != 0)
     )
     clean = _pii_clean_expr(_pii_planted_expr())
-    n_toks = F.size(F.split(F.lower(F.trim(clean)), r"\s+"))
+    n_toks = F.size(tokens(clean))
     return (
         kept.withColumn("split", _split_expr("doc_id"))
         .groupBy("split")
@@ -942,15 +921,9 @@ def curate_corpus_release(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _curate_release_sql() -> str:
-    from k_means_hadoop_spark.functions.hashing import word_ngrams_sql
-    from k_means_hadoop_spark.registry_pipeline import (
-        _minhash_verified_sql,
-        _quality_sql,
-    )
-
     grams = word_ngrams_sql("text", _DECON_N)
     clean = _pii_clean_sql(f"({_pii_planted_sql()})")
-    toks = f"string_split_regex(lower(trim({clean})), '\\s+')"
+    toks = tokens_sql(clean)
     return f"""
 WITH q AS (SELECT doc_id, quality FROM ({_quality_sql()}) t),
 keepx AS (SELECT min(doc_id) AS doc_id FROM documents GROUP BY md5(text)),
@@ -1002,9 +975,7 @@ def quality_classifier(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.ml.classification import LogisticRegression
     from pyspark.ml.functions import array_to_vector
 
-    from k_means_hadoop_spark.operators import text
-
-    feats = text.quality_scores(_docs(spark, sf_dir))
+    feats = text.quality_scores(_t(spark, sf_dir, "documents"))
     x = F.array(
         F.log(F.col("n_tokens").cast("double") + 1.0),
         F.col("avg_token_len"),
@@ -1047,10 +1018,8 @@ def quality_classifier_agreement(spark: SparkSession, sf_dir: str) -> DataFrame:
     ``agreement_ok`` is asserted ``true`` by the oracle, so a training
     or literal-fold scoring bug flips the hash instead of hiding behind
     a rows-only row."""
-    from k_means_hadoop_spark.operators import text
-
     scored = quality_classifier(spark, sf_dir).select("doc_id", "keep")
-    heur = text.quality_scores(_docs(spark, sf_dir)).select(
+    heur = text.quality_scores(_t(spark, sf_dir, "documents")).select(
         "doc_id", (F.col("quality") >= 0.5).cast("int").alias("hlabel")
     )
     return (
@@ -1066,8 +1035,6 @@ def quality_classifier_agreement(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _qc_agreement_sql() -> str:
-    from k_means_hadoop_spark.registry_pipeline import _quality_sql
-
     return f"""
 SELECT count(*)::BIGINT AS n_docs,
        sum(CASE WHEN quality >= 0.5 THEN 1 ELSE 0 END)::BIGINT AS n_label_pos,
@@ -1093,9 +1060,7 @@ def quality_percentile_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
     over the 6-dp-rounded scores, broadcast back onto the row-local
     comparison — the corpus scans twice, shuffles never.  Both engines
     interpolate the percentile over identical rounded inputs."""
-    from k_means_hadoop_spark.operators.text import quality_expr
-
-    docs = _docs(spark, sf_dir)
+    docs = _t(spark, sf_dir, "documents")
     scored = docs.select("doc_id", quality_expr().alias("quality"))
     thr = scored.agg(
         F.expr(f"percentile(quality, {_QGATE_PCT})").alias("thr")
@@ -1107,8 +1072,6 @@ def quality_percentile_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _qgate_sql() -> str:
-    from k_means_hadoop_spark.registry_pipeline import _quality_sql
-
     return f"""
 WITH scored AS (SELECT doc_id, quality FROM ({_quality_sql()}) t),
 thr AS (SELECT quantile_cont(quality, {_QGATE_PCT}) AS thr FROM scored)
@@ -1135,16 +1098,14 @@ def split_by_group(spark: SparkSession, sf_dir: str) -> DataFrame:
     RNG state, any engine computes the same membership.  One corpus
     aggregate; the group→split map is derivable row-locally so no
     group-table join is needed."""
-    from k_means_hadoop_spark.functions.hashing import stable_hash64
-
-    docs = _docs(spark, sf_dir)
+    docs = _t(spark, sf_dir, "documents")
     h = stable_hash64(F.concat(F.lit(_GSPLIT_SALT), F.col("source"))) % F.lit(10)
     split = (
         F.when(h < _GSPLIT_TRAIN_LT, F.lit("train"))
         .when(h < _GSPLIT_TRAIN_LT + 1, F.lit("val"))
         .otherwise(F.lit("test"))
     )
-    n_toks = F.size(F.split(F.lower(F.trim(F.col("text"))), r"\s+"))
+    n_toks = F.size(tokens("text"))
     return (
         docs.select(split.alias("split"), "source", n_toks.alias("nt"))
         .groupBy("split")
@@ -1157,8 +1118,6 @@ def split_by_group(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _gsplit_sql() -> str:
-    from k_means_hadoop_spark.functions.hashing import stable_hash64_sql
-
     h = stable_hash64_sql(f"'{_GSPLIT_SALT}' || source")
     return f"""
 WITH t AS (
@@ -1166,7 +1125,7 @@ WITH t AS (
               WHEN {h} % 10 < {_GSPLIT_TRAIN_LT + 1} THEN 'val'
               ELSE 'test' END AS split,
          source,
-         len(string_split_regex(lower(trim(text)), '\\s+'))::BIGINT AS nt
+         len({tokens_sql('text')})::BIGINT AS nt
   FROM documents)
 SELECT split, count(DISTINCT source)::BIGINT AS n_groups,
        count(*)::BIGINT AS n_docs, sum(nt)::BIGINT AS n_tokens
@@ -1203,8 +1162,8 @@ def dataset_mixture_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
     remaining arithmetic is identical single-expression IEEE math on
     both engines.  Shape: one corpus hash-agg to ~sources rows, then
     whole-table windows over that tiny table."""
-    docs = _docs(spark, sf_dir)
-    n_toks = F.size(F.split(F.lower(F.trim(F.col("text"))), r"\s+"))
+    docs = _t(spark, sf_dir, "documents")
+    n_toks = F.size(tokens("text"))
     per_src = docs.groupBy("lang").agg(F.sum(n_toks).cast("bigint").alias("avail"))
     w = Window.partitionBy()
     staged = per_src.select(
@@ -1259,7 +1218,7 @@ def dataset_mixture_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 MIXTURE_PLAN_SQL = f"""
 WITH per_src AS (
-  SELECT lang, sum(len(string_split_regex(lower(trim(text)), '\\s+')))::BIGINT AS avail
+  SELECT lang, sum(len({tokens_sql('text')}))::BIGINT AS avail
   FROM documents GROUP BY lang),
 staged AS (
   SELECT lang, avail,
@@ -1380,11 +1339,8 @@ FROM wl CROSS JOIN sums
 def decision_stump_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
     """One row (threshold, n_left, n_right, pos_left, pos_right,
     impurity) — the Gini-optimal n_chars split for quality >= 0.5."""
-    from k_means_hadoop_spark.operators import text as text_ops
-    from k_means_hadoop_spark.partitioning import prefix_sum
-
     docs = _t(spark, sf_dir, "documents")
-    q = text_ops.quality_scores(docs).select(
+    q = text.quality_scores(docs).select(
         "doc_id",
         "n_chars",
         (F.col("quality") >= 0.5).cast("int").alias("y"),
@@ -1441,8 +1397,6 @@ def decision_stump_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _stump_sql() -> str:
-    from k_means_hadoop_spark.registry_pipeline import _quality_sql
-
     imp = (
         "CAST(n AS DOUBLE)"
         " - (CAST(cp AS DOUBLE) * CAST(cp AS DOUBLE)"

@@ -30,11 +30,17 @@ from pyspark.sql import functions as F
 
 from k_means_hadoop_spark.functions.hashing import (
     minhash_value,
+    minhash_value_sql,
     stable_hash64,
+    stable_hash64_sql,
     word_ngrams,
+    word_ngrams_sql,
 )
-from k_means_hadoop_spark.functions.vector import cosine_similarity
+from k_means_hadoop_spark.functions.vector import cosine_similarity, cosine_similarity_unrolled
+from k_means_hadoop_spark.operators.assign import assign_expr
+from k_means_hadoop_spark.operators.kmeans import init_ids
 from k_means_hadoop_spark.partitioning import truncate_lineage
+from k_means_hadoop_spark.session import scratch_dir
 
 # Deterministic universal-hash parameters (a odd, b arbitrary; values are
 # arbitrary fixed constants — NOT tuned to the testdata).
@@ -298,6 +304,52 @@ def minhash_verified_pairs(
     O(candidates · shingles/doc)."""
     cand = minhash_lsh_candidates(docs, n, bands, text_col)
     return _verify_jaccard(cand, docs, n, text_col, threshold)
+
+
+def _shingle_cte(n: int) -> str:
+    """CTE 'sh_tbl' of (doc_id, shingle) distinct word n-grams."""
+    return (
+        f"sh_tbl AS (SELECT doc_id, unnest({word_ngrams_sql('text', n)}) AS shingle "
+        "FROM documents)"
+    )
+
+
+def _minhash_ctes(n: int) -> str:
+    """CTE chain sh_tbl → hashed → sig → stacked shared by the LSH
+    candidate and verified-pair oracles."""
+    h = stable_hash64_sql("shingle")
+    mins = ", ".join(
+        f"min({minhash_value_sql('h', a, b)}) AS m{i}"
+        for i, (a, b) in enumerate(MINHASH_PARAMS)
+    )
+    rows_per_band = len(MINHASH_PARAMS) // LSH_BANDS
+    band_exprs = []
+    for bi in range(LSH_BANDS):
+        members = " || '|' || ".join(
+            f"m{bi * rows_per_band + j}::VARCHAR" for j in range(rows_per_band)
+        )
+        band_exprs.append(f"SELECT doc_id, {bi} AS band, md5({members}) AS bucket FROM sig")
+    stacked = " UNION ALL ".join(band_exprs)
+    return f"""{_shingle_cte(n)},
+hashed AS (SELECT doc_id, {h} AS h FROM sh_tbl),
+sig AS (SELECT doc_id, {mins} FROM hashed GROUP BY doc_id),
+stacked AS ({stacked})"""
+
+
+def _minhash_verified_sql(n: int, threshold: float) -> str:
+    jac = (
+        "len(list_intersect(a.sh_arr, b.sh_arr))::DOUBLE / "
+        "(len(a.sh_arr) + len(b.sh_arr) - len(list_intersect(a.sh_arr, b.sh_arr)))"
+    )
+    return f"""
+WITH {_minhash_ctes(n)},
+cand AS (SELECT DISTINCT a.doc_id AS a_id, b.doc_id AS b_id
+         FROM stacked a JOIN stacked b
+           ON a.band = b.band AND a.bucket = b.bucket AND a.doc_id < b.doc_id),
+arrs AS (SELECT doc_id, {word_ngrams_sql('text', n)} AS sh_arr FROM documents)
+SELECT c.a_id, c.b_id, round({jac}, 6) AS jaccard
+FROM cand c JOIN arrs a ON c.a_id = a.doc_id JOIN arrs b ON c.b_id = b.doc_id
+WHERE round({jac}, 6) >= {threshold}"""
 
 
 def edit_distance_pairs(
@@ -820,9 +872,6 @@ def semantic_cell_pairs(
         F.col("vec_id").cast("int").alias("id"),
         F.col("embedding").cast("array<double>").alias("features"),
     )
-    from k_means_hadoop_spark.operators.assign import assign_expr
-    from k_means_hadoop_spark.operators.kmeans import init_ids
-
     cents = init_ids(emb, seed_ids)
     asg = assign_expr(emb, cents).select(
         F.col("id").alias("vid"), F.col("features").alias("vec"), F.col("cluster").alias("cell")
@@ -835,8 +884,6 @@ def semantic_cell_pairs(
     # purpose (round-12 A/B): the side projections carry the 8-way
     # assign argmin already, and stacking the norm chain there measured
     # 1.78 → 2.37 s isolated (codegen method-size hazard).
-    from k_means_hadoop_spark.functions.vector import cosine_similarity_unrolled
-
     sim = cosine_similarity_unrolled("va", "vb", len(cents[0][1]))
     return (
         a.join(b, (F.col("cell") == F.col("cell_b")) & (F.col("a_id") < F.col("b_id")))
@@ -1082,8 +1129,6 @@ def minhash_candidates_streaming(
     batch_id), and candidates band the min-merged store.  Pass
     ``store_path`` to inspect the per-batch partial-signature
     partitions afterwards (the multi-batch materialization pin)."""
-    from k_means_hadoop_spark.session import scratch_dir
-
     src = scratch_dir("mh_stream_src")
     store = store_path or scratch_dir("mh_stream_store")
     chunks = chunked_docs(docs, n, text_col=text_col)

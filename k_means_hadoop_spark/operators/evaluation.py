@@ -31,7 +31,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from k_means_hadoop_spark.functions.vector import euclidean as _euclidean
+from k_means_hadoop_spark.functions.hashing import stable_hash64
+from k_means_hadoop_spark.functions.vector import euclidean as _euclidean, euclidean_unrolled
 
 
 def contingency(assignments: DataFrame, label_col: str = "label", cluster_col: str = "cluster") -> DataFrame:
@@ -120,8 +121,6 @@ def _pair_dist(d_dim: int | None):
     ``vector.squared_distance_unrolled``; the distance pass is ~92% of
     the sampled operator's runtime and measured 2.7× faster unrolled),
     else the dimension-agnostic HOF form."""
-    from k_means_hadoop_spark.functions.vector import euclidean_unrolled
-
     dist = (
         euclidean_unrolled("a.features", "b.features", d_dim)
         if d_dim is not None
@@ -204,8 +203,6 @@ def sample_per_cluster(
     per-cluster sort of the full table, features joined back only for
     the k·m winners."""
     from pyspark.sql import Window
-
-    from k_means_hadoop_spark.functions.hashing import stable_hash64
 
     thin = assigned.select(
         "id",

@@ -1,12 +1,12 @@
 """Graph-mining, text-mining, and embedding operators
 (beyond-reference — SURVEY.md §2.9): HITS hubs/authorities on the
 customer-part bipartite graph, personalized PageRank, resource-
-allocation and Adamic-Adar link prediction, local clustering
-coefficients and degree assortativity on the co-purchase graph,
-Flesch readability, per-document character entropy, MATTR lexical
-diversity, stupid-backoff trigram scores, Monroe log-odds terms per
-language, negative-sampling pairs, and a Johnson-Lindenstrauss sign
-random projection.
+allocation, neighbor-set Jaccard and Adamic-Adar link prediction,
+local clustering coefficients and degree assortativity on the
+co-purchase graph, Flesch readability, per-document character
+entropy, MATTR lexical diversity, stupid-backoff trigram scores,
+Monroe log-odds terms per language, negative-sampling pairs, and a
+Johnson-Lindenstrauss sign random projection.
 
 Determinism conventions as in operators/trends.py; the iterative HITS
 scores are re-stabilized to DECIMAL(18,6) after every normalization
@@ -19,16 +19,16 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from k_means_hadoop_spark.functions.hashing import stable_hash64, stable_hash64_sql
+from k_means_hadoop_spark.functions.hashing import stable_hash64, stable_hash64_sql, tokens, tokens_sql
 from k_means_hadoop_spark.operators.analytics import (
     _EDGES_CTE,
     _GRAPH_MAX_PART,
     _copurchase_edges,
 )
+from k_means_hadoop_spark.operators.corpus_extra import _docs
 from k_means_hadoop_spark.operators.relational import _t
 from k_means_hadoop_spark.operators.trends import _FL6_SQL, _fl6
-
-from k_means_hadoop_spark.partitioning import truncate_lineage, truncate_lineage_lazy
+from k_means_hadoop_spark.partitioning import prefix_sum, truncate_lineage, truncate_lineage_lazy
 
 # --------------------------------------------- HITS hubs/authorities
 #
@@ -691,8 +691,6 @@ def negative_sampling_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     prefix count (a row_number window here would sort EVERY document
     into one task — round-9 registry-wide audit), then two broadcast
     joins — corpus touched once."""
-    from k_means_hadoop_spark.partitioning import prefix_sum
-
     docs = _t(spark, sf_dir, "documents").select("doc_id", "source")
     ranks = prefix_sum(
         docs.withColumn("_one", F.lit(1)),
@@ -884,10 +882,8 @@ _SB_ALPHA = 0.4
 def stupid_backoff_trigrams(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(w1, w2, w3, c3, backed_off, score) over the top-{b} bigram ×
     top-{u} unigram grid."""
-    from k_means_hadoop_spark.operators import text as text_ops
-
     docs = _t(spark, sf_dir, "documents")
-    toks = F.filter(text_ops._tokens(F.col("text")), lambda x: x != "")
+    toks = F.filter(tokens("text"), lambda x: x != "")
     t = docs.select(toks.alias("toks")).where(F.size("toks") >= 3)
     tri_len = F.size("toks") - 2
     tris = t.select(
@@ -961,15 +957,13 @@ stupid_backoff_trigrams.__doc__ = stupid_backoff_trigrams.__doc__.format(
 
 
 def _sb_sql() -> str:
-    from k_means_hadoop_spark.registry_pipeline import _TOKS
-
     score = _FL6_SQL.format(
         x="CASE WHEN c3 IS NOT NULL THEN CAST(c3 AS DOUBLE) / CAST(c2 AS DOUBLE)"
         f" WHEN c2b IS NOT NULL THEN {_SB_ALPHA} * (CAST(c2b AS DOUBLE) / CAST(c1_w2 AS DOUBLE))"
         " ELSE CAST(0 AS DOUBLE) END"
     )
     return f"""
-WITH t AS (SELECT list_filter({_TOKS}, x -> x != '') AS toks FROM documents),
+WITH t AS (SELECT list_filter({tokens_sql('text')}, x -> x != '') AS toks FROM documents),
 tris AS (
   SELECT unnest(list_transform(range(1, len(toks) - 1),
            i -> {{'w1': toks[i], 'w2': toks[i + 1], 'w3': toks[i + 2]}}),
@@ -996,6 +990,76 @@ SELECT w1, w2, w3, COALESCE(c3, 0)::BIGINT AS c3,
        (c3 IS NULL) AS backed_off,
        {score} AS score
 FROM j
+"""
+
+
+# ------------------------------------------ neighbor-set Jaccard
+#
+# Link-prediction similarity on the co-purchase graph: for every edge
+# (a, b), |N(a) ∩ N(b)| / |N(a) ∪ N(b)| — common-neighbor counting by
+# pure equi-joins (edge ⋈ adjacency ⋈ adjacency on the shared
+# endpoint), integer-exact, one shared division text.  Triangle
+# counting's per-edge refinement: the same wedge join, kept per edge
+# instead of summed.
+
+
+def neighbor_jaccard_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """(pa, pb, common, deg_a, deg_b, jaccard) per co-purchase edge."""
+    e = _copurchase_edges(spark, sf_dir).transform(truncate_lineage)
+    undir = e.unionByName(
+        e.select(F.col("pb").alias("pa"), F.col("pa").alias("pb"))
+    )
+    deg = undir.groupBy("pa").agg(F.count(F.lit(1)).alias("deg"))
+    na = undir.select(F.col("pa").alias("ea"), F.col("pb").alias("x"))
+    nb = undir.select(F.col("pa").alias("eb"), F.col("pb").alias("x"))
+    common = (
+        e.join(na, e.pa == na.ea)
+        .join(nb, (F.col("pb") == F.col("eb")) & (na.x == nb.x))
+        .groupBy("pa", "pb")
+        .agg(F.count(F.lit(1)).alias("common"))
+    )
+    out = (
+        e.join(common, ["pa", "pb"], "left")
+        .join(deg.select(F.col("pa"), F.col("deg").alias("deg_a")), "pa")
+        .join(
+            deg.select(F.col("pa").alias("pb"), F.col("deg").alias("deg_b")),
+            "pb",
+        )
+        .select(
+            "pa",
+            "pb",
+            F.coalesce("common", F.lit(0)).cast("bigint").alias("common"),
+            F.col("deg_a").cast("bigint").alias("deg_a"),
+            F.col("deg_b").cast("bigint").alias("deg_b"),
+        )
+    )
+    jac = (
+        "round(CAST(common AS DOUBLE)"
+        " / CAST(deg_a + deg_b - common AS DOUBLE), 6)"
+    )
+    return out.withColumn("jaccard", F.expr(jac))
+
+
+NEIGHBOR_JACCARD_SQL = """
+WITH li AS (SELECT DISTINCT l_orderkey, l_partkey FROM lineitem
+            WHERE l_partkey <= 300),
+e AS (SELECT a.l_partkey AS pa, b.l_partkey AS pb
+      FROM li a JOIN li b
+        ON a.l_orderkey = b.l_orderkey AND a.l_partkey < b.l_partkey
+      GROUP BY 1, 2),
+undir AS (SELECT pa, pb FROM e UNION ALL SELECT pb AS pa, pa AS pb FROM e),
+deg AS (SELECT pa, count(*)::BIGINT AS deg FROM undir GROUP BY pa),
+common AS (
+  SELECT e.pa, e.pb, count(*)::BIGINT AS common
+  FROM e JOIN undir na ON na.pa = e.pa JOIN undir nb ON nb.pa = e.pb AND nb.pb = na.pb
+  GROUP BY e.pa, e.pb)
+SELECT e.pa, e.pb,
+       COALESCE(c.common, 0)::BIGINT AS common,
+       da.deg AS deg_a, db.deg AS deg_b,
+       round(CAST(COALESCE(c.common, 0) AS DOUBLE)
+             / CAST(da.deg + db.deg - COALESCE(c.common, 0) AS DOUBLE), 6) AS jaccard
+FROM e LEFT JOIN common c ON c.pa = e.pa AND c.pb = e.pb
+JOIN deg da ON da.pa = e.pa JOIN deg db ON db.pa = e.pb
 """
 
 
@@ -1183,13 +1247,10 @@ _LO_TOPK = 20
 def log_odds_terms_langs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(term, c_en, c_rest, lor) — top-20 most English-associated
     terms by smoothed log-odds."""
-    from k_means_hadoop_spark.operators import text
-    from k_means_hadoop_spark.operators.corpus_extra import _docs
-
     d = _docs(spark, sf_dir).select(
         (F.col("lang") == "en").cast("int").alias("is_en"), "text"
     )
-    toks = F.filter(text._tokens(F.col("text")), lambda x: x != "")
+    toks = F.filter(tokens("text"), lambda x: x != "")
     tf = (
         d.select("is_en", F.explode(toks).alias("term"))
         .groupBy("term")
@@ -1215,8 +1276,6 @@ def log_odds_terms_langs(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _log_odds_sql() -> str:
-    from k_means_hadoop_spark.registry_pipeline import _TOKS
-
     lor = _FL6_SQL.format(
         x="ln(CAST((c1 + 1) * (n2 - c2 + 1) AS DOUBLE)"
         " / CAST((n1 - c1 + 1) * (c2 + 1) AS DOUBLE))"
@@ -1228,7 +1287,7 @@ tf AS (SELECT tok AS term,
               SUM(is_en)::BIGINT AS c1,
               SUM(1 - is_en)::BIGINT AS c2
        FROM (SELECT is_en,
-                    unnest(list_filter({_TOKS}, x -> x != '')) AS tok
+                    unnest(list_filter({tokens_sql('text')}, x -> x != '')) AS tok
              FROM d)
        GROUP BY 1),
 tot AS (SELECT SUM(c1)::BIGINT AS n1, SUM(c2)::BIGINT AS n2 FROM tf)
@@ -1252,6 +1311,7 @@ MINING_QUERIES = {
     "pagerank_personalized": (pagerank_personalized, _ppr_sql()),
     "stupid_backoff_trigrams": (stupid_backoff_trigrams, _sb_sql()),
     "adamic_adar_links": (adamic_adar_links, _aa_sql()),
+    "neighbor_jaccard_edges": (neighbor_jaccard_edges, NEIGHBOR_JACCARD_SQL),
     "clustering_coefficient_nodes": (clustering_coefficient_nodes, _cc_sql()),
     "log_odds_terms_langs": (log_odds_terms_langs, _log_odds_sql()),
 }

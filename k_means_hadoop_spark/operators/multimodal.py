@@ -24,6 +24,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from k_means_hadoop_spark.functions import codecs
+
 # synthesize_codec_media's kind assignment: kind = doc_id % 3.
 _MEDIA_KIND_MOD = {"image": 0, "audio": 1, "video": 2}
 
@@ -253,8 +255,6 @@ def decode_media_real(media: DataFrame, thumb: tuple[int, int] = (4, 3)) -> Data
     import numpy as np
     import pandas as pd
 
-    from k_means_hadoop_spark.functions import codecs
-
     tw, th = thumb
 
     def _batches(it: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
@@ -357,8 +357,6 @@ def synthesize_codec_media(
     """
     import pandas as pd
 
-    from k_means_hadoop_spark.functions import codecs
-
     out_schema = T.StructType(
         [
             T.StructField("media_id", T.LongType(), False),
@@ -430,8 +428,6 @@ def wav_frame_features(media: DataFrame, frame: int = 16) -> DataFrame:
 
     import numpy as np
     import pandas as pd
-
-    from k_means_hadoop_spark.functions import codecs
 
     audio = media.filter(F.col("kind") == "audio").select("media_id", "payload")
 

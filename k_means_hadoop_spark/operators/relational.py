@@ -18,13 +18,13 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from k_means_hadoop_spark.partitioning import truncate_lineage
+from k_means_hadoop_spark.functions.zorder import interleave_bits, interleave_bits_sql
+from k_means_hadoop_spark.partitioning import ntile_expr, prefix_sum, scan_parts, truncate_lineage
+from k_means_hadoop_spark.sources.events import load_events
 
 
 def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     if name == "events":
-        from k_means_hadoop_spark.sources.events import load_events
-
         return load_events(spark, sf_dir)
     return spark.read.parquet(f"{sf_dir}/{name}.parquet")
 
@@ -819,8 +819,6 @@ def zorder_events_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
     for filters on EITHER column.  The curve itself is pure integer bit
     interleaving — oracle-checked bit-for-bit; the stats-skipping write
     is exercised in the sinks tests."""
-    from k_means_hadoop_spark.functions.zorder import interleave_bits
-
     ev = _t(spark, sf_dir, "events")
     x = F.pmod(F.col("user_id"), F.lit(1 << ZORDER_BITS)).cast("int")
     y = (F.hour("ts") * 4 + F.minute("ts") / 15).cast("int")  # 96 quarter-hours
@@ -831,8 +829,6 @@ def zorder_events_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _zorder_sql() -> str:
-    from k_means_hadoop_spark.functions.zorder import interleave_bits_sql
-
     z = interleave_bits_sql("x", "y", ZORDER_BITS)
     return f"""
 WITH b AS (SELECT event_id, (user_id % {1 << ZORDER_BITS})::INTEGER AS x,
@@ -2257,12 +2253,6 @@ def rfm_segments(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     — bit-identical to the window ntile for every n.  The corpus max
     date is a 1-row aggregate broadcast in."""
-    from k_means_hadoop_spark.partitioning import (
-        ntile_expr,
-        prefix_sum,
-        scan_parts,
-    )
-
     o = _t(spark, sf_dir, "orders")
     asof = o.agg(F.max(F.to_date("o_orderdate")).alias("asof"))
     per_cust = (
@@ -2746,78 +2736,6 @@ GROUP BY o.o_orderpriority
 """
 
 
-# ------------------------------------------ neighbor-set Jaccard
-#
-# Link-prediction similarity on the co-purchase graph: for every edge
-# (a, b), |N(a) ∩ N(b)| / |N(a) ∪ N(b)| — common-neighbor counting by
-# pure equi-joins (edge ⋈ adjacency ⋈ adjacency on the shared
-# endpoint), integer-exact, one shared division text.  Triangle
-# counting's per-edge refinement: the same wedge join, kept per edge
-# instead of summed.
-
-
-def neighbor_jaccard_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """(pa, pb, common, deg_a, deg_b, jaccard) per co-purchase edge."""
-    from k_means_hadoop_spark.operators.analytics import _copurchase_edges
-
-    e = _copurchase_edges(spark, sf_dir).transform(truncate_lineage)
-    undir = e.unionByName(
-        e.select(F.col("pb").alias("pa"), F.col("pa").alias("pb"))
-    )
-    deg = undir.groupBy("pa").agg(F.count(F.lit(1)).alias("deg"))
-    na = undir.select(F.col("pa").alias("ea"), F.col("pb").alias("x"))
-    nb = undir.select(F.col("pa").alias("eb"), F.col("pb").alias("x"))
-    common = (
-        e.join(na, e.pa == na.ea)
-        .join(nb, (F.col("pb") == F.col("eb")) & (na.x == nb.x))
-        .groupBy("pa", "pb")
-        .agg(F.count(F.lit(1)).alias("common"))
-    )
-    out = (
-        e.join(common, ["pa", "pb"], "left")
-        .join(deg.select(F.col("pa"), F.col("deg").alias("deg_a")), "pa")
-        .join(
-            deg.select(F.col("pa").alias("pb"), F.col("deg").alias("deg_b")),
-            "pb",
-        )
-        .select(
-            "pa",
-            "pb",
-            F.coalesce("common", F.lit(0)).cast("bigint").alias("common"),
-            F.col("deg_a").cast("bigint").alias("deg_a"),
-            F.col("deg_b").cast("bigint").alias("deg_b"),
-        )
-    )
-    jac = (
-        "round(CAST(common AS DOUBLE)"
-        " / CAST(deg_a + deg_b - common AS DOUBLE), 6)"
-    )
-    return out.withColumn("jaccard", F.expr(jac))
-
-
-NEIGHBOR_JACCARD_SQL = """
-WITH li AS (SELECT DISTINCT l_orderkey, l_partkey FROM lineitem
-            WHERE l_partkey <= 300),
-e AS (SELECT a.l_partkey AS pa, b.l_partkey AS pb
-      FROM li a JOIN li b
-        ON a.l_orderkey = b.l_orderkey AND a.l_partkey < b.l_partkey
-      GROUP BY 1, 2),
-undir AS (SELECT pa, pb FROM e UNION ALL SELECT pb AS pa, pa AS pb FROM e),
-deg AS (SELECT pa, count(*)::BIGINT AS deg FROM undir GROUP BY pa),
-common AS (
-  SELECT e.pa, e.pb, count(*)::BIGINT AS common
-  FROM e JOIN undir na ON na.pa = e.pa JOIN undir nb ON nb.pa = e.pb AND nb.pb = na.pb
-  GROUP BY e.pa, e.pb)
-SELECT e.pa, e.pb,
-       COALESCE(c.common, 0)::BIGINT AS common,
-       da.deg AS deg_a, db.deg AS deg_b,
-       round(CAST(COALESCE(c.common, 0) AS DOUBLE)
-             / CAST(da.deg + db.deg - COALESCE(c.common, 0) AS DOUBLE), 6) AS jaccard
-FROM e LEFT JOIN common c ON c.pa = e.pa AND c.pb = e.pb
-JOIN deg da ON da.pa = e.pa JOIN deg db ON db.pa = e.pb
-"""
-
-
 RELATIONAL_QUERIES = {
     "retention_cohorts": (retention_cohorts, RETENTION_SQL),
     "market_basket_pairs": (market_basket_pairs, MARKET_BASKET_SQL),
@@ -2830,7 +2748,6 @@ RELATIONAL_QUERIES = {
     # SQL-surface exhibit — at scale use bfs_levels (see the docstring)
     "recursive_cte_bfs": (recursive_cte_bfs, _rcte_sql("lineitem")),
     "pipe_syntax_priority_revenue": (pipe_syntax_priority_revenue, PIPE_SYNTAX_SQL),
-    "neighbor_jaccard_edges": (neighbor_jaccard_edges, NEIGHBOR_JACCARD_SQL),
     "lateral_top2_lineitems": (lateral_top2_lineitems, _lateral_sql("orders", "lineitem")),
     "holt_linear_daily": (holt_linear_daily, _holt_sql()),
     "anomaly_event_days": (anomaly_event_days, ANOMALY_SQL),

@@ -26,6 +26,7 @@ from k_means_hadoop_spark.functions.vector import (
     cosine_similarity,
     cosine_similarity_unrolled,
     dot_unrolled,
+    euclidean,
     l2_norm_unrolled,
 )
 from k_means_hadoop_spark.operators.assign import assign_expr
@@ -630,8 +631,6 @@ def knn_pq_rerank(
     neighbors survive the ADC cut (pinned in tests); precision of the
     kept ordering is exact by construction.  Fully SQL-mirrorable, like
     knn_pq."""
-    from k_means_hadoop_spark.functions.vector import euclidean
-
     cand = knn_pq(
         embeddings, query_ids, codebook_ids, k=shortlist, m=m,
         plan_cache_key=plan_cache_key,

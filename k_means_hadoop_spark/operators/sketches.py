@@ -34,6 +34,8 @@ from pyspark.sql import functions as F
 
 from k_means_hadoop_spark.functions.hashing import stable_hash64, stable_hash64_sql
 from k_means_hadoop_spark.operators.relational import _t
+from k_means_hadoop_spark.session import scratch_dir
+from k_means_hadoop_spark.sources.events import load_events
 
 CMS_D = 4
 # w=16 is the FIXTURE-scale width: small enough that the 15-user sf0.001
@@ -46,8 +48,6 @@ BLOOM_PROBE_N = 300
 
 
 def _events(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from k_means_hadoop_spark.sources.events import load_events
-
     return load_events(spark, sf_dir)
 
 
@@ -298,8 +298,6 @@ def cms_event_counts_streaming(
     uses, made durable across time."""
     import uuid
 
-    from k_means_hadoop_spark.session import scratch_dir
-
     src = scratch_dir("cms_src")
     store = store_path or scratch_dir("cms_store")
     ev = _events(spark, sf_dir).select("user_id")
@@ -397,8 +395,6 @@ def bloom_bits_streaming(
     Each batch writes its batch's distinct bits into a
     batch_id-partitioned store; the merged filter is one DISTINCT over
     the store (bitwise OR ≡ set union of set bit positions)."""
-    from k_means_hadoop_spark.session import scratch_dir
-
     src = scratch_dir("bloom_src")
     store = store_path or scratch_dir("bloom_store")
     cust = spark.read.parquet(f"{sf_dir}/customer.parquet").select("c_custkey")
@@ -620,8 +616,6 @@ def streaming_hll_merge(
 ) -> DataFrame:
     """The max-merge: per-micro-batch registers written idempotently,
     merged by groupBy(bucket).max — same oracle as the batch sketch."""
-    from k_means_hadoop_spark.session import scratch_dir
-
     ev = _events(spark, sf_dir).select("user_id")
     src = scratch_dir("hll_src")
     store = store_path or scratch_dir("hll_store")
@@ -711,8 +705,6 @@ _TOPK_USERS = 10
 def streaming_topk_users(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(user_id, n_events) — exact top-{k} users by event count,
     computed as a streaming count-merge drained with availableNow."""
-    from k_means_hadoop_spark.session import scratch_dir
-
     ev = _t(spark, sf_dir, "events").select("user_id")
     src = scratch_dir("topk_src")
     store = scratch_dir("topk_store")

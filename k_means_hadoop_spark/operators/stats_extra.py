@@ -29,7 +29,17 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from k_means_hadoop_spark.functions.hashing import stable_hash64, stable_hash64_sql
-from k_means_hadoop_spark.operators.relational import _t
+from k_means_hadoop_spark.operators.analytics import (
+    _OLS_B0,
+    _OLS_B1,
+    _OLS_B2,
+    _OLS_COLS,
+    _OLS_DET,
+    _OLS_PRODS,
+    _dec14,
+)
+from k_means_hadoop_spark.operators.corpus_extra import _docs
+from k_means_hadoop_spark.operators.relational import _dec, _t
 from k_means_hadoop_spark.operators.trends import (
     _FL6_SQL,
     _complete_blocks_case,
@@ -37,7 +47,8 @@ from k_means_hadoop_spark.operators.trends import (
     _fl6,
 )
 
-from k_means_hadoop_spark.partitioning import truncate_lineage_lazy
+from k_means_hadoop_spark.partitioning import prefix_sum, truncate_lineage_lazy
+from k_means_hadoop_spark.session import scratch_dir
 
 # --------------------------------------------- Mann-Whitney U
 #
@@ -80,8 +91,6 @@ def mannwhitney_value_groups(spark: SparkSession, sf_dir: str) -> DataFrame:
     z: the REPORTED tie_sum column is bigint and wraps past m³ ≈ 2⁶³
     (a single value carrying ~2×10⁶ rows); sigma² itself consumes the
     exact decimal, so z never does."""
-    from k_means_hadoop_spark.partitioning import prefix_sum
-
     ev = _t(spark, sf_dir, "events").filter(
         F.col("event_type").isin(_MW_A, _MW_B)
     )
@@ -721,8 +730,6 @@ def streaming_log2_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
     fully mergeable, so the result is IDENTICAL to the batch sketch
     and shares its oracle.  Shuffle per batch ∝ distinct buckets
     (~30 rows), not events."""
-    from k_means_hadoop_spark.session import scratch_dir
-
     ev = _t(spark, sf_dir, "events").select("value")
     src = scratch_dir("log2_src")
     store = scratch_dir("log2_store")
@@ -1043,13 +1050,6 @@ def _ridge_formulas() -> dict[str, str]:
     """The OLS Cramer fragments with the penalized diagonal — derived
     by token substitution so the algebra provably matches
     ols_price_model's pinned formulas."""
-    from k_means_hadoop_spark.operators.analytics import (
-        _OLS_B0,
-        _OLS_B1,
-        _OLS_B2,
-        _OLS_DET,
-    )
-
     def pen(f: str) -> str:
         return f.replace("s11", "(s11 + lam)").replace("s22", "(s22 + lam)")
 
@@ -1069,13 +1069,6 @@ def ridge_price_model(spark: SparkSession, sf_dir: str) -> DataFrame:
     """One row (n_rows, lam, ridge_intercept, ridge_beta_quantity,
     ridge_beta_discount, ols_beta_quantity, ols_beta_discount) — the
     ridge fit at lambda={lam} next to OLS, from ONE Gram aggregate."""
-    from k_means_hadoop_spark.operators.analytics import (
-        _OLS_COLS,
-        _OLS_PRODS,
-        _dec14,
-    )
-    from k_means_hadoop_spark.operators.relational import _dec
-
     li = _t(spark, sf_dir, "lineitem")
     aggs = [F.count(F.lit(1)).alias("nb")]
     for alias, c in _OLS_COLS.items():
@@ -1119,11 +1112,6 @@ ridge_price_model.__doc__ = ridge_price_model.__doc__.format(
 
 
 def _ridge_sql() -> str:
-    from k_means_hadoop_spark.operators.analytics import (
-        _OLS_COLS,
-        _OLS_PRODS,
-    )
-
     fx = _ridge_formulas()
     sum_exprs = ["count(*) AS nb", "CAST(count(*) AS DOUBLE) AS n"]
     for alias, c in _OLS_COLS.items():
@@ -1167,13 +1155,6 @@ def logistic_newton_step(spark: SparkSession, sf_dir: str) -> DataFrame:
     """One row (n_docs, n_pos, b0, b_chars, b_words) — the first IRLS
     step of the lang='en' logistic model.  One exact-integer aggregate
     over the corpus; everything after is shared literal arithmetic."""
-    from k_means_hadoop_spark.operators.analytics import (
-        _OLS_B0,
-        _OLS_B1,
-        _OLS_B2,
-        _OLS_DET,
-    )
-
     d = _t(spark, sf_dir, "documents").select(
         F.col("n_chars").alias("x1"),
         F.expr("size(regexp_extract_all(text, '[^ ]+', 0))").alias("x2"),
@@ -1222,13 +1203,6 @@ def logistic_newton_step(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _logistic_sql() -> str:
-    from k_means_hadoop_spark.operators.analytics import (
-        _OLS_B0,
-        _OLS_B1,
-        _OLS_B2,
-        _OLS_DET,
-    )
-
     return """
 WITH d AS (SELECT n_chars AS x1,
                   len(regexp_extract_all(text, '[^ ]+')) AS x2,
@@ -1685,8 +1659,6 @@ def streaming_kmv_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
     within its own batch), so re-selecting the K smallest over the
     merged store reproduces the batch sketch EXACTLY — same oracle.
     Per-batch shuffle ∝ K rows."""
-    from k_means_hadoop_spark.session import scratch_dir
-
     ev = _t(spark, sf_dir, "events").select("user_id")
     src = scratch_dir("kmv_src")
     store = scratch_dir("kmv_store")
@@ -1957,8 +1929,6 @@ def concentration_spend(spark: SparkSession, sf_dir: str) -> DataFrame:
     would sort every customer in ONE task — partitioning.prefix_sum
     keeps the sort parallelism at num_parts; round-7 verdict item 6),
     constant-size reduce."""
-    from k_means_hadoop_spark.partitioning import prefix_sum
-
     o = _t(spark, sf_dir, "orders").select(
         "o_custkey",
         F.floor(F.col("o_totalprice") * 100 + F.lit(0.5))
@@ -2082,8 +2052,6 @@ def mood_median_test(spark: SparkSession, sf_dir: str) -> DataFrame:
     exact in double arithmetic, and when k1 = k2 (odd n) both pick
     the same row.  The 2x2 margins then reduce over the SAME
     histogram — the pooled fact sample is scanned exactly once."""
-    from k_means_hadoop_spark.partitioning import prefix_sum
-
     pooled = _t(spark, sf_dir, "events").filter(
         F.col("event_type").isin(_MOOD_A, _MOOD_B)
     ).select("event_type", "value")
@@ -2201,8 +2169,6 @@ FROM g
 
 def gini_spend_nations(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(n_name, n_cust, total_spend, gini) per nation."""
-    from k_means_hadoop_spark.partitioning import prefix_sum
-
     cust = _t(spark, sf_dir, "customer").select("c_custkey", "c_nationkey")
     spend = (
         _t(spark, sf_dir, "orders")
@@ -3019,8 +2985,6 @@ FROM h
 def lorenz_spend_deciles(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(decile, n_cust, cents, cum_cents, cum_share) for deciles 0-9
     of per-customer lifetime spend (0 = lowest spenders)."""
-    from k_means_hadoop_spark.partitioning import prefix_sum
-
     o = _t(spark, sf_dir, "orders").select(
         "o_custkey",
         F.floor(F.col("o_totalprice") * 100 + F.lit(0.5))
@@ -3225,8 +3189,6 @@ _HG_CHARS = 300  # gates ~half the corpus at every shipped SF
 
 def hypergeom_enrichment_sources(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(source, n_docs, n_gated, expected, z) per source."""
-    from k_means_hadoop_spark.operators.corpus_extra import _docs
-
     d = _docs(spark, sf_dir).select(
         "source", (F.col("n_chars") >= _HG_CHARS).cast("int").alias("g")
     )

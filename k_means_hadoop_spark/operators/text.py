@@ -9,10 +9,15 @@ except the final aggregation a caller might add).
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from k_means_hadoop_spark.functions.hashing import stable_hash64
+from k_means_hadoop_spark.functions.hashing import (
+    stable_hash64,
+    tokens,
+    tokens_sql,
+    word_ngrams_all,
+)
 from k_means_hadoop_spark.partitioning import truncate_lineage
 
 # Marker stopwords per language for the n-gram/marker-word heuristic
@@ -34,16 +39,12 @@ BPE_REGEX = r"[A-Za-z]+|[0-9]+|[^A-Za-z0-9\s]"
 PUNCT_CLASS = r"[.,!?;:]"
 
 
-def _tokens(text: Column) -> Column:
-    return F.split(F.lower(F.trim(text)), r"\s+")
-
-
 def token_counts(docs: DataFrame, text_col: str = "text") -> DataFrame:
     """(doc_id, ws_tokens, bpe_tokens) — whitespace + BPE-ish counts."""
     t = F.col(text_col)
     return docs.select(
         "doc_id",
-        F.size(_tokens(t)).alias("ws_tokens"),
+        F.size(tokens(t)).alias("ws_tokens"),
         F.regexp_count(t, F.lit(BPE_REGEX)).cast("bigint").alias("bpe_tokens"),
     )
 
@@ -52,7 +53,7 @@ def quality_expr(text_col: str = "text"):
     """The combined [0,1] quality score as a row-local Column (rounded
     to 6 dp — the form every consumer aggregates or thresholds on)."""
     t = F.col(text_col)
-    toks = _tokens(t)
+    toks = tokens(t)
     n_chars = F.length(t).cast("double")
     n_toks = F.size(toks).cast("double")
     punct = (F.length(t) - F.length(F.regexp_replace(t, PUNCT_CLASS, ""))).cast("double")
@@ -73,6 +74,30 @@ def quality_expr(text_col: str = "text"):
     return F.round(quality, 6)
 
 
+def _quality_sql() -> str:
+    stop_lst = ", ".join(f"'{w}'" for w in STOPWORDS)
+    return f"""
+WITH f AS (
+  SELECT doc_id,
+         length(text)::DOUBLE AS n_chars,
+         len({tokens_sql('text')})::DOUBLE AS n_toks,
+         (length(text) - length(regexp_replace(text, '[.,!?;:]', '', 'g')))::DOUBLE AS punct,
+         (length(text) - length(regexp_replace(text, '[0-9]', '', 'g')))::DOUBLE AS digits,
+         len(list_filter({tokens_sql('text')}, w -> list_contains([{stop_lst}], w)))::DOUBLE AS stops
+  FROM documents)
+SELECT doc_id,
+       n_chars::BIGINT AS n_chars,
+       n_toks::BIGINT AS n_tokens,
+       round((n_chars - (n_toks - 1)) / n_toks, 6) AS avg_token_len,
+       round(punct / n_chars, 6) AS punct_ratio,
+       round(stops / n_toks, 6) AS stop_ratio,
+       round(digits / n_chars, 6) AS digit_ratio,
+       round(greatest(0.0, least(1.0,
+             0.25 + least(n_toks / 400.0, 0.35) + least(stops / n_toks * 2.0, 0.25)
+             - punct / n_chars * 2.0 - digits / n_chars * 1.5)), 6) AS quality
+FROM f"""
+
+
 def quality_scores(docs: DataFrame, text_col: str = "text") -> DataFrame:
     """Per-document quality features + combined score.
 
@@ -83,7 +108,7 @@ def quality_scores(docs: DataFrame, text_col: str = "text") -> DataFrame:
     score higher).
     """
     t = F.col(text_col)
-    toks = _tokens(t)
+    toks = tokens(t)
     n_chars = F.length(t).cast("double")
     n_toks = F.size(toks).cast("double")
     punct = (F.length(t) - F.length(F.regexp_replace(t, PUNCT_CLASS, ""))).cast("double")
@@ -115,7 +140,7 @@ def with_lang_pred(df: DataFrame, text_col: str = "text", out_col: str = "pred_l
     not collapse the projections because the token array is non-cheap
     and multiply referenced.  Same values, same tie-break."""
     carried = df.columns
-    staged = df.withColumn("_toks", _tokens(F.col(text_col)))
+    staged = df.withColumn("_toks", tokens(F.col(text_col)))
     score_cols = []
     for lang, markers in LANG_MARKERS.items():
         arr = F.array(*[F.lit(m) for m in markers])
@@ -174,7 +199,7 @@ def _bpe_rounds(docs: DataFrame, n_rounds: int, text_col: str, checkpoint_every:
     The merge now enters via a broadcast LEFT join and each output row
     asserts the merge pair is present, so execution raises with the
     round number instead of silently truncating the merge table."""
-    cur = docs.select("doc_id", _tokens(F.col(text_col)).alias("toks"))
+    cur = docs.select("doc_id", tokens(F.col(text_col)).alias("toks"))
     rounds = []
     for r in range(1, n_rounds + 1):
         pairs = cur.select(F.explode(_adjacent_pairs("toks")).alias("p"))
@@ -253,7 +278,7 @@ def bpe_compression(docs: DataFrame, n_rounds: int = 3, text_col: str = "text", 
     report the sequence-length compression — the number a tokenizer fit
     is actually optimizing (shorter sequences = more text per context
     window).  One plan: train + apply + both totals."""
-    before = docs.select("doc_id", _tokens(F.col(text_col)).alias("toks")).agg(
+    before = docs.select("doc_id", tokens(F.col(text_col)).alias("toks")).agg(
         F.count(F.lit(1)).alias("n_docs"),
         F.sum(F.size("toks").cast("bigint")).alias("tokens_before"),
     )
@@ -281,7 +306,7 @@ def dataset_card(docs: DataFrame, text_col: str = "text", group_col: str = "sour
     otherwise flip the 6th decimal between engines/partitionings), and
     the language share is an integer count ratio."""
     q_micro = F.round(quality_expr(text_col) * 1e6, 0).cast("bigint")
-    n_toks = F.size(_tokens(F.col(text_col))).cast("bigint")
+    n_toks = F.size(tokens(F.col(text_col))).cast("bigint")
     base = with_lang_pred(
         docs.select(F.col(group_col).alias("source"), text_col), text_col
     )
@@ -341,7 +366,7 @@ def unigram_logprob(docs: DataFrame, text_col: str = "text") -> DataFrame:
     tfidf_top_terms documents.  No smoothing needed: the model is
     trained on the same corpus it scores, so every token has mass."""
     tok = docs.select(
-        "doc_id", F.explode(_tokens(F.col(text_col))).alias("tok")
+        "doc_id", F.explode(tokens(F.col(text_col))).alias("tok")
     ).filter(F.col("tok") != "")
     # ONE explode pass: doc-term occurrence counts feed BOTH the model
     # (regroup by tok) and the scoring (weighted mean), instead of
@@ -372,6 +397,18 @@ def unigram_logprob(docs: DataFrame, text_col: str = "text") -> DataFrame:
     )
 
 
+def _unigram_logprob_sql() -> str:
+    return f"""
+WITH tok AS (SELECT doc_id, unnest({tokens_sql('text')}) AS tok FROM documents),
+t AS (SELECT doc_id, tok FROM tok WHERE tok != ''),
+vocab AS (SELECT tok, count(*)::BIGINT AS cnt FROM t GROUP BY tok),
+n AS (SELECT sum(cnt)::BIGINT AS n_total FROM vocab)
+SELECT doc_id, count(*)::BIGINT AS n_tokens,
+       round(avg(ln(cnt::DOUBLE / n_total::DOUBLE)), 6) AS avg_logprob
+FROM t JOIN vocab USING (tok) CROSS JOIN n
+GROUP BY doc_id"""
+
+
 def repetition_scores(docs: DataFrame, text_col: str = "text") -> DataFrame:
     """(doc_id, n_tokens, n_distinct, dup_ratio, top_token_ratio) —
     intra-document repetition signals (the Gopher-rules style quality
@@ -386,7 +423,7 @@ def repetition_scores(docs: DataFrame, text_col: str = "text") -> DataFrame:
     inside whole-stage codegen; the per-row cost is O(distinct·total),
     bounded by document length (documents are KB-sized by contract; at
     100 TB this is the map-side filter it is meant to be)."""
-    toks = _tokens(F.col(text_col))
+    toks = tokens(F.col(text_col))
     base = docs.select("doc_id", toks.alias("toks"))
     n = F.size("toks")
     nd = F.size(F.array_distinct("toks"))
@@ -418,7 +455,7 @@ def simhash(docs: DataFrame, text_col: str = "text", bits: int = SIMHASH_BITS) -
     map-side-combinable form).
     """
     tok = docs.select(
-        "doc_id", F.explode(_tokens(F.col(text_col))).alias("w")
+        "doc_id", F.explode(tokens(F.col(text_col))).alias("w")
     ).withColumn("h", stable_hash64(F.col("w")))
     aggs = [
         F.sum(
@@ -445,7 +482,7 @@ def top_terms(docs: DataFrame, k: int = 50, text_col: str = "text") -> DataFrame
     sort shuffle no matter the corpus size.  Tie-break (count DESC,
     term ASC) makes the k-set deterministic.
     """
-    tok = docs.select(F.explode(_tokens(F.col(text_col))).alias("term"))
+    tok = docs.select(F.explode(tokens(F.col(text_col))).alias("term"))
     return (
         tok.filter(F.col("term") != "")
         .groupBy("term")
@@ -466,8 +503,6 @@ def tokenizer_fit_bigrams(docs: DataFrame, k: int = 50, text_col: str = "text") 
     ``TakeOrderedAndProject``: partitions keep local top-k, the driver
     merges k·P rows, no global sort shuffle.  Ties (n DESC, pair ASC)
     make the k-set deterministic."""
-    from k_means_hadoop_spark.functions.hashing import word_ngrams_all
-
     pairs = docs.select(F.explode(word_ngrams_all(F.col(text_col), 2)).alias("pair"))
     return (
         pairs.groupBy("pair")
@@ -492,7 +527,7 @@ def tfidf_top_terms(docs: DataFrame, k: int = 3, text_col: str = "text") -> Data
     deterministic.
     """
     tok = docs.select(
-        "doc_id", F.explode(_tokens(F.col(text_col))).alias("term")
+        "doc_id", F.explode(tokens(F.col(text_col))).alias("term")
     ).filter(F.col("term") != "")
     tf = tok.groupBy("doc_id", "term").agg(F.count(F.lit(1)).alias("tf"))
     dfreq = tf.groupBy("term").agg(F.count(F.lit(1)).alias("df"))
@@ -532,7 +567,7 @@ def chunk_documents(
     Chunks are emitted as (token count, md5 of the joined tokens) so the
     output stays narrow even for book-sized documents.
     """
-    toks = _tokens(F.col(text_col))
+    toks = tokens(F.col(text_col))
     starts = F.sequence(F.lit(0), F.greatest(F.size(toks) - 1, F.lit(0)), F.lit(stride))
     return (
         docs.select("doc_id", toks.alias("toks"), starts.alias("starts"))
@@ -576,7 +611,7 @@ def gopher_quality_gate(docs: DataFrame, text_col: str = "text") -> DataFrame:
     Entirely row-local Catalyst expressions — zero shuffle, runs inside
     the corpus scan at 100 TB exactly like pii_redact/quality_scores;
     every sub-signal is computed once in a staged projection."""
-    toks = F.filter(_tokens(F.col(text_col)), lambda x: x != "")
+    toks = F.filter(tokens(F.col(text_col)), lambda x: x != "")
     staged = docs.select("doc_id", toks.alias("toks"))
     n = F.size("toks").cast("bigint")
     sum_len = F.aggregate(
@@ -624,6 +659,36 @@ def gopher_quality_gate(docs: DataFrame, text_col: str = "text") -> DataFrame:
     )
 
 
+def _gopher_sql() -> str:
+    stops = ", ".join(f"'{w}'" for w in STOPWORDS)
+    top = (
+        "list_max(list_transform(list_distinct(toks), "
+        "t -> len(list_filter(toks, x -> x = t))))"
+    )
+    return f"""
+WITH t AS (SELECT doc_id, list_filter({tokens_sql('text')}, x -> x != '') AS toks FROM documents),
+m AS (SELECT doc_id,
+             len(toks)::BIGINT AS n_words,
+             list_sum(list_transform(toks, t -> len(t)))::DOUBLE / len(toks)::DOUBLE AS ml,
+             len(list_filter(toks, t -> regexp_matches(t, '[a-z]')))::DOUBLE
+               / len(toks)::DOUBLE AS af,
+             len(list_filter(toks, t -> t IN ({stops})))::BIGINT AS n_stop,
+             {top}::DOUBLE / len(toks)::DOUBLE AS tr
+      FROM t),
+r AS (SELECT *, CASE WHEN n_words < {GOPHER_MIN_WORDS} THEN 'too_few_words'
+                     WHEN n_words > {GOPHER_MAX_WORDS} THEN 'too_many_words'
+                     WHEN ml < {GOPHER_MIN_MEAN_LEN} THEN 'short_words'
+                     WHEN ml > {GOPHER_MAX_MEAN_LEN} THEN 'long_words'
+                     WHEN af < {GOPHER_MIN_ALPHA_FRAC} THEN 'non_alpha'
+                     WHEN n_stop < {GOPHER_MIN_STOPWORDS} THEN 'no_stopwords'
+                     WHEN tr > {GOPHER_MAX_TOP_RATIO} THEN 'repetitive'
+                     ELSE 'pass' END AS reason
+      FROM m)
+SELECT doc_id, n_words, round(ml, 6) AS mean_word_len, round(af, 6) AS alpha_frac,
+       n_stop, round(tr, 6) AS top_ratio, reason = 'pass' AS verdict, reason
+FROM r"""
+
+
 BIGRAM_LAMBDA = 0.8  # interpolation weight on the bigram term
 
 
@@ -640,7 +705,7 @@ def bigram_logprob(docs: DataFrame, text_col: str = "text") -> DataFrame:
     corpus, Heaps' law), and scoring is one joined map.  Interpolation
     means no smoothing constant to tune: every pair backs off to the
     always-present unigram mass."""
-    toks = F.filter(_tokens(F.col(text_col)), lambda x: x != "")
+    toks = F.filter(tokens(F.col(text_col)), lambda x: x != "")
     base = docs.select("doc_id", toks.alias("toks"))
     n = F.size("toks")
     pairs = base.select(
@@ -698,7 +763,7 @@ def bm25_search(
     ranking is on the 6-dp-rounded score with doc_id tie-break so the
     top-k is cross-engine deterministic."""
     terms = F.array(*[F.lit(t) for t in query_terms])
-    toks = F.filter(_tokens(F.col(text_col)), lambda x: x != "")
+    toks = F.filter(tokens(F.col(text_col)), lambda x: x != "")
     base = docs.select("doc_id", toks.alias("toks")).select(
         "doc_id", "toks", F.size("toks").cast("double").alias("dl")
     )

@@ -26,7 +26,9 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from k_means_hadoop_spark.functions.zorder import interleave_bits, interleave_bits_sql
 from k_means_hadoop_spark.operators.relational import _dec, _t
+from k_means_hadoop_spark.partitioning import ntile_expr, prefix_sum_literal_bounds, scan_parts
 
 # engine-identical 6dp stabilization (see module docstring)
 _FL6_SQL = "floor(({x}) * CAST(1000000 AS DOUBLE) + CAST(0.5 AS DOUBLE)) / CAST(1000000 AS DOUBLE)"
@@ -566,12 +568,6 @@ def zonemap_prune_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     # A window ntile would collapse every row into ONE task; the
     # range-partitioned prefix count + closed-form ntile (the
     # rfm_segments treatment, round-9) keeps the sort parallel.
-    from k_means_hadoop_spark.partitioning import (
-        ntile_expr,
-        prefix_sum_literal_bounds,
-        scan_parts,
-    )
-
     # fact-grain input: size the range shuffle from the scan's split
     # count (grows with the data; floors at the measured-best 8
     # locally) so no slice outgrows an executor.  This is the ONE
@@ -781,8 +777,6 @@ def hilbert_vs_zorder_locality(spark: SparkSession, sf_dir: str) -> DataFrame:
     The curve keys are a pure per-row map; the comparison is one lag
     window per curve over the (bounded, <= 65536-row) distinct point
     set."""
-    from k_means_hadoop_spark.functions.zorder import interleave_bits
-
     li = _t(spark, sf_dir, "lineitem")
     pts = (
         li.select(
@@ -820,8 +814,6 @@ def hilbert_vs_zorder_locality(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _hilbert_sql() -> str:
-    from k_means_hadoop_spark.functions.zorder import interleave_bits_sql
-
     ctes = [
         """pts AS (SELECT DISTINCT (l_partkey % {n})::INT AS x,
                        (l_orderkey % {n})::INT AS y

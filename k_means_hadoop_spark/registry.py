@@ -28,12 +28,35 @@ from collections.abc import Callable
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from k_means_hadoop_spark.functions.hashing import stable_hash64_sql
 from k_means_hadoop_spark.functions.vector import euclidean
+from k_means_hadoop_spark.operators.analytics import ANALYTICS_QUERIES
 from k_means_hadoop_spark.operators.assign import assign_expr, assign_join
-from k_means_hadoop_spark.operators.evaluation import jaccard_reference
-from k_means_hadoop_spark.operators.kmeans import init_ids, lloyd_kmeans
+from k_means_hadoop_spark.operators.containers import CONTAINER_QUERIES
+from k_means_hadoop_spark.operators.corpus_extra import CORPUS_EXTRA_QUERIES
+from k_means_hadoop_spark.operators.curation import CURATION_QUERIES
+from k_means_hadoop_spark.operators.evaluation import (
+    SIL_MEAN,
+    SIL_S,
+    SIL_SAMPLE_PER_CLUSTER,
+    _SIL_SALT,
+    jaccard_reference,
+    silhouette_by_cluster,
+    silhouette_sampled,
+)
+from k_means_hadoop_spark.operators.kmeans import init_ids, init_random, lloyd_kmeans, mllib_kmeans
+from k_means_hadoop_spark.operators.mining import MINING_QUERIES
 from k_means_hadoop_spark.operators.recompute import recompute_centroids, recompute_exploded
-from k_means_hadoop_spark.sources.points import points_from_embeddings
+from k_means_hadoop_spark.operators.relational import RELATIONAL_QUERIES
+from k_means_hadoop_spark.operators.sketches import SKETCH_QUERIES
+from k_means_hadoop_spark.operators.stats_extra import STATS_EXTRA_QUERIES
+from k_means_hadoop_spark.operators.tpch_extra import TPCH_EXTRA_QUERIES
+from k_means_hadoop_spark.operators.trends import TRENDS_QUERIES
+from k_means_hadoop_spark.registry_pipeline import PIPELINE_QUERIES
+from k_means_hadoop_spark.session import scratch_dir
+from k_means_hadoop_spark.sources.centroid_io import read_centroid_file, write_centroid_file
+from k_means_hadoop_spark.sources.points import points_from_embeddings, read_points_tsv
+from k_means_hadoop_spark.sources.sinks import write_final_output
 
 # Fixed I2 seed ids (all < 500 so the same queries run at sf0.001).
 SEEDS = [1, 51, 101, 151, 201, 251, 301, 351]
@@ -207,8 +230,6 @@ def q_silhouette(spark: SparkSession, sf_dir: str) -> DataFrame:
     (``operators/evaluation.py`` module docstring).  Full value
     oracle: every pairwise distance is rounded+DECIMAL'd before any
     mean, and the s-formula is shared literal text (SIL_S)."""
-    from k_means_hadoop_spark.operators.evaluation import silhouette_by_cluster
-
     pts = _points(spark, sf_dir).where(F.col("id") <= _SIL_MAX_ID)
     cents = init_ids(pts, SEEDS)
     # d from the already-collected init rows → codegen'd distance chain
@@ -216,8 +237,6 @@ def q_silhouette(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _silhouette_sql() -> str:
-    from k_means_hadoop_spark.operators.evaluation import SIL_MEAN, SIL_S
-
     return f"""
 WITH pts AS (SELECT vec_id::INTEGER AS id, embedding::DOUBLE[] AS features
              FROM embeddings WHERE vec_id <= {_SIL_MAX_ID}),
@@ -254,8 +273,6 @@ def q_silhouette_sampled(spark: SparkSession, sf_dir: str) -> DataFrame:
     sample predicate is the same portable hash rank on both sides, and
     every distance/mean keeps the exact-decimal discipline of the
     all-pairs operator."""
-    from k_means_hadoop_spark.operators.evaluation import silhouette_sampled
-
     pts = _points(spark, sf_dir)
     cents = init_ids(pts, SEEDS)
     # d from the already-collected init rows → codegen'd distance chain
@@ -263,14 +280,6 @@ def q_silhouette_sampled(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _silhouette_sampled_sql() -> str:
-    from k_means_hadoop_spark.functions.hashing import stable_hash64_sql
-    from k_means_hadoop_spark.operators.evaluation import (
-        _SIL_SALT,
-        SIL_MEAN,
-        SIL_S,
-        SIL_SAMPLE_PER_CLUSTER,
-    )
-
     h = stable_hash64_sql(f"id::VARCHAR || '{_SIL_SALT}'")
     return f"""
 WITH pts AS (SELECT vec_id::INTEGER AS id, embedding::DOUBLE[] AS features
@@ -322,8 +331,6 @@ def q_i1_init_random(spark: SparkSession, sf_dir: str) -> DataFrame:
     md5-based ``stable_hash64`` (bit-identical in DuckDB), so the seeded
     sample itself carries a full value oracle: rank by the same hash on
     both sides, take the top k, renumber 1..k in hash order."""
-    from k_means_hadoop_spark.operators.kmeans import init_random
-
     pts = _points(spark, sf_dir)
     cents = init_random(pts, k=8, seed=42)
     return spark.createDataFrame(
@@ -343,8 +350,6 @@ def q_kmeans_mllib(spark: SparkSession, sf_dir: str) -> DataFrame:
     degenerate init blows past it, while legitimate init variation
     sits well inside).  Agreement with the DataFrame loop remains
     pinned in tests/test_kmeans_core.py."""
-    from k_means_hadoop_spark.operators.kmeans import lloyd_kmeans, mllib_kmeans
-
     pts = _points(spark, sf_dir).cache()
     out, _model = mllib_kmeans(pts, k=8, seed=42, max_iter=10)
     sq_err = F.aggregate(
@@ -399,8 +404,6 @@ def q_kmeans_lloyd(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _tmpdir(tag: str) -> str:
-    from k_means_hadoop_spark.session import scratch_dir
-
     return scratch_dir(f"kmh_{tag}")
 
 
@@ -412,8 +415,6 @@ def q_s1_points_tsv_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     parse + path glob), and report each point — a hash-match against the
     parquet-side oracle proves the writer/parser pair is lossless
     (Double.toString round-trips doubles exactly)."""
-    from k_means_hadoop_spark.sources.points import read_points_tsv
-
     pts = _points(spark, sf_dir)
     line = F.concat(
         F.concat_ws("\t", F.col("id"), F.col("label"), F.array_join("features", "\t")),
@@ -438,11 +439,6 @@ def q_s3_centroid_wire_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     negated-size decode), and report per-cluster state — hash-matched
     against an oracle that recomputes the same state straight from the
     parquet tables and never sees the wire file."""
-    from k_means_hadoop_spark.sources.centroid_io import (
-        read_centroid_file,
-        write_centroid_file,
-    )
-
     pts = _points(spark, sf_dir)
     cents = _seed_centroids_df(pts)
     mem = (
@@ -472,8 +468,6 @@ def q_s6_final_output_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     KMeans.java:353-357), re-read and re-parse the text, and report each
     row — hash-matched against the assignment oracle computed without
     the file."""
-    from k_means_hadoop_spark.sources.sinks import write_final_output
-
     path = _tmpdir("s6_final")
     write_final_output(_assigned_expr(spark, sf_dir), path)
     toks = F.split(F.col("value"), "\t")
@@ -670,18 +664,6 @@ KMEANS_QUERIES: dict[str, tuple[QueryFn, str]] = {
         "true AS ok_k, true AS ok_quality FROM pts",
     ),
 }
-
-from k_means_hadoop_spark.operators.analytics import ANALYTICS_QUERIES
-from k_means_hadoop_spark.operators.corpus_extra import CORPUS_EXTRA_QUERIES
-from k_means_hadoop_spark.operators.sketches import SKETCH_QUERIES
-from k_means_hadoop_spark.operators.curation import CURATION_QUERIES
-from k_means_hadoop_spark.operators.relational import RELATIONAL_QUERIES
-from k_means_hadoop_spark.operators.tpch_extra import TPCH_EXTRA_QUERIES
-from k_means_hadoop_spark.operators.trends import TRENDS_QUERIES
-from k_means_hadoop_spark.operators.stats_extra import STATS_EXTRA_QUERIES
-from k_means_hadoop_spark.operators.mining import MINING_QUERIES
-from k_means_hadoop_spark.operators.containers import CONTAINER_QUERIES
-from k_means_hadoop_spark.registry_pipeline import PIPELINE_QUERIES
 
 # Every family registers {name: (fn, oracle_sql)} pairs, so a query and
 # its oracle can only be added together.

@@ -13,21 +13,69 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from k_means_hadoop_spark.functions.hashing import (
-    minhash_value_sql,
+    SQL_WS,
+    stable_hash64,
     stable_hash64_sql,
+    tokens,
+    tokens_sql,
     word_ngrams_all_sql,
     word_ngrams_sql,
 )
-from k_means_hadoop_spark.operators import dedup, similarity, text
+from k_means_hadoop_spark.functions.udtfs import register, register_ngram_cols
+from k_means_hadoop_spark.functions.vector import euclidean
+from k_means_hadoop_spark.operators import curation, dedup, similarity, text
 from k_means_hadoop_spark.operators.analytics import _MERGE_SQL
+from k_means_hadoop_spark.operators.assign import assign_expr
+from k_means_hadoop_spark.operators.corpus_extra import _docs
+from k_means_hadoop_spark.operators.dedup import _minhash_ctes, _minhash_verified_sql, _shingle_cte
+from k_means_hadoop_spark.operators.kmeans import init_ids
+from k_means_hadoop_spark.operators.multimodal import (
+    arrow_byte_stats,
+    decode_media,
+    decode_media_real,
+    media_from_documents,
+    sample_frames,
+    synthesize_codec_media,
+    wav_frame_features,
+)
 from k_means_hadoop_spark.operators.pca import (
     _pi_float_sql,
     _power_iteration_sql,
+    pca_project,
     power_iteration_pc1,
     power_iteration_pc1_float,
 )
 from k_means_hadoop_spark.operators.relational import SESSION_WINDOW_SQL
-from k_means_hadoop_spark.partitioning import fan_out
+from k_means_hadoop_spark.operators.text import (
+    BIGRAM_LAMBDA,
+    BM25_B,
+    BM25_K1,
+    _gopher_sql,
+    _quality_sql,
+    _unigram_logprob_sql,
+)
+from k_means_hadoop_spark.partitioning import fan_out, prefix_sum
+from k_means_hadoop_spark.session import scratch_dir
+from k_means_hadoop_spark.sources.points import points_from_embeddings
+from k_means_hadoop_spark.sources.python_datasource import read_arith_seq, read_arith_seq_stream
+from k_means_hadoop_spark.sources.sinks import compact_parquet
+from k_means_hadoop_spark.sources.tar_shards import read_tar_shards, write_tar_shards
+from k_means_hadoop_spark.streaming.relational import (
+    dedup_stream_keys,
+    enrich_events_with_customer,
+    join_view_click_streams,
+    streaming_ingest_dedup,
+    streaming_merge_changelog,
+    streaming_upsert_snapshot,
+)
+from k_means_hadoop_spark.streaming.stateful import stateful_user_totals, tws_user_stats
+from k_means_hadoop_spark.streaming.stream_kmeans import (
+    StreamingKMeansState,
+    read_event_stream,
+    stream_assign,
+    streaming_kmeans_update,
+    windowed_event_stats,
+)
 
 # ------------------------------------------------------------------ queries
 
@@ -115,12 +163,6 @@ pl AS (SELECT (t.vid + {PLANT_OFFSET})::INTEGER AS vid,
 v AS (SELECT vid, vec FROM v0 UNION ALL SELECT vid, vec FROM pl)"""
 
 
-def _docs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    # fan_out: the test parquet is a single row-group (one input split);
-    # without it every shingle/hash pipeline below runs on ONE core.
-    return fan_out(spark.read.parquet(f"{sf_dir}/documents.parquet"))
-
-
 def _emb(spark: SparkSession, sf_dir: str) -> DataFrame:
     return fan_out(spark.read.parquet(f"{sf_dir}/embeddings.parquet"))
 
@@ -169,7 +211,7 @@ def _bpe_ctes(n_rounds: int, apply_last: bool) -> tuple[list[str], list[str]]:
         "unnest(list_transform(range(1, greatest(len(toks), 1)), "
         "i -> struct_pack(a := toks[i], b := toks[i + 1]))) AS u(pr)"
     )
-    ctes = [f"t0 AS (SELECT doc_id, {_TOKS} AS toks FROM documents)"]
+    ctes = [f"t0 AS (SELECT doc_id, {tokens_sql('text')} AS toks FROM documents)"]
     selects = []
     for r in range(1, n_rounds + 1):
         ctes.append(
@@ -403,8 +445,6 @@ def q_incremental_dedup_stored(spark, sf_dir):
     """incremental_dedup against a parquet-persisted corpus index (the
     signature store a real ingest service maintains); identical output
     contract, so the same oracle SQL hash-checks the store roundtrip."""
-    from k_means_hadoop_spark.session import scratch_dir
-
     return dedup.incremental_dedup_stored(
         _docs(spark, sf_dir),
         F.col("doc_id") % INCR_BATCH_MOD == INCR_BATCH_REM,
@@ -424,8 +464,6 @@ def q_ingest_increment(spark, sf_dir):
     (signatures + bench shingles would be persisted tables), the batch
     is the only fully-materialized side, and every stage is the
     already-verified operator composed into ONE declarative plan."""
-    from k_means_hadoop_spark.operators import curation, text as text_ops
-
     docs = _docs(spark, sf_dir)
     inc = dedup.incremental_dedup(
         docs,
@@ -433,7 +471,7 @@ def q_ingest_increment(spark, sf_dir):
         n=NGRAM_N,
         threshold=NGRAM_THRESHOLD,
     )
-    q = text_ops.quality_scores(docs).select("doc_id", "quality")
+    q = text.quality_scores(docs).select("doc_id", "quality")
     cont = curation.decontaminate_corpus(spark, sf_dir).select(
         "doc_id", F.lit(1).alias("_c")
     )
@@ -453,15 +491,13 @@ def q_ingest_increment(spark, sf_dir):
 
 
 def _ingest_increment_sql() -> str:
-    from k_means_hadoop_spark.operators.curation import _BENCH_MOD, _decontam_sql
-
     return f"""
 WITH inc AS ({_incremental_sql(NGRAM_N, NGRAM_THRESHOLD, INCR_BATCH_MOD, INCR_BATCH_REM)}),
 qual AS (SELECT doc_id, quality FROM ({_quality_sql()}) t),
-cont AS ({_decontam_sql()})
+cont AS ({curation._decontam_sql()})
 SELECT i.doc_id,
        CASE WHEN i.status != 'new' THEN 'duplicate'
-            WHEN c.doc_id IS NOT NULL OR i.doc_id % {_BENCH_MOD} = 0 THEN 'contaminated'
+            WHEN c.doc_id IS NOT NULL OR i.doc_id % {curation._BENCH_MOD} = 0 THEN 'contaminated'
             WHEN q.quality < 0.5 THEN 'low_quality'
             ELSE 'admit' END AS decision
 FROM inc i JOIN qual q ON i.doc_id = q.doc_id
@@ -478,9 +514,6 @@ def q_streaming_ingest_dedup(spark, sf_dir):
     oracle (the driver checks the streaming state loop, not just its
     plumbing)."""
     import os
-    from k_means_hadoop_spark.session import scratch_dir
-
-    from k_means_hadoop_spark.streaming.relational import streaming_ingest_dedup
 
     path = f"{sf_dir}/documents.parquet"
     # file stream sources monitor directories — stage the fixture file
@@ -931,9 +964,6 @@ def q_compact_shards(spark, sf_dir):
     compacted table and report every document — hash-matched against an
     oracle that never sees either file layout.  The pytest pins the
     before/after file counts; here the content roundtrip is the check."""
-    from k_means_hadoop_spark.session import scratch_dir
-    from k_means_hadoop_spark.sources.sinks import compact_parquet
-
     frag, out = scratch_dir("compact_in"), scratch_dir("compact_out")
     _docs(spark, sf_dir).repartition(64).write.mode("overwrite").parquet(frag)
     compact_parquet(spark, frag, out, target_bytes=512 * 1024)
@@ -955,9 +985,6 @@ def q_python_datasource_stream(spark, sf_dir):
     and checked against DuckDB range() (exactly-once: a dropped or
     doubled partition flips the counts)."""
     import uuid
-
-    from k_means_hadoop_spark.session import scratch_dir
-    from k_means_hadoop_spark.sources.python_datasource import read_arith_seq_stream
 
     name = f"pyds_stream_{uuid.uuid4().hex[:8]}"
     q = (
@@ -1003,7 +1030,7 @@ def _containment_corpus(spark, sf_dir):
     stays ≈ 0.5 because the union doubles.  Token-slice arithmetic is
     identical on both engines."""
     docs = _docs(spark, sf_dir).select("doc_id", "text")
-    toks = F.split(F.lower(F.trim(F.col("text"))), r"\s+")
+    toks = tokens("text")
     clones = docs.filter(F.col("doc_id").isin(CONTAIN_PLANT_IDS)).select(
         (F.col("doc_id") + CONTAIN_PLANT_OFFSET).alias("doc_id"),
         F.array_join(
@@ -1021,7 +1048,7 @@ def q_dedup_containment(spark, sf_dir):
 
 def _containment_sql() -> str:
     ids = ", ".join(str(i) for i in CONTAIN_PLANT_IDS)
-    toks = "string_split_regex(lower(trim(text)), '\\s+')"
+    toks = tokens_sql("text")
     return f"""
 WITH corpus AS (
   SELECT doc_id, text FROM documents
@@ -1072,8 +1099,6 @@ def q_udtf_ngram_cols(spark, sf_dir):
     Bounded to 50 docs — the UDTF row kernel is the extensibility seam,
     not the hot path, and 50 docs × ~60 windows is plenty to pin the
     schema + fan-out contract."""
-    from k_means_hadoop_spark.functions.udtfs import register_ngram_cols
-
     register_ngram_cols(spark)
     docs = _docs(spark, sf_dir).filter(F.col("doc_id") < 50)
     docs.createOrReplaceTempView("_udtf_ngram_docs")
@@ -1083,8 +1108,8 @@ def q_udtf_ngram_cols(spark, sf_dir):
     )
 
 
-UDTF_NGRAM_COLS_SQL = """
-WITH t AS (SELECT doc_id, list_filter(string_split_regex(lower(trim(text)), '\\s+'),
+UDTF_NGRAM_COLS_SQL = f"""
+WITH t AS (SELECT doc_id, list_filter({tokens_sql('text')},
                                       x -> x != '') AS toks
            FROM documents WHERE doc_id < 50),
 x AS (SELECT doc_id, unnest(range(0, greatest(len(toks) - 2, 0))) AS pos, toks FROM t)
@@ -1102,9 +1127,6 @@ def q_codec_roundtrip(spark, sf_dir):
     against the oracle, which never sees either file.  At 100 TB codec
     choice is a first-order storage/scan-cost decision; this pins that
     switching codecs is value-neutral."""
-    from k_means_hadoop_spark.functions.hashing import stable_hash64
-    from k_means_hadoop_spark.session import scratch_dir
-
     docs = _docs(spark, sf_dir).select("doc_id", "text")
     outs = []
     for codec in ("snappy", "zstd"):
@@ -1155,7 +1177,7 @@ def q_dedup_containment_capped(spark, sf_dir):
 
 def _containment_capped_sql() -> str:
     ids = ", ".join(str(i) for i in CONTAIN_PLANT_IDS)
-    toks = "string_split_regex(lower(trim(text)), '\\s+')"
+    toks = tokens_sql("text")
     return f"""
 WITH corpus AS (
   SELECT doc_id, text FROM documents
@@ -1198,10 +1220,8 @@ def q_vocab_coverage(spark, sf_dir):
     ``partitioning.prefix_sum`` count, not a global row_number window
     (round-9 registry-wide audit: the window form sorted the whole
     vocabulary in ONE task — the zipf_slope_fit fix applied here)."""
-    from k_means_hadoop_spark.partitioning import prefix_sum
-
     docs = _docs(spark, sf_dir)
-    toks = F.split(F.lower(F.trim(F.col("text"))), r"\s+")
+    toks = tokens("text")
     uni = (
         docs.select(F.explode(toks).alias("tok"))
         .filter(F.col("tok") != "")
@@ -1239,7 +1259,7 @@ def _vocab_coverage_sql() -> str:
         for v in VOCAB_COVERAGE_SIZES
     )
     return f"""
-WITH t AS (SELECT list_filter({_TOKS}, x -> x != '') AS toks FROM documents),
+WITH t AS (SELECT list_filter({tokens_sql('text')}, x -> x != '') AS toks FROM documents),
 unn AS (SELECT unnest(toks) AS tok FROM t),
 uni AS (SELECT tok, count(*)::BIGINT AS cnt FROM unn GROUP BY tok),
 ranked AS (SELECT cnt, row_number() OVER (ORDER BY cnt DESC, tok ASC) AS rk FROM uni)
@@ -1294,11 +1314,9 @@ def q_bm25_search(spark, sf_dir):
 
 
 def _bm25_sql() -> str:
-    from k_means_hadoop_spark.operators.text import BM25_B, BM25_K1
-
     terms = ", ".join(f"'{t}'" for t in BM25_QUERY_TERMS)
     return f"""
-WITH base AS (SELECT doc_id, list_filter({_TOKS}, x -> x != '') AS toks FROM documents),
+WITH base AS (SELECT doc_id, list_filter({tokens_sql('text')}, x -> x != '') AS toks FROM documents),
 b2 AS (SELECT doc_id, toks, len(toks)::DOUBLE AS dl FROM base),
 stats AS (SELECT count(*)::BIGINT AS n_docs, avg(dl) AS avgdl FROM b2),
 unn AS (SELECT doc_id, dl, unnest(toks) AS term FROM b2),
@@ -1399,7 +1417,7 @@ def q_approx_top_terms(spark, sf_dir):
     then degrades to approximate counts and this oracle no longer
     applies (rank-error tests take over)."""
     tok = _docs(spark, sf_dir).select(
-        F.explode(F.split(F.lower(F.trim(F.col("text"))), r"\s+")).alias("term")
+        F.explode(tokens("text")).alias("term")
     ).filter(F.col("term") != "")
     sk = tok.agg(F.expr(f"approx_top_k(term, {APPROX_TOP_K}, 100000)").alias("topk"))
     return (
@@ -1412,7 +1430,7 @@ def q_approx_top_terms(spark, sf_dir):
 
 
 APPROX_TOP_TERMS_SQL = f"""
-WITH tok AS (SELECT unnest(string_split_regex(lower(trim(text)), '\\s+')) AS term
+WITH tok AS (SELECT unnest({tokens_sql('text')}) AS term
              FROM documents),
 t AS (SELECT term, count(*)::BIGINT AS n FROM tok WHERE term != '' GROUP BY term),
 r AS (SELECT n, CAST(row_number() OVER (ORDER BY n DESC) AS INTEGER) AS rank FROM t)
@@ -1429,8 +1447,6 @@ def q_knn_mllib_lsh(spark, sf_dir):
     top-5 (BRP is an L2-metric family).  Hash tables are
     MLlib-internal, so the neighbor lists stay engine-specific; the
     per-query recall verdict is what the oracle asserts."""
-    from k_means_hadoop_spark.functions.vector import euclidean
-
     planted = _planted_emb(spark, sf_dir)
     ml = similarity.knn_mllib_lsh(planted, KNN_QUERY_IDS, k=5).select("qid", "nid")
     vecs = planted.select(
@@ -1533,8 +1549,8 @@ def q_chunk_documents(spark, sf_dir):
     return text.chunk_documents(_docs(spark, sf_dir), window=32, stride=24)
 
 
-CHUNK_SQL = """
-WITH t AS (SELECT doc_id, string_split_regex(lower(trim(text)), '\\s+') AS toks FROM documents),
+CHUNK_SQL = f"""
+WITH t AS (SELECT doc_id, {tokens_sql('text')} AS toks FROM documents),
 s AS (SELECT doc_id, toks, unnest(range(0, greatest(len(toks), 1), 24)) AS start,
              (generate_subscripts(range(0, greatest(len(toks), 1), 24), 1) - 1)::INTEGER AS chunk_idx
       FROM t)
@@ -1575,10 +1591,10 @@ def _prepare_corpus_sql() -> str:
 WITH f AS (
   SELECT doc_id, text,
          length(text)::DOUBLE AS n_chars,
-         len({_TOKS})::DOUBLE AS n_toks,
+         len({tokens_sql('text')})::DOUBLE AS n_toks,
          (length(text) - length(regexp_replace(text, '[.,!?;:]', '', 'g')))::DOUBLE AS punct,
          (length(text) - length(regexp_replace(text, '[0-9]', '', 'g')))::DOUBLE AS digits,
-         len(list_filter({_TOKS}, w -> list_contains([{stop_lst}], w)))::DOUBLE AS stops
+         len(list_filter({tokens_sql('text')}, w -> list_contains([{stop_lst}], w)))::DOUBLE AS stops
   FROM documents),
 kept AS (
   SELECT doc_id, text FROM f
@@ -1586,7 +1602,7 @@ kept AS (
           0.25 + least(n_toks / 400.0, 0.35) + least(stops / n_toks * 2.0, 0.25)
           - punct / n_chars * 2.0 - digits / n_chars * 1.5)), 6) >= 0.5
     AND doc_id IN (SELECT min(doc_id) FROM documents GROUP BY md5(text))),
-t AS (SELECT doc_id, {_TOKS} AS toks FROM kept),
+t AS (SELECT doc_id, {tokens_sql('text')} AS toks FROM kept),
 s AS (SELECT doc_id, toks, unnest(range(0, greatest(len(toks), 1), 24)) AS start FROM t)
 SELECT doc_id, count(*)::BIGINT AS n_chunks,
        count(DISTINCT md5(array_to_string(array_slice(toks, start + 1, start + 32), ' ')))::BIGINT AS n_distinct_chunks
@@ -1607,8 +1623,6 @@ def q_docs_jsonl_roundtrip(spark, sf_dir):
     schema must hash-match an oracle that never sees the file —
     writer escaping + parser are lossless for the full text payload.
     Same pattern as the s1/s3/s6 reference wire-format roundtrips."""
-    from k_means_hadoop_spark.session import scratch_dir
-
     path = scratch_dir("docs_jsonl")
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
     docs.write.mode("overwrite").json(path)
@@ -1620,8 +1634,6 @@ def q_lineitem_csv_roundtrip(spark, sf_dir):
     rendering and timestamps via the symmetric default ISO format;
     re-read with an explicit schema, hash-checked against the
     parquet-side oracle."""
-    from k_means_hadoop_spark.session import scratch_dir
-
     path = scratch_dir("lineitem_csv")
     li = spark.read.parquet(f"{sf_dir}/lineitem.parquet")
     li.write.mode("overwrite").option("header", True).csv(path)
@@ -1635,8 +1647,6 @@ def q_schema_evolution_merge(spark, sf_dir):
     add-a-column migration every long-lived 100 TB table goes through.
     Hash-checked row-for-row against an oracle that reconstructs the
     same generational view from the parquet fixture."""
-    from k_means_hadoop_spark.session import scratch_dir
-
     path = scratch_dir("schema_evo")
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
     docs.filter(F.col("doc_id") % 2 == 0).select("doc_id", "text").write.mode(
@@ -1667,11 +1677,6 @@ def q_multimodal_decode_real(spark, sf_dir):
     a BMP or WAV.  A hash match certifies the byte-level encode →
     decode → resize pipeline.  Video rows stay ok=false with the
     ffmpeg-seam reason — the honest remainder of the seam."""
-    from k_means_hadoop_spark.operators.multimodal import (
-        decode_media_real,
-        synthesize_codec_media,
-    )
-
     out = decode_media_real(synthesize_codec_media(_docs(spark, sf_dir)))
     return out.select(
         "media_id",
@@ -1749,8 +1754,6 @@ def q_streaming_merge_changelog(spark, sf_dir):
     """Multi-batch changelog apply over versioned snapshots — same
     oracle as the batch MERGE (key-disjoint changelog => partition-
     invariant final state)."""
-    from k_means_hadoop_spark.streaming.relational import streaming_merge_changelog
-
     return streaming_merge_changelog(spark, sf_dir)
 
 
@@ -1761,16 +1764,6 @@ def q_webdataset_tar_scan(spark, sf_dir):
     through the tar_shards Python Data Source, and REAL-decoded; same
     closed-form oracle as multimodal_decode_real, so the hash match
     covers tar framing + shard partitioning + codec parsing."""
-    from k_means_hadoop_spark.operators.multimodal import (
-        decode_media_real,
-        synthesize_codec_media,
-    )
-    from k_means_hadoop_spark.session import scratch_dir
-    from k_means_hadoop_spark.sources.tar_shards import (
-        read_tar_shards,
-        write_tar_shards,
-    )
-
     # Shard staging is the FIXTURE generator, not the operator under
     # test — memoize per sf_dir (the knn quantizer-memo pattern) so
     # repeated executions (bench warm-ups, min-of-3) measure the tar
@@ -1810,11 +1803,6 @@ def q_wav_frame_energy(spark, sf_dir):
     """Row-expanding REAL audio decode: 16-sample frame energies from
     actual PCM bytes; closed-form oracle (energies are exact integer
     sums of the planted waveform)."""
-    from k_means_hadoop_spark.operators.multimodal import (
-        synthesize_codec_media,
-        wav_frame_features,
-    )
-
     out = wav_frame_features(
         synthesize_codec_media(_docs(spark, sf_dir), kinds=("audio",))
     )
@@ -1842,8 +1830,6 @@ def q_multimodal_decode(spark, sf_dir):
     operators/multimodal.py); the oracle checks the oracle-expressible
     projection (id/kind/byte-length/md5), proving the Python-batch
     plumbing produces exactly what the declarative engine computes."""
-    from k_means_hadoop_spark.operators.multimodal import decode_media, media_from_documents
-
     feats = decode_media(media_from_documents(_docs(spark, sf_dir)))
     return feats.select("media_id", "kind", "payload_bytes", "content_hash")
 
@@ -1855,8 +1841,6 @@ def q_multimodal_frames(spark, sf_dir):
     """Row-expanding mapInPandas frame sampling (1 video → n frame rows);
     the stub frame hash (md5(payload || ':' || idx)) is SQL-expressible,
     so the oracle checks the full output including the fan-out shape."""
-    from k_means_hadoop_spark.operators.multimodal import media_from_documents, sample_frames
-
     return sample_frames(media_from_documents(_docs(spark, sf_dir)), stride=FRAME_STRIDE)
 
 
@@ -1876,8 +1860,6 @@ def q_quantize_embeddings(spark, sf_dir):
 def q_multimodal_arrow_stats(spark, sf_dir):
     """mapInArrow payload stats (zero-pandas Arrow kernel); oracle checks
     the SQL-expressible byte lengths over the synthesized media table."""
-    from k_means_hadoop_spark.operators.multimodal import arrow_byte_stats, media_from_documents
-
     return arrow_byte_stats(media_from_documents(_docs(spark, sf_dir)))
 
 
@@ -1930,11 +1912,6 @@ def q_pca_project(spark, sf_dir):
     correlated basis flips the hash.  Per-point projection parity vs
     NumPy (sign-invariant) stays pinned in
     tests/test_pca_streaming_multimodal.py."""
-    from k_means_hadoop_spark.operators.assign import assign_expr
-    from k_means_hadoop_spark.operators.kmeans import init_ids
-    from k_means_hadoop_spark.operators.pca import pca_project
-    from k_means_hadoop_spark.sources.points import points_from_embeddings
-
     pts = points_from_embeddings(spark, sf_dir)
     asg = assign_expr(pts, init_ids(pts, KNN_QUERY_IDS))
     proj, _model = pca_project(asg, k=2)
@@ -1989,13 +1966,7 @@ def q_streaming_window_stats(spark, sf_dir):
     availableNow over one file admits no late data, so the result is
     deterministic and equals the batch oracle SQL — the strongest
     possible check of the streaming plan."""
-    from k_means_hadoop_spark.session import scratch_dir
     import uuid
-
-    from k_means_hadoop_spark.streaming.stream_kmeans import (
-        read_event_stream,
-        windowed_event_stats,
-    )
 
     name = f"stream_win_{uuid.uuid4().hex[:8]}"
     stream = read_event_stream(spark, f"{sf_dir}/events.parquet")
@@ -2034,10 +2005,7 @@ def q_streaming_kmeans_assign(spark, sf_dir):
     source, drained with availableNow into a memory sink.  Append mode
     (no state, no watermark) — every input row appears exactly once, so
     the batch SQL oracle is an exact check of the streaming plan."""
-    from k_means_hadoop_spark.session import scratch_dir
     import uuid
-
-    from k_means_hadoop_spark.streaming.stream_kmeans import read_event_stream, stream_assign
 
     name = f"stream_asg_{uuid.uuid4().hex[:8]}"
     stream = read_event_stream(spark, f"{sf_dir}/events.parquet")
@@ -2060,13 +2028,9 @@ def q_streaming_stateful_totals(spark, sf_dir):
     availableNow.  Update-mode emits one refreshed row per user per
     micro-batch; the final state (row with max n_events per user) must
     equal the batch GROUP BY — which is exactly what the oracle checks."""
-    from k_means_hadoop_spark.session import scratch_dir
     import uuid
 
     from pyspark.sql import Window
-
-    from k_means_hadoop_spark.streaming.stateful import stateful_user_totals
-    from k_means_hadoop_spark.streaming.stream_kmeans import read_event_stream
 
     name = f"stream_state_{uuid.uuid4().hex[:8]}"
     stream = read_event_stream(spark, f"{sf_dir}/events.parquet")
@@ -2095,9 +2059,6 @@ FROM events GROUP BY user_id
 """
 
 
-# DuckDB tokenization shared by several oracle strings below.
-_TOKS = "string_split_regex(lower(trim(text)), '\\s+')"
-
 PYDS_N = 5000
 
 
@@ -2107,8 +2068,6 @@ def q_python_datasource_scan(spark, sf_dir):
     counts and sums.  The oracle reproduces the generator with DuckDB
     range() — the scan itself is cross-engine-checked, proving the
     partitioned reader emits exactly the declared sequence."""
-    from k_means_hadoop_spark.sources.python_datasource import read_arith_seq
-
     seq = read_arith_seq(spark, n=PYDS_N, parts=8)
     return (
         seq.groupBy((F.col("val") % 7).alias("bucket"))
@@ -2136,8 +2095,6 @@ def q_udtf_tokenize(spark, sf_dir):
     Arrow-batched table-function runner (no JVM-side explode)."""
     import uuid
 
-    from k_means_hadoop_spark.functions.udtfs import register
-
     register(spark)
     view = f"docs_udtf_{uuid.uuid4().hex[:8]}"
     _docs(spark, sf_dir).filter(F.col("doc_id") < UDTF_MAX_DOC).createOrReplaceTempView(view)
@@ -2147,11 +2104,11 @@ def q_udtf_tokenize(spark, sf_dir):
 
 
 # token != '' mirrors the UDTF's empty-token filter: string_split_regex
-# of an empty string yields one '' element (Python's filtered split
-# yields none), and '' only ever appears as the sole token of
-# empty/whitespace-only text, so filtering it cannot shift positions.
+# of an empty string yields one '' element, and a tab or newline at
+# either end of the text (trim strips spaces only) leaves one there.
+# Both sides number tokens before the filter, so positions agree.
 UDTF_SQL = f"""
-WITH t AS (SELECT doc_id, {_TOKS} AS toks FROM documents WHERE doc_id < {UDTF_MAX_DOC})
+WITH t AS (SELECT doc_id, {tokens_sql('text')} AS toks FROM documents WHERE doc_id < {UDTF_MAX_DOC})
 SELECT doc_id, pos, token FROM (
   SELECT doc_id, (generate_subscripts(toks, 1) - 1)::INTEGER AS pos, unnest(toks) AS token
   FROM t)
@@ -2176,13 +2133,9 @@ def q_streaming_tws_stats(spark, sf_dir):
     stats: ValueState totals + MapState distinct-type counts, drained
     with availableNow; the last update per user must equal the batch
     GROUP BY — the oracle check."""
-    from k_means_hadoop_spark.session import scratch_dir
     import uuid
 
     from pyspark.sql import Window
-
-    from k_means_hadoop_spark.streaming.stateful import tws_user_stats
-    from k_means_hadoop_spark.streaming.stream_kmeans import read_event_stream
 
     name = f"stream_tws_{uuid.uuid4().hex[:8]}"
     stream = read_event_stream(spark, f"{sf_dir}/events.parquet")
@@ -2250,7 +2203,6 @@ STREAMING_TWS_CAPABILITY_SQL = (
 
 def _drain(stream_df, prefix: str):
     """availableNow → memory sink, return the drained table (append mode)."""
-    from k_means_hadoop_spark.session import scratch_dir
     import uuid
 
     name = f"{prefix}_{uuid.uuid4().hex[:8]}"
@@ -2270,9 +2222,6 @@ def q_streaming_dedup_keys(spark, sf_dir):
     """Stateful streaming dedup: first-seen (user_id, event_type) pairs.
     Output order is nondeterministic but the SET of emitted keys equals
     batch DISTINCT — exactly what the hash compare checks."""
-    from k_means_hadoop_spark.streaming.relational import dedup_stream_keys
-    from k_means_hadoop_spark.streaming.stream_kmeans import read_event_stream
-
     stream = read_event_stream(spark, f"{sf_dir}/events.parquet")
     name = _drain(dedup_stream_keys(stream, ["user_id", "event_type"]), "stream_dedup")
     return spark.table(name)
@@ -2287,9 +2236,6 @@ def q_streaming_enrich_join(spark, sf_dir):
     """Stream-static broadcast join: arriving events pick up customer
     dimension columns; stateless, so append mode emits each event once
     and the batch join SQL is an exact oracle."""
-    from k_means_hadoop_spark.streaming.relational import enrich_events_with_customer
-    from k_means_hadoop_spark.streaming.stream_kmeans import read_event_stream
-
     customers = spark.read.parquet(f"{sf_dir}/customer.parquet")
     stream = read_event_stream(spark, f"{sf_dir}/events.parquet")
     enriched = enrich_events_with_customer(stream, customers).select(
@@ -2312,9 +2258,6 @@ def q_streaming_interval_join(spark, sf_dir):
     watermark-bounded state on both sides, drained with availableNow.
     Inner join + append → each matched pair exactly once, so the batch
     interval-join SQL is an exact oracle."""
-    from k_means_hadoop_spark.streaming.relational import join_view_click_streams
-    from k_means_hadoop_spark.streaming.stream_kmeans import read_event_stream
-
     views = read_event_stream(spark, f"{sf_dir}/events.parquet").filter(
         F.col("event_type") == "view"
     )
@@ -2347,8 +2290,6 @@ def q_streaming_outer_interval_join(spark, sf_dir):
     exactly that eviction rule (matched pairs unconditionally, null
     rows only where view_ts + 30 min < watermark).  This pins Spark's
     outer-join state eviction, not just the join condition."""
-    from k_means_hadoop_spark.streaming.stream_kmeans import read_event_stream
-
     def side(et, user, eid, ts):
         return (
             read_event_stream(spark, f"{sf_dir}/events.parquet")
@@ -2411,10 +2352,6 @@ def q_streaming_upsert_snapshot(spark, sf_dir):
     the MERGE-on-parquet loop (dynamic partition overwrite, bucketed
     rewrite) a driver-checked component rather than a test-only one."""
     import os
-    from k_means_hadoop_spark.session import scratch_dir
-
-    from k_means_hadoop_spark.streaming.relational import streaming_upsert_snapshot
-    from k_means_hadoop_spark.streaming.stream_kmeans import read_event_stream
 
     root = scratch_dir("upsert")
     out = os.path.join(root, "snap")  # must not pre-exist: first batch detects absence
@@ -2453,14 +2390,6 @@ def q_streaming_kmeans_foreachbatch(spark, sf_dir):
     the fixed init centroids, per-cluster batch means, one blended
     step — so the driver hash-checks the foreachBatch state loop itself,
     not just its plumbing."""
-    from k_means_hadoop_spark.session import scratch_dir
-
-    from k_means_hadoop_spark.streaming.stream_kmeans import (
-        StreamingKMeansState,
-        read_event_stream,
-        streaming_kmeans_update,
-    )
-
     state = StreamingKMeansState(
         centroids=[(c, list(v)) for c, v in STREAM_CENTROIDS], alpha=STREAM_KMEANS_ALPHA
     )
@@ -2501,12 +2430,9 @@ def q_streaming_session_windows(spark, sf_dir):
     merged sessions must equal the batch gaps-and-islands SQL — the same
     oracle as the batch `session_windows_events`, checking the streaming
     MERGING state machine against a closed-form formulation."""
-    from k_means_hadoop_spark.session import scratch_dir
     import uuid
 
     from pyspark.sql import functions as SF
-
-    from k_means_hadoop_spark.streaming.stream_kmeans import read_event_stream
 
     name = f"stream_sess_{uuid.uuid4().hex[:8]}"
     stream = read_event_stream(spark, f"{sf_dir}/events.parquet")
@@ -2573,8 +2499,6 @@ def q_dedup_survivors(spark, sf_dir):
     single window over comp_id."""
     from pyspark.sql import Window
 
-    from k_means_hadoop_spark.operators import text
-
     docs = _docs(spark, sf_dir)
     comps = dedup.duplicate_components(
         dedup.minhash_lsh_candidates(docs, n=NGRAM_N)
@@ -2604,8 +2528,6 @@ def q_dedup_edit_components(spark, sf_dir):
     component are their own singleton survivors; the only data-sized
     shuffles are the CC rounds and the per-component window."""
     from pyspark.sql import Window
-
-    from k_means_hadoop_spark.operators import text
 
     docs = _docs(spark, sf_dir)
     comps = dedup.duplicate_components(
@@ -2688,7 +2610,7 @@ SELECT n::BIGINT AS doc_id, min(r)::BIGINT AS comp_id FROM reach GROUP BY n"""
 
 def _top_terms_sql(k: int) -> str:
     return f"""
-WITH tok AS (SELECT unnest({_TOKS}) AS term FROM documents)
+WITH tok AS (SELECT unnest({tokens_sql('text')}) AS term FROM documents)
 SELECT term, count(*)::BIGINT AS n FROM tok WHERE term != ''
 GROUP BY term ORDER BY n DESC, term LIMIT {k}"""
 
@@ -2721,7 +2643,7 @@ SELECT id, cluster, round(dist, 6) AS dist FROM scored WHERE rn = 1
 
 def _marker_filter_sql(words: tuple[str, ...]) -> str:
     lst = ", ".join(f"'{w}'" for w in words)
-    return f"len(list_filter({_TOKS}, w -> list_contains([{lst}], w)))"
+    return f"len(list_filter({tokens_sql('text')}, w -> list_contains([{lst}], w)))"
 
 
 def _lang_id_sql() -> str:
@@ -2734,30 +2656,6 @@ def _lang_id_sql() -> str:
         case += f"WHEN s_{lang} > 0 AND s_{lang} >= greatest({', '.join(others)}) THEN '{lang}' "
     case += "ELSE 'und' END"
     return f"WITH s AS (SELECT doc_id, {score_cols} FROM documents) SELECT doc_id, {case} AS pred_lang FROM s"
-
-
-def _quality_sql() -> str:
-    stop_lst = ", ".join(f"'{w}'" for w in text.STOPWORDS)
-    return f"""
-WITH f AS (
-  SELECT doc_id,
-         length(text)::DOUBLE AS n_chars,
-         len({_TOKS})::DOUBLE AS n_toks,
-         (length(text) - length(regexp_replace(text, '[.,!?;:]', '', 'g')))::DOUBLE AS punct,
-         (length(text) - length(regexp_replace(text, '[0-9]', '', 'g')))::DOUBLE AS digits,
-         len(list_filter({_TOKS}, w -> list_contains([{stop_lst}], w)))::DOUBLE AS stops
-  FROM documents)
-SELECT doc_id,
-       n_chars::BIGINT AS n_chars,
-       n_toks::BIGINT AS n_tokens,
-       round((n_chars - (n_toks - 1)) / n_toks, 6) AS avg_token_len,
-       round(punct / n_chars, 6) AS punct_ratio,
-       round(stops / n_toks, 6) AS stop_ratio,
-       round(digits / n_chars, 6) AS digit_ratio,
-       round(greatest(0.0, least(1.0,
-             0.25 + least(n_toks / 400.0, 0.35) + least(stops / n_toks * 2.0, 0.25)
-             - punct / n_chars * 2.0 - digits / n_chars * 1.5)), 6) AS quality
-FROM f"""
 
 
 def _simhash_cte() -> str:
@@ -2773,17 +2671,9 @@ def _simhash_cte() -> str:
     )
     return (
         f"tok AS (SELECT doc_id, {h} AS h FROM "
-        f"  (SELECT doc_id, unnest({_TOKS}) AS w FROM documents)), "
+        f"  (SELECT doc_id, unnest({tokens_sql('text')}) AS w FROM documents)), "
         f"tallies AS (SELECT doc_id, {sums} FROM tok GROUP BY doc_id), "
         f"sh AS (SELECT doc_id, {fp} AS simhash FROM tallies)"
-    )
-
-
-def _shingle_cte(n: int) -> str:
-    """CTE 'sh_tbl' of (doc_id, shingle) distinct word n-grams."""
-    return (
-        f"sh_tbl AS (SELECT doc_id, unnest({word_ngrams_sql('text', n)}) AS shingle "
-        "FROM documents)"
     )
 
 
@@ -2799,50 +2689,12 @@ FROM pairs JOIN cnt ca ON a_id = ca.doc_id JOIN cnt cb ON b_id = cb.doc_id
 WHERE round(common::DOUBLE / (ca.n_sh + cb.n_sh - common), 6) >= {threshold}"""
 
 
-def _minhash_ctes(n: int) -> str:
-    """CTE chain sh_tbl → hashed → sig → stacked shared by the LSH
-    candidate and verified-pair oracles."""
-    h = stable_hash64_sql("shingle")
-    mins = ", ".join(
-        f"min({minhash_value_sql('h', a, b)}) AS m{i}"
-        for i, (a, b) in enumerate(dedup.MINHASH_PARAMS)
-    )
-    rows_per_band = len(dedup.MINHASH_PARAMS) // dedup.LSH_BANDS
-    band_exprs = []
-    for bi in range(dedup.LSH_BANDS):
-        members = " || '|' || ".join(
-            f"m{bi * rows_per_band + j}::VARCHAR" for j in range(rows_per_band)
-        )
-        band_exprs.append(f"SELECT doc_id, {bi} AS band, md5({members}) AS bucket FROM sig")
-    stacked = " UNION ALL ".join(band_exprs)
-    return f"""{_shingle_cte(n)},
-hashed AS (SELECT doc_id, {h} AS h FROM sh_tbl),
-sig AS (SELECT doc_id, {mins} FROM hashed GROUP BY doc_id),
-stacked AS ({stacked})"""
-
-
 def _minhash_sql(n: int) -> str:
     return f"""
 WITH {_minhash_ctes(n)}
 SELECT DISTINCT a.doc_id AS a_id, b.doc_id AS b_id
 FROM stacked a JOIN stacked b
   ON a.band = b.band AND a.bucket = b.bucket AND a.doc_id < b.doc_id"""
-
-
-def _minhash_verified_sql(n: int, threshold: float) -> str:
-    jac = (
-        "len(list_intersect(a.sh_arr, b.sh_arr))::DOUBLE / "
-        "(len(a.sh_arr) + len(b.sh_arr) - len(list_intersect(a.sh_arr, b.sh_arr)))"
-    )
-    return f"""
-WITH {_minhash_ctes(n)},
-cand AS (SELECT DISTINCT a.doc_id AS a_id, b.doc_id AS b_id
-         FROM stacked a JOIN stacked b
-           ON a.band = b.band AND a.bucket = b.bucket AND a.doc_id < b.doc_id),
-arrs AS (SELECT doc_id, {word_ngrams_sql('text', n)} AS sh_arr FROM documents)
-SELECT c.a_id, c.b_id, round({jac}, 6) AS jaccard
-FROM cand c JOIN arrs a ON c.a_id = a.doc_id JOIN arrs b ON c.b_id = b.doc_id
-WHERE round({jac}, 6) >= {threshold}"""
 
 
 def _edit_verified_sql(n: int, t: int) -> str:
@@ -2936,61 +2788,10 @@ FROM cand c JOIN v av ON c.a_id = av.vid JOIN v bv ON c.b_id = bv.vid
 WHERE round(list_cosine_similarity(av.vec, bv.vec), 6) >= {threshold}"""
 
 
-def _unigram_logprob_sql() -> str:
-    return f"""
-WITH tok AS (SELECT doc_id, unnest({_TOKS}) AS tok FROM documents),
-t AS (SELECT doc_id, tok FROM tok WHERE tok != ''),
-vocab AS (SELECT tok, count(*)::BIGINT AS cnt FROM t GROUP BY tok),
-n AS (SELECT sum(cnt)::BIGINT AS n_total FROM vocab)
-SELECT doc_id, count(*)::BIGINT AS n_tokens,
-       round(avg(ln(cnt::DOUBLE / n_total::DOUBLE)), 6) AS avg_logprob
-FROM t JOIN vocab USING (tok) CROSS JOIN n
-GROUP BY doc_id"""
-
-
-
-def _gopher_sql() -> str:
-    from k_means_hadoop_spark.operators.text import (
-        GOPHER_MAX_MEAN_LEN, GOPHER_MAX_TOP_RATIO, GOPHER_MAX_WORDS,
-        GOPHER_MIN_ALPHA_FRAC, GOPHER_MIN_MEAN_LEN, GOPHER_MIN_STOPWORDS,
-        GOPHER_MIN_WORDS, STOPWORDS,
-    )
-
-    stops = ", ".join(f"'{w}'" for w in STOPWORDS)
-    top = (
-        "list_max(list_transform(list_distinct(toks), "
-        "t -> len(list_filter(toks, x -> x = t))))"
-    )
-    return f"""
-WITH t AS (SELECT doc_id, list_filter({_TOKS}, x -> x != '') AS toks FROM documents),
-m AS (SELECT doc_id,
-             len(toks)::BIGINT AS n_words,
-             list_sum(list_transform(toks, t -> len(t)))::DOUBLE / len(toks)::DOUBLE AS ml,
-             len(list_filter(toks, t -> regexp_matches(t, '[a-z]')))::DOUBLE
-               / len(toks)::DOUBLE AS af,
-             len(list_filter(toks, t -> t IN ({stops})))::BIGINT AS n_stop,
-             {top}::DOUBLE / len(toks)::DOUBLE AS tr
-      FROM t),
-r AS (SELECT *, CASE WHEN n_words < {GOPHER_MIN_WORDS} THEN 'too_few_words'
-                     WHEN n_words > {GOPHER_MAX_WORDS} THEN 'too_many_words'
-                     WHEN ml < {GOPHER_MIN_MEAN_LEN} THEN 'short_words'
-                     WHEN ml > {GOPHER_MAX_MEAN_LEN} THEN 'long_words'
-                     WHEN af < {GOPHER_MIN_ALPHA_FRAC} THEN 'non_alpha'
-                     WHEN n_stop < {GOPHER_MIN_STOPWORDS} THEN 'no_stopwords'
-                     WHEN tr > {GOPHER_MAX_TOP_RATIO} THEN 'repetitive'
-                     ELSE 'pass' END AS reason
-      FROM m)
-SELECT doc_id, n_words, round(ml, 6) AS mean_word_len, round(af, 6) AS alpha_frac,
-       n_stop, round(tr, 6) AS top_ratio, reason = 'pass' AS verdict, reason
-FROM r"""
-
-
 def _bigram_logprob_sql() -> str:
-    from k_means_hadoop_spark.operators.text import BIGRAM_LAMBDA
-
     lam = BIGRAM_LAMBDA
     return f"""
-WITH t AS (SELECT doc_id, list_filter({_TOKS}, x -> x != '') AS toks FROM documents),
+WITH t AS (SELECT doc_id, list_filter({tokens_sql('text')}, x -> x != '') AS toks FROM documents),
 pairs AS (
   SELECT doc_id,
          unnest(list_transform(range(1, len(toks)),
@@ -3036,7 +2837,7 @@ def _repetition_sql() -> str:
         "t -> len(list_filter(toks, x -> x = t))))"
     )
     return f"""
-WITH t AS (SELECT doc_id, {_TOKS} AS toks FROM documents)
+WITH t AS (SELECT doc_id, {tokens_sql('text')} AS toks FROM documents)
 SELECT doc_id, len(toks)::BIGINT AS n_tokens,
        len(list_distinct(toks))::BIGINT AS n_distinct,
        round(1.0 - len(list_distinct(toks))::DOUBLE / len(toks)::DOUBLE, 6) AS dup_ratio,
@@ -3057,7 +2858,7 @@ FROM s"""
 
 def _tfidf_sql(k: int) -> str:
     return f"""
-WITH tok AS (SELECT doc_id, unnest({_TOKS}) AS term FROM documents),
+WITH tok AS (SELECT doc_id, unnest({tokens_sql('text')}) AS term FROM documents),
 tf AS (SELECT doc_id, term, count(*)::BIGINT AS tf
        FROM tok WHERE term != '' GROUP BY doc_id, term),
 dfreq AS (SELECT term, count(*)::BIGINT AS df FROM tf GROUP BY term),
@@ -3097,8 +2898,9 @@ _INCR_SQL = _incremental_sql(NGRAM_N, NGRAM_THRESHOLD, INCR_BATCH_MOD, INCR_BATC
 PIPELINE_QUERIES: dict = {
     "text_token_counts": (
         q_token_counts,
-        f"SELECT doc_id, len({_TOKS})::INTEGER AS ws_tokens, "
-        "len(regexp_extract_all(text, '[A-Za-z]+|[0-9]+|[^A-Za-z0-9\\s]'))::BIGINT AS bpe_tokens "
+        # text.BPE_REGEX, with its Java \s spelled SQL_WS for RE2
+        f"SELECT doc_id, len({tokens_sql('text')})::INTEGER AS ws_tokens, "
+        f"len(regexp_extract_all(text, '[A-Za-z]+|[0-9]+|[^A-Za-z0-9{SQL_WS[1:-1]}]'))::BIGINT AS bpe_tokens "
         "FROM documents",
     ),
     "text_quality_scores": (q_quality_scores, _quality_sql()),
@@ -3123,7 +2925,7 @@ PIPELINE_QUERIES: dict = {
     "text_fingerprints": (
         q_fingerprints,
         "SELECT doc_id, "
-        + stable_hash64_sql("regexp_replace(lower(trim(text)), '\\s+', ' ', 'g')")
+        + stable_hash64_sql(f"regexp_replace(lower(trim(text)), '{SQL_WS}+', ' ', 'g')")
         + " AS fp FROM documents",
     ),
     "text_simhash": (q_simhash, f"WITH {_simhash_cte()} SELECT doc_id, simhash FROM sh"),

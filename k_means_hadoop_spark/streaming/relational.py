@@ -13,6 +13,10 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from k_means_hadoop_spark.operators.analytics import merge_changelog_of
+from k_means_hadoop_spark.operators.dedup import build_signature_store, incremental_dedup_from_store
+from k_means_hadoop_spark.session import scratch_dir
+
 
 def dedup_stream_keys(events: DataFrame, keys: list[str]) -> DataFrame:
     """First-seen streaming deduplication on ``keys``.
@@ -189,11 +193,6 @@ def streaming_ingest_dedup(
     are written partitioned by batch_id with dynamic partition
     overwrite — a replay rewrites its own partition instead of
     double-appending rows."""
-    from k_means_hadoop_spark.operators.dedup import (
-        build_signature_store,
-        incremental_dedup_from_store,
-    )
-
     corpus = (
         docs_stream.sparkSession.read.parquet(corpus_path)
         .filter(F.col("doc_id") % batch_mod != batch_rem)
@@ -232,9 +231,6 @@ def streaming_merge_changelog(spark, sf_dir: str, snap_root: str | None = None) 
     any order converges to the batch operator's snapshot — the same
     partition-invariance argument as the sketch merges, proven here by
     registering against the IDENTICAL oracle."""
-    from k_means_hadoop_spark.operators.analytics import merge_changelog_of
-    from k_means_hadoop_spark.session import scratch_dir
-
     base = (
         spark.read.parquet(f"{sf_dir}/customer.parquet")
         .select("c_custkey", "c_acctbal")

@@ -28,6 +28,9 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from k_means_hadoop_spark.operators.assign import Centroids, assign_expr
+from k_means_hadoop_spark.operators.recompute import recompute_centroids
+from k_means_hadoop_spark.session import scratch_dir
+
 
 def _events_schema(ts_type: T.DataType) -> T.StructType:
     return T.StructType(
@@ -55,7 +58,6 @@ def read_event_stream(spark: SparkSession, path: str, max_files_per_trigger: int
     local test fixtures) is staged as a symlink inside a temp directory,
     because the file stream source only monitors directories."""
     import os
-    from k_means_hadoop_spark.session import scratch_dir
 
     batch_ts = spark.read.parquet(path).schema["ts"].dataType
     if path.endswith(".parquet") and os.path.isfile(path):
@@ -125,8 +127,6 @@ class StreamingKMeansState:
     def update_from_batch(self, batch_df: DataFrame) -> None:
         """Mini-batch update: assign batch to current centroids, then
         c ← (1-α)·c + α·batch_mean for clusters that received points."""
-        from k_means_hadoop_spark.operators.recompute import recompute_centroids
-
         if not batch_df.take(1):
             return
         d = len(self.centroids[0][1])
