@@ -399,7 +399,7 @@ def _edit_distance_sql(t: int) -> str:
     # generators, one answer) — on SINGLE-BYTE text: DuckDB levenshtein
     # counts bytes, Spark's counts characters; all shipped fixtures are
     # ASCII (see edit_distance_pairs' unicode-seam note and the
-    # enforced fixture pin in tests/test_round11_ops.py).
+    # enforced fixture pin in tests/test_dedup.py).
     return f"""
 WITH d AS (SELECT doc_id, text, length(text) AS len FROM documents),
 cand AS (SELECT a.doc_id AS a_id, b.doc_id AS b_id
@@ -1911,7 +1911,7 @@ def q_pca_project(spark, sf_dir):
     total variance.  A broken centering, a non-eigen direction, or a
     correlated basis flips the hash.  Per-point projection parity vs
     NumPy (sign-invariant) stays pinned in
-    tests/test_pca_streaming_multimodal.py."""
+    tests/test_pca.py."""
     pts = points_from_embeddings(spark, sf_dir)
     asg = assign_expr(pts, init_ids(pts, KNN_QUERY_IDS))
     proj, _model = pca_project(asg, k=2)
@@ -2489,20 +2489,17 @@ def q_dedup_components(spark, sf_dir):
     return dedup.duplicate_components(pairs)
 
 
-def q_dedup_survivors(spark, sf_dir):
+def _survivors(docs, pairs):
     """The dedup pipeline's ACTUAL output: one canonical survivor per
-    duplicate component (highest quality score, ties to the lowest
-    doc_id), every other member marked dropped; docs outside any
+    duplicate component of ``pairs`` (highest quality score, ties to the
+    lowest doc_id), every other member marked dropped; docs outside any
     component are their own singleton survivors.  Composes candidate
     pairs → connected components → quality join → one per-component
     window — the only data-sized shuffles are the CC rounds and the
     single window over comp_id."""
     from pyspark.sql import Window
 
-    docs = _docs(spark, sf_dir)
-    comps = dedup.duplicate_components(
-        dedup.minhash_lsh_candidates(docs, n=NGRAM_N)
-    )
+    comps = dedup.duplicate_components(pairs)
     q = text.quality_scores(docs).select("doc_id", "quality")
     full = (
         docs.select("doc_id")
@@ -2516,45 +2513,34 @@ def q_dedup_survivors(spark, sf_dir):
         "comp_id",
         (F.row_number().over(w) == 1).cast("int").alias("is_survivor"),
     )
+
+
+def q_dedup_survivors(spark, sf_dir):
+    """Survivors over the MinHash LSH candidate pairs."""
+    docs = _docs(spark, sf_dir)
+    return _survivors(docs, dedup.minhash_lsh_candidates(docs, n=NGRAM_N))
 
 
 def q_dedup_edit_components(spark, sf_dir):
-    """The survivor-selecting composition of the exact edit-distance
-    tier (round-11 verdict item 5): ``edit_verified_pairs`` (MinHash
-    LSH candidates → length prune → threshold levenshtein) → connected
-    components → per-component quality arg-max — exact-char near-dedup
-    as a complete production pipeline stage, the dedup_survivors shape
-    with the character measure driving the pairs.  Docs outside any
-    component are their own singleton survivors; the only data-sized
-    shuffles are the CC rounds and the per-component window."""
-    from pyspark.sql import Window
-
+    """Survivors over the exact edit-distance tier's pairs
+    (``edit_verified_pairs``: MinHash LSH candidates → length prune →
+    threshold levenshtein) — exact-char near-dedup as a complete
+    pipeline stage."""
     docs = _docs(spark, sf_dir)
-    comps = dedup.duplicate_components(
-        dedup.edit_verified_pairs(docs, n=NGRAM_N, max_dist=EDIT_DIST_MAX)
-    )
-    q = text.quality_scores(docs).select("doc_id", "quality")
-    full = (
-        docs.select("doc_id")
-        .join(comps, "doc_id", "left")
-        .withColumn("comp_id", F.coalesce("comp_id", F.col("doc_id")))
-        .join(q, "doc_id")
-    )
-    w = Window.partitionBy("comp_id").orderBy(F.col("quality").desc(), F.col("doc_id"))
-    return full.select(
-        "doc_id",
-        "comp_id",
-        (F.row_number().over(w) == 1).cast("int").alias("is_survivor"),
+    return _survivors(
+        docs, dedup.edit_verified_pairs(docs, n=NGRAM_N, max_dist=EDIT_DIST_MAX)
     )
 
 
-def _edit_components_sql() -> str:
-    """Transitive closure of the edit-verified pair list (the
-    _components_sql recursive-CTE pattern over the LSH-mirrored
-    candidate chain + levenshtein verify of _edit_verified_sql)."""
+def _components_sql(pairs: str) -> str:
+    """Transitive closure of the pair list ``pairs`` (a SELECT of a_id,
+    b_id) as a recursive CTE — exact on the sf0.01 pair count; the Spark
+    side scales instead via per-round joins.  The pair CTE is
+    MATERIALIZED: inlined, DuckDB re-runs the whole pair query on every
+    recursion round."""
     return f"""
 WITH RECURSIVE
-pairs AS (SELECT a_id, b_id FROM ({_edit_verified_sql(NGRAM_N, EDIT_DIST_MAX)}) q),
+pairs AS MATERIALIZED ({pairs}),
 edges AS (SELECT a_id AS s, b_id AS d FROM pairs
           UNION SELECT b_id, a_id FROM pairs),
 reach(n, r) AS (
@@ -2565,9 +2551,9 @@ reach(n, r) AS (
 SELECT n::BIGINT AS doc_id, min(r)::BIGINT AS comp_id FROM reach GROUP BY n"""
 
 
-def _edit_survivors_sql() -> str:
+def _survivors_sql(pairs: str) -> str:
     return f"""
-WITH comps AS (SELECT * FROM ({_edit_components_sql()}) c),
+WITH comps AS (SELECT * FROM ({_components_sql(pairs)}) c),
 q AS (SELECT doc_id, quality FROM ({_quality_sql()}) t),
 allrows AS (SELECT d.doc_id, coalesce(c.comp_id, d.doc_id) AS comp_id, q.quality
          FROM documents d LEFT JOIN comps c ON d.doc_id = c.doc_id
@@ -2576,36 +2562,6 @@ SELECT doc_id, comp_id::BIGINT AS comp_id,
        (row_number() OVER (PARTITION BY comp_id
                            ORDER BY quality DESC, doc_id) = 1)::INTEGER AS is_survivor
 FROM allrows"""
-
-
-def _survivors_sql() -> str:
-    return f"""
-WITH comps AS (SELECT * FROM ({_components_sql()}) c),
-q AS (SELECT doc_id, quality FROM ({_quality_sql()}) t),
-allrows AS (SELECT d.doc_id, coalesce(c.comp_id, d.doc_id) AS comp_id, q.quality
-         FROM documents d LEFT JOIN comps c ON d.doc_id = c.doc_id
-                          JOIN q ON d.doc_id = q.doc_id)
-SELECT doc_id, comp_id::BIGINT AS comp_id,
-       (row_number() OVER (PARTITION BY comp_id
-                           ORDER BY quality DESC, doc_id) = 1)::INTEGER AS is_survivor
-FROM allrows"""
-
-
-def _components_sql() -> str:
-    """Transitive closure of the minhash pair list as a recursive CTE —
-    exact on the sf0.01 pair count; the Spark side scales instead via
-    per-round joins."""
-    return f"""
-WITH RECURSIVE
-pairs AS (SELECT * FROM ({_minhash_sql(NGRAM_N)}) q),
-edges AS (SELECT a_id AS s, b_id AS d FROM pairs
-          UNION SELECT b_id, a_id FROM pairs),
-reach(n, r) AS (
-  SELECT DISTINCT s, s FROM edges
-  UNION
-  SELECT rr.n, e.d FROM reach rr JOIN edges e ON e.s = rr.r
-)
-SELECT n::BIGINT AS doc_id, min(r)::BIGINT AS comp_id FROM reach GROUP BY n"""
 
 
 def _top_terms_sql(k: int) -> str:
@@ -2703,7 +2659,7 @@ def _edit_verified_sql(n: int, t: int) -> str:
     must REPRODUCE the candidate set, not approximate it), then the
     length necessary-condition prune and the shared L1-prefiltered
     levenshtein verify tail.  Byte-vs-character parity holds on the
-    ASCII fixtures (enforced by tests/test_round11_ops.py's fixture
+    ASCII fixtures (enforced by tests/test_dedup.py's fixture
     pin)."""
     return f"""
 WITH {_minhash_ctes(n)},
@@ -2895,6 +2851,9 @@ _KNN_IDS_SQL = ", ".join(str(i) for i in KNN_QUERY_IDS)
 _INCR_SQL = _incremental_sql(NGRAM_N, NGRAM_THRESHOLD, INCR_BATCH_MOD, INCR_BATCH_REM)
 
 # Every pipeline query as its (builder, DuckDB oracle SQL) pair.
+_MINHASH_PAIRS = f"SELECT * FROM ({_minhash_sql(NGRAM_N)}) q"
+_EDIT_PAIRS = f"SELECT a_id, b_id FROM ({_edit_verified_sql(NGRAM_N, EDIT_DIST_MAX)}) q"
+
 PIPELINE_QUERIES: dict = {
     "text_token_counts": (
         q_token_counts,
@@ -3058,9 +3017,9 @@ SELECT qid, nid, round(sim, 6) AS cos_sim, rank FROM ranked WHERE rank <= 5""",
     "top_terms_corpus": (q_top_terms, _top_terms_sql(50)),
     "streaming_session_windows": (q_streaming_session_windows, SESSION_WINDOW_SQL),
     "unpivot_quality_metrics": (q_unpivot_quality, _unpivot_quality_sql()),
-    "dedup_components": (q_dedup_components, _components_sql()),
-    "dedup_survivors": (q_dedup_survivors, _survivors_sql()),
-    "dedup_edit_components": (q_dedup_edit_components, _edit_survivors_sql()),
+    "dedup_components": (q_dedup_components, _components_sql(_MINHASH_PAIRS)),
+    "dedup_survivors": (q_dedup_survivors, _survivors_sql(_MINHASH_PAIRS)),
+    "dedup_edit_components": (q_dedup_edit_components, _survivors_sql(_EDIT_PAIRS)),
     "pca_project": (q_pca_project, PCA_CONTRACT_SQL),  # spectral-contract oracle
     # Full-value complement of pca_project's MLlib eigensolver: explicit
     # distributed power iteration against an unrolled matvec CTE.

@@ -32,6 +32,17 @@ def scratch_dir(tag: str) -> str:
     return tempfile.mkdtemp(prefix=f"{tag}_", dir=_SCRATCH_ROOT)
 
 
+def driver_memory() -> str:
+    """``$SPARK_GRAFT_DRIVER_MEM`` when set, else a quarter of physical
+    memory capped at 48g, so a second Spark process beside this one
+    still fits in RAM."""
+    mem = os.environ.get("SPARK_GRAFT_DRIVER_MEM")
+    if mem is not None:
+        return mem
+    ram_mb = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES") // 2**20
+    return f"{min(48 * 1024, ram_mb // 4)}m"
+
+
 def get_spark(app_name: str = "k_means_hadoop_spark", shuffle_partitions: int | None = None) -> SparkSession:
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
     if shuffle_partitions is None:
@@ -45,7 +56,7 @@ def get_spark(app_name: str = "k_means_hadoop_spark", shuffle_partitions: int | 
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "48g"))
+        .config("spark.driver.memory", driver_memory())
         .config("spark.ui.enabled", "false")
         .config("spark.ui.showConsoleProgress", "false")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))

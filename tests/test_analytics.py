@@ -8,10 +8,48 @@ semantics — and that the distributed plans keep their scale shape.
 
 from __future__ import annotations
 
-import numpy as np
-import pytest
+import os
+from collections import deque
 
-from k_means_hadoop_spark.operators import analytics
+import duckdb
+import numpy as np
+import pandas as pd
+import pytest
+from hypothesis import given, settings
+from hypothesis import strategies as st
+from pyspark.sql import Window
+from pyspark.sql import functions as F
+
+from k_means_hadoop_spark.operators import analytics, dedup
+from k_means_hadoop_spark.operators import analytics as an
+from k_means_hadoop_spark.operators.analytics import (
+    _BFS_ITERS,
+    _CUSUM_SQL,
+    _KC_ITERS,
+    _KC_K,
+    _SP_ITERS,
+    _copurchase_edges,
+    _t,
+    anova_event_values,
+    bfs_levels,
+    cusum_changepoints,
+    dq_expectations,
+    interarrival_stats,
+    kcore_membership,
+    merge_apply_changelog,
+    shortest_paths_weighted,
+)
+from k_means_hadoop_spark.operators.assign import assign_expr
+from k_means_hadoop_spark.operators.kmeans import init_ids
+from k_means_hadoop_spark.operators.sketches import (
+    bloom_bits_streaming,
+    bloom_membership_audit,
+    cms_event_counts,
+    cms_event_counts_streaming,
+)
+from k_means_hadoop_spark.registry import SEEDS, _SIL_MAX_ID, _points, q_silhouette
+from k_means_hadoop_spark.registry_pipeline import NGRAM_N, NGRAM_THRESHOLD, _docs
+from k_means_hadoop_spark.session import scratch_dir
 
 
 @pytest.fixture(scope="module")
@@ -59,8 +97,6 @@ def test_corr_matches_numpy(spark, sf_dir, lineitem_pd):
 
 
 def test_chi2_cells_sum_to_statistic(spark, sf_dir):
-    import pandas as pd
-
     df = analytics.chi2_event_dow(spark, sf_dir).toPandas()
     # expected counts reconstruct the observed marginals exactly
     piv_o = df.pivot_table(index="event_type", columns="dow", values="observed", aggfunc="sum")
@@ -107,7 +143,6 @@ def test_pareto_ties_survive_together(spark):
         (6, 30, 9.0),   # largest size → survives
     ]
     df = spark.createDataFrame(rows, ["p_partkey", "p_size", "p_retailprice"])
-    import k_means_hadoop_spark.operators.analytics as an
 
     orig = an._t
     an._t = lambda s, d, n: df
@@ -121,7 +156,6 @@ def test_pareto_ties_survive_together(spark):
 def test_pareto_tied_frontier_pair(spark):
     rows = [(1, 10, 5.0), (2, 10, 5.0), (3, 5, 4.0), (4, 5, 4.5)]
     df = spark.createDataFrame(rows, ["p_partkey", "p_size", "p_retailprice"])
-    import k_means_hadoop_spark.operators.analytics as an
 
     orig = an._t
     an._t = lambda s, d, n: df
@@ -210,9 +244,6 @@ def test_pareto_plan_broadcasts_frontier(spark, sf_dir):
 def test_prefix_filter_equals_inverted_index(spark, sf_dir):
     """The PPJoin prefix filter must lose no pair and must prune the
     candidate space vs the full inverted-index join."""
-    from k_means_hadoop_spark.operators import dedup
-    from k_means_hadoop_spark.registry_pipeline import NGRAM_N, NGRAM_THRESHOLD, _docs
-
     docs = _docs(spark, sf_dir)
     full = sorted(
         tuple(r)
@@ -230,7 +261,6 @@ def test_prefix_filter_equals_inverted_index(spark, sf_dir):
     assert full, "fixture must contain near-dup pairs (vacuity guard)"
     # candidate pruning: pairs sharing >=1 PREFIX shingle must be fewer
     # than pairs sharing >=1 shingle at all
-    from pyspark.sql import functions as F
 
     sh = dedup.shingle_table(docs, NGRAM_N)
     a, b = sh.alias("a"), sh.alias("b")
@@ -246,7 +276,6 @@ def test_prefix_filter_equals_inverted_index(spark, sf_dir):
     )
     counts = sh.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n_sh"))
     df_tbl = sh.groupBy("shingle").agg(F.count(F.lit(1)).alias("df"))
-    from pyspark.sql import Window
 
     w = Window.partitionBy("doc_id").orderBy(F.col("df").asc(), F.col("shingle").asc())
     prefix = (
@@ -271,10 +300,6 @@ def test_prefix_filter_equals_inverted_index(spark, sf_dir):
 
 
 def test_silhouette_matches_numpy(spark, sf_dir):
-    from k_means_hadoop_spark.registry import q_silhouette, _SIL_MAX_ID, SEEDS, _points
-    from k_means_hadoop_spark.operators.assign import assign_expr
-    from k_means_hadoop_spark.operators.kmeans import init_ids
-
     got = {
         r["cluster"]: (r["n_points"], r["mean_silhouette"])
         for r in q_silhouette(spark, sf_dir).collect()
@@ -302,8 +327,6 @@ def test_silhouette_matches_numpy(spark, sf_dir):
 
 
 def test_cms_overestimates_only_and_collides(spark, sf_dir):
-    from k_means_hadoop_spark.operators.sketches import cms_event_counts
-
     df = cms_event_counts(spark, sf_dir).toPandas()
     assert (df["over"] >= 0).all(), "CMS must never underestimate"
     assert (df["est"] - df["exact"] == df["over"]).all()
@@ -313,8 +336,6 @@ def test_cms_overestimates_only_and_collides(spark, sf_dir):
 
 
 def test_bloom_guarantees(spark, sf_dir):
-    from k_means_hadoop_spark.operators.sketches import bloom_membership_audit
-
     row = bloom_membership_audit(spark, sf_dir).first()
     assert row["false_negatives"] == 0, "Bloom must never miss a member"
     assert row["n_members"] == row["n_nonmembers"] > 0
@@ -324,10 +345,6 @@ def test_bloom_guarantees(spark, sf_dir):
 
 
 def test_bfs_matches_local_bfs(spark, sf_dir):
-    from collections import deque
-
-    from k_means_hadoop_spark.operators.analytics import _BFS_ITERS, bfs_levels, _copurchase_edges
-
     edges = [(r["pa"], r["pb"]) for r in _copurchase_edges(spark, sf_dir).collect()]
     adj: dict[int, set[int]] = {}
     for a, b in edges:
@@ -350,8 +367,6 @@ def test_bfs_matches_local_bfs(spark, sf_dir):
 
 
 def test_dq_battery_has_both_result_classes(spark, sf_dir):
-    from k_means_hadoop_spark.operators.analytics import dq_expectations
-
     rows = {r["check_name"]: r for r in dq_expectations(spark, sf_dir).collect()}
     assert len(rows) == 7
     clean = {k for k, r in rows.items() if r["n_violations"] == 0}
@@ -368,13 +383,6 @@ def test_dq_battery_has_both_result_classes(spark, sf_dir):
 def test_streaming_cms_merges_multiple_batches(spark, sf_dir):
     """The stream must actually produce >1 micro-batch partial (else
     the merge path is untested) and equal the one-shot batch sketch."""
-    from k_means_hadoop_spark.operators.sketches import (
-        cms_event_counts,
-        cms_event_counts_streaming,
-    )
-
-    from k_means_hadoop_spark.session import scratch_dir
-
     store = scratch_dir("cms_store_test")
     batch = sorted(tuple(r) for r in cms_event_counts(spark, sf_dir).collect())
     streamed = sorted(
@@ -389,8 +397,6 @@ def test_streaming_cms_merges_multiple_batches(spark, sf_dir):
 
 
 def test_merge_changelog_applies_all_three_verbs(spark, sf_dir):
-    from k_means_hadoop_spark.operators.analytics import merge_apply_changelog, _t
-
     df = merge_apply_changelog(spark, sf_dir).toPandas()
     base = _t(spark, sf_dir, "customer").select("c_custkey", "c_acctbal").toPandas()
     mx = base["c_custkey"].max()
@@ -417,8 +423,6 @@ def test_merge_changelog_applies_all_three_verbs(spark, sf_dir):
 
 
 def test_anova_matches_scipy_free_formula(spark, sf_dir):
-    from k_means_hadoop_spark.operators.analytics import anova_event_values, _t
-
     row = anova_event_values(spark, sf_dir).first()
     pdf = (
         _t(spark, sf_dir, "events")
@@ -441,14 +445,6 @@ def test_anova_matches_scipy_free_formula(spark, sf_dir):
 
 
 def test_weighted_shortest_paths_match_local_bellman_ford(spark, sf_dir):
-    from k_means_hadoop_spark.operators.analytics import (
-        _SP_ITERS,
-        shortest_paths_weighted,
-        _copurchase_edges,
-        _t,
-    )
-    from pyspark.sql import functions as F
-
     li = (
         _t(spark, sf_dir, "lineitem")
         .where("l_partkey <= 300")
@@ -496,12 +492,6 @@ def test_weighted_shortest_paths_match_local_bellman_ford(spark, sf_dir):
 
 
 def test_streaming_bloom_merges_multiple_batches(spark, sf_dir):
-    from k_means_hadoop_spark.operators.sketches import (
-        bloom_bits_streaming,
-        bloom_membership_audit,
-    )
-    from k_means_hadoop_spark.session import scratch_dir
-
     store = scratch_dir("bloom_store_test")
     batch = sorted(tuple(r) for r in bloom_membership_audit(spark, sf_dir).collect())
     streamed = sorted(
@@ -514,13 +504,6 @@ def test_streaming_bloom_merges_multiple_batches(spark, sf_dir):
 
 
 def test_kcore_matches_local_peeling(spark, sf_dir):
-    from k_means_hadoop_spark.operators.analytics import (
-        _KC_ITERS,
-        _KC_K,
-        _copurchase_edges,
-        kcore_membership,
-    )
-
     edges = {(r["pa"], r["pb"]) for r in _copurchase_edges(spark, sf_dir).collect()}
     adj: dict[int, set[int]] = {}
     for a, b in edges:
@@ -538,9 +521,6 @@ def test_kcore_matches_local_peeling(spark, sf_dir):
 
 
 def test_interarrival_stats_match_pandas(spark, sf_dir):
-    import numpy as np
-    from k_means_hadoop_spark.operators.analytics import _t, interarrival_stats
-
     got = {
         r["event_type"]: (r["n_gaps"], r["p50_gap_s"], r["p90_gap_s"], r["max_gap_s"])
         for r in interarrival_stats(spark, sf_dir).collect()
@@ -563,52 +543,9 @@ def test_interarrival_stats_match_pandas(spark, sf_dir):
         assert mx == v.max()
 
 
-def test_prefix_sum_property_random_orders(spark):
-    """Property: prefix_sum equals the naive global window for random
-    values, duplicate keys, and any partition count."""
-    from hypothesis import given, settings, strategies as st
-
-    from pyspark.sql import Window
-    from pyspark.sql import functions as F
-
-    from k_means_hadoop_spark.partitioning import prefix_sum
-
-    @settings(max_examples=5, deadline=None)
-    @given(
-        vals=st.lists(
-            st.tuples(st.integers(0, 30), st.integers(-100, 100)),
-            min_size=1,
-            max_size=120,
-        ),
-        nparts=st.integers(2, 9),
-    )
-    def check(vals, nparts):
-        rows = [(i, k, v) for i, (k, v) in enumerate(vals)]
-        df = spark.createDataFrame(rows, ["i", "k", "v"])
-        order = [F.col("k").asc(), F.col("i").asc()]
-        got = {
-            r["i"]: r["cum"]
-            for r in prefix_sum(df, "v", order, num_parts=nparts).collect()
-        }
-        w = Window.orderBy("k", "i").rowsBetween(
-            Window.unboundedPreceding, Window.currentRow
-        )
-        want = {
-            r["i"]: r["cum"]
-            for r in df.withColumn("cum", F.sum("v").over(w)).collect()
-        }
-        assert got == want
-
-    check()
-
-
 def test_pareto_property_random_points(spark):
     """Property: the window skyline equals the brute-force dominance
     scan for random (size, price) clouds with ties."""
-    from hypothesis import given, settings, strategies as st
-
-    from k_means_hadoop_spark.operators import analytics as an
-
     @settings(max_examples=5, deadline=None)
     @given(
         pts=st.lists(
@@ -639,3 +576,72 @@ def test_pareto_property_random_points(spark):
         assert got == want
 
     check()
+
+
+def test_cusum_telescopes_to_zero(spark, sf_dir):
+    """S_K = Σ(c_j − T/K) over the whole series is identically 0, so
+    the last day's cusum must be 0 (integer-exactness check)."""
+    rows = sorted(
+        cusum_changepoints(spark, sf_dir).collect(), key=lambda r: r["day"]
+    )
+    assert rows[-1]["cusum"] == 0.0
+    assert any(r["is_changepoint"] for r in rows)
+
+
+def test_interpolated_docstrings_attached():
+    """The three .format() docstrings flagged by ADVICE must actually be
+    attached and interpolated (no stray {placeholders})."""
+    for fn in (cms_event_counts, kcore_membership, shortest_paths_weighted):
+        assert fn.__doc__, fn.__name__
+        assert "{" not in fn.__doc__, fn.__doc__
+
+
+def test_cusum_6dp_half_matches_duckdb(spark, tmp_path):
+    """128 days (k_days carries 2^7) with odd cumulative residuals —
+    every odd `scaled` lands on an exact 6dp half.  Spark and the
+    oracle must produce identical cusum values."""
+    rows = []
+    eid = 0
+    for d in range(128):
+        # 1 or 2 events/day in a pattern that makes scaled odd often
+        n = 1 + ((d * 7) % 3 == 0)
+        for _ in range(n):
+            rows.append((eid, f"2024-01-01 00:00:{d % 60:02d}", d))
+            eid += 1
+    df = spark.createDataFrame(rows, "event_id long, ts_s string, d int").select(
+        "event_id",
+        (F.to_timestamp("ts_s") + F.expr("make_interval(0,0,0,d,0,0,0)")).alias(
+            "ts"
+        ),
+    )
+    sf = str(tmp_path)
+    df.coalesce(1).write.mode("overwrite").parquet(os.path.join(sf, "events.parquet"))
+
+    got = {
+        r["day"]: r["cusum"]
+        for r in cusum_changepoints(spark, sf).collect()
+    }
+    con = duckdb.connect()
+    con.execute(
+        "CREATE VIEW events AS SELECT * FROM read_parquet("
+        f"'{os.path.join(sf, 'events.parquet')}/*.parquet')"
+    )
+    exp = {r[0]: r[2] for r in con.execute(_CUSUM_SQL).fetchall()}
+    assert got == exp
+    # the tie really is exercised: an odd `scaled` (exact 6dp half —
+    # scaled*1e6/128 = scaled*7812.5) must exist, i.e. DuckDB's
+    # banker's round(x, 6) disagrees with the floor form somewhere
+    n_ties = con.execute(
+        """
+        WITH daily AS (
+          SELECT ts::DATE AS day, count(*)::BIGINT AS n_events
+          FROM events GROUP BY 1),
+        tot AS (SELECT SUM(n_events)::BIGINT AS t, count(*)::BIGINT AS k
+                FROM daily),
+        s AS (SELECT k * SUM(n_events) OVER (ORDER BY day)
+                     - row_number() OVER (ORDER BY day) * t AS scaled
+              FROM daily CROSS JOIN tot)
+        SELECT count(*) FROM s WHERE scaled % 2 != 0
+        """
+    ).fetchone()[0]
+    assert n_ties > 0

@@ -9,10 +9,14 @@ every night" — shuffle once at write time, never again at read time.
 
 from __future__ import annotations
 
+import glob
+
+import pyarrow.parquet as pq
 import pytest
 from pyspark.sql import functions as F
 
 from k_means_hadoop_spark.plans import n_nodes, plan_of
+from k_means_hadoop_spark.sources.sinks import write_clustered_parquet
 
 
 @pytest.fixture(scope="module")
@@ -75,15 +79,9 @@ def test_clustered_write_disjoint_file_ranges(spark, sf_dir, tmp_path):
     """write_clustered_parquet must produce files owning DISJOINT key
     ranges (checked via parquet footer stats) — the property that lets a
     range predicate skip whole files at 100 TB — and read back exactly."""
-    import pyarrow.parquet as pq
-
-    from k_means_hadoop_spark.sources.sinks import write_clustered_parquet
-
     ev = spark.read.parquet(f"{sf_dir}/events.parquet")
     out = str(tmp_path / "clustered")
     write_clustered_parquet(ev.select("event_id", "user_id", "value"), out, "user_id")
-
-    import glob
 
     ranges = []
     for f in glob.glob(f"{out}/*.parquet"):

@@ -13,6 +13,7 @@ partition counts and demanding identical rows.
 from __future__ import annotations
 
 import pytest
+from pyspark.sql import functions as F
 
 from k_means_hadoop_spark import registry
 
@@ -95,8 +96,6 @@ def test_aqe_splits_skewed_join_partition(spark, tmp_path):
     re-planned by AQE into split sub-partitions (the executed plan marks
     the join 'skew=true').  Thresholds are lowered so the tiny fixture
     triggers the same code path production data would."""
-    from pyspark.sql import functions as F
-
     skewed = spark.range(50_000).select(
         F.when(F.col("id") < 49_500, F.lit(7)).otherwise(F.col("id") % 100).alias("k"),
         F.col("id").alias("payload"),

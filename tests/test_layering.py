@@ -5,7 +5,8 @@ operators/ import only them and each other; streaming/ imports
 operators; registry_pipeline imports all of those; registry imports
 registry_pipeline.  An oracle fragment lives with the operator it
 mirrors, so no operator reaches up into a registry, and every module
-declares its package dependencies once, at module level.
+declares its package dependencies once, at module level — and so does
+every test file.
 """
 
 from __future__ import annotations
@@ -47,6 +48,28 @@ def _targets(node: ast.AST, known: dict[str, Path]) -> list[str]:
     return [n for n in names if n == PKG or n.startswith(PKG + ".")]
 
 
+def _package_imports(path: Path, known: dict[str, Path]) -> tuple[set[str], list[str]]:
+    """(package modules imported at module level, ``file:line`` of the
+    package imports inside a def, lambda or class body)."""
+    top: set[str] = set()
+    nested: list[str] = []
+
+    def visit(node, in_body):
+        for child in ast.iter_child_nodes(node):
+            targets = _targets(child, known)
+            if targets and in_body:
+                nested.append(f"{path.relative_to(REPO)}:{child.lineno}")
+            elif targets:
+                top.update(targets)
+            scope = isinstance(
+                child, (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef, ast.Lambda)
+            )
+            visit(child, in_body or scope)
+
+    visit(ast.parse(path.read_text(), str(path)), False)
+    return top, nested
+
+
 def _layer(mod: str) -> int:
     if mod.startswith(f"{PKG}.operators"):
         return 1
@@ -77,24 +100,11 @@ def test_lower_layers_never_load_the_registries():
 
 def test_package_imports_are_module_level_and_point_down():
     known = _modules()
-    graph: dict[str, set[str]] = {m: set() for m in known}
+    graph: dict[str, set[str]] = {}
     nested = []
     for mod, path in known.items():
-        tree = ast.parse(path.read_text(), str(path))
-
-        def visit(node, in_body):
-            for child in ast.iter_child_nodes(node):
-                targets = _targets(child, known)
-                if targets and in_body:
-                    nested.append(f"{path.relative_to(REPO)}:{child.lineno}")
-                elif targets:
-                    graph[mod].update(targets)
-                scope = isinstance(
-                    child, (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef, ast.Lambda)
-                )
-                visit(child, in_body or scope)
-
-        visit(tree, False)
+        graph[mod], inner = _package_imports(path, known)
+        nested += inner
     # __main__ is the command line; its imports are its own business
     nested = [n for n in nested if not n.startswith(f"{PKG}/__main__.py")]
     assert nested == [], nested
@@ -111,3 +121,12 @@ def test_package_imports_are_module_level_and_point_down():
         tuple(TopologicalSorter(graph).static_order())
     except CycleError as e:
         raise AssertionError(" -> ".join(e.args[1])) from None
+
+
+def test_tests_import_the_package_at_module_level():
+    """A test file names its package dependencies once, in its header.
+    Code strings a test runs in a subprocess are not imports here."""
+    known = _modules()
+    tests = sorted((REPO / "tests").glob("*.py"))
+    nested = [n for p in tests for n in _package_imports(p, known)[1]]
+    assert nested == [], nested

@@ -9,10 +9,24 @@ shuffling lineitem) fails here long before it shows up in a benchmark.
 
 from __future__ import annotations
 
-import pytest
+import json
+import math
+import os
+import re
 
+import pytest
+from pyspark.sql import functions as F
+
+import bench
 from k_means_hadoop_spark import registry
-from k_means_hadoop_spark.plans import n_nodes, plan_of
+from k_means_hadoop_spark.operators.assign import assign_expr
+from k_means_hadoop_spark.operators.dedup import build_signature_store, incremental_dedup_from_store
+from k_means_hadoop_spark.operators.kmeans import init_ids, init_random, lloyd_kmeans
+from k_means_hadoop_spark.operators.recompute import recompute_centroids
+from k_means_hadoop_spark.operators.relational import recursive_cte_bfs
+from k_means_hadoop_spark.plans import n_nodes, plan_of, pushed_filters
+from k_means_hadoop_spark.registry_pipeline import _emb
+from k_means_hadoop_spark.sources.points import points_from_embeddings
 
 
 @pytest.fixture(scope="module")
@@ -61,11 +75,6 @@ def test_p1_column_pruning(plans):
 def test_lloyd_iteration_single_exchange(spark, sf_dir):
     """One Lloyd iteration = assignment map + k-row partial agg: exactly
     one shuffle (the groupBy('cluster') exchange), nothing else."""
-    from k_means_hadoop_spark.operators.assign import assign_expr
-    from k_means_hadoop_spark.operators.kmeans import init_ids
-    from k_means_hadoop_spark.operators.recompute import recompute_centroids
-    from k_means_hadoop_spark.sources.points import points_from_embeddings
-
     pts = points_from_embeddings(spark, sf_dir)
     cents = init_ids(pts, [1, 51, 101])
     p = plan_of(recompute_centroids(assign_expr(pts, cents), d=64))
@@ -103,7 +112,6 @@ def test_q7_derived_dim_filters_reach_all_scans(plans):
     """The nationkey<5 predicates must propagate through the equi-joins
     into supplier, customer AND both nation scans (4 scans filtered)."""
     p = plans("q7_volume_shipping")
-    from k_means_hadoop_spark.plans import pushed_filters
 
     filtered = [f for f in pushed_filters(p) if "LessThan" in f and "nationkey,5)" in f]
     assert len(filtered) == 4, p
@@ -113,7 +121,6 @@ def test_q19_or_predicates_push_to_both_scans(plans):
     """Catalyst must derive per-side OR-filters from the OR-of-ANDs:
     the quantity bands into the lineitem scan, brand/size into part."""
     p = plans("q19_disjunctive_revenue")
-    from k_means_hadoop_spark.plans import pushed_filters
 
     fs = pushed_filters(p)
     assert any("l_quantity" in f and "Or(" in f for f in fs), fs
@@ -344,10 +351,6 @@ def test_runtime_bloom_filter_prefilters_fact_side(spark, sf_dir):
     default locally only because the application side must be ≥10 GB to
     pay for the sketch — this test zeroes that threshold to pin the
     plan shape the 100 TB configuration relies on."""
-    from pyspark.sql import functions as F
-
-    from k_means_hadoop_spark.plans import plan_of
-
     confs = {
         "spark.sql.optimizer.runtime.bloomFilter.enabled": "true",
         "spark.sql.optimizer.runtime.bloomFilter.applicationSideScanSizeThreshold": "0",
@@ -438,13 +441,6 @@ def test_ivf_partitioned_layout_prunes_probe(spark, sf_dir, tmp_path):
     corpus partitioned by cell id, and a query's nprobe probe becomes a
     partition-pruned scan — the plan must carry the cell filter as a
     PartitionFilter (pruning happens at planning, not per row)."""
-    from pyspark.sql import functions as F
-
-    from k_means_hadoop_spark.operators.assign import assign_expr
-    from k_means_hadoop_spark.operators.kmeans import init_random, lloyd_kmeans
-    from k_means_hadoop_spark.plans import plan_of
-    from k_means_hadoop_spark.registry_pipeline import _emb
-
     vecs = _emb(spark, sf_dir).select(
         F.col("vec_id").alias("id"), F.col("embedding").cast("array<double>").alias("features")
     )
@@ -466,10 +462,6 @@ def test_join_hints_control_physical_strategy(spark, sf_dir):
     logical join must plan as SortMergeJoin by default, ShuffledHashJoin
     under a SHUFFLE_HASH hint, and BroadcastHashJoin under a BROADCAST
     hint even below-threshold-disabled."""
-    from pyspark.sql import functions as F
-
-    from k_means_hadoop_spark.plans import plan_of
-
     before = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
     try:
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
@@ -504,8 +496,6 @@ def test_decontaminate_filters_precede_explode(plans):
     (DataFilters), before any shingle explode — the benchmark side then
     explodes only its 1/97 slice.  A regression here multiplies the
     exploded row volume ~100x at scale."""
-    import re
-
     p = plans("decontaminate_corpus")
     assert "NOT ((doc_id" in p and "% 97) = 0)" in p, "corpus-side slice filter missing"
     filter_ids = [
@@ -524,8 +514,6 @@ def test_rebalance_hint_plans_aqe_rebalance(spark, sf_dir):
     at scale: it must plan an AQE-managed rebalance exchange
     (REBALANCE_PARTITIONS_BY_COL origin), not a plain fixed-partition
     repartition."""
-    from k_means_hadoop_spark.plans import plan_of
-
     li = spark.read.parquet(f"{sf_dir}/lineitem.parquet")
     p = plan_of(li.hint("rebalance", "l_orderkey"))
     assert "REBALANCE_PARTITIONS_BY_COL" in p
@@ -691,12 +679,6 @@ def test_incremental_from_store_scans_store_only(spark, sf_dir, tmp_path):
     appears nowhere in the plan (the batch arrives from its own
     source).  This is the per-micro-batch plan streaming_ingest_dedup
     runs — corpus text is never re-read, never re-shingled."""
-    from k_means_hadoop_spark.operators.dedup import (
-        build_signature_store,
-        incremental_dedup_from_store,
-    )
-    from k_means_hadoop_spark.plans import plan_of
-
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet").select("doc_id", "text")
     store = str(tmp_path / "sig_store")
     build_signature_store(docs.filter("doc_id % 10 != 7"), store)
@@ -755,8 +737,6 @@ def test_holt_is_two_aggregations_no_join(plans):
 
 
 def _repo_greens() -> dict[str, int]:
-    import os
-
     root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
     return registry.latest_green_rounds(root)
 
@@ -784,8 +764,6 @@ def test_latest_green_rounds_scan(tmp_path):
     """One scan of CORRECTNESS_rNN.json: hash matches and completed
     rows-only runs are green, failures are not, the latest round wins,
     and an unreadable or misnamed artifact is skipped."""
-    import json
-
     def art(name, rows):
         (tmp_path / name).write_text(json.dumps(rows))
 
@@ -821,8 +799,6 @@ def test_window_staleness_sweep():
          each round recycles 50 - U greens, so a full pass over G
          greens takes ceil(G / (50 - U)) rounds.
     """
-    import math
-
     names = list(registry.QUERIES)
     green = _repo_greens()
     verified = [n for n in names if green.get(n, 0) > 0]
@@ -946,8 +922,6 @@ def test_recursive_cte_bfs_steering_marker():
     """Round-8 (verdict item 5): the SQL-exhibit status and the
     bfs_levels steering live in the operator docstring, not only in
     BENCH_NOTES."""
-    from k_means_hadoop_spark.operators.relational import recursive_cte_bfs
-
     doc = recursive_cte_bfs.__doc__
     assert "bfs_levels" in doc
     assert "EXHIBIT" in doc.upper()
@@ -1012,8 +986,6 @@ def _unbounded_global_windows(df):
 
 
 def test_headline_no_unbounded_global_windows(spark, sf_dir):
-    import bench
-
     flagged = {}
     for name in bench.HEADLINE:
         df = registry.QUERIES[name](spark, sf_dir)

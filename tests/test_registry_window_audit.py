@@ -25,6 +25,7 @@ import os
 import pytest
 
 from k_means_hadoop_spark import registry
+from test_plans import _unbounded_global_windows
 
 # Every flagged window is GRAIN-BOUNDED: its input cardinality is fixed
 # by a calendar, a dimension, or a k/bucket constant — it does not grow
@@ -75,8 +76,6 @@ _BOUNDED_GRAIN_ALLOWLIST = {
     reason="full-registry build sweep (minutes): set SPARK_GRAFT_SLOW=1",
 )
 def test_registry_no_undocumented_global_windows(spark, sf_dir):
-    from test_plans import _unbounded_global_windows
-
     flagged, errors = {}, {}
     for name in registry.QUERIES:
         try:

@@ -3,14 +3,114 @@ semantics that the DuckDB hash-compare can't express."""
 
 from __future__ import annotations
 
-from pyspark.sql import functions as F
+import datetime as dt
+import math
+import os
+import random
+import re
+import re as _re
+import time
+from collections import Counter
 
+import numpy as np
+import pytest as _pytest
+from pyspark.sql import Window
+from pyspark.sql import functions as F
+from pyspark.sql import functions as SF
+
+from k_means_hadoop_spark import registry
+from k_means_hadoop_spark import registry_pipeline as rp
+from k_means_hadoop_spark.functions.hashing import stable_hash64
+from k_means_hadoop_spark.functions.udtfs import register_ngram_cols
+from k_means_hadoop_spark.functions.zorder import interleave_bits
+from k_means_hadoop_spark.operators import similarity
+from k_means_hadoop_spark.operators.curation import (
+    SAMPLE_FRACTIONS,
+    _GSPLIT_SALT,
+    _GSPLIT_TRAIN_LT,
+    _QC_LABEL_MOD,
+    boilerplate_spans,
+    curate_corpus_full,
+    curate_corpus_release,
+    dataset_mixture_plan,
+    pii_redact_docs,
+    quality_classifier,
+    split_by_group,
+    stratified_sample_langs,
+)
+from k_means_hadoop_spark.operators.dedup import (
+    duplicate_components,
+    embedding_neardup_bucketed,
+    embedding_neardup_pairs,
+    incremental_dedup,
+    incremental_dedup_stored,
+    neardup_mllib_minhash,
+    ngram_jaccard_pairs,
+    shingle_table,
+    simhash_pairs,
+    simhash_pairs_banded,
+)
+from k_means_hadoop_spark.operators.kmeans import init_ids, lloyd_kmeans
 from k_means_hadoop_spark.operators.relational import (
+    _ER_MAX_LEV,
+    _EWMA_ALPHA,
+    _FUNNEL_PATTERN,
+    anomaly_event_days,
     approx_distinct_parts,
+    approx_percentile_values,
     asof_join_purchase_before_click,
     distinct_agg_parts_per_flag,
+    er_blocked_fuzzy,
+    event_funnel_pattern,
+    ewma_daily_purchases,
+    hll_users_daily,
+    holt_linear_daily,
+    pagerank_copurchase,
+)
+from k_means_hadoop_spark.operators.similarity import (
+    knn_bruteforce,
+    knn_filtered,
+    knn_ivf,
+    knn_ivf_pq,
+    knn_lsh,
+    knn_mllib_lsh,
+    knn_pq,
+    knn_signbit_lsh,
+)
+from k_means_hadoop_spark.operators.text import (
+    BIGRAM_LAMBDA,
+    bigram_logprob,
+    bpe_apply_merges,
+    bpe_compression,
+    bpe_train_merges,
+    gopher_quality_gate,
+    langid_confusion,
+    quality_scores,
+    tokenizer_fit_bigrams,
+)
+from k_means_hadoop_spark.registry_pipeline import (
+    APPROX_TOP_K,
+    CONTAIN_PLANT_IDS,
+    CONTAIN_PLANT_OFFSET,
+    IVFPQ_CELL_IDS,
+    IVFPQ_NPROBE,
+    KNN_QUERY_IDS,
+    KNN_SIGNBIT_BITS,
+    NGRAM_N,
+    NGRAM_THRESHOLD,
+    PLANT_IDS,
+    PLANT_OFFSET,
+    PQ_CODEBOOK_IDS,
+    PQ_M,
+    _docs,
+    _emb,
+    _planted_emb,
+    q_approx_top_terms,
+    q_dedup_containment,
 )
 from k_means_hadoop_spark.sources.events import load_events
+from k_means_hadoop_spark.sources.points import points_from_embeddings
+from k_means_hadoop_spark.sources.sinks import compact_parquet
 
 
 def test_approx_distinct_within_rsd(spark, sf_dir):
@@ -30,9 +130,6 @@ def test_lloyd_partition_invariance(spark, sf_dir):
     """Cluster sizes and membership must not depend on the input's
     physical partitioning; centroids agree to float-roundoff (the
     per-partition partial sums legally reassociate)."""
-    from k_means_hadoop_spark.operators.kmeans import init_ids, lloyd_kmeans
-    from k_means_hadoop_spark.sources.points import points_from_embeddings
-
     pts = points_from_embeddings(spark, sf_dir)
     seeds = [1, 51, 101]
     r1 = lloyd_kmeans(pts, init_ids(pts, seeds), max_iter=5)
@@ -50,8 +147,6 @@ def test_lloyd_partition_invariance(spark, sf_dir):
 def test_stop_shingle_cap(spark):
     """max_doc_freq drops hot shingles from the candidate join but keeps
     the Jaccard denominators exact."""
-    from k_means_hadoop_spark.operators.dedup import ngram_jaccard_pairs, shingle_table
-
     docs = spark.createDataFrame(
         [
             (1, "the quick brown fox jumps high"),
@@ -100,8 +195,6 @@ def test_duplicate_components_topologies(spark):
     diameter for its size), a triangle, and a disjoint pair must each
     collapse to their minimum id — and converge, not just stop at
     max_iter."""
-    from k_means_hadoop_spark.operators.dedup import duplicate_components
-
     pairs = spark.createDataFrame(
         # chain 1-2-3-4, triangle 10-11-12, pair 20-21
         [(1, 2), (2, 3), (3, 4), (10, 11), (11, 12), (10, 12), (20, 21)],
@@ -119,8 +212,6 @@ def test_duplicate_components_chain_needs_propagation(spark):
     """A straight 6-chain given in worst order still converges to one
     component (labels must travel the full diameter, proving the loop
     iterates rather than doing a single neighbor pass)."""
-    from k_means_hadoop_spark.operators.dedup import duplicate_components
-
     pairs = spark.createDataFrame(
         [(5, 6), (4, 5), (3, 4), (2, 3), (1, 2)], "a_id bigint, b_id bigint"
     )
@@ -134,10 +225,6 @@ def test_approx_percentiles_rank_accuracy(spark, sf_dir):
     must sit within 0.5% of its target quantile in the empirical CDF
     (rows-only query: the sketch output is engine-specific, so accuracy
     IS its correctness check)."""
-    from k_means_hadoop_spark import registry
-
-    from k_means_hadoop_spark.operators.relational import approx_percentile_values
-
     rows = approx_percentile_values(spark, sf_dir).collect()
     assert rows, "events fixture must produce at least one event type"
     for r in rows:
@@ -150,10 +237,6 @@ def test_duplicate_components_random_graphs_match_union_find(spark):
     graphs (disjoint id spaces, all in ONE Spark run) must match a
     driver-side union-find exactly — catches propagation bugs no
     hand-built topology covers."""
-    import random
-
-    from k_means_hadoop_spark.operators.dedup import duplicate_components
-
     rnd = random.Random(42)
     edges = []
     for g in range(30):
@@ -188,11 +271,6 @@ def test_stratified_sample_deterministic_and_rate_accurate(spark, sf_dir):
     """sampleBy is rows-only (engine-internal RNG): pin what IS
     guaranteed — the same seed yields the identical sample, and each
     stratum's realized rate tracks its configured fraction."""
-    from k_means_hadoop_spark.operators.curation import (
-        SAMPLE_FRACTIONS,
-        stratified_sample_langs,
-    )
-
     a = sorted(tuple(r) for r in stratified_sample_langs(spark, sf_dir).collect())
     b = sorted(tuple(r) for r in stratified_sample_langs(spark, sf_dir).collect())
     assert a == b, "same seed must reproduce the identical sample"
@@ -216,9 +294,6 @@ def test_neardup_mllib_precision_and_recall(spark, sf_dir):
     pair must be a TRUE pair with the exact Jaccard (approxSimilarityJoin
     verifies candidates exactly -> precision 1); recall is the
     approximation and must stay high at 16 hash tables."""
-    from k_means_hadoop_spark.operators.dedup import neardup_mllib_minhash, ngram_jaccard_pairs
-    from k_means_hadoop_spark.registry_pipeline import NGRAM_N, NGRAM_THRESHOLD, _docs
-
     docs = _docs(spark, sf_dir)
     got = {
         (r["a_id"], r["b_id"]): r["jaccard"]
@@ -238,11 +313,6 @@ def test_knn_mllib_lsh_recall_vs_exact_euclidean(spark, sf_dir):
     """BucketedRandomProjectionLSH top-k vs exact Euclidean top-k
     (numpy): per query, >= 60% of the true neighbor set must be found —
     the approximate-tier contract at 8 hash tables."""
-    import numpy as np
-
-    from k_means_hadoop_spark.operators.similarity import knn_mllib_lsh
-    from k_means_hadoop_spark.registry_pipeline import KNN_QUERY_IDS, _emb
-
     emb = _emb(spark, sf_dir)
     rows = emb.select("vec_id", "embedding").collect()
     ids = np.array([r["vec_id"] for r in rows])
@@ -265,11 +335,6 @@ def test_knn_ivf_full_probe_equals_bruteforce_and_partial_recall(spark, sf_dir):
     it must never alter scores or ordering), and the production
     partial probe (nprobe=2 of 8 -> 25% of the corpus scanned) must
     keep mean recall well above the scan fraction."""
-    import numpy as np
-
-    from k_means_hadoop_spark.operators.similarity import knn_bruteforce, knn_ivf
-    from k_means_hadoop_spark.registry_pipeline import KNN_QUERY_IDS, _emb
-
     emb = _emb(spark, sf_dir)
     full = sorted(tuple(r) for r in knn_ivf(emb, KNN_QUERY_IDS, k=5, n_cells=8, nprobe=8).collect())
     bf = sorted(tuple(r) for r in knn_bruteforce(emb, KNN_QUERY_IDS, k=5).collect())
@@ -297,11 +362,6 @@ def test_approx_top_terms_counts_exact_within_budget(spark, sf_dir):
     sketch's tracked-item budget, so every reported count must equal
     the exact count and the reported counts must be the true top-k
     count multiset (term membership at the boundary may tie)."""
-    from collections import Counter
-
-    from k_means_hadoop_spark.registry_pipeline import APPROX_TOP_K, _docs, q_approx_top_terms
-    from pyspark.sql import functions as F
-
     got = {r["rank"]: r["n"] for r in q_approx_top_terms(spark, sf_dir).collect()}
     assert len(got) == APPROX_TOP_K
     exact = {
@@ -323,10 +383,6 @@ def test_simhash_banded_equals_bruteforce_on_random_fingerprints(spark):
     """Pigeonhole recall-1 property on randomized fingerprints, not just
     the fixture: for max_hamming <= bands-1 the banded equi-join must
     produce EXACTLY the brute-force pair set (including hamming values)."""
-    import random
-
-    from k_means_hadoop_spark.operators.dedup import simhash_pairs, simhash_pairs_banded
-
     rng = random.Random(7)
     base = rng.getrandbits(32)
     rows = []
@@ -361,16 +417,6 @@ def test_embedding_bucketed_precision_one_and_recall(spark, sf_dir):
     set is asserted NON-EMPTY, and every sign-preserving clone pair must
     be recalled (the clone shares its original's signature in every
     band, so missing one is a candidate-generation bug, not bad luck)."""
-    from k_means_hadoop_spark.operators.dedup import (
-        embedding_neardup_bucketed,
-        embedding_neardup_pairs,
-    )
-    from k_means_hadoop_spark.registry_pipeline import (
-        PLANT_IDS,
-        PLANT_OFFSET,
-        _planted_emb,
-    )
-
     planted = _planted_emb(spark, sf_dir, max_id=500)
     exact = {
         (r["a_id"], r["b_id"]): r["cos_sim"]
@@ -395,8 +441,6 @@ def test_embedding_bucketed_precision_one_and_recall(spark, sf_dir):
 def test_interleave_bits_matches_reference_morton(spark):
     """Catalyst Morton code vs an independent Python bit-twiddle over a
     grid including edge values."""
-    from k_means_hadoop_spark.functions.zorder import interleave_bits
-
     def morton(x: int, y: int, bits: int = 8) -> int:
         z = 0
         for i in range(bits):
@@ -420,13 +464,10 @@ def test_hll_sketch_merge_accuracy(spark, sf_dir):
     """Day-sketch union estimate must land within HLL's expected error of
     the exact distinct count — both per day and for the merged ALL row
     (merging sketches must not degrade the estimate)."""
-    from k_means_hadoop_spark.operators.relational import hll_users_daily
-
     got = {
         r["day"]: (r["exact_users"], r["est_ok"])
         for r in hll_users_daily(spark, sf_dir).collect()
     }
-    from k_means_hadoop_spark.sources.events import load_events
 
     ev = load_events(spark, sf_dir)
     exact_all = ev.select("user_id").distinct().count()
@@ -446,9 +487,6 @@ def test_quality_classifier_distills_heuristic(spark, sf_dir):
     across runs (training is deterministic: fixed slice, LBFGS, no RNG
     stream) and (b) agree with the heuristic gate it distills on the
     held-out (unlabeled) slice well above chance."""
-    from k_means_hadoop_spark.operators.curation import _QC_LABEL_MOD, quality_classifier
-    from k_means_hadoop_spark.operators.text import quality_scores
-
     out1 = {r["doc_id"]: (r["p_keep"], r["keep"]) for r in quality_classifier(spark, sf_dir).collect()}
     out2 = {r["doc_id"]: (r["p_keep"], r["keep"]) for r in quality_classifier(spark, sf_dir).collect()}
     assert out1 == out2
@@ -467,8 +505,6 @@ def test_incremental_dedup_planted_statuses(spark):
     the LSH tier would also catch it — exact wins by precedence), a
     batch doc sharing no shingles with any corpus doc is 'new', and the
     batch comes back exactly once per doc."""
-    from k_means_hadoop_spark.operators.dedup import incremental_dedup
-
     corpus = [(i, f"common word stream number {i} alpha beta gamma delta epsilon") for i in range(1, 9)]
     batch = [
         (101, corpus[2][1]),                      # exact copy of doc 3
@@ -486,11 +522,6 @@ def test_incremental_stored_roundtrips_index(spark, tmp_path):
     """The persisted-index variant must produce the identical statuses
     through the parquet store, and the store must hold both index
     tables (bands + md5 digests) a real ingest service maintains."""
-    from k_means_hadoop_spark.operators.dedup import (
-        incremental_dedup,
-        incremental_dedup_stored,
-    )
-
     corpus = [(i, f"common word stream number {i} alpha beta gamma delta epsilon") for i in range(1, 9)]
     batch = [(101, corpus[2][1]), (102, "entirely unrelated zq xv wk jy pm")]
     docs = spark.createDataFrame(corpus + batch, "doc_id long, text string")
@@ -513,9 +544,6 @@ def test_pq_rerank_recall_ladder(spark, sf_dir):
     is the only recall loss — measured 0.80 at the registry parameters),
     and (b) rerank recall must be >= raw-ADC-top-5 recall (re-ranking a
     deep shortlist can only help)."""
-    from k_means_hadoop_spark import registry_pipeline as rp
-    from k_means_hadoop_spark.operators import similarity
-
     emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
     vecs = emb.select(
         F.col("vec_id").cast("int").alias("vid"),
@@ -524,7 +552,6 @@ def test_pq_rerank_recall_ladder(spark, sf_dir):
     q = vecs.filter(F.col("vid").isin(rp.KNN_QUERY_IDS)).select(
         F.col("vid").alias("qid"), F.col("vec").alias("qvec")
     )
-    from pyspark.sql import Window
 
     d = F.sqrt(
         F.aggregate(
@@ -564,13 +591,6 @@ def test_all_pairs_oracle_measures_require_opt_in(spark):
     """The O(n²) oracle measures must refuse unbounded inputs: callers
     either pass the built-in id bound or explicitly acknowledge they
     bounded the input themselves (round-2 verdict item 7)."""
-    import pytest as _pytest
-
-    from k_means_hadoop_spark.operators.dedup import (
-        embedding_neardup_pairs,
-        simhash_pairs,
-    )
-
     sh = spark.createDataFrame([(1, 3), (2, 5)], "doc_id long, simhash long")
     with _pytest.raises(ValueError, match="all-pairs"):
         simhash_pairs(sh, 3)
@@ -599,14 +619,6 @@ def test_planted_ann_recall_signbit_and_lsh(spark, sf_dir):
     fixture+seed are fixed, so the planted recall is deterministic;
     assert the measured floor (>= half the planted neighbors found,
     each at rank 1 when found)."""
-    from k_means_hadoop_spark.operators.similarity import knn_lsh, knn_signbit_lsh
-    from k_means_hadoop_spark.registry_pipeline import (
-        KNN_SIGNBIT_BITS,
-        PLANT_IDS,
-        PLANT_OFFSET,
-        _planted_emb,
-    )
-
     planted = _planted_emb(spark, sf_dir)
     sb = {
         (r["qid"], r["nid"]): r["rank"]
@@ -632,9 +644,6 @@ def test_pii_redact_plants_and_cleans(spark, sf_dir):
     no raw pattern survives in `clean`, placeholders appear exactly
     n times, and the planted grid (every 37th/41st/43rd doc) is the
     exact touched set."""
-    from k_means_hadoop_spark.operators.curation import pii_redact_docs
-    import re
-
     rows = pii_redact_docs(spark, sf_dir).collect()
     assert rows, "planted grid must touch some docs"
     email = re.compile(r"[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+\.[A-Za-z]{2,}")
@@ -657,8 +666,6 @@ def test_langid_confusion_partitions_corpus(spark, sf_dir):
     """The confusion matrix is a partition of the corpus: cell counts
     sum to the doc count, and the diagonal is non-trivial (the heuristic
     must beat all-undetermined on the labeled fixture)."""
-    from k_means_hadoop_spark.operators.text import langid_confusion
-
     rows = langid_confusion(spark.read.parquet(f"{sf_dir}/documents.parquet")).collect()
     n_docs = spark.read.parquet(f"{sf_dir}/documents.parquet").count()
     assert sum(r["n"] for r in rows) == n_docs
@@ -669,8 +676,6 @@ def test_langid_confusion_partitions_corpus(spark, sf_dir):
 def test_tokenizer_bigrams_counts_all_occurrences(spark):
     """Merge-pair counting must keep within-doc repeats (the BPE count
     is occurrences, not document frequency) and rank deterministically."""
-    from k_means_hadoop_spark.operators.text import tokenizer_fit_bigrams
-
     docs = spark.createDataFrame(
         [(0, "a b a b a b"), (1, "a b c"), (2, "x y")],
         "doc_id long, text string",
@@ -684,8 +689,6 @@ def test_boilerplate_spans_planted_grid(spark, sf_dir):
     """Planted license-header shingles must flag exactly the 7-grid docs
     with at least the 4 within-sentence shingles each (8 plant tokens →
     8-5+1 windows)."""
-    from k_means_hadoop_spark.operators.curation import boilerplate_spans
-
     rows = boilerplate_spans(spark, sf_dir).collect()
     assert rows
     for r in rows:
@@ -701,11 +704,6 @@ def test_release_pipeline_gates_bite(spark, sf_dir):
     gates: per split it never admits more docs, at least one split
     shrinks (the boilerplate cut), and the redacted token accounting
     differs from the raw one somewhere (plants + placeholders)."""
-    from k_means_hadoop_spark.operators.curation import (
-        curate_corpus_full,
-        curate_corpus_release,
-    )
-
     full = {r["split"]: (r["n_docs"], r["total_tokens"]) for r in curate_corpus_full(spark, sf_dir).collect()}
     rel = {r["split"]: (r["n_docs"], r["total_tokens"]) for r in curate_corpus_release(spark, sf_dir).collect()}
     assert set(rel) == set(full)
@@ -725,14 +723,6 @@ def test_release_pipeline_gates_bite(spark, sf_dir):
 def test_pq_plan_cache_reuse(spark, sf_dir):
     """With a plan_cache_key the second knn_pq call must reuse the built
     index texts (no re-collect) and produce identical results."""
-    from k_means_hadoop_spark.operators import similarity
-    from k_means_hadoop_spark.registry_pipeline import (
-        KNN_QUERY_IDS,
-        PQ_CODEBOOK_IDS,
-        PQ_M,
-        _emb,
-    )
-
     similarity._PQ_PLAN_CACHE.clear()
     emb = _emb(spark, sf_dir)
     r1 = sorted(
@@ -761,10 +751,6 @@ def test_pq_plan_cache_invalidates_on_data_change(spark, tmp_path):
     must miss the cache and rebuild the ADC tables from the NEW data —
     a stale hit here silently serves distances computed from vanished
     embeddings."""
-    import time
-
-    from k_means_hadoop_spark.operators import similarity
-
     path = str(tmp_path / "emb")
 
     def write(scale: float) -> None:
@@ -805,11 +791,6 @@ def test_bpe_merges_match_python_reference(spark, sf_dir):
     (pair counting, count-desc/a/b tie-break, leftmost-greedy
     application — each round depends on the previous round's merge
     being applied correctly)."""
-    import re as _re
-    from collections import Counter
-
-    from k_means_hadoop_spark.operators.text import bpe_train_merges
-
     docs = {
         r["doc_id"]: r["text"]
         for r in spark.read.parquet(f"{sf_dir}/documents.parquet").collect()
@@ -855,8 +836,6 @@ def test_bpe_checkpoint_invariant(spark, sf_dir):
     """localCheckpoint is a lineage cut, not a semantics change: the
     learned merge table must be bit-identical with and without
     per-round checkpoints."""
-    from k_means_hadoop_spark.operators.text import bpe_train_merges
-
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
     base = sorted(
         (r["round"], r["a"], r["b"], r["n"])
@@ -876,8 +855,6 @@ def test_bpe_plan_depth_bounded_by_checkpoint(spark, sf_dir):
     ExistingRDD scan), and its plan must not be materially larger than
     a 6-round fit's with the same window — the superlinear nesting the
     docstring warns about is gone."""
-    from k_means_hadoop_spark.operators.text import bpe_apply_merges
-
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet").limit(50)
     # 12 rounds checkpoint at r=4,8 → 4 rounds nest above the last cut;
     # 8 rounds checkpoint at r=4 → also 4 rounds above.  Same window ⇒
@@ -894,10 +871,6 @@ def test_bpe_degenerate_round_fails_loudly(spark):
     """A round with no adjacent pair anywhere used to empty the token
     table silently (crossJoin with an empty top-1); it must now raise
     with the round number at execution."""
-    import pytest as _pytest
-
-    from k_means_hadoop_spark.operators.text import bpe_compression, bpe_train_merges
-
     docs = spark.createDataFrame(
         [(1, "hello"), (2, "world"), (3, "spark")], "doc_id int, text string"
     )
@@ -914,8 +887,6 @@ def test_gopher_gate_both_classes_and_no_shuffle(spark, sf_dir):
     """The gate must actually gate (both verdicts present, multiple
     distinct failure reasons) and stay map-only (no Exchange: it is the
     in-scan filter it claims to be)."""
-    from k_means_hadoop_spark.operators.text import gopher_quality_gate
-
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
     out = gopher_quality_gate(docs)
     reasons = {r["reason"] for r in out.select("reason").distinct().collect()}
@@ -928,8 +899,6 @@ def test_bigram_logprob_counts_and_range(spark, sf_dir):
     """Every document with >= 2 tokens scores exactly n_words - 1
     adjacent pairs, and every interpolated probability is < 1 (negative
     log-score)."""
-    from k_means_hadoop_spark.operators.text import bigram_logprob, gopher_quality_gate
-
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
     bg = bigram_logprob(docs)
     words = gopher_quality_gate(docs).select("doc_id", "n_words")
@@ -945,8 +914,6 @@ def test_mixture_plan_budget_and_caps(spark, sf_dir):
     >= 1 uncapped below 1.0), no stratum exceeds its availability, and
     the total allocation lands within one redistribution pass of the
     budget (<= budget, and > the proportional first pass alone)."""
-    from k_means_hadoop_spark.operators.curation import dataset_mixture_plan
-
     rows = dataset_mixture_plan(spark, sf_dir).collect()
     assert len(rows) >= 2
     capped = [r for r in rows if r["epochs"] >= 0.999999]
@@ -966,14 +933,6 @@ def test_funnel_pattern_matches_python_reference(spark, sf_dir):
     """The regex conversion count must equal a pure-Python greedy scan
     of the same per-user symbol sequence (independent of any regex
     engine's matching discipline)."""
-    import re
-
-    from k_means_hadoop_spark.operators.relational import (
-        _FUNNEL_PATTERN,
-        event_funnel_pattern,
-    )
-    from k_means_hadoop_spark.sources.events import load_events
-
     got = {r["user_id"]: r["conversions"] for r in event_funnel_pattern(spark, sf_dir).collect()}
     ev = (
         load_events(spark, sf_dir)
@@ -1003,8 +962,6 @@ def test_funnel_pattern_matches_python_reference(spark, sf_dir):
 def test_er_blocked_pairs_verified(spark, sf_dir):
     """Every emitted pair shares the blocking noun and is within the
     edit-distance bound; at least one pair exists (non-vacuous)."""
-    from k_means_hadoop_spark.operators.relational import _ER_MAX_LEV, er_blocked_fuzzy
-
     rows = er_blocked_fuzzy(spark, sf_dir).collect()
     assert rows
 
@@ -1025,8 +982,6 @@ def test_er_blocked_pairs_verified(spark, sf_dir):
 def test_ewma_matches_local_recurrence(spark, sf_dir):
     """The folded EWMA equals the day-by-day recurrence computed locally
     from the same daily totals."""
-    from k_means_hadoop_spark.operators.relational import _EWMA_ALPHA, ewma_daily_purchases
-
     rows = sorted(ewma_daily_purchases(spark, sf_dir).collect(), key=lambda r: r["day"])
     assert len(rows) >= 2
     prev = None
@@ -1040,8 +995,6 @@ def test_ewma_matches_local_recurrence(spark, sf_dir):
 def test_anomaly_days_flags_tail(spark, sf_dir):
     """z-scores must be centered (mean ~ 0 per type) and the fixture
     contains at least one flagged day."""
-    from k_means_hadoop_spark.operators.relational import anomaly_event_days
-
     rows = anomaly_event_days(spark, sf_dir).collect()
     assert any(r["is_anomaly"] for r in rows)
     by_type: dict = {}
@@ -1054,15 +1007,12 @@ def test_anomaly_days_flags_tail(spark, sf_dir):
 def test_compact_shards_reduces_files_content_identical(spark, tmp_path):
     """Compaction must shrink the file count to the byte-derived target
     and keep every row byte-identical."""
-    from k_means_hadoop_spark.sources.sinks import compact_parquet
-
     frag = str(tmp_path / "frag")
     out = str(tmp_path / "out")
     df = spark.range(0, 10_000).selectExpr("id", "id * 7 AS v")
     df.repartition(32).write.mode("overwrite").parquet(frag)
     n_files = compact_parquet(spark, frag, out, target_bytes=1 << 30)
     assert n_files == 1
-    import os
 
     frag_files = [f for f in os.listdir(frag) if f.endswith(".parquet")]
     out_files = [f for f in os.listdir(out) if f.endswith(".parquet")]
@@ -1076,15 +1026,6 @@ def test_ivf_pq_agrees_with_pq_on_probed_cells(spark, sf_dir):
     """IVF+PQ is PQ restricted to probed cells: every pair it returns
     must carry the SAME ADC distance knn_pq computes, and per query it
     returns exactly k rows (cells are fixture-dense enough)."""
-    from k_means_hadoop_spark.operators.similarity import knn_ivf_pq, knn_pq
-    from k_means_hadoop_spark.registry_pipeline import (
-        IVFPQ_CELL_IDS,
-        IVFPQ_NPROBE,
-        KNN_QUERY_IDS,
-        PQ_CODEBOOK_IDS,
-        PQ_M,
-    )
-
     emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
     ivfpq = knn_ivf_pq(
         emb, KNN_QUERY_IDS, IVFPQ_CELL_IDS, PQ_CODEBOOK_IDS, k=5, m=PQ_M,
@@ -1107,12 +1048,6 @@ def test_containment_catches_asymmetric_subset(spark, sf_dir):
     1.0 in the clone→original direction while the symmetric Jaccard
     stays below the near-dup threshold — the case Jaccard-only dedup
     misses by design."""
-    from k_means_hadoop_spark.registry_pipeline import (
-        CONTAIN_PLANT_IDS,
-        CONTAIN_PLANT_OFFSET,
-        q_dedup_containment,
-    )
-
     rows = {(r["a_id"], r["b_id"]): r for r in q_dedup_containment(spark, sf_dir).collect()}
     for pid in CONTAIN_PLANT_IDS:
         r = rows[(pid, pid + CONTAIN_PLANT_OFFSET)]
@@ -1125,9 +1060,6 @@ def test_knn_filtered_respects_language(spark, sf_dir):
     """Every neighbor shares the query's language, and the filter
     actually changes at least one query's top-k vs the unfiltered
     search (non-vacuous filter)."""
-    from k_means_hadoop_spark.operators.similarity import knn_bruteforce, knn_filtered
-    from k_means_hadoop_spark.registry_pipeline import KNN_QUERY_IDS
-
     emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
     lang = {r["doc_id"]: r["lang"] for r in docs.select("doc_id", "lang").collect()}
@@ -1146,15 +1078,6 @@ def test_split_by_group_no_source_crosses_splits(spark, sf_dir):
     """Leakage-safety by construction: recompute the per-(source, split)
     membership row-by-row and assert every source maps to exactly one
     split, while all three splits are populated."""
-    from k_means_hadoop_spark.operators.curation import (
-        _GSPLIT_SALT,
-        _GSPLIT_TRAIN_LT,
-        split_by_group,
-    )
-    from k_means_hadoop_spark.functions.hashing import stable_hash64
-
-    from pyspark.sql import functions as SF
-
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
     h = stable_hash64(SF.concat(SF.lit(_GSPLIT_SALT), SF.col("source"))) % SF.lit(10)
     split = (
@@ -1177,10 +1100,6 @@ def test_split_by_group_no_source_crosses_splits(spark, sf_dir):
 def test_udtf_analyze_dynamic_schema_and_validation(spark):
     """The analyze() UDTF produces a different relation type per call
     site (n=2 vs n=4) and rejects a non-positive n at plan time."""
-    import pytest as _pytest
-
-    from k_means_hadoop_spark.functions.udtfs import register_ngram_cols
-
     register_ngram_cols(spark)
     spark.createDataFrame([(1, "a b c d e")], "doc_id int, text string").createOrReplaceTempView(
         "_udtf_dyn_docs"
@@ -1198,10 +1117,6 @@ def test_bigram_logprob_matches_python_reference(spark):
     """The interpolated bigram score must equal a pure-Python
     implementation of the same model (corpus-trained counts, λ-backoff
     to unigram mass) on a small corpus computed by hand."""
-    import math
-
-    from k_means_hadoop_spark.operators.text import BIGRAM_LAMBDA, bigram_logprob
-
     texts = {
         1: "the cat sat on the mat",
         2: "the cat ran",
@@ -1234,10 +1149,61 @@ def test_bigram_logprob_matches_python_reference(spark):
 def test_pagerank_mass_conserved(spark, sf_dir):
     """Rank mass must be conserved (Σrank = 1 within float tolerance on
     a dangling-free graph) and every node strictly positive."""
-    from k_means_hadoop_spark.operators.relational import pagerank_copurchase
-
     rows = pagerank_copurchase(spark, sf_dir).collect()
     assert rows
     total = sum(r["rank"] for r in rows)
     assert abs(total - 1.0) < 1e-3, total
     assert all(r["rank"] > 0 for r in rows)
+
+
+def test_holt_seeds_level_and_zero_trend(spark, sf_dir):
+    rows = holt_linear_daily(spark, sf_dir).collect()
+    by_type = {}
+    for r in rows:
+        by_type.setdefault(r["event_type"], []).append(r)
+    for typ, rs in by_type.items():
+        rs.sort(key=lambda r: r["day"])
+        assert rs[0]["level"] == float(rs[0]["n_events"]), typ
+        assert rs[0]["trend"] == 0.0, typ
+
+
+def test_interpolate_neighbor_join_equals_window(spark):
+    """interpolate_daily_purchases round-13 rewrite: max_by/min_by
+    neighbor joins reproduce the ignore-nulls window lookups exactly,
+    including leading/trailing all-null edges."""
+    d0 = dt.date(2024, 1, 1)
+    days = [(d0 + dt.timedelta(days=i),) for i in range(12)]
+    cal = spark.createDataFrame(days, "day date")
+    obs = spark.createDataFrame(
+        [(d0 + dt.timedelta(days=3), 1.5), (d0 + dt.timedelta(days=7), 4.25)],
+        "day date, v double",
+    )
+    g = cal.join(obs, "day", "left")
+    w_prev = Window.orderBy("day").rowsBetween(Window.unboundedPreceding, 0)
+    w_next = Window.orderBy("day").rowsBetween(0, Window.unboundedFollowing)
+    old = g.select(
+        "day",
+        F.last("v", ignorenulls=True).over(w_prev).alias("pv"),
+        F.last(F.when(F.col("v").isNotNull(), F.col("day")), ignorenulls=True)
+        .over(w_prev)
+        .alias("pd"),
+        F.first("v", ignorenulls=True).over(w_next).alias("nv"),
+        F.first(F.when(F.col("v").isNotNull(), F.col("day")), ignorenulls=True)
+        .over(w_next)
+        .alias("nd"),
+    )
+    obs_a = obs.select(F.col("day").alias("od"), F.col("v").alias("ov"))
+    prev_t = (
+        g.join(obs_a, F.col("od") <= F.col("day"), "left")
+        .groupBy("day", "v")
+        .agg(F.max("od").alias("pd"), F.max_by("ov", "od").alias("pv"))
+    )
+    new = (
+        prev_t.join(obs_a, F.col("od") >= F.col("day"), "left")
+        .groupBy("day", "v", "pd", "pv")
+        .agg(F.min("od").alias("nd"), F.min_by("ov", "od").alias("nv"))
+        .select("day", "pv", "pd", "nv", "nd")
+    )
+    o = {r["day"]: (r["pv"], r["pd"], r["nv"], r["nd"]) for r in old.collect()}
+    n = {r["day"]: (r["pv"], r["pd"], r["nv"], r["nd"]) for r in new.collect()}
+    assert o == n

@@ -5,19 +5,36 @@ SURVEY.md §5: these ARE the reference's test corpus)."""
 from __future__ import annotations
 
 import os
+import pathlib
+import random
+import re as _re
+import subprocess
+import sys
 
+import duckdb
 import pytest
+from pyspark.sql import Observation
 from pyspark.sql import functions as F
 
+from k_means_hadoop_spark.functions.hashing import word_ngrams, word_ngrams_sql
 from k_means_hadoop_spark.operators.evaluation import jaccard_reference
 from k_means_hadoop_spark.operators.kmeans import init_ids, lloyd_kmeans
+from k_means_hadoop_spark.plans import plan_of
 from k_means_hadoop_spark.sources.centroid_io import (
     centroid_wire_lines,
     read_centroid_file,
     write_centroid_file,
 )
+from k_means_hadoop_spark.sources.events import load_events
 from k_means_hadoop_spark.sources.points import read_points_tsv
-from k_means_hadoop_spark.sources.sinks import final_output_lines, plot_output_lines
+from k_means_hadoop_spark.sources.python_datasource import read_arith_seq
+from k_means_hadoop_spark.sources.sinks import (
+    final_output_lines,
+    plot_output_lines,
+    read_documents_jsonl,
+    write_documents_jsonl,
+    write_events_partitioned,
+)
 
 REF_DATA = "/root/reference/data"
 
@@ -138,10 +155,6 @@ def test_partitioned_sink_prunes_on_read(spark, sf_dir, tmp_path):
     """Date-partitioned parquet: a date filter on read-back must become a
     PartitionFilter (directory pruning, zero data I/O for other days) and
     return exactly the rows of that day."""
-    from k_means_hadoop_spark.plans import plan_of
-    from k_means_hadoop_spark.sources.events import load_events
-    from k_means_hadoop_spark.sources.sinks import write_events_partitioned
-
     ev = load_events(spark, sf_dir)
     out = str(tmp_path / "events_by_date")
     write_events_partitioned(ev, out)
@@ -159,11 +172,6 @@ def test_jsonl_roundtrip_documents(spark, sf_dir, tmp_path):
     """JSONL corpus sink/source: write the documents table as gzip JSONL,
     read it back with an explicit schema (no inference pass), and get the
     identical bag of rows."""
-    from k_means_hadoop_spark.sources.sinks import (
-        read_documents_jsonl,
-        write_documents_jsonl,
-    )
-
     docs = spark.read.parquet(os.path.join(sf_dir, "documents.parquet"))
     out = str(tmp_path / "docs_jsonl")
     write_documents_jsonl(docs, out)
@@ -178,9 +186,6 @@ def test_cli_end_to_end(tmp_path):
     """python -m k_means_hadoop_spark on the Iris-shaped dataset must
     reproduce the golden iteration/Jaccard numbers and write both S6
     sinks — the script.sh-equivalent UX (SURVEY.md §3.1)."""
-    import subprocess
-    import sys
-
     out = tmp_path / "run"
     # cwd-independence: `python -m k_means_hadoop_spark` resolves the
     # package via PYTHONPATH, not the caller's cwd — pytest may run from
@@ -214,10 +219,6 @@ def test_dynamic_partition_pruning_via_dim_join(spark, sf_dir, tmp_path):
     carries dynamicpruningexpression) — at 100 TB this is what turns
     "join events to this week's calendar" into a 7-directory read
     instead of a full scan."""
-    from k_means_hadoop_spark.plans import plan_of
-    from k_means_hadoop_spark.sources.events import load_events
-    from k_means_hadoop_spark.sources.sinks import write_events_partitioned
-
     ev = load_events(spark, sf_dir)
     out = str(tmp_path / "events_dpp")
     write_events_partitioned(ev, out)
@@ -237,9 +238,6 @@ def test_orc_roundtrip_events(spark, sf_dir, tmp_path):
     """ORC sink/source (second columnar format, built into Spark): write
     the events table as snappy ORC, read it back, identical bag of rows
     — and a value predicate reaches the ORC reader as a pushed filter."""
-    from k_means_hadoop_spark.plans import plan_of
-    from k_means_hadoop_spark.sources.events import load_events
-
     ev = load_events(spark, sf_dir).select("event_id", "user_id", "event_type", "value")
     out = str(tmp_path / "events_orc")
     ev.write.mode("overwrite").orc(out)
@@ -271,8 +269,6 @@ def test_jsonl_corrupt_records_quarantined(spark, tmp_path):
     """Malformed JSONL lines must not kill a 100 TB ingest: PERMISSIVE
     mode with columnNameOfCorruptRecord loads the good rows and
     quarantines the bad line for inspection."""
-    import pathlib
-
     f = pathlib.Path(tmp_path) / "mixed.jsonl"
     f.write_text('{"doc_id": 1, "text": "ok"}\n{BROKEN\n{"doc_id": 2, "text": "fine"}\n')
     schema = "doc_id bigint, text string, _corrupt string"
@@ -294,8 +290,6 @@ def test_observe_metrics_piggyback_on_action(spark, sf_dir):
     """df.observe(): ingest counters (rows, nulls, value sum) ride along
     the existing action — at 100 TB this replaces a separate validation
     scan with zero extra I/O."""
-    from pyspark.sql import Observation
-
     obs = Observation("ingest_metrics")
     ev = (
         spark.read.parquet(f"{sf_dir}/events.parquet")
@@ -319,8 +313,6 @@ def test_python_datasource_partitioned_scan(spark):
     contract: the planner asks for input partitions and the scan runs
     one task per partition (8 requested), with no overlap or gap in the
     generated id range."""
-    from k_means_hadoop_spark.sources.python_datasource import read_arith_seq
-
     df = read_arith_seq(spark, n=1000, parts=8)
     assert df.rdd.getNumPartitions() == 8
     ids = sorted(r["id"] for r in df.collect())
@@ -338,13 +330,6 @@ def test_word_ngrams_randomized_cross_engine(spark):
     DuckDB's list_distinct does not preserve first-occurrence order
     while Spark's array_distinct does, and every consumer (jaccard,
     minhash, membership) treats shingles as a set."""
-    import random
-
-    import duckdb
-
-    from k_means_hadoop_spark.functions.hashing import word_ngrams, word_ngrams_sql
-    from pyspark.sql import functions as F
-
     rng = random.Random(1234)
     words = ["alpha", "beta", "gamma", "δélta", "e", "ff", "alpha"]
     cases = ["", "one", "one two", "a  b\tc", " lead", "trail ", "a\nb c"]
@@ -375,12 +360,6 @@ def test_word_ngrams_fuzz_vs_python_reference(spark):
     Python reference (normalize → split → windows → first-occurrence
     dedup) on adversarial fuzz: unicode, mixed whitespace runs, regex
     metacharacters inside tokens, n-1-token and empty inputs."""
-    import random
-    import re as _re
-
-    from k_means_hadoop_spark.functions.hashing import word_ngrams
-    from pyspark.sql import functions as F
-
     def ref(text, n):
         toks = _re.split(r"\s+", text.lower().strip())
         toks = [t for t in toks if t != ""]

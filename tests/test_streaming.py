@@ -1,59 +1,130 @@
-"""PCA (N1-N5), Structured Streaming, and multimodal plumbing tests."""
+"""Structured Streaming (``streaming/``): stateless assignment, windowed
+stats, mini-batch k-means, stateful and transformWithState operators,
+watermarks, exactly-once sinks and the streaming merge, interval-join
+and upsert queries, each checked against its batch equivalent."""
 
 from __future__ import annotations
 
+import datetime as dt
+import glob
+import os
 import shutil
+import time
 
-import numpy as np
+import duckdb
+import pandas as pd
 import pytest
+from pyspark.sql import Window
 from pyspark.sql import functions as F
 
-from k_means_hadoop_spark.operators.multimodal import (
-    decode_media,
-    decode_media_real,
-    media_from_documents,
+from k_means_hadoop_spark import registry_pipeline as rp
+from k_means_hadoop_spark.operators.analytics import merge_apply_changelog
+from k_means_hadoop_spark.operators.assign import assign_expr
+from k_means_hadoop_spark.registry_pipeline import (
+    STREAMING_OUTER_JOIN_SQL,
+    q_streaming_outer_interval_join,
+    q_streaming_tws_stats,
 )
-from k_means_hadoop_spark.operators.pca import explained_variance, pca_project
+from k_means_hadoop_spark.session import scratch_dir
+from k_means_hadoop_spark.sources.events import load_events
+from k_means_hadoop_spark.streaming.relational import (
+    streaming_merge_changelog,
+    streaming_upsert_snapshot,
+)
+from k_means_hadoop_spark.streaming.stateful import stateful_user_totals
 from k_means_hadoop_spark.streaming.stream_kmeans import (
     StreamingKMeansState,
+    featurize_events,
     read_event_stream,
     stream_assign,
     streaming_kmeans_update,
     windowed_event_stats,
 )
+from tests.helpers import run_query
+from tests.oracle_harness import compare, duck_connection
 
 
-# ------------------------------------------------------------------- PCA
+def test_streaming_merge_multibatch_and_equals_batch(spark, sf_dir):
+    """The versioned-snapshot apply must advance through >1 micro-batch
+    and land on exactly the batch MERGE's snapshot."""
+    root = scratch_dir("merge_pin")
+    got = {
+        (r["c_custkey"], r["c_acctbal"], r["src"])
+        for r in streaming_merge_changelog(spark, sf_dir, snap_root=root).collect()
+    }
+    versions = len(glob.glob(os.path.join(root, "v*")))
+    assert versions > 2, versions  # v0 + >=2 applied batches
+    want = {
+        (r["c_custkey"], r["c_acctbal"], r["src"])
+        for r in merge_apply_changelog(spark, sf_dir).collect()
+    }
+    assert got == want
 
 
-def test_pca_matches_numpy(spark):
-    """Spark PCA projection == numpy eig on the covariance (up to sign),
-    mirroring the notebook's manual implementation."""
-    rng = np.random.default_rng(42)
-    base = rng.standard_normal((80, 4))
-    base[:, 0] *= 5.0  # dominant direction
-    rows = [(i, 1, [float(v) for v in base[i]]) for i in range(80)]
-    df = spark.createDataFrame(rows, "id int, cluster int, features array<double>")
-    proj, model = pca_project(df, k=2)
-    got = {r["id"]: list(r["pc"]) for r in proj.collect()}
-
-    centered = base - base.mean(axis=0)
-    cov = np.cov(centered.T)
-    vals, vecs = np.linalg.eigh(cov)
-    top2 = vecs[:, np.argsort(vals)[::-1][:2]]
-    expected = centered @ top2
-    spark_mat = np.array([got[i] for i in range(80)])
-    for c in range(2):
-        col = spark_mat[:, c]
-        # sign-invariant comparison per component
-        assert np.allclose(col, expected[:, c], atol=1e-6) or np.allclose(
-            -col, expected[:, c], atol=1e-6
-        )
-    ev = explained_variance(model)
-    assert ev[0] > ev[1] > 0
+def test_streaming_outer_join_supersets_inner(spark, sf_dir):
+    """The left-outer drain must contain every inner-join pair plus
+    only NULL-click rows; no view may appear both matched and null."""
+    outer = run_query("streaming_outer_interval_join", spark, sf_dir).collect()
+    inner = run_query("streaming_interval_join", spark, sf_dir).collect()
+    outer_pairs = {(r["view_id"], r["click_id"]) for r in outer if r["click_id"] is not None}
+    inner_pairs = {(r["view_id"], r["click_id"]) for r in inner}
+    assert inner_pairs == outer_pairs
+    matched_views = {v for v, _ in outer_pairs}
+    null_views = {r["view_id"] for r in outer if r["click_id"] is None}
+    assert not (matched_views & null_views)
 
 
-# -------------------------------------------------------------- streaming
+def test_streaming_outer_join_watermark_boundary(spark, tmp_path):
+    """ADVICE 2: pin the eviction rule at the knife-edge.  Fixture:
+    anchors on both streams at base+10h fix the global watermark at
+    base+8h (2h delay); three clickless views straddle the deadline:
+
+      view 4: deadline wm - 1s  -> evicted  -> NULL row emitted
+      view 3: deadline == wm    -> HELD     -> absent (strict <)
+      view 5: deadline wm + 1s  -> held     -> absent
+
+    plus one matched pair (view 6/click 7) that must appear regardless.
+    Spark (availableNow drain) and the oracle SQL must agree row-for-
+    row — a Spark version bump that changes the internal state-
+    watermark adjustment fails HERE, not as a headline hash mismatch."""
+    base = dt.datetime(2024, 1, 1)
+    H, M, S = (dt.timedelta(hours=1), dt.timedelta(minutes=1),
+               dt.timedelta(seconds=1))
+    wm = base + 8 * H
+    rows = [
+        (1, base + 10 * H, 99, "view"),
+        (2, base + 10 * H, 98, "click"),
+        (3, wm - 30 * M, 1, "view"),
+        (4, wm - 30 * M - S, 2, "view"),
+        (5, wm - 30 * M + S, 3, "view"),
+        (6, base + 1 * H, 4, "view"),
+        (7, base + 1 * H + 10 * M, 4, "click"),
+    ]
+    pd.DataFrame(
+        [(i, ts, u, et, 1.0, "{}") for i, ts, u, et in rows],
+        columns=["event_id", "ts", "user_id", "event_type", "value", "props"],
+    ).to_parquet(tmp_path / "events.parquet", index=False)
+
+    got = {
+        (r["view_id"], r["click_id"])
+        for r in q_streaming_outer_interval_join(spark, str(tmp_path))
+        .toPandas()
+        .to_dict("records")
+    }
+    want = {(4, None), (6, 7.0)}
+    norm = {(v, None if pd.isna(c) else c) for v, c in got}
+    assert norm == want, f"spark drain produced {norm}"
+
+    con = duckdb.connect()
+    con.execute(
+        f"CREATE VIEW events AS SELECT * FROM '{tmp_path}/events.parquet'"
+    )
+    odf = con.execute(STREAMING_OUTER_JOIN_SQL).df()
+    onorm = {
+        (r["view_id"], None if pd.isna(r["click_id"]) else r["click_id"])
+        for r in odf.to_dict("records")
+    }
+    assert onorm == want, f"oracle produced {onorm}"
 
 
 @pytest.fixture()
@@ -85,9 +156,6 @@ def test_stream_assign(spark, event_dir, tmp_path, sf_dir):
     assert n == spark.read.parquet(f"{sf_dir}/events.parquet").count()
     assert {r["cluster"] for r in got.select("cluster").distinct().collect()} <= {1, 2}
     # batch/stream parity: same expression on the same rows, same result
-    from k_means_hadoop_spark.sources.events import load_events
-    from k_means_hadoop_spark.streaming.stream_kmeans import featurize_events
-    from k_means_hadoop_spark.operators.assign import assign_expr
 
     batch_out = assign_expr(featurize_events(load_events(spark, sf_dir)), CENTS_2D)
     b = {r["id"]: r["cluster"] for r in batch_out.collect()}
@@ -111,7 +179,6 @@ def test_windowed_event_stats(spark, event_dir, tmp_path, sf_dir):
     # availableNow + append emits only windows sealed by the watermark;
     # the last day's windows stay in state. Check the sealed prefix
     # against a batch recomputation.
-    from k_means_hadoop_spark.sources.events import load_events
 
     ev = load_events(spark, sf_dir)
     batch = (
@@ -141,12 +208,6 @@ def test_stateful_user_totals_across_batches(spark, tmp_path, sf_dir):
     ACROSS micro-batches — events are split into two files consumed one
     per trigger, and each user's final row must equal the plain batch
     aggregate over all events."""
-    import pandas as pd
-
-    from k_means_hadoop_spark.sources.events import load_events
-    from k_means_hadoop_spark.streaming.stateful import stateful_user_totals
-    from k_means_hadoop_spark.streaming.stream_kmeans import read_event_stream
-
     ev = load_events(spark, sf_dir)
     # split into two parquet files -> two micro-batches
     d = tmp_path / "events_split"
@@ -181,45 +242,6 @@ def test_stateful_user_totals_across_batches(spark, tmp_path, sf_dir):
     assert (abs(joined["sum_value_got"] - joined["sum_value"]) < 1e-6).all()
 
 
-# -------------------------------------------------------------- multimodal
-
-
-def test_media_decode_plumbing(spark, sf_dir):
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet").limit(50)
-    media = media_from_documents(docs)
-    assert set(media.columns) == {"media_id", "kind", "payload", "meta"}
-    feats = decode_media(media)
-    rows = feats.collect()
-    assert len(rows) == 50
-    by_id = {r["media_id"]: r for r in rows}
-    # deterministic: content hash matches md5 of the utf-8 text
-    import hashlib
-
-    src = {r["doc_id"]: r["text"] for r in docs.collect()}
-    for mid, r in by_id.items():
-        assert r["content_hash"] == hashlib.md5(src[mid].encode()).hexdigest()
-        assert r["payload_bytes"] == len(src[mid].encode())
-        assert 0 <= r["mean_byte"] <= 255
-        assert r["byte_entropy"] > 0
-    kinds = {r["kind"] for r in rows}
-    assert kinds <= {"image", "audio", "video"}
-
-
-def test_media_real_decode_rejects_noncodec_payloads(spark, sf_dir):
-    """Round 5 made decode_media_real REAL (BMP/WAV parsers); the old
-    NotImplementedError stub is gone.  What must hold instead: payloads
-    that are NOT valid BMP/WAV bytes (media_from_documents ships utf-8
-    text under image/audio labels) come back as honest ok=false rows
-    with a parse-failure reason — never as fake features."""
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet").limit(9)
-    rows = decode_media_real(media_from_documents(docs)).collect()
-    assert rows
-    for r in rows:
-        assert not r["ok"]
-        assert r["reason"], r
-        assert r["width"] is None and r["rms"] is None
-
-
 def test_watermark_drops_late_events(spark, tmp_path):
     """Append-mode windowed agg with a 1h watermark across three
     sequential micro-batches.  Spark enforces the watermark at state
@@ -228,13 +250,6 @@ def test_watermark_drops_late_events(spark, tmp_path):
     been evicted — batch 1 advances the watermark past the 10:00 window,
     batch 2 evicts+emits it, and batch 3's 10:15 straggler must then be
     dropped (no second 10:00 row, count stays 2)."""
-    import time
-
-    from k_means_hadoop_spark.streaming.stream_kmeans import (
-        read_event_stream,
-        windowed_event_stats,
-    )
-
     def nanos(hhmm: str) -> int:
         h, m = map(int, hhmm.split(":"))
         base = 1700000000  # fixed epoch day, irrelevant which
@@ -287,15 +302,11 @@ def test_tws_user_stats_matches_batch(spark, sf_dir):
     driver worker) is unavailable — the operator itself is still
     importable and registered conditionally."""
     pytest.importorskip("google.protobuf")
-    from k_means_hadoop_spark.registry_pipeline import q_streaming_tws_stats
-
-    from pyspark.sql import functions as F
 
     got = {
         r["user_id"]: (r["n_events"], r["sum_value"], r["n_types"])
         for r in q_streaming_tws_stats(spark, sf_dir).collect()
     }
-    from k_means_hadoop_spark.sources.events import load_events
 
     exp = {
         r["user_id"]: (r["n"], r["s"], r["t"])
@@ -318,15 +329,12 @@ def test_tws_registry_entry_always_present(spark, sf_dir):
     in the driver artifact (round-2 verdict item 6) — itself
     oracle-backed by a constant DuckDB SELECT (round-12 verdict item 6:
     the correctness sampler must never draw an err=no_oracle row)."""
-    from k_means_hadoop_spark import registry_pipeline as rp
-
     fn, sql = rp.PIPELINE_QUERIES["streaming_tws_user_stats"]
     if not rp._has_protobuf():
         rows = fn(spark, sf_dir).collect()
         assert len(rows) == 1 and rows[0]["available"] is False
         assert "protobuf" in rows[0]["reason"]
         # the constant oracle must hash-match the capability row
-        from oracle_harness import compare, duck_connection
 
         ok, status = compare(fn(spark, sf_dir), duck_connection(sf_dir), sql)
         assert ok, status
@@ -340,8 +348,6 @@ def test_streaming_parquet_sink_exactly_once_resume(spark, tmp_path):
 
     Run 1 drains file A; file B arrives; run 2 (same checkpoint) drains
     only B.  The output must hold each row exactly once."""
-    import pandas as pd
-
     src = tmp_path / "src"
     out = tmp_path / "out"
     ckpt = tmp_path / "ckpt"
@@ -377,13 +383,6 @@ def test_streaming_upsert_snapshot_matches_batch(spark, tmp_path, sf_dir):
     the newest record per user — identical to the batch compaction over
     the full log (and the second batch must have merged against the
     first's snapshot, not clobbered it)."""
-    from pyspark.sql import Window
-    from pyspark.sql import functions as F
-
-    from k_means_hadoop_spark.sources.events import load_events
-    from k_means_hadoop_spark.streaming.relational import streaming_upsert_snapshot
-    from k_means_hadoop_spark.streaming.stream_kmeans import read_event_stream
-
     ev = load_events(spark, sf_dir).select(
         "event_id", "ts", "user_id", "event_type", "value", "props"
     )
@@ -419,8 +418,6 @@ def test_tws_registration_tracks_protobuf_capability():
     registered branch matches the environment — if the container ever
     gains protobuf, this fails until the real operator registers, per
     the round-3 verdict's standing ask."""
-    from k_means_hadoop_spark import registry_pipeline as rp
-
     try:
         import google.protobuf  # noqa: F401
 

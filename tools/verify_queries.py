@@ -2,8 +2,11 @@
 test SFs — the local mimic of the driver gate, for optimization-round
 equivalence proofs (every touched query must stay hash-identical).
 
-Usage: python tools/verify_queries.py <name> [<name> ...]
-       python tools/verify_queries.py --sf 0.1 <name> ...
+Usage: python tools/verify_queries.py [<name> ...]
+       python tools/verify_queries.py --sf 0.1 [<name> ...]
+
+With no names, every registry query runs, in ``queries()`` order.  A
+query that raises is reported as FAIL and the run goes on.
 """
 
 from __future__ import annotations
@@ -27,7 +30,7 @@ def main() -> None:
     if args and args[0] == "--sf":
         sfs = [args[1]]
         args = args[2:]
-    names = args
+    names = args or list(registry.QUERIES)
     unknown = [n for n in names if n not in registry.QUERIES]
     if unknown:
         sys.exit(f"unknown queries: {unknown}")
@@ -38,7 +41,10 @@ def main() -> None:
         con = duck_connection(sf_dir)
         for name in names:
             t0 = time.perf_counter()
-            ok, status = compare(registry.QUERIES[name](spark, sf_dir), con, registry.ORACLES[name])
+            try:
+                ok, status = compare(registry.QUERIES[name](spark, sf_dir), con, registry.ORACLES[name])
+            except Exception as e:  # noqa: BLE001 - report and continue
+                ok, status = False, f"{type(e).__name__}: {e}"
             dt = time.perf_counter() - t0
             print(f"sf{sf} {name}: {'OK' if ok else 'FAIL'} ({status}) [{dt:.1f}s]", flush=True)
             if not ok:
