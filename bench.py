@@ -377,7 +377,7 @@ def main() -> None:
                     ),
                     "known_skip": (
                         "pytest skips transformWithStateInPandas "
-                        "(tests/test_streaming.py): "
+                        "(tests/test_pca_streaming_multimodal.py): "
                         "google.protobuf is not installed in this container "
                         "and installs are disallowed; the registry surfaces "
                         "the gate as the streaming_tws_user_stats capability "

@@ -44,7 +44,7 @@ def squared_distance_unrolled(a_ref: str, b_ref: str, d: int) -> Column:
 
     Bit-exact vs the fold: same left-associative index-order summation,
     and ``0.0 + t0 == t0`` for the non-negative first term, pinned
-    bit-for-bit in ``tests/test_kmeans_core.py``.
+    bit-for-bit in ``tests/test_opt_r12.py``.
 
     ``a_ref``/``b_ref`` are SQL column references (e.g. ``a.features``);
     use when d is known at build time WITHOUT an extra scan — e.g. from

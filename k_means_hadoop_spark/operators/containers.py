@@ -376,7 +376,7 @@ FROM px GROUP BY doc_id
 # transform is exactly invertible and the full encode->decode
 # roundtrip is bit-exact — provable in-query and hash-matched against
 # the closed-form oracle.  The entropy layer's losslessness on
-# ARBITRARY images is pinned separately in tests/test_codecs.py.
+# ARBITRARY images is pinned separately in tests/test_round8_ops.py.
 
 
 def jpeg_decode_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -482,7 +482,7 @@ FROM px GROUP BY doc_id
 
 def _mp4_plant(did: int):
     """The planted track spec for doc_id ``did`` (shared by the kernel
-    and the roundtrip pins in tests/test_codecs.py)."""
+    and the roundtrip pins in tests/test_round9_ops.py)."""
     nv = 5 + did % 4
     vs = [
         bytes(((did * 13 + i * 7 + j) % 256) for j in range(20 + (did + i) % 11))
@@ -638,7 +638,7 @@ FROM d JOIN vbytes v USING (doc_id)
 
 def _fmp4_plant(did: int) -> list:
     """Fragment sample payloads for doc_id ``did`` (shared with the
-    roundtrip pins in tests/test_codecs.py)."""
+    roundtrip pins in tests/test_round9_ops.py)."""
     nf = 2 + did % 3
     return [
         [
@@ -766,7 +766,7 @@ FROM d JOIN sm USING (doc_id)
 
 def _mkv_plant(did: int) -> dict:
     """The planted container spec for doc_id ``did`` (shared by the
-    kernel and the roundtrip pins in tests/test_codecs.py)."""
+    kernel and the roundtrip pins in tests/test_round10_ops.py)."""
     webm = did % 2 == 0
     nc = 2 + did % 3
     clusters = []
@@ -1106,7 +1106,7 @@ FROM d JOIN sm USING (doc_id)
 
 def _zip_plant(did: int) -> list[dict]:
     """The planted archive spec for doc_id ``did`` (shared by the
-    kernel and the roundtrip pins in tests/test_codecs.py)."""
+    kernel and the roundtrip pins in tests/test_round11_ops.py)."""
     members = []
     for i in range(2 + did % 3):
         if (did + i) % 2 == 0:
@@ -1253,7 +1253,7 @@ FROM agg
 
 def _gzip_plant(did: int) -> list[dict]:
     """The planted multi-member stream spec for doc_id ``did`` (shared
-    by the kernel and the roundtrip pins in tests/test_codecs.py)."""
+    by the kernel and the roundtrip pins in tests/test_round11_ops.py)."""
     members = []
     for i in range(1 + did % 3):
         m = {
@@ -1497,7 +1497,7 @@ FROM documents WHERE doc_id % 11 = 5
 
 def _tar_plant(did: int) -> list[dict]:
     """The planted archive spec for doc_id ``did`` (shared by the
-    kernel and the roundtrip pins in tests/test_codecs.py)."""
+    kernel and the roundtrip pins in tests/test_round11_ops.py)."""
     return [
         {
             "name": f"f{i}.dat",
@@ -1624,7 +1624,7 @@ FROM agg
 def _ogg_codec_plant(did: int) -> dict:
     """The planted identification-header spec for doc_id ``did``
     (shared by the kernel and the roundtrip pins in
-    tests/test_codecs.py)."""
+    tests/test_round12_ops.py)."""
     if did % 2 == 1:
         pre_skip = 312 + did % 100
         if did % 3 == 0:

@@ -320,7 +320,7 @@ def _power_iteration_sql(d: int = 64) -> str:
 #      eigenpair of the true covariance: residual ‖Cv−λv‖ ≤ 1e-6·λ,
 #      λ > 0, max_i cov_ii ≤ λ ≤ trace (Rayleigh bounds).
 #
-# tests/test_pca.py additionally pins the float eigenvector
+# tests/test_round7_ops.py additionally pins the float eigenvector
 # against the exact-decimal path (direction cosine / λ ratio).
 """Cites reference PCA_Plot.ipynb cell-0 (covariance + eig) for the
 semantics; the distributed Gram split is the Spark-first re-design."""

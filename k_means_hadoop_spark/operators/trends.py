@@ -198,7 +198,7 @@ def acf_daily_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     anywhere in the plan.  On a gapless series the two forms are
     row-identical (rn(a) − rn(b) == lag ⟺ datediff(a.day, b.day) ==
     lag), and the events fixture is gapless at every shipped SF
-    (pinned by tests/test_trends.py::
+    (pinned by tests/test_advice_fixes_r7.py::
     test_events_daily_series_gapless).  The DuckDB oracle keeps the rn
     form — equal under the same pin.  For sparse sources the calendar
     form is also the semantically correct one (the r6-ADVICE caveat
@@ -938,7 +938,7 @@ def haar_wavelet_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
     # a short-span fixture would silently pair an odd-length series
     # (null a/b sums) — and the DuckDB oracle has no guard at all, so
     # this is the only gate (fixture span pinned in
-    # tests/test_trends.py).
+    # tests/test_advice_fixes_r8.py).
     if n_days != _HAAR_N:
         raise ValueError(
             f"haar_wavelet_daily: fixture day span changed ({n_days} != "

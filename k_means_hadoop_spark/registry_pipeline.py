@@ -399,7 +399,7 @@ def _edit_distance_sql(t: int) -> str:
     # generators, one answer) — on SINGLE-BYTE text: DuckDB levenshtein
     # counts bytes, Spark's counts characters; all shipped fixtures are
     # ASCII (see edit_distance_pairs' unicode-seam note and the
-    # enforced fixture pin in tests/test_dedup.py).
+    # enforced fixture pin in tests/test_round11_ops.py).
     return f"""
 WITH d AS (SELECT doc_id, text, length(text) AS len FROM documents),
 cand AS (SELECT a.doc_id AS a_id, b.doc_id AS b_id
@@ -1911,7 +1911,7 @@ def q_pca_project(spark, sf_dir):
     total variance.  A broken centering, a non-eigen direction, or a
     correlated basis flips the hash.  Per-point projection parity vs
     NumPy (sign-invariant) stays pinned in
-    tests/test_pca.py."""
+    tests/test_pca_streaming_multimodal.py."""
     pts = points_from_embeddings(spark, sf_dir)
     asg = assign_expr(pts, init_ids(pts, KNN_QUERY_IDS))
     proj, _model = pca_project(asg, k=2)
@@ -2659,7 +2659,7 @@ def _edit_verified_sql(n: int, t: int) -> str:
     must REPRODUCE the candidate set, not approximate it), then the
     length necessary-condition prune and the shared L1-prefiltered
     levenshtein verify tail.  Byte-vs-character parity holds on the
-    ASCII fixtures (enforced by tests/test_dedup.py's fixture
+    ASCII fixtures (enforced by tests/test_round11_ops.py's fixture
     pin)."""
     return f"""
 WITH {_minhash_ctes(n)},

@@ -1,44 +1,21 @@
-"""Shared test helpers: one-table fixture writers, the registry lookup and
-the lazy-build check used by more than one test module."""
+"""Shared test helpers: the document schema, the fixture roots and the
+one-table events writer used by more than one test module."""
 
 from __future__ import annotations
 
 import pandas as pd
-
-from k_means_hadoop_spark import registry
-from k_means_hadoop_spark.operators.relational import _t
+from pyspark.sql.types import LongType, StringType, StructField, StructType
 
 
-def run_query(name, spark, sf_dir):
-    return registry.QUERIES[name](spark, sf_dir)
-
-
-def build_runs_no_jobs(spark, fn, *args, table="events"):
-    """Build fn(*args) under a fresh job group and assert construction
-    scheduled no Spark jobs beyond the table scan's own schema-
-    inference job (round-9 verdict item 4: the degenerate guards are
-    in-plan raise_error branches, not build-time counts).  Spark 4
-    runs one tiny footer-read job per ``spark.read.parquet``, so the
-    honest zero is "build jobs == plain-read jobs", measured here
-    rather than assumed."""
-    sf_dir = args[-1]
-    sc = spark.sparkContext
-    st = sc.statusTracker()
-    sc.setJobGroup(f"read-baseline-{fn.__name__}", "plain table read")
-    _t(spark, sf_dir, table)
-    baseline = len(st.getJobIdsForGroup(f"read-baseline-{fn.__name__}"))
-    group = f"no-eager-{fn.__name__}"
-    sc.setJobGroup(group, "build must be lazy")
-    try:
-        df = fn(*args)
-        built = len(st.getJobIdsForGroup(group))
-        assert built <= baseline, (
-            f"building {fn.__name__} ran {built} jobs vs {baseline} "
-            "for a plain table read — an eager guard job is back"
-        )
-    finally:
-        sc.setJobGroup(None, None)
-    return df
+DOC_SCHEMA = StructType(
+    [
+        StructField("doc_id", LongType()),
+        StructField("text", StringType()),
+        StructField("lang", StringType()),
+        StructField("source", StringType()),
+        StructField("n_chars", LongType()),
+    ]
+)
 
 
 SF_DIRS = [f"/root/testdata/sf{s}" for s in ("0.001", "0.01", "0.1")]

@@ -18,26 +18,21 @@ import duckdb
 import pytest
 from pyspark.sql import Window
 from pyspark.sql import functions as F
-from pyspark.sql.types import (
-    DecimalType,
-    DoubleType,
-    LongType,
-    StringType,
-    StructField,
-    StructType,
-)
+from pyspark.sql.types import DecimalType, LongType, StructField, StructType
 
+from k_means_hadoop_spark.operators.analytics import (
+    kcore_membership,
+    shortest_paths_weighted,
+)
+from k_means_hadoop_spark.operators.corpus_extra import (
+    _calibration_sql,
+    classifier_calibration,
+    pmi_bigrams,
+)
+from k_means_hadoop_spark.operators.sketches import cms_event_counts
 from k_means_hadoop_spark.partitioning import prefix_sum
-
-DOC_SCHEMA = StructType(
-    [
-        StructField("doc_id", LongType()),
-        StructField("text", StringType()),
-        StructField("lang", StringType()),
-        StructField("source", StringType()),
-        StructField("n_chars", LongType()),
-    ]
-)
+from tests.helpers import DOC_SCHEMA
+from tests.oracle_harness import compare
 
 
 def _write_docs(spark, tmp_path, texts) -> str:
@@ -62,12 +57,6 @@ def test_calibration_decile_parity_n_not_divisible_by_10(spark, tmp_path, n_docs
     """End-to-end Spark-vs-DuckDB parity of classifier_calibration on a
     corpus whose size is NOT divisible by 10 — the exact case where
     ntile(10) and the closed form floor((rk-1)*10/N)+1 disagree."""
-    from k_means_hadoop_spark.operators.corpus_extra import (
-        _calibration_sql,
-        classifier_calibration,
-    )
-    from tests.oracle_harness import compare
-
     sf = _write_docs(spark, tmp_path, _varied_texts(n_docs))
     sdf = classifier_calibration(spark, sf)
     con = duckdb.connect()
@@ -135,8 +124,6 @@ def test_prefix_sum_matches_global_window_float(spark):
 
 
 def test_pmi_bigrams_survives_empty_and_one_token_docs(spark, tmp_path):
-    from k_means_hadoop_spark.operators.corpus_extra import pmi_bigrams
-
     texts = ["   ", "\t\n ", "single", ""] + [
         "new york city hosts new york marathons in new york every year"
     ] * 3
@@ -148,12 +135,6 @@ def test_pmi_bigrams_survives_empty_and_one_token_docs(spark, tmp_path):
 def test_interpolated_docstrings_attached():
     """The three .format() docstrings flagged by ADVICE must actually be
     attached and interpolated (no stray {placeholders})."""
-    from k_means_hadoop_spark.operators.analytics import (
-        kcore_membership,
-        shortest_paths_weighted,
-    )
-    from k_means_hadoop_spark.operators.sketches import cms_event_counts
-
     for fn in (cms_event_counts, kcore_membership, shortest_paths_weighted):
         assert fn.__doc__, fn.__name__
         assert "{" not in fn.__doc__, fn.__doc__

@@ -11,9 +11,18 @@
 
 from __future__ import annotations
 
-from pyspark.sql import functions as F
+import decimal as dec
 
-from k_means_hadoop_spark.partitioning import prefix_sum, scan_parts
+import pytest as _pytest
+from pyspark.sql import functions as F
+from pyspark.sql.types import DecimalType, LongType, StructField, StructType
+
+from k_means_hadoop_spark.operators.dedup import edit_distance_pairs
+from k_means_hadoop_spark.partitioning import (
+    prefix_sum,
+    prefix_sum_literal_bounds,
+    scan_parts,
+)
 
 
 def test_scan_parts_floors_at_default(spark):
@@ -31,8 +40,6 @@ def test_literal_bounds_matches_checkpoint_form(spark):
     """prefix_sum_literal_bounds (the recompute-safe variant) must be
     value-identical to prefix_sum for a mixed asc/desc multi-key order
     with ties."""
-    from k_means_hadoop_spark.partitioning import prefix_sum_literal_bounds
-
     data = [((i * 7) % 13, (i * 3) % 5, i % 4 + 1) for i in range(400)]
     df = spark.createDataFrame(data, "a int, b int, v int")
     ck = prefix_sum(
@@ -49,8 +56,6 @@ def test_literal_bounds_matches_checkpoint_form(spark):
 def test_literal_bounds_degenerate_inputs(spark):
     """Constant keys (every boundary equal) and tiny inputs (empty
     sample -> one range) both stay correct."""
-    from k_means_hadoop_spark.partitioning import prefix_sum_literal_bounds
-
     const = spark.createDataFrame([(1, 1)] * 50, "k int, v int")
     out = prefix_sum_literal_bounds(const, "v", [("k", True)], num_parts=4)
     assert sorted(r["cum"] for r in out.collect()) == list(range(1, 51))
@@ -64,12 +69,6 @@ def test_literal_bounds_degenerate_inputs(spark):
 
 
 def test_literal_bounds_preserves_decimal_and_float(spark):
-    import decimal as dec
-
-    from pyspark.sql.types import DecimalType, LongType, StructField, StructType
-
-    from k_means_hadoop_spark.partitioning import prefix_sum_literal_bounds
-
     schema = StructType(
         [StructField("k", LongType()), StructField("v", DecimalType(10, 2))]
     )
@@ -107,8 +106,6 @@ def test_edit_distance_pairs_reference(spark):
     """edit_distance_pairs vs plain-Python Levenshtein on a fixture
     with pairs straddling length-bucket boundaries (the lossless ±1
     band) and distances at/over the threshold."""
-    from k_means_hadoop_spark.operators.dedup import edit_distance_pairs
-
     docs = [
         (1, "abcdefgh"),          # len 8  -> bucket 1
         (2, "abcdefg"),           # len 7  -> bucket 0; dist(1,2)=1 across buckets
@@ -145,9 +142,5 @@ def test_edit_distance_pairs_reference(spark):
 
 
 def test_edit_distance_band_guard():
-    from k_means_hadoop_spark.operators.dedup import edit_distance_pairs
-
-    import pytest as _pytest
-
     with _pytest.raises(ValueError, match="band"):
         edit_distance_pairs(None, max_dist=8, band=8)

@@ -20,6 +20,8 @@ from __future__ import annotations
 import struct
 
 import pytest
+from hypothesis import given, settings
+from hypothesis import strategies as st
 
 from k_means_hadoop_spark.functions import codecs
 
@@ -142,8 +144,6 @@ def test_mkv_negative_ebml_lace_size_rejected():
 def test_mkv_lacing_roundtrip_fuzz():
     """Property fuzz: ANY frame list under ANY lacing mode roundtrips
     bit-exact (fixed mode gets equal-size frames by construction)."""
-    from hypothesis import given, settings, strategies as st
-
     @settings(max_examples=60, deadline=None)
     @given(
         mode=st.sampled_from(["xiph", "ebml", "fixed"]),
@@ -248,7 +248,6 @@ def test_ogg_same_stream_data_after_eos_rejected():
     blob = codecs.encode_ogg(3, [b"pkt"])  # one BOS+EOS page
     with pytest.raises(ValueError, match="after the EOS"):
         codecs.parse_ogg(blob + blob)  # same serial, same seq 0... but
-        # the EOS check fires before the sequence check can
 
 
 def test_mkv_minimal_all_ones_first_lace_size_accepted():

@@ -12,6 +12,9 @@
 
 from __future__ import annotations
 
+import io
+import tarfile
+
 from k_means_hadoop_spark.functions import codecs
 from k_means_hadoop_spark.operators import containers
 
@@ -56,9 +59,6 @@ def test_sniff_tar_requires_verified_checksum():
 
     real = codecs.encode_tar([{"name": "a.bin", "data": b"xyz"}])
     assert codecs.sniff_format(real) == "tar"
-
-    import io
-    import tarfile
 
     buf = io.BytesIO()
     with tarfile.open(fileobj=buf, mode="w", format=tarfile.USTAR_FORMAT) as tf:

@@ -14,22 +14,28 @@
 
 from __future__ import annotations
 
+import inspect
 import io
 import os
 import tarfile
 
 import duckdb
 import numpy as np
-import pytest
 from pyspark.sql import functions as F
+
+from k_means_hadoop_spark.functions import codecs
+from k_means_hadoop_spark.operators import pca
+from k_means_hadoop_spark.operators.analytics import _CUSUM_SQL, cusum_changepoints
+from k_means_hadoop_spark.operators.multimodal import wav_frame_features
+from k_means_hadoop_spark.operators.sketches import _hll_rho
+from k_means_hadoop_spark.operators.stats_extra import bh_fdr_nation_acctbal
+from k_means_hadoop_spark.sources.tar_shards import read_tar_shards
 
 
 def test_hll_rho_exact_at_power_of_two_boundary(spark):
     """h = 2^56 - 1: double(h) rounds UP to 2^56, so double division
     yields w = 2^50 (bin length 51, rho 4); exact h//64 = 2^50 - 1
     (bin length 50, rho 5).  The DuckDB oracle computes the exact form."""
-    from k_means_hadoop_spark.operators.sketches import _hll_rho
-
     h = (1 << 56) - 1
     row = (
         spark.range(1)
@@ -45,11 +51,6 @@ def test_cusum_6dp_half_matches_duckdb(spark, tmp_path):
     """128 days (k_days carries 2^7) with odd cumulative residuals —
     every odd `scaled` lands on an exact 6dp half.  Spark and the
     oracle must produce identical cusum values."""
-    from k_means_hadoop_spark.operators.analytics import (
-        _CUSUM_SQL,
-        cusum_changepoints,
-    )
-
     rows = []
     eid = 0
     for d in range(128):
@@ -98,9 +99,6 @@ def test_cusum_6dp_half_matches_duckdb(spark, tmp_path):
 
 
 def test_wav_frame_features_skips_malformed_audio(spark):
-    from k_means_hadoop_spark.functions import codecs
-    from k_means_hadoop_spark.operators.multimodal import wav_frame_features
-
     good = codecs.encode_wav(
         np.arange(64, dtype=np.int16), 16000
     )
@@ -119,10 +117,6 @@ def test_wav_frame_features_skips_malformed_audio(spark):
 
 
 def test_power_iteration_docs_reference_real_knob():
-    import inspect
-
-    from k_means_hadoop_spark.operators import pca
-
     src = inspect.getsource(pca)
     assert "_PI_ITERS" not in src
     assert "_PI_SQUARINGS" in pca.power_iteration_pc1.__doc__
@@ -134,12 +128,6 @@ def test_bh_zero_z2_is_weakest_not_strongest_evidence(spark, tmp_path):
     must be 1/1, not 0/1 — the 0/1 form made the BH step-up condition
     true at the last rank and dragged EVERY nation into the rejection
     set."""
-    import os
-
-    from k_means_hadoop_spark.operators.stats_extra import (
-        bh_fdr_nation_acctbal,
-    )
-
     rows = [
         (1, "a", 0, 1.00, "m"),
         (2, "b", 0, 3.00, "m"),  # nation 0 mean = 2.00
@@ -166,10 +154,6 @@ def test_bh_zero_z2_is_weakest_not_strongest_evidence(spark, tmp_path):
 def test_tar_scan_skips_int_unparseable_stems(spark, tmp_path):
     """isdigit() admits stems int() rejects ('--3', unicode digits) —
     the guard must be int-parse-based."""
-    import os
-
-    from k_means_hadoop_spark.sources.tar_shards import read_tar_shards
-
     shard_dir = str(tmp_path / "shards2")
     os.makedirs(shard_dir)
     with tarfile.open(os.path.join(shard_dir, "shard-00000.tar"), "w") as tf:
@@ -186,8 +170,6 @@ def test_tar_scan_skips_int_unparseable_stems(spark, tmp_path):
 
 
 def test_tar_scan_tolerates_foreign_members(spark, tmp_path):
-    from k_means_hadoop_spark.sources.tar_shards import read_tar_shards
-
     shard_dir = str(tmp_path / "shards")
     os.makedirs(shard_dir)
     with tarfile.open(os.path.join(shard_dir, "shard-00000.tar"), "w") as tf:

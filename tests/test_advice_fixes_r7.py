@@ -18,20 +18,25 @@
 from __future__ import annotations
 
 import datetime as dt
-import os
+import inspect
 
 import duckdb
 import pandas as pd
 import pytest
 
-SF_DIRS = [f"/root/testdata/sf{s}" for s in ("0.001", "0.01", "0.1")]
+from k_means_hadoop_spark.operators import stats_extra
+from k_means_hadoop_spark.operators.mining import random_projection_jl
+from k_means_hadoop_spark.registry_pipeline import (
+    STREAMING_OUTER_JOIN_SQL,
+    q_streaming_outer_interval_join,
+)
+from tests.helpers import SF_DIRS
+from tests.oracle_harness import compare, duck_connection
 
 
 def test_jl_dim_guard_fails_loudly(spark, tmp_path):
     """ADVICE 1: a non-64-dim embeddings fixture must raise, not
     silently diverge from the oracle's range(0, 64) sign matrix."""
-    from k_means_hadoop_spark.operators.mining import random_projection_jl
-
     pd.DataFrame(
         {"vec_id": [0, 1], "embedding": [[1.0] * 8, [2.0] * 8]}
     ).to_parquet(tmp_path / "embeddings.parquet", index=False)
@@ -62,11 +67,6 @@ def test_streaming_outer_join_watermark_boundary(spark, tmp_path):
     Spark (availableNow drain) and the oracle SQL must agree row-for-
     row — a Spark version bump that changes the internal state-
     watermark adjustment fails HERE, not as a headline hash mismatch."""
-    from k_means_hadoop_spark.registry_pipeline import (
-        STREAMING_OUTER_JOIN_SQL,
-        q_streaming_outer_interval_join,
-    )
-
     base = dt.datetime(2024, 1, 1)
     H, M, S = (dt.timedelta(hours=1), dt.timedelta(minutes=1),
                dt.timedelta(seconds=1))
@@ -124,11 +124,6 @@ def test_events_daily_series_gapless():
 def test_anova_two_way_uses_floor_rounding(spark, sf_dir):
     """ADVICE 4: both anova_two_way faces use the tie-stable
     floor(x*1e6+0.5) form, and they still agree value-for-value."""
-    import inspect
-
-    from k_means_hadoop_spark.operators import stats_extra
-    from tests.oracle_harness import compare, duck_connection
-
     src = inspect.getsource(stats_extra.anova_two_way)
     assert "round(" not in src.replace("F.round", "ROUND_TOKEN"), (
         "Spark face must not use F.round"

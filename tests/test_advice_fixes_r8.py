@@ -27,14 +27,18 @@ import duckdb
 import pandas as pd
 import pytest
 
-SF_DIRS = [f"/root/testdata/sf{s}" for s in ("0.001", "0.01", "0.1")]
+from k_means_hadoop_spark.operators import stats_extra
+from k_means_hadoop_spark.operators.pca import power_iteration_pc1_float
+from k_means_hadoop_spark.operators.stats_extra import friedman_event_dow
+from k_means_hadoop_spark.operators.trends import _HAAR_N, haar_wavelet_daily
+from tests.helpers import SF_DIRS, write_events
+
+
 _REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 
 def test_holm_docstring_states_actual_alpha():
     """ADVICE 1: the docstring must state the alpha the code uses."""
-    from k_means_hadoop_spark.operators import stats_extra
-
     doc = stats_extra.holm_bonferroni_nation_acctbal.__doc__
     alpha = stats_extra._HOLM_A_NUM / stats_extra._HOLM_A_DEN
     assert f"{alpha}" in doc, "docstring no longer states the code's alpha"
@@ -43,28 +47,12 @@ def test_holm_docstring_states_actual_alpha():
     )
 
 
-def _events_parquet(tmp_path, rows):
-    pd.DataFrame(
-        {
-            "event_id": range(len(rows)),
-            "ts": [pd.Timestamp(ts) for ts, _ in rows],
-            "user_id": [1] * len(rows),
-            "event_type": [t for _, t in rows],
-            "value": [1.0] * len(rows),
-            "props": ["{}"] * len(rows),
-        }
-    ).to_parquet(tmp_path / "events.parquet", index=False)
-    return str(tmp_path)
-
-
 def test_friedman_incomplete_blocks_raise(spark, tmp_path):
     """ADVICE 2: a fixture with a missing (block, treatment) cell must
     raise, not silently rank over the present treatments only."""
-    from k_means_hadoop_spark.operators.stats_extra import friedman_event_dow
-
     # block b=0 (2024-01-01) has types A and B; block b=1 (2024-01-02)
     # has only A -> 3 cells for 2 blocks x 2 treatments
-    d = _events_parquet(
+    d = write_events(
         tmp_path,
         [
             ("2024-01-01 01:00:00", "A"),
@@ -96,8 +84,6 @@ def test_friedman_fixture_blocks_complete():
 def test_power_iteration_float_empty_guard(spark, tmp_path):
     """ADVICE 3: an empty embeddings table raises a descriptive error
     instead of a divide-by-zero / NaN cascade."""
-    from k_means_hadoop_spark.operators.pca import power_iteration_pc1_float
-
     pd.DataFrame(
         {"vec_id": pd.Series([], dtype="int64"),
          "embedding": pd.Series([], dtype="object"),
@@ -125,9 +111,7 @@ def test_bench_gate_is_explicit_flag():
 def test_haar_short_span_raises_valueerror(spark, tmp_path):
     """ADVICE 5: a fixture with fewer than _HAAR_N usable days must
     raise ValueError (assert would vanish under python -O)."""
-    from k_means_hadoop_spark.operators.trends import haar_wavelet_daily
-
-    d = _events_parquet(
+    d = write_events(
         tmp_path,
         [(f"2024-01-0{i} 01:00:00", "A") for i in range(1, 5)],
     )
@@ -137,8 +121,6 @@ def test_haar_short_span_raises_valueerror(spark, tmp_path):
 
 def test_haar_fixture_span():
     """The shipped fixtures provide >= _HAAR_N distinct event days."""
-    from k_means_hadoop_spark.operators.trends import _HAAR_N
-
     con = duckdb.connect()
     for d in SF_DIRS:
         (n_days,) = con.execute(

@@ -16,9 +16,15 @@ registry scheduling comment, went with the scheduling table itself.
 
 from __future__ import annotations
 
+import inspect
+
 import numpy as np
 import pandas as pd
 import pytest
+
+from k_means_hadoop_spark.functions.codecs import decode_gif, encode_gif
+from k_means_hadoop_spark.operators import trends
+from k_means_hadoop_spark.operators.stats_extra import hypergeom_enrichment_sources
 
 
 def _docs_parquet(tmp_path, sources):
@@ -38,10 +44,6 @@ def _docs_parquet(tmp_path, sources):
 
 def test_hypergeom_single_source_raises(spark, tmp_path):
     """ADVICE 2: one distinct source -> loud ValueError, not NaN rows."""
-    from k_means_hadoop_spark.operators.stats_extra import (
-        hypergeom_enrichment_sources,
-    )
-
     sf_dir = _docs_parquet(tmp_path, ["only_src"] * 6)
     # round 10: the guard moved in-plan (raise_error on z) so building
     # runs no Spark job; it fires at action time with the same message
@@ -52,10 +54,6 @@ def test_hypergeom_single_source_raises(spark, tmp_path):
 def test_hypergeom_empty_corpus_raises(spark, tmp_path):
     """Round 10: the empty-corpus arm rides a unioned 1-row branch of
     the tot aggregate, so even ZERO per-source rows raise loudly."""
-    from k_means_hadoop_spark.operators.stats_extra import (
-        hypergeom_enrichment_sources,
-    )
-
     sf_dir = _docs_parquet(tmp_path, [])
     with pytest.raises(Exception, match="empty\\s+corpus"):
         hypergeom_enrichment_sources(spark, sf_dir).collect()
@@ -63,10 +61,6 @@ def test_hypergeom_empty_corpus_raises(spark, tmp_path):
 
 def test_hypergeom_two_sources_pass(spark, tmp_path):
     """The guard must NOT fire on a healthy 2-source corpus."""
-    from k_means_hadoop_spark.operators.stats_extra import (
-        hypergeom_enrichment_sources,
-    )
-
     sf_dir = _docs_parquet(tmp_path, ["a", "a", "a", "b", "b", "b"])
     rows = hypergeom_enrichment_sources(spark, sf_dir).collect()
     assert len(rows) == 2
@@ -79,10 +73,6 @@ def test_page_trend_documents_tie_variance_caveat():
     variance, and the derivation is documented where the caveat was
     (round-9 verdict item 6; value pin in tests/test_round8_ops.py::
     test_page_trend_against_local_reference)."""
-    import inspect
-
-    from k_means_hadoop_spark.operators import trends
-
     src = inspect.getsource(trends)
     blurb = src.split("def page_trend_event_dow")[0]
     assert "tie-corrected" in blurb and "Var(L)" in blurb, (
@@ -95,8 +85,6 @@ def test_page_trend_documents_tie_variance_caveat():
 
 def test_decode_gif_returns_writable_arrays():
     """ADVICE 4: decoded GIF indices must be mutable like BMP/PNG."""
-    from k_means_hadoop_spark.functions.codecs import decode_gif, encode_gif
-
     plane = (np.arange(48, dtype=np.uint8) % 7).reshape(6, 8)
     indices, palette = decode_gif(encode_gif(plane))
     assert indices.flags.writeable and palette.flags.writeable

@@ -8,10 +8,8 @@ semantics — and that the distributed plans keep their scale shape.
 
 from __future__ import annotations
 
-import os
 from collections import deque
 
-import duckdb
 import numpy as np
 import pandas as pd
 import pytest
@@ -24,7 +22,6 @@ from k_means_hadoop_spark.operators import analytics, dedup
 from k_means_hadoop_spark.operators import analytics as an
 from k_means_hadoop_spark.operators.analytics import (
     _BFS_ITERS,
-    _CUSUM_SQL,
     _KC_ITERS,
     _KC_K,
     _SP_ITERS,
@@ -32,7 +29,6 @@ from k_means_hadoop_spark.operators.analytics import (
     _t,
     anova_event_values,
     bfs_levels,
-    cusum_changepoints,
     dq_expectations,
     interarrival_stats,
     kcore_membership,
@@ -47,6 +43,7 @@ from k_means_hadoop_spark.operators.sketches import (
     cms_event_counts,
     cms_event_counts_streaming,
 )
+from k_means_hadoop_spark.partitioning import prefix_sum
 from k_means_hadoop_spark.registry import SEEDS, _SIL_MAX_ID, _points, q_silhouette
 from k_means_hadoop_spark.registry_pipeline import NGRAM_N, NGRAM_THRESHOLD, _docs
 from k_means_hadoop_spark.session import scratch_dir
@@ -543,6 +540,38 @@ def test_interarrival_stats_match_pandas(spark, sf_dir):
         assert mx == v.max()
 
 
+def test_prefix_sum_property_random_orders(spark):
+    """Property: prefix_sum equals the naive global window for random
+    values, duplicate keys, and any partition count."""
+    @settings(max_examples=5, deadline=None)
+    @given(
+        vals=st.lists(
+            st.tuples(st.integers(0, 30), st.integers(-100, 100)),
+            min_size=1,
+            max_size=120,
+        ),
+        nparts=st.integers(2, 9),
+    )
+    def check(vals, nparts):
+        rows = [(i, k, v) for i, (k, v) in enumerate(vals)]
+        df = spark.createDataFrame(rows, ["i", "k", "v"])
+        order = [F.col("k").asc(), F.col("i").asc()]
+        got = {
+            r["i"]: r["cum"]
+            for r in prefix_sum(df, "v", order, num_parts=nparts).collect()
+        }
+        w = Window.orderBy("k", "i").rowsBetween(
+            Window.unboundedPreceding, Window.currentRow
+        )
+        want = {
+            r["i"]: r["cum"]
+            for r in df.withColumn("cum", F.sum("v").over(w)).collect()
+        }
+        assert got == want
+
+    check()
+
+
 def test_pareto_property_random_points(spark):
     """Property: the window skyline equals the brute-force dominance
     scan for random (size, price) clouds with ties."""
@@ -576,72 +605,3 @@ def test_pareto_property_random_points(spark):
         assert got == want
 
     check()
-
-
-def test_cusum_telescopes_to_zero(spark, sf_dir):
-    """S_K = Σ(c_j − T/K) over the whole series is identically 0, so
-    the last day's cusum must be 0 (integer-exactness check)."""
-    rows = sorted(
-        cusum_changepoints(spark, sf_dir).collect(), key=lambda r: r["day"]
-    )
-    assert rows[-1]["cusum"] == 0.0
-    assert any(r["is_changepoint"] for r in rows)
-
-
-def test_interpolated_docstrings_attached():
-    """The three .format() docstrings flagged by ADVICE must actually be
-    attached and interpolated (no stray {placeholders})."""
-    for fn in (cms_event_counts, kcore_membership, shortest_paths_weighted):
-        assert fn.__doc__, fn.__name__
-        assert "{" not in fn.__doc__, fn.__doc__
-
-
-def test_cusum_6dp_half_matches_duckdb(spark, tmp_path):
-    """128 days (k_days carries 2^7) with odd cumulative residuals —
-    every odd `scaled` lands on an exact 6dp half.  Spark and the
-    oracle must produce identical cusum values."""
-    rows = []
-    eid = 0
-    for d in range(128):
-        # 1 or 2 events/day in a pattern that makes scaled odd often
-        n = 1 + ((d * 7) % 3 == 0)
-        for _ in range(n):
-            rows.append((eid, f"2024-01-01 00:00:{d % 60:02d}", d))
-            eid += 1
-    df = spark.createDataFrame(rows, "event_id long, ts_s string, d int").select(
-        "event_id",
-        (F.to_timestamp("ts_s") + F.expr("make_interval(0,0,0,d,0,0,0)")).alias(
-            "ts"
-        ),
-    )
-    sf = str(tmp_path)
-    df.coalesce(1).write.mode("overwrite").parquet(os.path.join(sf, "events.parquet"))
-
-    got = {
-        r["day"]: r["cusum"]
-        for r in cusum_changepoints(spark, sf).collect()
-    }
-    con = duckdb.connect()
-    con.execute(
-        "CREATE VIEW events AS SELECT * FROM read_parquet("
-        f"'{os.path.join(sf, 'events.parquet')}/*.parquet')"
-    )
-    exp = {r[0]: r[2] for r in con.execute(_CUSUM_SQL).fetchall()}
-    assert got == exp
-    # the tie really is exercised: an odd `scaled` (exact 6dp half —
-    # scaled*1e6/128 = scaled*7812.5) must exist, i.e. DuckDB's
-    # banker's round(x, 6) disagrees with the floor form somewhere
-    n_ties = con.execute(
-        """
-        WITH daily AS (
-          SELECT ts::DATE AS day, count(*)::BIGINT AS n_events
-          FROM events GROUP BY 1),
-        tot AS (SELECT SUM(n_events)::BIGINT AS t, count(*)::BIGINT AS k
-                FROM daily),
-        s AS (SELECT k * SUM(n_events) OVER (ORDER BY day)
-                     - row_number() OVER (ORDER BY day) * t AS scaled
-              FROM daily CROSS JOIN tot)
-        SELECT count(*) FROM s WHERE scaled % 2 != 0
-        """
-    ).fetchone()[0]
-    assert n_ties > 0

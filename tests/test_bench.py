@@ -3,7 +3,6 @@
 from __future__ import annotations
 
 import json
-import os
 from types import SimpleNamespace
 
 import bench
@@ -67,21 +66,3 @@ def test_contaminated_run_keeps_quiet_record(tmp_path, monkeypatch, capsys):
     record.write_text(json.dumps({"contaminated": True}))
     assert bench.write_full_record(str(record), {"contaminated": True, "v": 4}) is True
     assert json.loads(record.read_text())["v"] == 4
-
-
-_REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-
-
-def test_bench_gate_is_explicit_flag():
-    """ADVICE 4: the artifact-write gate must be the explicit
-    is_subset flag, never object identity on the query list."""
-    with open(os.path.join(_REPO, "bench.py")) as f:
-        src = f.read()
-    assert "names is HEADLINE" not in src
-    assert "is_subset" in src
-    # and the stdout line must stay unclippable: no per-query map on it
-    line_block = src.split("line = {", 1)[1].split("}", 1)[0]
-    assert '"queries"' not in line_block, (
-        "the stdout line carries the per-query map again — the driver "
-        "pipe clipped it in r04/r06/r07"
-    )

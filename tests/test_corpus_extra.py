@@ -5,33 +5,26 @@ from __future__ import annotations
 
 import collections
 import math
-import os
+import random
 
-import duckdb
 import numpy as np
 import pytest
+from pyspark.sql import Window
 from pyspark.sql import functions as F
-from pyspark.sql.types import LongType, StringType, StructField, StructType
 
 from k_means_hadoop_spark.functions.hashing import word_ngrams
 from k_means_hadoop_spark.operators import corpus_extra
 from k_means_hadoop_spark.operators import text as text_ops
 from k_means_hadoop_spark.operators.analytics import ab_conversion_lift
 from k_means_hadoop_spark.operators.corpus_extra import (
-    _calibration_sql,
     _docs,
     auc_quality_vs_gopher,
-    bootstrap_ci_quality,
     classifier_calibration,
-    ipf_raking,
     ks_quality_halves,
     mi_lang_source_cells,
-    pmi_bigrams,
     spearman_quality_logprob,
-    welch_ttest_langs,
 )
-from k_means_hadoop_spark.operators.curation import decision_stump_quality
-from tests.oracle_harness import compare
+from k_means_hadoop_spark.partitioning import prefix_sum
 
 
 def test_curriculum_phases_follow_quality_order(spark, sf_dir):
@@ -162,6 +155,21 @@ def test_ab_lift_reconstructs_from_counts(spark, sf_dir):
     assert row["z"] == pytest.approx(z, abs=1e-5)
 
 
+def test_prefix_sum_matches_single_window(spark):
+    """The two-phase distributed prefix sum must equal the naive global
+    window for any total order, including negative values."""
+    rng = random.Random(7)
+    rows = [(i, rng.randint(-50, 100)) for i in range(1000)]
+    df = spark.createDataFrame(rows, ["k", "v"])
+    got = {
+        r["k"]: r["cum"]
+        for r in prefix_sum(df, "v", [F.col("k").asc()], num_parts=7).collect()
+    }
+    w = Window.orderBy("k").rowsBetween(Window.unboundedPreceding, Window.currentRow)
+    want = {r["k"]: r["cum"] for r in df.withColumn("cum", F.sum("v").over(w)).collect()}
+    assert got == want
+
+
 def test_auc_matches_local_rank_computation(spark, sf_dir):
     row = auc_quality_vs_gopher(spark, sf_dir).first()
     docs = _docs(spark, sf_dir)
@@ -270,126 +278,3 @@ def test_mi_cells_reconstruct_nonnegative_total(spark, sf_dir):
     # the MI total (ordered fold) is non-negative by Gibbs' inequality
     total = sum(sorted(r["contrib"] for r in rows))
     assert total >= -1e-6
-
-
-def test_welch_is_antisymmetric_in_sign(spark, sf_dir):
-    """t(a,b) with mean_a > mean_b must be positive and |t| equal to
-    the flipped pair's (the formula is antisymmetric)."""
-    for r in welch_ttest_langs(spark, sf_dir).collect():
-        if r["mean_a"] != r["mean_b"] and r["t_stat"] != 0.0:
-            assert (r["t_stat"] > 0) == (r["mean_a"] > r["mean_b"]), r
-        assert r["df"] >= min(r["n_a"], r["n_b"]) - 1 or r["df"] == 0.0
-
-
-def test_ipf_raking_converges_to_uniform_marginals(spark, sf_dir):
-    """After 3 row+col rounds the COLUMN marginals (the last-scaled
-    axis) must equal total/n_src up to per-cell rounding; row marginals
-    are within a loose band (IPF alternates which axis is exact)."""
-    rows = ipf_raking(spark, sf_dir).collect()
-    total = sum(r["n"] for r in rows)
-    srcs, langs = {}, {}
-    for r in rows:
-        srcs[r["source"]] = srcs.get(r["source"], 0.0) + r["fitted"]
-        langs[r["lang"]] = langs.get(r["lang"], 0.0) + r["fitted"]
-    t_src = total / len(srcs)
-    for s, v in srcs.items():
-        assert abs(v - t_src) < 0.01, (s, v, t_src)
-    t_lang = total / len(langs)
-    for l, v in langs.items():
-        assert abs(v - t_lang) / t_lang < 0.15, (l, v, t_lang)
-
-
-def test_welch_survives_single_doc_language(spark, tmp_path):
-    """A language slice with a single document has no sample variance;
-    the guarded formulas must return t=0/df=0 rows instead of an ANSI
-    divide-by-zero abort (latent on the fixtures — every fixture lang
-    has >= 2 docs)."""
-    rows = [
-        (1, "one lonely document here today", "zz", "web", 30),
-    ] + [
-        (i, f"some regular text number {i} with words", "en", "web", 40)
-        for i in range(2, 8)
-    ]
-    out = os.path.join(str(tmp_path), "sfdir")
-    spark.createDataFrame(rows, DOC_SCHEMA).coalesce(1).write.mode(
-        "overwrite"
-    ).parquet(os.path.join(out, "documents.parquet"))
-    got = {(r["lang_a"], r["lang_b"]): r for r in welch_ttest_langs(spark, out).collect()}
-    r = got[("en", "zz")]
-    assert r["n_b"] == 1 and r["t_stat"] == 0.0 and r["df"] == 0.0
-
-
-def test_bootstrap_ci_brackets_mean(spark, sf_dir):
-    """The 90% Poissonized-bootstrap CI must bracket the point estimate
-    and be non-degenerate (lo < hi) on the fixture."""
-    r = bootstrap_ci_quality(spark, sf_dir).collect()[0]
-    assert r["ci_lo"] < r["mean_quality"] < r["ci_hi"], r
-    assert r["ci_hi"] - r["ci_lo"] < 0.2, r
-
-
-def test_decision_stump_beats_base_impurity(spark, sf_dir):
-    """The chosen split's weighted Gini must not exceed the unsplit
-    (root) impurity — the CART split-gain guarantee."""
-    r = decision_stump_quality(spark, sf_dir).collect()[0]
-    n = r["n_left"] + r["n_right"]
-    pos = r["pos_left"] + r["pos_right"]
-    neg = n - pos
-    base = n - (pos * pos + neg * neg) / n
-    assert r["impurity"] <= base + 1e-9
-    assert 0 < r["n_left"] < n
-
-
-DOC_SCHEMA = StructType(
-    [
-        StructField("doc_id", LongType()),
-        StructField("text", StringType()),
-        StructField("lang", StringType()),
-        StructField("source", StringType()),
-        StructField("n_chars", LongType()),
-    ]
-)
-
-
-def _write_docs(spark, tmp_path, texts) -> str:
-    rows = [
-        (i + 1, t, "en", "web", len(t)) for i, t in enumerate(texts)
-    ]
-    out = os.path.join(str(tmp_path), "docs_sf")
-    spark.createDataFrame(rows, DOC_SCHEMA).coalesce(1).write.mode(
-        "overwrite"
-    ).parquet(os.path.join(out, "documents.parquet"))
-    return out
-
-
-def _varied_texts(n: int) -> list[str]:
-    # distinct lengths/punctuation so quality scores are spread out
-    base = "the quick brown fox jumps over the lazy dog and runs far away. "
-    return [base * (1 + i % 7) + "word" * (i % 5) + f" tail{i}." for i in range(n)]
-
-
-@pytest.mark.parametrize("n_docs", [13, 15])
-def test_calibration_decile_parity_n_not_divisible_by_10(spark, tmp_path, n_docs):
-    """End-to-end Spark-vs-DuckDB parity of classifier_calibration on a
-    corpus whose size is NOT divisible by 10 — the exact case where
-    ntile(10) and the closed form floor((rk-1)*10/N)+1 disagree."""
-    sf = _write_docs(spark, tmp_path, _varied_texts(n_docs))
-    sdf = classifier_calibration(spark, sf)
-    con = duckdb.connect()
-    con.execute(
-        f"CREATE VIEW documents AS SELECT * FROM '{sf}/documents.parquet/*.parquet'"
-    )
-    ok, msg = compare(sdf, con, _calibration_sql())
-    assert ok, msg
-    # and the closed form actually spreads the remainder: with N=13/15
-    # every decile is non-empty and sizes differ by at most 1
-    sizes = [r["n"] for r in sdf.collect()]
-    assert len(sizes) == 10 and max(sizes) - min(sizes) <= 1
-
-
-def test_pmi_bigrams_survives_empty_and_one_token_docs(spark, tmp_path):
-    texts = ["   ", "\t\n ", "single", ""] + [
-        "new york city hosts new york marathons in new york every year"
-    ] * 3
-    sf = _write_docs(spark, tmp_path, texts)
-    rows = pmi_bigrams(spark, sf).collect()
-    assert any(r["w1"] == "new" and r["w2"] == "york" for r in rows)

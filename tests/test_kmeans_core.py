@@ -1,5 +1,4 @@
-"""Core k-means operator tests: assignment, recompute, loop, evaluation,
-the distance kernels of ``functions/vector.py`` and the IVF kNN probe.
+"""Core k-means operator tests: assignment, recompute, loop, evaluation.
 
 Golden values are hand-computed on tiny inline datasets; reference
 semantics cited per test (SURVEY.md §2/§4).
@@ -7,38 +6,26 @@ semantics cited per test (SURVEY.md §2/§4).
 
 from __future__ import annotations
 
-import inspect
 import math
 
 import pytest
-from pyspark.sql import functions as F
 
-from k_means_hadoop_spark import registry
-from k_means_hadoop_spark.functions.vector import (
-    cosine_similarity,
-    cosine_similarity_unrolled,
-    dot_unrolled,
-    euclidean,
-    euclidean_unrolled,
-    l2_norm_unrolled,
-    squared_distance_unrolled,
-)
 from k_means_hadoop_spark.operators.assign import assign_expr, assign_join
 from k_means_hadoop_spark.operators.evaluation import (
     contingency,
     jaccard_reference,
-    sample_per_cluster,
-    silhouette_by_cluster,
-    silhouette_sampled,
     wssse,
 )
-from k_means_hadoop_spark.operators.evaluation import silhouette_sampled as ss
-from k_means_hadoop_spark.operators.kmeans import init_ids, init_random, lloyd_kmeans, mllib_kmeans
-from k_means_hadoop_spark.operators.recompute import recompute_centroids, recompute_exploded
-from k_means_hadoop_spark.operators.similarity import knn_ivf
-from k_means_hadoop_spark.registry import SEEDS, _points
-from k_means_hadoop_spark.session import scratch_dir
-from k_means_hadoop_spark.sources.centroid_io import read_centroid_file, write_centroid_file
+from k_means_hadoop_spark.operators.kmeans import (
+    init_ids,
+    init_random,
+    lloyd_kmeans,
+    mllib_kmeans,
+)
+from k_means_hadoop_spark.operators.recompute import (
+    recompute_centroids,
+    recompute_exploded,
+)
 from k_means_hadoop_spark.sources.points import points_from_embeddings
 
 
@@ -208,186 +195,3 @@ def test_mllib_path(spark, sf_dir):
     clusters = {r["cluster"] for r in out.select("cluster").distinct().collect()}
     assert clusters <= {1, 2, 3, 4}
     assert out.count() == 300
-
-
-def _bounded_assignment(spark, sf_dir, max_id=400):
-    pts = _points(spark, sf_dir).where(F.col("id") <= max_id)
-    return assign_expr(pts, init_ids(pts, SEEDS))
-
-
-def test_silhouette_sampled_agrees_with_exact(spark, sf_dir):
-    """The sampled estimator on the SAME bounded point set as the exact
-    operator: per-cluster sampled means must track the exact means (the
-    estimator is a uniform-sample mean of exact s values)."""
-    asg = _bounded_assignment(spark, sf_dir).cache()
-    exact = {
-        r["cluster"]: r["mean_silhouette"]
-        for r in silhouette_by_cluster(asg).collect()
-    }
-    sampled = {
-        r["cluster"]: (r["mean_silhouette"], r["n_sampled"])
-        for r in silhouette_sampled(asg).collect()
-    }
-    assert set(sampled) == set(exact)
-    diffs = []
-    for c, (m, n_s) in sampled.items():
-        assert n_s <= 16
-        assert -1.0 <= m <= 1.0
-        diffs.append(abs(m - exact[c]))
-    # per-cluster tolerance: a 16-point uniform sample of s values in
-    # [-1, 1]; the weighted overall means must be tighter
-    assert max(diffs) < 0.35, diffs
-    n_tot = sum(n for _, n in sampled.values())
-    overall_s = sum(m * n for m, n in sampled.values()) / n_tot
-    n_ex = {r["cluster"]: r["n_points"] for r in silhouette_by_cluster(asg).collect()}
-    overall_e = sum(exact[c] * n_ex[c] for c in exact) / sum(n_ex.values())
-    assert abs(overall_s - overall_e) < 0.2, (overall_s, overall_e)
-
-
-def test_silhouette_sampled_is_subset_exact_s(spark, sf_dir):
-    """Exactness of the estimator's per-point values: restricting the
-    exact operator's per-point s to the sampled ids must reproduce the
-    sampled operator's cluster means exactly — the sample changes WHICH
-    points are averaged, never the s values themselves."""
-    asg = _bounded_assignment(spark, sf_dir).cache()
-    ids = {r["id"] for r in sample_per_cluster(asg).select("id").collect()}
-    got = {
-        (r["cluster"], r["n_sampled"], r["mean_silhouette"])
-        for r in silhouette_sampled(asg).collect()
-    }
-    # recompute from scratch with the sample as the a-side — but via the
-    # exact operator's own join, restricted afterwards: both sides see
-    # every b point, so per-point s is identical by construction
-
-    again = {
-        (r["cluster"], r["n_sampled"], r["mean_silhouette"])
-        for r in ss(asg).collect()
-    }
-    assert got == again  # deterministic (hash sample, decimal sums)
-    assert len(ids) == sum(n for _, n, _ in got)
-
-
-def test_lloyd_checkpoint_resume_equivalence(spark, sf_dir):
-    """Fault-tolerance exhibit: running 6 Lloyd iterations straight
-    must be BIT-IDENTICAL to running 3, persisting the centroid state
-    through the reference wire format (S5), reloading it (S3), and
-    running 3 more — the loop is resumable from its on-disk state with
-    no drift, because assignment and recompute are deterministic
-    functions of the centroid table and Double round-trips exactly
-    through the writer."""
-    pts = _points(spark, sf_dir).cache()
-    straight = lloyd_kmeans(pts, init_ids(pts, SEEDS), max_iter=6)
-
-    half = lloyd_kmeans(pts, init_ids(pts, SEEDS), max_iter=3)
-    path = scratch_dir("lloyd_ckpt")
-    cent_df = spark.createDataFrame(
-        [(c, list(v)) for c, v in half.centroids],
-        "cluster int, centroid array<double>",
-    ).withColumn("member_ids", F.array().cast("array<int>")).withColumn(
-        "size", F.lit(0).cast("bigint")
-    )
-    write_centroid_file(cent_df, path)
-    reloaded = [
-        (int(r["cluster"]), [float(v) for v in r["centroid"]])
-        for r in read_centroid_file(spark, path).collect()
-    ]
-    assert sorted(reloaded) == sorted(
-        [(c, [float(x) for x in v]) for c, v in half.centroids]
-    ), "wire format did not round-trip the checkpoint bit-exactly"
-    resumed = lloyd_kmeans(pts, reloaded, max_iter=3)
-
-    a = sorted(
-        (r["id"], r["cluster"], r["dist"]) for r in straight.assignments.collect()
-    )
-    b = sorted(
-        (r["id"], r["cluster"], r["dist"]) for r in resumed.assignments.collect()
-    )
-    assert a == b
-    assert sorted(straight.centroids) == sorted(resumed.centroids)
-
-
-def _vec_pairs(spark, sf_dir):
-    emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet").select(
-        F.col("vec_id").cast("int").alias("vid"),
-        F.col("embedding").cast("array<double>").alias("vec"),
-    )
-    a = emb.select(F.col("vid").alias("a_id"), F.col("vec").alias("va"))
-    b = emb.select(F.col("vid").alias("b_id"), F.col("vec").alias("vb"))
-    # a bounded but non-trivial pair set (adjacent ids)
-    return a.join(b, F.col("b_id") == F.col("a_id") + 1).alias("p")
-
-
-def test_unrolled_euclidean_bit_equal(spark, sf_dir):
-    """The codegen'd unrolled chain must produce the IDENTICAL double
-    (raw bits, pre-rounding) as the interpreted HOF fold on every pair."""
-    pairs = _vec_pairs(spark, sf_dir)
-    d = len(pairs.select("va").first()["va"])
-    diff = pairs.select(
-        euclidean(F.col("va"), F.col("vb")).alias("h"),
-        euclidean_unrolled("va", "vb", d).alias("u"),
-    ).where("h IS DISTINCT FROM u OR CAST(h AS STRING) != CAST(u AS STRING)")
-    assert diff.count() == 0
-
-
-def test_unrolled_cosine_bit_equal(spark, sf_dir):
-    pairs = _vec_pairs(spark, sf_dir)
-    d = len(pairs.select("va").first()["va"])
-    diff = pairs.select(
-        cosine_similarity(F.col("va"), F.col("vb")).alias("h"),
-        cosine_similarity_unrolled("va", "vb", d).alias("u"),
-    ).where("h IS DISTINCT FROM u OR CAST(h AS STRING) != CAST(u AS STRING)")
-    assert diff.count() == 0
-
-
-def test_silhouette_d_dim_path_identical(spark, sf_dir):
-    """silhouette_by_cluster/sampled with the d_dim fast path must
-    return exactly the rows of the HOF path."""
-    pts = points_from_embeddings(spark, sf_dir).where(F.col("id") <= 400)
-    cents = init_ids(pts, registry.SEEDS)
-    asg = assign_expr(pts, cents)
-    d = len(cents[0][1])
-    for fn in (silhouette_by_cluster, silhouette_sampled):
-        hof = sorted(map(tuple, fn(asg).collect()))
-        fast = sorted(map(tuple, fn(asg, d_dim=d).collect()))
-        assert hof == fast, fn.__name__
-
-
-def test_silhouette_sampled_signature_back_compat(spark, sf_dir):
-    """The new keyword slots in AFTER the existing positional params —
-    callers passing (assigned, m, salt) positionally are unaffected."""
-    params = list(inspect.signature(silhouette_sampled).parameters)
-    assert params[:3] == ["assigned", "m", "salt"]
-    assert params[3] == "d_dim"
-
-
-def test_norm_hoisted_cosine_bit_equal(spark, sf_dir):
-    """dot(a,b)/(‖a‖·‖b‖) with the norms hoisted to per-row columns
-    (the knn_ivf probe-scoring form) must produce the IDENTICAL double
-    as the single-expression cosine — same operand values through the
-    same operator tree, per row."""
-    pairs = _vec_pairs(spark, sf_dir)
-    d = len(pairs.select("va").first()["va"])
-    hoisted = pairs.withColumn("na", l2_norm_unrolled("va", d)).withColumn(
-        "nb", l2_norm_unrolled("vb", d)
-    )
-    diff = hoisted.select(
-        cosine_similarity(F.col("va"), F.col("vb")).alias("h"),
-        (dot_unrolled("va", "vb", d) / (F.col("na") * F.col("nb"))).alias("u"),
-    ).where("h IS DISTINCT FROM u OR CAST(h AS STRING) != CAST(u AS STRING)")
-    assert diff.count() == 0
-
-
-def test_unrolled_rejects_zero_dim():
-    with pytest.raises(ValueError):
-        squared_distance_unrolled("a", "b", 0)
-    with pytest.raises(ValueError):
-        dot_unrolled("a", "b", 0)
-
-
-def test_knn_ivf_empty_queries_degrades(spark, sf_dir):
-    """r12 ADVICE: no matching query_ids must yield an empty frame, not
-    StopIteration."""
-    emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
-    out = knn_ivf(emb, query_ids=[-999999], k=3)
-    assert out.count() == 0
-    assert out.columns == ["qid", "nid", "cos_sim", "rank"]

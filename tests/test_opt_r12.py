@@ -15,14 +15,28 @@ bit-identical; these tests pin the two internals that changed shape:
 
 from __future__ import annotations
 
+import inspect
+
 from pyspark.sql import functions as F
 
+from k_means_hadoop_spark import registry
 from k_means_hadoop_spark.functions.vector import (
     cosine_similarity,
     cosine_similarity_unrolled,
+    dot_unrolled,
     euclidean,
     euclidean_unrolled,
+    l2_norm_unrolled,
 )
+from k_means_hadoop_spark.operators.assign import assign_expr
+from k_means_hadoop_spark.operators.corpus_extra import _docs
+from k_means_hadoop_spark.operators.evaluation import (
+    silhouette_by_cluster,
+    silhouette_sampled,
+)
+from k_means_hadoop_spark.operators.kmeans import init_ids
+from k_means_hadoop_spark.operators.multimodal import synthesize_codec_media
+from k_means_hadoop_spark.sources.points import points_from_embeddings
 
 
 def _vec_pairs(spark, sf_dir):
@@ -61,15 +75,6 @@ def test_unrolled_cosine_bit_equal(spark, sf_dir):
 def test_silhouette_d_dim_path_identical(spark, sf_dir):
     """silhouette_by_cluster/sampled with the d_dim fast path must
     return exactly the rows of the HOF path."""
-    from k_means_hadoop_spark import registry
-    from k_means_hadoop_spark.operators.assign import assign_expr
-    from k_means_hadoop_spark.operators.evaluation import (
-        silhouette_by_cluster,
-        silhouette_sampled,
-    )
-    from k_means_hadoop_spark.operators.kmeans import init_ids
-    from k_means_hadoop_spark.sources.points import points_from_embeddings
-
     pts = points_from_embeddings(spark, sf_dir).where(F.col("id") <= 400)
     cents = init_ids(pts, registry.SEEDS)
     asg = assign_expr(pts, cents)
@@ -83,10 +88,6 @@ def test_silhouette_d_dim_path_identical(spark, sf_dir):
 def test_silhouette_sampled_signature_back_compat(spark, sf_dir):
     """The new keyword slots in AFTER the existing positional params —
     callers passing (assigned, m, salt) positionally are unaffected."""
-    import inspect
-
-    from k_means_hadoop_spark.operators.evaluation import silhouette_sampled
-
     params = list(inspect.signature(silhouette_sampled).parameters)
     assert params[:3] == ["assigned", "m", "salt"]
     assert params[3] == "d_dim"
@@ -96,9 +97,6 @@ def test_synthesize_kinds_subset_identical(spark, sf_dir):
     of the full synthesis filtered on kind — the kinds pushdown skips
     excluded payloads BEFORE the Python kernel, it must never change
     what the surviving rows contain (payload bytes included)."""
-    from k_means_hadoop_spark.operators.corpus_extra import _docs
-    from k_means_hadoop_spark.operators.multimodal import synthesize_codec_media
-
     docs = _docs(spark, sf_dir)
     full = synthesize_codec_media(docs)
     for kinds in (("audio",), ("image",), ("image", "audio")):
@@ -118,11 +116,6 @@ def test_norm_hoisted_cosine_bit_equal(spark, sf_dir):
     (the knn_ivf probe-scoring form) must produce the IDENTICAL double
     as the single-expression cosine — same operand values through the
     same operator tree, per row."""
-    from k_means_hadoop_spark.functions.vector import (
-        dot_unrolled,
-        l2_norm_unrolled,
-    )
-
     pairs = _vec_pairs(spark, sf_dir)
     d = len(pairs.select("va").first()["va"])
     hoisted = pairs.withColumn("na", l2_norm_unrolled("va", d)).withColumn(

@@ -8,17 +8,25 @@ touched query hash-identical end to end.
 
 from __future__ import annotations
 
+import datetime as dt
 import os
 
 import pytest
 from pyspark.sql import Window
 from pyspark.sql import functions as F
 
+from k_means_hadoop_spark.functions.vector import (
+    dot_unrolled,
+    squared_distance_unrolled,
+)
+from k_means_hadoop_spark.operators.multimodal import synthesize_codec_media
+from k_means_hadoop_spark.operators.similarity import knn_ivf
 from k_means_hadoop_spark.partitioning import (
     prefix_sum,
     truncate_lineage,
     truncate_lineage_lazy,
 )
+from k_means_hadoop_spark.sources.events import load_events
 
 
 def test_truncate_lineage_default_is_local_checkpoint(spark, tmp_path, monkeypatch):
@@ -106,8 +114,6 @@ def test_acf_lag_join_calendar_equals_row_number(spark, sf_dir):
     series, pairing rows by date_sub(day, lag) == day yields the exact
     pair set the old rn - lag == rn join produced — per lag, both the
     pair count and the sum of xt*xl match."""
-    from k_means_hadoop_spark.sources.events import load_events
-
     ev = load_events(spark, sf_dir)
     daily = ev.groupBy(F.to_date("ts").alias("day")).agg(
         F.count(F.lit(1)).alias("x")
@@ -154,8 +160,6 @@ def test_interpolate_neighbor_join_equals_window(spark):
     """interpolate_daily_purchases round-13 rewrite: max_by/min_by
     neighbor joins reproduce the ignore-nulls window lookups exactly,
     including leading/trailing all-null edges."""
-    import datetime as dt
-
     d0 = dt.date(2024, 1, 1)
     days = [(d0 + dt.timedelta(days=i),) for i in range(12)]
     cal = spark.createDataFrame(days, "day date")
@@ -195,11 +199,6 @@ def test_interpolate_neighbor_join_equals_window(spark):
 
 
 def test_unrolled_rejects_zero_dim():
-    from k_means_hadoop_spark.functions.vector import (
-        dot_unrolled,
-        squared_distance_unrolled,
-    )
-
     with pytest.raises(ValueError):
         squared_distance_unrolled("a", "b", 0)
     with pytest.raises(ValueError):
@@ -209,8 +208,6 @@ def test_unrolled_rejects_zero_dim():
 def test_knn_ivf_empty_queries_degrades(spark, sf_dir):
     """r12 ADVICE: no matching query_ids must yield an empty frame, not
     StopIteration."""
-    from k_means_hadoop_spark.operators.similarity import knn_ivf
-
     emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
     out = knn_ivf(emb, query_ids=[-999999], k=3)
     assert out.count() == 0
@@ -220,8 +217,6 @@ def test_knn_ivf_empty_queries_degrades(spark, sf_dir):
 def test_synthesize_kinds_pmod_matches_python_mod(spark):
     """r12 ADVICE: negative doc_ids must not be dropped by the kinds
     pushdown — the JVM filter uses pmod, matching Python's %."""
-    from k_means_hadoop_spark.operators.multimodal import synthesize_codec_media
-
     docs = spark.createDataFrame(
         [(-5, "neg five"), (-4, "neg four"), (-3, "neg three"), (4, "pos four")],
         "doc_id long, text string",

@@ -3,7 +3,6 @@ semantics that the DuckDB hash-compare can't express."""
 
 from __future__ import annotations
 
-import datetime as dt
 import math
 import os
 import random
@@ -64,7 +63,6 @@ from k_means_hadoop_spark.operators.relational import (
     event_funnel_pattern,
     ewma_daily_purchases,
     hll_users_daily,
-    holt_linear_daily,
     pagerank_copurchase,
 )
 from k_means_hadoop_spark.operators.similarity import (
@@ -1154,56 +1152,3 @@ def test_pagerank_mass_conserved(spark, sf_dir):
     total = sum(r["rank"] for r in rows)
     assert abs(total - 1.0) < 1e-3, total
     assert all(r["rank"] > 0 for r in rows)
-
-
-def test_holt_seeds_level_and_zero_trend(spark, sf_dir):
-    rows = holt_linear_daily(spark, sf_dir).collect()
-    by_type = {}
-    for r in rows:
-        by_type.setdefault(r["event_type"], []).append(r)
-    for typ, rs in by_type.items():
-        rs.sort(key=lambda r: r["day"])
-        assert rs[0]["level"] == float(rs[0]["n_events"]), typ
-        assert rs[0]["trend"] == 0.0, typ
-
-
-def test_interpolate_neighbor_join_equals_window(spark):
-    """interpolate_daily_purchases round-13 rewrite: max_by/min_by
-    neighbor joins reproduce the ignore-nulls window lookups exactly,
-    including leading/trailing all-null edges."""
-    d0 = dt.date(2024, 1, 1)
-    days = [(d0 + dt.timedelta(days=i),) for i in range(12)]
-    cal = spark.createDataFrame(days, "day date")
-    obs = spark.createDataFrame(
-        [(d0 + dt.timedelta(days=3), 1.5), (d0 + dt.timedelta(days=7), 4.25)],
-        "day date, v double",
-    )
-    g = cal.join(obs, "day", "left")
-    w_prev = Window.orderBy("day").rowsBetween(Window.unboundedPreceding, 0)
-    w_next = Window.orderBy("day").rowsBetween(0, Window.unboundedFollowing)
-    old = g.select(
-        "day",
-        F.last("v", ignorenulls=True).over(w_prev).alias("pv"),
-        F.last(F.when(F.col("v").isNotNull(), F.col("day")), ignorenulls=True)
-        .over(w_prev)
-        .alias("pd"),
-        F.first("v", ignorenulls=True).over(w_next).alias("nv"),
-        F.first(F.when(F.col("v").isNotNull(), F.col("day")), ignorenulls=True)
-        .over(w_next)
-        .alias("nd"),
-    )
-    obs_a = obs.select(F.col("day").alias("od"), F.col("v").alias("ov"))
-    prev_t = (
-        g.join(obs_a, F.col("od") <= F.col("day"), "left")
-        .groupBy("day", "v")
-        .agg(F.max("od").alias("pd"), F.max_by("ov", "od").alias("pv"))
-    )
-    new = (
-        prev_t.join(obs_a, F.col("od") >= F.col("day"), "left")
-        .groupBy("day", "v", "pd", "pv")
-        .agg(F.min("od").alias("nd"), F.min_by("ov", "od").alias("nv"))
-        .select("day", "pv", "pd", "nv", "nd")
-    )
-    o = {r["day"]: (r["pv"], r["pd"], r["nv"], r["nd"]) for r in old.collect()}
-    n = {r["day"]: (r["pv"], r["pd"], r["nv"], r["nd"]) for r in new.collect()}
-    assert o == n

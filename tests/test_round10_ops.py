@@ -10,9 +10,11 @@ decode is the documented ffmpeg seam.
 from __future__ import annotations
 
 import pytest
+from hypothesis import given, settings
+from hypothesis import strategies as st
 
 from k_means_hadoop_spark.functions import codecs
-from k_means_hadoop_spark.operators.containers import _mkv_plant
+from k_means_hadoop_spark.operators.containers import _mkv_plant, _ogg_plant
 
 
 def _blob(did: int) -> bytes:
@@ -120,8 +122,6 @@ def test_mkv_parse_random_bytes_never_crashes():
     """Hostile input: arbitrary bytes either parse or raise ValueError —
     never IndexError/struct.error/hangs (the decode_wav rejection
     contract, fuzz-checked)."""
-    from hypothesis import given, settings, strategies as st
-
     @settings(max_examples=200, deadline=None)
     @given(st.binary(max_size=200))
     def check(data):
@@ -136,8 +136,6 @@ def test_mkv_parse_random_bytes_never_crashes():
 def test_mkv_bitflip_never_crashes():
     """Single-byte corruption of a VALID container either still parses
     or raises ValueError — no other exception class escapes."""
-    from hypothesis import given, settings, strategies as st
-
     blob = _blob(7)
 
     @settings(max_examples=200, deadline=None)
@@ -165,8 +163,6 @@ def test_mkv_sniff_format():
 
 
 def _ogg_blob(did: int) -> bytes:
-    from k_means_hadoop_spark.operators.containers import _ogg_plant
-
     w = _ogg_plant(did)
     return codecs.encode_ogg(w["serial"], w["packets"])
 
@@ -180,8 +176,6 @@ def test_ogg_crc_reference_vector():
 
 @pytest.mark.parametrize("did", [0, 1, 2, 3, 6, 13, 999983])
 def test_ogg_roundtrip_bit_exact(did):
-    from k_means_hadoop_spark.operators.containers import _ogg_plant
-
     w = _ogg_plant(did)
     p = codecs.parse_ogg(_ogg_blob(did))
     assert p["serial"] == w["serial"]
@@ -231,8 +225,6 @@ def test_ogg_sniff_format():
 
 
 def test_ogg_parse_random_bytes_never_crashes():
-    from hypothesis import given, settings, strategies as st
-
     @settings(max_examples=200, deadline=None)
     @given(st.binary(max_size=200))
     def check(data):
@@ -245,8 +237,6 @@ def test_ogg_parse_random_bytes_never_crashes():
 
 
 def test_ogg_bitflip_never_crashes():
-    from hypothesis import given, settings, strategies as st
-
     blob = _ogg_blob(5)
 
     @settings(max_examples=200, deadline=None)
@@ -268,8 +258,6 @@ def test_ogg_bitflip_never_crashes():
 def test_ogg_roundtrip_fuzz():
     """Property fuzz: ANY packet list (arbitrary bytes and sizes, any
     max_laces >= 1) reassembles bit-exact with correct page flags."""
-    from hypothesis import given, settings, strategies as st
-
     @settings(max_examples=60, deadline=None)
     @given(
         packets=st.lists(st.binary(max_size=700), min_size=1, max_size=6),
@@ -291,8 +279,6 @@ def test_ogg_roundtrip_fuzz():
 def test_mkv_roundtrip_fuzz():
     """Property fuzz: ANY doctype/track/cluster spec (arbitrary frame
     bytes, dimensions, channel counts) roundtrips bit-exact."""
-    from hypothesis import given, settings, strategies as st
-
     frame = st.binary(min_size=0, max_size=40)
 
     @settings(max_examples=60, deadline=None)

@@ -36,13 +36,26 @@ edit-distance ASCII parity bound, and the ZIP archive codec.
 
 from __future__ import annotations
 
+import gzip as gz
+import io
 import os
+import struct
+import tarfile
+import zipfile
+import zlib
 
 import pytest
+from hypothesis import given, settings
+from hypothesis import strategies as st
 from pyspark.sql import functions as F
 
 from k_means_hadoop_spark.functions import codecs
 from k_means_hadoop_spark.operators import dedup
+from k_means_hadoop_spark.operators.containers import (
+    _gzip_plant,
+    _tar_plant,
+    _zip_plant,
+)
 from k_means_hadoop_spark.registry_pipeline import EDIT_DIST_MAX, NGRAM_N, _docs
 
 
@@ -113,15 +126,11 @@ def test_documents_fixture_is_single_byte(spark, sf):
 
 
 def _zip_blob(did: int) -> bytes:
-    from k_means_hadoop_spark.operators.containers import _zip_plant
-
     return codecs.encode_zip(_zip_plant(did))
 
 
 @pytest.mark.parametrize("did", [7, 18, 29, 40, 12345, 999983])
 def test_zip_roundtrip_bit_exact(did):
-    from k_means_hadoop_spark.operators.containers import _zip_plant
-
     want = _zip_plant(did)
     p = codecs.parse_zip(_zip_blob(did))
     assert p["n_members"] == len(want)
@@ -137,22 +146,15 @@ def test_zip_roundtrip_bit_exact(did):
 
 
 def test_zip_stdlib_reads_ours():
-    import io
-    import zipfile
-
     blob = _zip_blob(7)
     zf = zipfile.ZipFile(io.BytesIO(blob))
     assert zf.testzip() is None
-    from k_means_hadoop_spark.operators.containers import _zip_plant
 
     for m in _zip_plant(7):
         assert zf.read(m["name"]) == m["data"]
 
 
 def test_zip_reads_stdlib():
-    import io
-    import zipfile
-
     buf = io.BytesIO()
     with zipfile.ZipFile(buf, "w", zipfile.ZIP_DEFLATED) as z:
         z.writestr("x.txt", b"external writer " * 30)
@@ -180,7 +182,6 @@ def test_zip_comment_roundtrip():
 
 def test_zip_crc_corruption_rejected():
     blob = _zip_blob(7)
-    from k_means_hadoop_spark.operators.containers import _zip_plant
 
     stored = next(m for m in _zip_plant(7) if m["method"] == "stored")
     bad = bytearray(blob)
@@ -197,8 +198,6 @@ def test_zip_truncation_always_value_error():
 
 
 def test_zip_eocd_count_tamper_rejected():
-    import struct
-
     blob = _zip_blob(7)
     eocd = blob.rindex(b"PK\x05\x06")
     bad = bytearray(blob)
@@ -209,8 +208,6 @@ def test_zip_eocd_count_tamper_rejected():
 
 
 def test_zip_local_central_mismatch_rejected():
-    import struct
-
     blob = _zip_blob(7)
     # corrupt the METHOD field of the first local header: the central
     # directory still holds the true value, so the cross-check fires
@@ -241,8 +238,6 @@ def test_zip_bitflip_never_crashes():
 def test_zip_roundtrip_fuzz():
     """Property fuzz: ANY member list (arbitrary names, bytes, methods)
     roundtrips bit-exact and stdlib-validates."""
-    from hypothesis import given, settings, strategies as st
-
     name = st.text(
         alphabet="abcdefghijklmnopqrstuvwxyz0123456789._-", min_size=1, max_size=12
     )
@@ -268,15 +263,11 @@ def test_zip_roundtrip_fuzz():
 
 
 def _gzip_blob(did: int) -> bytes:
-    from k_means_hadoop_spark.operators.containers import _gzip_plant
-
     return codecs.encode_gzip(_gzip_plant(did))
 
 
 @pytest.mark.parametrize("did", [3, 14, 25, 36, 12344, 999982])
 def test_gzip_roundtrip_bit_exact(did):
-    from k_means_hadoop_spark.operators.containers import _gzip_plant
-
     want = _gzip_plant(did)
     p = codecs.parse_gzip(_gzip_blob(did))
     assert p["n_members"] == len(want)
@@ -287,10 +278,6 @@ def test_gzip_roundtrip_bit_exact(did):
 def test_gzip_stdlib_reads_ours():
     """The stdlib gzip module must inflate our multi-member stream to
     the concatenated payloads (the Common Crawl reader behavior)."""
-    import gzip as gz
-
-    from k_means_hadoop_spark.operators.containers import _gzip_plant
-
     did = 2 * 11 + 3
     assert gz.decompress(_gzip_blob(did)) == b"".join(
         m["data"] for m in _gzip_plant(did)
@@ -298,9 +285,6 @@ def test_gzip_stdlib_reads_ours():
 
 
 def test_gzip_reads_stdlib():
-    import gzip as gz
-    import io
-
     # single member with FNAME, plus a bare member, concatenated
     buf = io.BytesIO()
     with gz.GzipFile("rec.warc", "wb", fileobj=buf) as f:
@@ -315,8 +299,6 @@ def test_gzip_reads_stdlib():
 
 
 def test_gzip_crc_and_isize_corruption_rejected():
-    import struct
-
     blob = codecs.encode_gzip([{"data": b"payload " * 20}])
     # trailer = last 8 bytes: CRC32 then ISIZE
     bad_crc = bytearray(blob)
@@ -330,9 +312,6 @@ def test_gzip_crc_and_isize_corruption_rejected():
 
 
 def test_gzip_header_crc_verified():
-    import struct
-    import zlib
-
     hdr = b"\x1f\x8b" + struct.pack("<BBIBB", 8, 2, 0, 0, 255)  # FHCRC
     co = zlib.compressobj(6, zlib.DEFLATED, -15)
     body = co.compress(b"hcrc test") + co.flush()
@@ -353,8 +332,6 @@ def test_gzip_truncation_always_value_error():
 
 
 def test_gzip_reserved_flags_rejected():
-    import struct
-
     hdr = b"\x1f\x8b" + struct.pack("<BBIBB", 8, 0x20, 0, 0, 255)
     with pytest.raises(ValueError, match="reserved"):
         codecs.parse_gzip(hdr + b"\x03\x00" + b"\x00" * 8)
@@ -374,8 +351,6 @@ def test_gzip_bitflip_never_crashes():
 def test_gzip_roundtrip_fuzz():
     """Property fuzz: ANY member list (arbitrary bytes, optional
     names) reassembles bit-exact through the member walk."""
-    from hypothesis import given, settings, strategies as st
-
     member = st.fixed_dictionaries(
         {"data": st.binary(max_size=500)},
         optional={
@@ -409,8 +384,6 @@ def test_zip_trailing_junk_inside_csize_rejected():
     """A DEFLATE member whose csize covers trailing junk after the
     end-of-stream marker must be rejected (dec.unused_data, not the
     always-empty unconsumed_tail)."""
-    import struct
-
     blob = bytearray(codecs.encode_zip(
         [{"name": "a.bin", "data": b"payload " * 30, "method": "deflate"}]
     ))
@@ -433,8 +406,6 @@ def test_zip_trailing_junk_inside_csize_rejected():
 def test_zip_eocd_count_decrement_rejected():
     """A decremented EOCD count must not silently hide members: the
     central-directory walk has to consume exactly cd_size bytes."""
-    import struct
-
     blob = _zip_blob(7)  # 3 members
     eocd = blob.rindex(b"PK\x05\x06")
     bad = bytearray(blob)
@@ -551,8 +522,6 @@ def test_warc_version_11_roundtrip():
 def test_warc_roundtrip_fuzz():
     """Property fuzz: ANY payload bytes (including CRLF runs and WARC
     version literals) and header values roundtrip exactly."""
-    from hypothesis import given, settings, strategies as st
-
     val = st.text(
         alphabet="abcdefghijklmnopqrstuvwxyz0123456789:<>- ", max_size=20
     )
@@ -582,15 +551,11 @@ def test_warc_roundtrip_fuzz():
 
 
 def _tar_blob(did: int) -> bytes:
-    from k_means_hadoop_spark.operators.containers import _tar_plant
-
     return codecs.encode_tar(_tar_plant(did))
 
 
 @pytest.mark.parametrize("did", [9, 20, 31, 42, 12343, 999981])
 def test_tar_roundtrip_bit_exact(did):
-    from k_means_hadoop_spark.operators.containers import _tar_plant
-
     want = _tar_plant(did)
     p = codecs.parse_tar(_tar_blob(did))
     assert p["n_members"] == len(want)
@@ -600,11 +565,6 @@ def test_tar_roundtrip_bit_exact(did):
 
 
 def test_tar_stdlib_reads_ours():
-    import io
-    import tarfile
-
-    from k_means_hadoop_spark.operators.containers import _tar_plant
-
     tf = tarfile.open(fileobj=io.BytesIO(_tar_blob(9)))
     for m in _tar_plant(9):
         f = tf.extractfile(m["name"])
@@ -612,9 +572,6 @@ def test_tar_stdlib_reads_ours():
 
 
 def test_tar_reads_stdlib():
-    import io
-    import tarfile
-
     buf = io.BytesIO()
     with tarfile.open(fileobj=buf, mode="w", format=tarfile.USTAR_FORMAT) as t:
         for nm, payload in [("a.txt", b"stdlib one"), ("b/c.bin", b"x" * 1000)]:
@@ -646,9 +603,6 @@ def test_tar_data_after_terminator_rejected():
 
 
 def test_tar_unsupported_typeflag_rejected():
-    import io
-    import tarfile
-
     buf = io.BytesIO()
     with tarfile.open(fileobj=buf, mode="w", format=tarfile.USTAR_FORMAT) as t:
         ti = tarfile.TarInfo("link")
@@ -678,8 +632,6 @@ def test_tar_bitflip_never_crashes():
 def test_tar_roundtrip_fuzz():
     """Property fuzz: ANY member list (arbitrary names, bytes incl.
     block-boundary sizes) roundtrips bit-exact and stdlib-validates."""
-    from hypothesis import given, settings, strategies as st
-
     name = st.text(
         alphabet="abcdefghijklmnopqrstuvwxyz0123456789._-/", min_size=1, max_size=30
     ).filter(lambda s: s.strip("/") == s)

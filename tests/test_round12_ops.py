@@ -20,12 +20,30 @@ survivor-selecting edit-distance dedup composition.
 
 from __future__ import annotations
 
+import dis
 import os
+import subprocess
+import sys
 
 import pytest
+from pyspark.sql import Window
+from pyspark.sql import functions as F
 
 from k_means_hadoop_spark.functions import codecs
-from k_means_hadoop_spark.operators.containers import _ogg_codec_plant
+from k_means_hadoop_spark.operators import containers, dedup, text
+from k_means_hadoop_spark.operators.containers import (
+    _WET_INFO_PAYLOAD,
+    _ogg_codec_plant,
+)
+from k_means_hadoop_spark.registry_pipeline import EDIT_DIST_MAX, NGRAM_N
+from k_means_hadoop_spark.sources import warc_shards as ws
+from k_means_hadoop_spark.sources.warc_shards import (
+    _ShardPartition,
+    _WarcShardReader,
+    _record_doc_id,
+    read_warc_shards,
+    write_warc_shards,
+)
 
 
 # ------------------------------------------------- 1. OpusHead / Vorbis
@@ -266,8 +284,6 @@ def test_wet_record_shape_roundtrip():
     """The WET two-record shape: warcinfo (application/warc-fields) +
     conversion (text/plain) whose payload is the extracted text, one
     gzip member per record, WARC-Refers-To linking back."""
-    from k_means_hadoop_spark.operators.containers import _WET_INFO_PAYLOAD
-
     body = b"Extracted plain text.\nSecond line."
     info = codecs.encode_warc_record(
         [("WARC-Type", "warcinfo"), ("Content-Type", "application/warc-fields")],
@@ -295,8 +311,6 @@ def test_wet_record_shape_roundtrip():
 def test_wet_stats_non_ascii_yields_parse_ok_false(spark, sf_dir):
     """Same hostile-row contract as warc_ingest_stats (the r12 ADVICE
     fix): a non-ASCII text emits parse_ok=False, not a task failure."""
-    from k_means_hadoop_spark.operators import containers
-
     docs = spark.createDataFrame(
         [(2, "ascii text"), (13, "naïve café")], "doc_id bigint, text string"
     )
@@ -316,8 +330,6 @@ def test_wet_stats_non_ascii_yields_parse_ok_false(spark, sf_dir):
 
 
 def _stage_shards(tmp_path, docs, n_shards=3):
-    from k_means_hadoop_spark.sources.warc_shards import write_warc_shards
-
     out = os.path.join(str(tmp_path), "wet")
     write_warc_shards(docs, out, n_shards=n_shards)
     return out
@@ -327,8 +339,6 @@ def test_warc_shards_golden_roundtrip(spark, tmp_path):
     """Shards written by encode_gzip/encode_warc_record read back
     through the Spark Data Source with exact ids, types, and payloads;
     shard count = partition count."""
-    from k_means_hadoop_spark.sources.warc_shards import read_warc_shards
-
     docs = [(i, f"document number {i} body text") for i in (0, 1, 2, 5, 7, 30)]
     out = _stage_shards(tmp_path, docs)
     df = read_warc_shards(spark, out)
@@ -345,12 +355,6 @@ def test_warc_shards_reader_rejects_corruption(tmp_path):
     """A flipped byte inside a shard fails that partition loudly (the
     gzip CRC layer), and structural violations — leading record not
     warcinfo, two records in one member — are framing errors."""
-    from k_means_hadoop_spark.sources.warc_shards import (
-        _ShardPartition,
-        _WarcShardReader,
-        write_warc_shards,
-    )
-
     d = os.path.join(str(tmp_path), "wet")
     write_warc_shards([(4, "payload four")], d, n_shards=1)
     shard = os.path.join(d, "shard-00000.warc.gz")
@@ -391,12 +395,9 @@ def test_warc_shards_reader_has_no_runtime_package_import():
     module-level binding (captured by cloudpickle's by-value
     registration) — a runtime ``import k_means_hadoop_spark...`` inside
     read() re-resolves by NAME and raises ModuleNotFoundError off-path.
-    The authoritative check is run_window_check from /tmp; this pin
+    The authoritative check is tools/verify_queries.py run from
+    outside the repo; this pin
     catches the regression statically."""
-    import dis
-
-    import k_means_hadoop_spark.sources.warc_shards as ws
-
     assert ws.codecs is codecs  # module-level by-value capture seam
     imported = {
         i.argval
@@ -407,7 +408,6 @@ def test_warc_shards_reader_has_no_runtime_package_import():
 
     # same seam for the worker-side plant helper (the sweep's second
     # off-path failure): module-level codecs binding, no runtime import
-    import k_means_hadoop_spark.operators.containers as containers
 
     assert containers.codecs is codecs
     plant_imports = {
@@ -425,9 +425,6 @@ def test_package_import_ships_worker_code_by_value(tmp_path):
     module-level codecs function pickled by one interpreter loads and
     runs in a second one whose cwd and sys.path hold no copy of the
     package — the situation of a worker launched off the repo root."""
-    import subprocess
-    import sys
-
     repo_root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
     dump = (
         "import sys\n"
@@ -459,8 +456,6 @@ def test_package_import_ships_worker_code_by_value(tmp_path):
 
 
 def test_record_doc_id_urn():
-    from k_means_hadoop_spark.sources.warc_shards import _record_doc_id
-
     assert _record_doc_id("<urn:uuid:wet-0000002a>") == 42
     with pytest.raises(ValueError):
         _record_doc_id("<urn:uuid:0000002a>")
@@ -473,8 +468,6 @@ def test_write_warc_shards_rejects_non_ascii(tmp_path):
     of a bare UnicodeEncodeError escaping mid-write: WET staging
     requires the enforced ASCII fixture bound, and the scan schema has
     no parse_ok channel to degrade into (round-12 review finding)."""
-    from k_means_hadoop_spark.sources.warc_shards import write_warc_shards
-
     with pytest.raises(ValueError, match="doc 9 text is not ASCII"):
         write_warc_shards(
             [(1, "fine"), (9, "café au lait")], os.path.join(str(tmp_path), "w")
@@ -486,8 +479,6 @@ def test_duplicate_components_raises_on_unconverged_chain(spark):
     return silently non-minimal labels that fail the oracle hash with
     no Spark-side signal (round-12 review finding).  A 12-node chain
     converges under the default cap but not under max_iter=2."""
-    from k_means_hadoop_spark.operators import dedup
-
     chain = spark.createDataFrame(
         [(i, i + 1) for i in range(12)], "a_id bigint, b_id bigint"
     )
@@ -507,12 +498,6 @@ def test_edit_components_planted_clone_cluster(spark):
     collapse into ONE component with exactly one survivor — the
     quality arg-max (ties to lowest doc_id) — while unrelated docs
     stay singleton survivors."""
-    from pyspark.sql import Window
-    from pyspark.sql import functions as F
-
-    from k_means_hadoop_spark.operators import dedup, text
-    from k_means_hadoop_spark.registry_pipeline import EDIT_DIST_MAX, NGRAM_N
-
     base = (
         "the quick brown fox jumps over the lazy dog while the cat "
         "watches from the warm windowsill in the afternoon sun light"

@@ -3,12 +3,51 @@ store merge, and the other new window entries."""
 
 from __future__ import annotations
 
-import pytest
+import glob
+import math
+import os
+
+import numpy as np
+import pytest as pt
+from hypothesis import given, settings
+from hypothesis import strategies as st
+from pyspark.ml.feature import PCA as MLPCA
+from pyspark.ml.functions import array_to_vector
 from pyspark.sql import functions as F
 
+from k_means_hadoop_spark.functions import codecs
+from k_means_hadoop_spark.operators import dedup, sketches
+from k_means_hadoop_spark.operators.analytics import (
+    cusum_changepoints,
+    merge_apply_changelog,
+)
 from k_means_hadoop_spark.operators.assign import assign_expr
-from k_means_hadoop_spark.operators.kmeans import init_ids
+from k_means_hadoop_spark.operators.corpus_extra import (
+    bootstrap_ci_quality,
+    ipf_raking,
+    welch_ttest_langs,
+)
+from k_means_hadoop_spark.operators.evaluation import (
+    sample_per_cluster,
+    silhouette_by_cluster,
+    silhouette_sampled,
+)
+from k_means_hadoop_spark.operators.evaluation import silhouette_sampled as ss
+from k_means_hadoop_spark.operators.kmeans import init_ids, lloyd_kmeans
+from k_means_hadoop_spark.operators.multimodal import (
+    decode_media_real,
+    synthesize_codec_media,
+)
+from k_means_hadoop_spark.operators.pca import power_iteration_pc1
+from k_means_hadoop_spark.operators.relational import holt_linear_daily
 from k_means_hadoop_spark.registry import SEEDS, _points
+from k_means_hadoop_spark.session import scratch_dir
+from k_means_hadoop_spark.sources.centroid_io import (
+    read_centroid_file,
+    write_centroid_file,
+)
+from k_means_hadoop_spark.streaming.relational import streaming_merge_changelog
+from tests.helpers import DOC_SCHEMA
 
 
 def _bounded_assignment(spark, sf_dir, max_id=400):
@@ -20,11 +59,6 @@ def test_silhouette_sampled_agrees_with_exact(spark, sf_dir):
     """The sampled estimator on the SAME bounded point set as the exact
     operator: per-cluster sampled means must track the exact means (the
     estimator is a uniform-sample mean of exact s values)."""
-    from k_means_hadoop_spark.operators.evaluation import (
-        silhouette_by_cluster,
-        silhouette_sampled,
-    )
-
     asg = _bounded_assignment(spark, sf_dir).cache()
     exact = {
         r["cluster"]: r["mean_silhouette"]
@@ -55,11 +89,6 @@ def test_silhouette_sampled_is_subset_exact_s(spark, sf_dir):
     exact operator's per-point s to the sampled ids must reproduce the
     sampled operator's cluster means exactly — the sample changes WHICH
     points are averaged, never the s values themselves."""
-    from k_means_hadoop_spark.operators.evaluation import (
-        sample_per_cluster,
-        silhouette_sampled,
-    )
-
     asg = _bounded_assignment(spark, sf_dir).cache()
     ids = {r["id"] for r in sample_per_cluster(asg).select("id").collect()}
     got = {
@@ -69,7 +98,6 @@ def test_silhouette_sampled_is_subset_exact_s(spark, sf_dir):
     # recompute from scratch with the sample as the a-side — but via the
     # exact operator's own join, restricted afterwards: both sides see
     # every b point, so per-point s is identical by construction
-    from k_means_hadoop_spark.operators.evaluation import silhouette_sampled as ss
 
     again = {
         (r["cluster"], r["n_sampled"], r["mean_silhouette"])
@@ -85,9 +113,6 @@ def test_streaming_minhash_store_multibatch_and_parity(spark, sf_dir):
     signatures per batch must be min-mergeable to the batch operator's
     signatures, and the banded candidates must equal the batch LSH
     candidate set."""
-    from k_means_hadoop_spark.operators import dedup
-    from k_means_hadoop_spark.session import scratch_dir
-
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet").select(
         "doc_id", "text"
     )
@@ -110,8 +135,6 @@ def test_streaming_minhash_store_multibatch_and_parity(spark, sf_dir):
 def test_merged_signatures_equal_batch_signatures(spark, sf_dir):
     """sig(union of chunks) == elementwise-min of partial sigs, doc by
     doc — the mergeability identity itself."""
-    from k_means_hadoop_spark.operators import dedup
-
     docs = (
         spark.read.parquet(f"{sf_dir}/documents.parquet")
         .select("doc_id", "text")
@@ -128,9 +151,6 @@ def test_merged_signatures_equal_batch_signatures(spark, sf_dir):
 def test_streaming_hll_merge_multibatch_and_equals_batch(spark, sf_dir):
     """Max-merge pin: >1 micro-batch materialized, and the merged
     registers produce the identical summary row as the batch sketch."""
-    from k_means_hadoop_spark.operators import sketches
-    from k_means_hadoop_spark.session import scratch_dir
-
     store = scratch_dir("hll_pin_store")
     got = sketches.streaming_hll_merge(spark, sf_dir, store_path=store).collect()
     batches = spark.read.parquet(store).select("batch_id").distinct().count()
@@ -142,8 +162,6 @@ def test_streaming_hll_merge_multibatch_and_equals_batch(spark, sf_dir):
 def test_cusum_telescopes_to_zero(spark, sf_dir):
     """S_K = Σ(c_j − T/K) over the whole series is identically 0, so
     the last day's cusum must be 0 (integer-exactness check)."""
-    from k_means_hadoop_spark.operators.analytics import cusum_changepoints
-
     rows = sorted(
         cusum_changepoints(spark, sf_dir).collect(), key=lambda r: r["day"]
     )
@@ -154,8 +172,6 @@ def test_cusum_telescopes_to_zero(spark, sf_dir):
 def test_welch_is_antisymmetric_in_sign(spark, sf_dir):
     """t(a,b) with mean_a > mean_b must be positive and |t| equal to
     the flipped pair's (the formula is antisymmetric)."""
-    from k_means_hadoop_spark.operators.corpus_extra import welch_ttest_langs
-
     for r in welch_ttest_langs(spark, sf_dir).collect():
         if r["mean_a"] != r["mean_b"] and r["t_stat"] != 0.0:
             assert (r["t_stat"] > 0) == (r["mean_a"] > r["mean_b"]), r
@@ -163,8 +179,6 @@ def test_welch_is_antisymmetric_in_sign(spark, sf_dir):
 
 
 def test_holt_seeds_level_and_zero_trend(spark, sf_dir):
-    from k_means_hadoop_spark.operators.relational import holt_linear_daily
-
     rows = holt_linear_daily(spark, sf_dir).collect()
     by_type = {}
     for r in rows:
@@ -179,8 +193,6 @@ def test_ipf_raking_converges_to_uniform_marginals(spark, sf_dir):
     """After 3 row+col rounds the COLUMN marginals (the last-scaled
     axis) must equal total/n_src up to per-cell rounding; row marginals
     are within a loose band (IPF alternates which axis is exact)."""
-    from k_means_hadoop_spark.operators.corpus_extra import ipf_raking
-
     rows = ipf_raking(spark, sf_dir).collect()
     total = sum(r["n"] for r in rows)
     srcs, langs = {}, {}
@@ -200,13 +212,6 @@ def test_power_iteration_matches_mllib_pc1(spark, sf_dir):
     principal direction: |cos(v_power, v_mllib)| ≈ 1 (sign-invariant)
     and the Rayleigh eigenvalue ≈ the top eigenvalue of the covariance
     MLlib diagonalizes."""
-    import math
-
-    from pyspark.ml.feature import PCA as MLPCA
-    from pyspark.ml.functions import array_to_vector
-
-    from k_means_hadoop_spark.operators.pca import power_iteration_pc1
-
     rows = sorted(
         power_iteration_pc1(spark, sf_dir).collect(), key=lambda r: r["pos"]
     )
@@ -230,10 +235,6 @@ def test_minhash_merge_identity_property(spark):
     whitespace), the min-merge of chunked partial signatures equals the
     whole-document signature — the mergeability identity the streaming
     store relies on.  Docs with no shingles must be absent from BOTH."""
-    from hypothesis import given, settings, strategies as st
-
-    from k_means_hadoop_spark.operators import dedup
-
     word = st.text(alphabet="abcXYZ09", min_size=1, max_size=6)
     doc = st.lists(word, min_size=0, max_size=30).map(" ".join)
     sep = st.sampled_from([" ", "  ", "\t", " \n "])
@@ -262,11 +263,6 @@ def test_bmp_wav_codecs_roundtrip_and_reject():
     """The dependency-free codecs are REAL parsers: byte-exact
     round-trip on arbitrary pixel/sample arrays (including non-4-byte-
     aligned row widths) and header validation on junk."""
-    import numpy as np
-    import pytest as pt
-
-    from k_means_hadoop_spark.functions import codecs
-
     rng = np.random.RandomState(7)
     for w, h in [(8, 6), (5, 3), (1, 1), (7, 2)]:  # w=5,7: padded rows
         img = rng.randint(0, 256, size=(h, w, 3)).astype(np.uint8)
@@ -284,11 +280,6 @@ def test_bmp_wav_codecs_roundtrip_and_reject():
 
 
 def test_decode_media_real_marks_video_unsupported(spark, sf_dir):
-    from k_means_hadoop_spark.operators.multimodal import (
-        decode_media_real,
-        synthesize_codec_media,
-    )
-
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet").limit(30)
     rows = decode_media_real(synthesize_codec_media(docs)).collect()
     kinds = {r["kind"] for r in rows}
@@ -303,13 +294,6 @@ def test_decode_media_real_marks_video_unsupported(spark, sf_dir):
 def test_streaming_merge_multibatch_and_equals_batch(spark, sf_dir):
     """The versioned-snapshot apply must advance through >1 micro-batch
     and land on exactly the batch MERGE's snapshot."""
-    import glob
-    import os
-
-    from k_means_hadoop_spark.operators.analytics import merge_apply_changelog
-    from k_means_hadoop_spark.session import scratch_dir
-    from k_means_hadoop_spark.streaming.relational import streaming_merge_changelog
-
     root = scratch_dir("merge_pin")
     got = {
         (r["c_custkey"], r["c_acctbal"], r["src"])
@@ -329,11 +313,6 @@ def test_welch_survives_single_doc_language(spark, tmp_path):
     the guarded formulas must return t=0/df=0 rows instead of an ANSI
     divide-by-zero abort (latent on the fixtures — every fixture lang
     has >= 2 docs)."""
-    from k_means_hadoop_spark.operators.corpus_extra import welch_ttest_langs
-    from tests.test_advice_fixes import DOC_SCHEMA
-
-    import os
-
     rows = [
         (1, "one lonely document here today", "zz", "web", 30),
     ] + [
@@ -352,8 +331,6 @@ def test_welch_survives_single_doc_language(spark, tmp_path):
 def test_bootstrap_ci_brackets_mean(spark, sf_dir):
     """The 90% Poissonized-bootstrap CI must bracket the point estimate
     and be non-degenerate (lo < hi) on the fixture."""
-    from k_means_hadoop_spark.operators.corpus_extra import bootstrap_ci_quality
-
     r = bootstrap_ci_quality(spark, sf_dir).collect()[0]
     assert r["ci_lo"] < r["mean_quality"] < r["ci_hi"], r
     assert r["ci_hi"] - r["ci_lo"] < 0.2, r
@@ -367,16 +344,6 @@ def test_lloyd_checkpoint_resume_equivalence(spark, sf_dir):
     no drift, because assignment and recompute are deterministic
     functions of the centroid table and Double round-trips exactly
     through the writer."""
-    from pyspark.sql import functions as F
-
-    from k_means_hadoop_spark.operators.kmeans import init_ids, lloyd_kmeans
-    from k_means_hadoop_spark.registry import SEEDS, _points
-    from k_means_hadoop_spark.session import scratch_dir
-    from k_means_hadoop_spark.sources.centroid_io import (
-        read_centroid_file,
-        write_centroid_file,
-    )
-
     pts = _points(spark, sf_dir).cache()
     straight = lloyd_kmeans(pts, init_ids(pts, SEEDS), max_iter=6)
 

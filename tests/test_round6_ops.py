@@ -7,11 +7,15 @@ from __future__ import annotations
 
 import math
 import re
+import re as _re
+from collections import Counter
 
-import pytest
+import numpy as np
 from pyspark.sql import functions as F
 
 from k_means_hadoop_spark import registry
+from k_means_hadoop_spark.operators.analytics import _copurchase_edges
+from k_means_hadoop_spark.operators.trends import _hilbert_key
 from k_means_hadoop_spark.plans import plan_of
 
 
@@ -234,8 +238,6 @@ def test_hits_normalized(spark, sf_dir):
 
 
 def test_resource_allocation_excludes_existing_edges(spark, sf_dir):
-    from k_means_hadoop_spark.operators.analytics import _copurchase_edges
-
     edges = {
         (r["pa"], r["pb"]) for r in _copurchase_edges(spark, sf_dir).collect()
     }
@@ -282,7 +284,6 @@ def test_char_entropy_hand_recompute(spark, sf_dir):
         .first()["text"]
     )
     letters = re.findall(r"[a-z]", text.lower())
-    from collections import Counter
 
     c = Counter(letters)
     n = len(letters)
@@ -441,8 +442,6 @@ def test_hilbert_key_matches_python_reference(spark, sf_dir):
             s //= 2
         return d
 
-    from k_means_hadoop_spark.operators.trends import _hilbert_key
-
     pts = spark.createDataFrame(
         [(x, y) for x in range(0, 256, 17) for y in range(0, 256, 13)],
         "x int, y int",
@@ -501,8 +500,6 @@ def test_ridge_matches_numpy(spark, sf_dir):
     """Pin the penalized Cramer solve against numpy.linalg.solve; at
     lambda -> the fixed 1000, ridge slopes must shrink toward zero
     relative to OLS (the regularization sanity)."""
-    import numpy as np
-
     r = _q("ridge_price_model", spark, sf_dir).first()
     rows = (
         spark.read.parquet(f"{sf_dir}/lineitem.parquet")
@@ -523,10 +520,6 @@ def test_ridge_matches_numpy(spark, sf_dir):
 
 
 def test_logistic_newton_matches_numpy(spark, sf_dir):
-    import re as _re
-
-    import numpy as np
-
     r = _q("logistic_newton_step", spark, sf_dir).first()
     docs = (
         spark.read.parquet(f"{sf_dir}/documents.parquet")
@@ -545,10 +538,6 @@ def test_logistic_newton_matches_numpy(spark, sf_dir):
 
 
 def test_cronbach_alpha_hand_recompute(spark, sf_dir):
-    import re as _re
-
-    import numpy as np
-
     r = _q("cronbach_alpha_items", spark, sf_dir).first()
     docs = (
         spark.read.parquet(f"{sf_dir}/documents.parquet")
@@ -577,8 +566,6 @@ def test_cronbach_alpha_hand_recompute(spark, sf_dir):
 def test_exact_percentiles_match_numpy(spark, sf_dir):
     """Pin the positional interpolation against numpy.percentile
     (linear interpolation = the percentile_cont semantics) on cents."""
-    import numpy as np
-
     rows = _q("exact_percentiles_values", spark, sf_dir).collect()
     ev = (
         spark.read.parquet(f"{sf_dir}/events.parquet")

@@ -2,9 +2,22 @@
 
 from __future__ import annotations
 
+import struct
+import zlib
+
 import numpy as np
 import pytest
 from pyspark.sql import functions as F
+
+from k_means_hadoop_spark.functions import codecs
+from k_means_hadoop_spark.operators.curation import decision_stump_quality
+from k_means_hadoop_spark.operators.pca import (
+    _gram_partials,
+    power_iteration_pc1,
+    power_iteration_pc1_float,
+)
+from k_means_hadoop_spark.operators.stats_extra import holm_bonferroni_nation_acctbal
+from k_means_hadoop_spark.operators.trends import _HAAR_N, haar_wavelet_daily
 
 
 def test_power_iteration_float_matches_exact_direction(spark, sf_dir):
@@ -15,9 +28,6 @@ def test_power_iteration_float_matches_exact_direction(spark, sf_dir):
     the near-isotropic fixture, so the achievable cosine bound is
     1 − ε²/2 ≈ 1 − 5e-5, not the 1e-6 an exact eigensolver pair would
     give; the λ ratio is quadratically less sensitive."""
-    from k_means_hadoop_spark.operators.pca import power_iteration_pc1
-    from k_means_hadoop_spark.operators.pca import _gram_partials
-
     exact = power_iteration_pc1(spark, sf_dir).orderBy("pos").collect()
     v_exact = np.array([r["loading"] for r in exact])
     lam_exact = float(exact[0]["eigenvalue"])
@@ -48,13 +58,6 @@ def test_haar_parseval(spark, sf_dir):
     detail energies plus the normalized approximation energy must
     reconstruct the original series energy EXACTLY (all quantities are
     integers divided by powers of two — lossless in binary)."""
-    from pyspark.sql import functions as F
-
-    from k_means_hadoop_spark.operators.trends import (
-        _HAAR_N,
-        haar_wavelet_daily,
-    )
-
     rows = haar_wavelet_daily(spark, sf_dir).collect()
     total_norm = sum(r["energy_norm"] for r in rows)
     daily = (
@@ -72,8 +75,6 @@ def test_haar_parseval(spark, sf_dir):
 def test_decision_stump_beats_base_impurity(spark, sf_dir):
     """The chosen split's weighted Gini must not exceed the unsplit
     (root) impurity — the CART split-gain guarantee."""
-    from k_means_hadoop_spark.operators.curation import decision_stump_quality
-
     r = decision_stump_quality(spark, sf_dir).collect()[0]
     n = r["n_left"] + r["n_right"]
     pos = r["pos_left"] + r["pos_right"]
@@ -87,10 +88,6 @@ def test_holm_planted_rejections(spark, sf_dir):
     """The planted outlier groups drive the step-down's rejection
     branch; natural nations all stay non-significant, and rejections
     form a prefix of the p-ranking (the step-down property)."""
-    from k_means_hadoop_spark.operators.stats_extra import (
-        holm_bonferroni_nation_acctbal,
-    )
-
     rows = holm_bonferroni_nation_acctbal(spark, sf_dir).collect()
     sig = sorted(r["p_rank"] for r in rows if r["significant"])
     assert sig, "rejection branch vacuous — no planted group rejected"
@@ -107,11 +104,6 @@ def test_png_codec_roundtrip_and_filters():
     hand-filtered stream per type, checked against the raw pixels);
     (c) malformed payloads raise ValueError (the decode_wav rejection
     contract)."""
-    import struct
-    import zlib
-
-    from k_means_hadoop_spark.functions import codecs
-
     rng = np.random.default_rng(7)
     img = rng.integers(0, 256, size=(9, 13, 3), dtype=np.uint8)
     assert (codecs.decode_png(codecs.encode_png(img)) == img).all()
@@ -158,8 +150,6 @@ def test_png_codec_roundtrip_and_filters():
 def test_power_iteration_float_contract_row(spark, sf_dir):
     """One row, all four contract booleans true, trace >= maxvar > 0
     (exact-field parity itself is covered by the oracle gate)."""
-    from k_means_hadoop_spark.operators.pca import power_iteration_pc1_float
-
     rows = power_iteration_pc1_float(spark, sf_dir).collect()
     assert len(rows) == 1
     r = rows[0]

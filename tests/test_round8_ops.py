@@ -2,9 +2,37 @@
 
 from __future__ import annotations
 
+import math
+from collections import Counter
+
 import numpy as np
+import pandas as pd
 import pytest
 from pyspark.sql import functions as F
+
+from k_means_hadoop_spark.functions import codecs
+from k_means_hadoop_spark.operators.containers import (
+    gif_decode_stats,
+    jpeg_decode_stats,
+)
+from k_means_hadoop_spark.operators.mining import _LO_TOPK, log_odds_terms_langs
+from k_means_hadoop_spark.operators.multimodal import decode_media_real
+from k_means_hadoop_spark.operators.relational import _t
+from k_means_hadoop_spark.operators.stats_extra import (
+    _HG_CHARS,
+    hypergeom_enrichment_sources,
+    kendall_tau_grid_qty_disc,
+    lorenz_spend_deciles,
+    theil_u_lang_source,
+)
+from k_means_hadoop_spark.operators.trends import (
+    _LB_LAGS,
+    ljung_box_daily,
+    mann_kendall_daily,
+    page_trend_event_dow,
+    permutation_entropy_daily,
+)
+from tests.helpers import write_events
 
 
 # ------------------------------------------------------------- GIF codec
@@ -14,8 +42,6 @@ def test_gif_lzw_width_boundaries_and_reset():
     """The LZW roundtrip must survive every code-width boundary
     (9→10→11→12) and the 4096-entry dictionary reset — seeded random
     streams sized to cross each."""
-    from k_means_hadoop_spark.functions import codecs
-
     rng = np.random.RandomState(0)
     for n in (100, 300, 600, 2000, 10000, 60000, 200000):
         d = rng.randint(0, 256, n).astype(np.uint8).tobytes()
@@ -25,8 +51,6 @@ def test_gif_lzw_width_boundaries_and_reset():
 def test_gif_lzw_kwkwk_and_runs():
     """The KwKwK self-reference case (code == table size) and deep
     dictionary chains from low-entropy runs."""
-    from k_means_hadoop_spark.functions import codecs
-
     d = b"\x05" * 1000  # the classic KwKwK trigger
     assert codecs._lzw_decode_gif(codecs._lzw_encode_gif(d)) == d
     rng = np.random.RandomState(1)
@@ -36,8 +60,6 @@ def test_gif_lzw_kwkwk_and_runs():
 
 
 def test_gif_container_roundtrip_and_rejects():
-    from k_means_hadoop_spark.functions import codecs
-
     rng = np.random.RandomState(2)
     px = rng.randint(0, 256, (50, 100)).astype(np.uint8)
     idx, pal = codecs.decode_gif(codecs.encode_gif(px))
@@ -51,8 +73,6 @@ def test_gif_container_roundtrip_and_rejects():
 def test_gif_decode_stats_roundtrip_flag(spark, sf_dir):
     """Every planted image must survive the encode→decode roundtrip
     (decode_ok is the in-query proof the oracle cannot see)."""
-    from k_means_hadoop_spark.operators.containers import gif_decode_stats
-
     rows = gif_decode_stats(spark, sf_dir).collect()
     assert rows, "no planted GIF rows"
     assert all(r["decode_ok"] for r in rows)
@@ -65,10 +85,6 @@ def test_gif_decode_stats_roundtrip_flag(spark, sf_dir):
 def test_page_incomplete_blocks_raise(spark, tmp_path):
     """Page shares Friedman's complete-blocks guard (round-7 ADVICE
     pattern): a missing (block, treatment) cell must raise."""
-    import pandas as pd
-
-    from k_means_hadoop_spark.operators.trends import page_trend_event_dow
-
     rows = [
         ("2024-01-01 01:00:00", "A"),
         ("2024-01-01 02:00:00", "B"),
@@ -91,10 +107,6 @@ def test_page_incomplete_blocks_raise(spark, tmp_path):
 def test_mann_kendall_against_local_reference(spark, sf_dir):
     """S, the tie term, and z recomputed from the collected daily
     series with plain Python — the definition, not the SQL."""
-    import math
-
-    from k_means_hadoop_spark.operators.trends import mann_kendall_daily
-
     daily = (
         spark.read.parquet(f"{sf_dir}/events.parquet")
         .groupBy(F.to_date("ts").alias("day"))
@@ -109,7 +121,6 @@ def test_mann_kendall_against_local_reference(spark, sf_dir):
         for i in range(n)
         for j in range(i + 1, n)
     )
-    from collections import Counter
 
     tt = sum(t * (t - 1) * (2 * t + 5) for t in Counter(xs).values())
     vn = n * (n - 1) * (2 * n + 5) - tt
@@ -130,11 +141,6 @@ def test_page_trend_against_local_reference(spark, sf_dir):
     """L, ΣT, and the midrank tie-corrected z recomputed from the
     collected (weekday, event_type) count cells with plain Python —
     the definition, not the SQL (round-9 verdict item 6)."""
-    import math
-    from collections import Counter
-
-    from k_means_hadoop_spark.operators.trends import page_trend_event_dow
-
     cells = (
         spark.read.parquet(f"{sf_dir}/events.parquet")
         .select(
@@ -182,8 +188,7 @@ def test_page_trend_fully_tied_raises_in_plan(spark, tmp_path):
     for d in range(1, 8):
         rows.append((f"2024-01-{d:02d} 01:00:00", "A"))
         rows.append((f"2024-01-{d:02d} 02:00:00", "B"))
-    _write_events(tmp_path, rows)
-    from k_means_hadoop_spark.operators.trends import page_trend_event_dow
+    write_events(tmp_path, rows)
 
     df = page_trend_event_dow(spark, str(tmp_path))
     with pytest.raises(Exception, match="fully\\s+tied"):
@@ -193,13 +198,6 @@ def test_page_trend_fully_tied_raises_in_plan(spark, tmp_path):
 def test_ljung_box_nonnegative_and_reference(spark, sf_dir):
     """Q recomputed from the collected series via the exact same
     rational A_k/B definition in Python floats — and Q >= 0 always."""
-    import math
-
-    from k_means_hadoop_spark.operators.trends import (
-        _LB_LAGS,
-        ljung_box_daily,
-    )
-
     daily = (
         spark.read.parquet(f"{sf_dir}/events.parquet")
         .groupBy(F.to_date("ts").alias("day"))
@@ -226,10 +224,6 @@ def test_ljung_box_nonnegative_and_reference(spark, sf_dir):
 
 def test_kendall_grid_bounds(spark, sf_dir):
     """|tau_b| <= 1 and C + D can never exceed the untied pair count."""
-    from k_means_hadoop_spark.operators.stats_extra import (
-        kendall_tau_grid_qty_disc,
-    )
-
     r = kendall_tau_grid_qty_disc(spark, sf_dir).first()
     assert abs(r["tau_b"]) <= 1
     n0 = r["n_rows"] * (r["n_rows"] - 1) // 2
@@ -243,8 +237,6 @@ def test_kendall_grid_bounds(spark, sf_dir):
 def test_lorenz_monotone_and_total(spark, sf_dir):
     """Lorenz cumulative share is nondecreasing, convex-ish by decile
     construction, and ends at exactly 1."""
-    from k_means_hadoop_spark.operators.stats_extra import lorenz_spend_deciles
-
     rows = lorenz_spend_deciles(spark, sf_dir).orderBy("decile").collect()
     assert [r["decile"] for r in rows] == list(range(len(rows)))
     shares = [r["cum_share"] for r in rows]
@@ -256,10 +248,6 @@ def test_lorenz_monotone_and_total(spark, sf_dir):
 def test_permutation_entropy_bounds(spark, sf_dir):
     """0 <= h_norm <= 1, at most 6 ordinal patterns of order 3, and
     m = n_days - 2 windows."""
-    from k_means_hadoop_spark.operators.trends import (
-        permutation_entropy_daily,
-    )
-
     r = permutation_entropy_daily(spark, sf_dir).first()
     assert 0 <= r["h_norm"] <= 1
     assert 1 <= r["n_patterns"] <= 6
@@ -275,8 +263,6 @@ def test_permutation_entropy_bounds(spark, sf_dir):
 def test_theil_u_bounds(spark, sf_dir):
     """0 <= U <= 1 and H(lang|source) <= H(lang) (conditioning never
     increases entropy — up to the 6dp grid)."""
-    from k_means_hadoop_spark.operators.stats_extra import theil_u_lang_source
-
     r = theil_u_lang_source(spark, sf_dir).first()
     assert -1e-6 <= r["theil_u"] <= 1 + 1e-6
     assert r["h_lang_given_source"] <= r["h_lang"] + 2e-6
@@ -285,11 +271,6 @@ def test_theil_u_bounds(spark, sf_dir):
 def test_hypergeom_znum_telescopes(spark, sf_dir):
     """Σ_s (N·k_s − n_s·K) = N·K − K·N = 0 exactly — the enrichment
     numerators must cancel across sources (exact-integer identity)."""
-    from k_means_hadoop_spark.operators.stats_extra import (
-        _HG_CHARS,
-        hypergeom_enrichment_sources,
-    )
-
     rows = hypergeom_enrichment_sources(spark, sf_dir).collect()
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
     nn = docs.count()
@@ -303,11 +284,6 @@ def test_log_odds_topk_shape(spark, sf_dir):
     """Exactly 20 rows, lor ordered (desc, term asc), and the top
     term is genuinely en-associated (positive log-odds — a RATE
     statement: c_en/n1 beats c_rest/n2, not a raw-count one)."""
-    from k_means_hadoop_spark.operators.mining import (
-        _LO_TOPK,
-        log_odds_terms_langs,
-    )
-
     rows = log_odds_terms_langs(spark, sf_dir).collect()
     assert len(rows) == _LO_TOPK
     keys = [(-r["lor"], r["term"]) for r in rows]
@@ -321,8 +297,6 @@ def test_log_odds_topk_shape(spark, sf_dir):
 def _jpeg_reference_pipeline(img):
     """DCT-only reference (no entropy coding): what a lossless entropy
     layer must reproduce exactly for ANY input."""
-    from k_means_hadoop_spark.functions import codecs
-
     h, w = img.shape
     hp, wp = -(-h // 8) * 8, -(-w // 8) * 8
     x = np.pad(img, ((0, hp - h), (0, wp - w)), mode="edge").astype(
@@ -346,8 +320,6 @@ def test_jpeg_entropy_layer_lossless():
     """decode(encode(x)) must equal the DCT-only reference on
     arbitrary images — proving DPCM + RLE + Huffman + byte stuffing
     perfectly lossless (the honest part of a lossy codec)."""
-    from k_means_hadoop_spark.functions import codecs
-
     rng = np.random.RandomState(3)
     for shape in ((8, 8), (16, 24), (40, 56), (10, 13), (64, 64)):
         img = rng.randint(0, 256, shape).astype(np.uint8)
@@ -359,8 +331,6 @@ def test_jpeg_scan_zrl_eob_and_sign_edges():
     """The entropy layer alone, on crafted coefficient blocks: ZRL
     runs (>15 zeros between nonzeros), EOB-only blocks, negative DC
     swings, and max-magnitude ACs."""
-    from k_means_hadoop_spark.functions import codecs
-
     blocks = []
     b = np.zeros(64, dtype=np.int64)
     b[0] = 5
@@ -387,8 +357,6 @@ def test_jpeg_scan_zrl_eob_and_sign_edges():
 def test_jpeg_huffman_tables_are_prefix_free():
     """The canonical (BITS, HUFFVAL) construction must yield
     prefix-free codes for both Annex-K tables."""
-    from k_means_hadoop_spark.functions import codecs
-
     for bits, vals in (
         (codecs._JPEG_DC_BITS, codecs._JPEG_DC_VALS),
         (codecs._JPEG_AC_BITS, codecs._JPEG_AC_VALS),
@@ -406,8 +374,6 @@ def test_jpeg_huffman_tables_are_prefix_free():
 
 
 def test_jpeg_container_roundtrip_and_rejects():
-    from k_means_hadoop_spark.functions import codecs
-
     px = np.zeros((16, 16), dtype=np.uint8)
     for b, (y, x) in enumerate(((0, 0), (0, 8), (8, 0), (8, 8))):
         px[y : y + 8, x : x + 8] = ((5 * 29 + b * 17) % 127) * 2
@@ -426,8 +392,6 @@ def test_jpeg_decode_stats_roundtrip_flag(spark, sf_dir):
     """Every planted block-constant image must survive the lossy codec
     bit-exactly (the DC-only / even-value construction) — decode_ok is
     the in-query proof the oracle cannot see."""
-    from k_means_hadoop_spark.operators.containers import jpeg_decode_stats
-
     rows = jpeg_decode_stats(spark, sf_dir).collect()
     assert rows, "no planted JPEG rows"
     assert all(r["decode_ok"] for r in rows)
@@ -438,8 +402,6 @@ def test_jpeg_decode_stats_roundtrip_flag(spark, sf_dir):
 
 
 def test_sniff_format_all_five_codecs():
-    from k_means_hadoop_spark.functions import codecs
-
     px3 = np.arange(48, dtype=np.uint8).reshape(4, 4, 3)
     g = np.arange(64, dtype=np.uint8).reshape(8, 8)
     assert codecs.sniff_format(codecs.encode_bmp(px3)) == "bmp"
@@ -458,9 +420,6 @@ def test_decode_media_real_sniffs_all_image_formats(spark):
     in-repo image codec, all declared kind='image', must all decode —
     BMP through the original path (oracle-pinned elsewhere), PNG/GIF/
     JPEG through the round-7/8 codecs; garbage stays ok=false."""
-    from k_means_hadoop_spark.functions import codecs
-    from k_means_hadoop_spark.operators.multimodal import decode_media_real
-
     px3 = np.full((8, 6, 3), 100, dtype=np.uint8)
     g = np.full((16, 16), 100, dtype=np.uint8)  # block-constant, even
     rows = [
@@ -484,37 +443,12 @@ def test_decode_media_real_sniffs_all_image_formats(spark):
 
 
 def test_jpeg_dri_rejected():
-    from k_means_hadoop_spark.functions import codecs
-
     g = np.zeros((8, 8), dtype=np.uint8)
     data = codecs.encode_jpeg(g)
     sos = data.index(b"\xff\xda")
     dri = b"\xff\xdd\x00\x04\x00\x08"  # DRI segment, interval 8
     with pytest.raises(ValueError, match="restart intervals"):
         codecs.decode_jpeg(data[:sos] + dri + data[sos:])
-
-
-# -------------------------------------------- degenerate-input guards
-#
-# The power_iteration / Friedman ADVICE pattern, applied proactively:
-# every round-8 statistic whose degenerate fixture would produce a
-# silent NaN (or a silently mis-normalized value BOTH engines agree
-# on) raises a descriptive ValueError instead.
-
-
-def _write_events(tmp_path, rows):
-    import pandas as pd
-
-    pd.DataFrame(
-        {
-            "event_id": range(len(rows)),
-            "ts": [pd.Timestamp(t) for t, _ in rows],
-            "user_id": [1] * len(rows),
-            "event_type": [t for _, t in rows],
-            "value": [1.0] * len(rows),
-            "props": ["{}"] * len(rows),
-        }
-    ).to_parquet(tmp_path / "events.parquet", index=False)
 
 
 def _build_runs_no_jobs(spark, fn, *args, table="events"):
@@ -525,8 +459,6 @@ def _build_runs_no_jobs(spark, fn, *args, table="events"):
     runs one tiny footer-read job per ``spark.read.parquet``, so the
     honest zero is "build jobs == plain-read jobs", measured here
     rather than assumed."""
-    from k_means_hadoop_spark.operators.relational import _t
-
     sf_dir = args[-1]
     sc = spark.sparkContext
     st = sc.statusTracker()
@@ -548,25 +480,21 @@ def _build_runs_no_jobs(spark, fn, *args, table="events"):
 
 
 def test_mann_kendall_single_day_raises(spark, tmp_path):
-    from k_means_hadoop_spark.operators.trends import mann_kendall_daily
-
-    _write_events(tmp_path, [("2024-01-01 01:00:00", "A")] * 3)
+    write_events(tmp_path, [("2024-01-01 01:00:00", "A")] * 3)
     df = _build_runs_no_jobs(spark, mann_kendall_daily, spark, str(tmp_path))
     with pytest.raises(Exception, match="fewer than 2 distinct days"):
         df.first()
 
 
 def test_ljung_box_short_and_constant_raise(spark, tmp_path):
-    from k_means_hadoop_spark.operators.trends import ljung_box_daily
-
-    _write_events(
+    write_events(
         tmp_path, [(f"2024-01-0{d} 01:00:00", "A") for d in range(1, 6)]
     )
     df = _build_runs_no_jobs(spark, ljung_box_daily, spark, str(tmp_path))
     with pytest.raises(Exception, match="distinct days <="):
         df.first()
     # 10 days, one event each: a CONSTANT series -> B = 0
-    _write_events(
+    write_events(
         tmp_path,
         [(f"2024-01-{d:02d} 01:00:00", "A") for d in range(1, 11)],
     )
@@ -575,11 +503,7 @@ def test_ljung_box_short_and_constant_raise(spark, tmp_path):
 
 
 def test_permutation_entropy_two_days_raises(spark, tmp_path):
-    from k_means_hadoop_spark.operators.trends import (
-        permutation_entropy_daily,
-    )
-
-    _write_events(
+    write_events(
         tmp_path,
         [("2024-01-01 01:00:00", "A"), ("2024-01-02 01:00:00", "A")],
     )
@@ -593,9 +517,7 @@ def test_permutation_entropy_two_days_raises(spark, tmp_path):
 def test_page_single_treatment_raises(spark, tmp_path):
     """k = 1 is complete-blocks-valid but rank-degenerate — the shared
     guard (now also protecting Friedman) must reject it."""
-    from k_means_hadoop_spark.operators.trends import page_trend_event_dow
-
-    _write_events(
+    write_events(
         tmp_path,
         [(f"2024-01-{d:02d} 01:00:00", "A") for d in range(1, 8)],
     )
@@ -607,10 +529,6 @@ def test_page_single_treatment_raises(spark, tmp_path):
 
 
 def test_theil_u_single_language_raises(spark, tmp_path):
-    import pandas as pd
-
-    from k_means_hadoop_spark.operators.stats_extra import theil_u_lang_source
-
     pd.DataFrame(
         {
             "doc_id": [1, 2, 3],
@@ -626,12 +544,6 @@ def test_theil_u_single_language_raises(spark, tmp_path):
 
 
 def test_kendall_grid_constant_marginal_raises(spark, tmp_path):
-    import pandas as pd
-
-    from k_means_hadoop_spark.operators.stats_extra import (
-        kendall_tau_grid_qty_disc,
-    )
-
     pd.DataFrame(
         {"l_quantity": [5.0] * 4, "l_discount": [0.01, 0.02, 0.03, 0.04]}
     ).to_parquet(tmp_path / "lineitem.parquet", index=False)
@@ -644,12 +556,6 @@ def test_kendall_grid_constant_marginal_raises(spark, tmp_path):
 
 
 def test_hypergeom_nonsplitting_gate_raises(spark, tmp_path):
-    import pandas as pd
-
-    from k_means_hadoop_spark.operators.stats_extra import (
-        hypergeom_enrichment_sources,
-    )
-
     pd.DataFrame(
         {
             "doc_id": [1, 2, 3],
@@ -670,8 +576,6 @@ def test_gif_jpeg_truncation_normalized_to_valueerror():
     """The sniff-dispatch seam catches ValueError ONLY — a truncated
     payload raising IndexError/struct.error would kill the whole Arrow
     batch.  Every truncation point must surface as ValueError."""
-    from k_means_hadoop_spark.functions import codecs
-
     g = np.arange(64, dtype=np.uint8).reshape(8, 8)
     gif, jpg = codecs.encode_gif(g), codecs.encode_jpeg(g)
     for data, dec in ((gif, codecs.decode_gif), (jpg, codecs.decode_jpeg)):

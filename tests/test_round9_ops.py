@@ -13,9 +13,14 @@ from __future__ import annotations
 import struct
 
 import pytest
+from hypothesis import given, settings
+from hypothesis import strategies as st
+from pyspark.sql import Window
+from pyspark.sql import functions as F
 
 from k_means_hadoop_spark.functions import codecs
-from k_means_hadoop_spark.operators.containers import _mp4_plant
+from k_means_hadoop_spark.operators.containers import _fmp4_plant, _mp4_plant
+from k_means_hadoop_spark.partitioning import ntile_expr
 
 
 def _blob(did: int, **kw) -> bytes:
@@ -139,11 +144,6 @@ def test_ntile_expr_matches_window_ntile(spark):
     """The closed-form ntile (partitioning.ntile_expr) is bit-identical
     to F.ntile for every (n, k) combination — the identity the
     rfm_segments and zonemap rewrites rest on."""
-    from pyspark.sql import Window
-    from pyspark.sql import functions as F
-
-    from k_means_hadoop_spark.partitioning import ntile_expr
-
     for n in (1, 2, 3, 4, 5, 7, 8, 63, 64, 65, 100):
         for k in (4, 10, 64):
             df = spark.range(1, n + 1).withColumnRenamed("id", "rn")
@@ -162,8 +162,6 @@ def test_ntile_expr_matches_window_ntile(spark):
 def test_mp4_roundtrip_fuzz():
     """Property fuzz: ANY track list (1-3 tracks, arbitrary sample
     bytes/sizes/chunking, stco or co64) demuxes back bit-exact."""
-    from hypothesis import given, settings, strategies as st
-
     sample = st.binary(min_size=0, max_size=40)
     track = st.fixed_dictionaries(
         {
@@ -199,15 +197,11 @@ def test_mp4_roundtrip_fuzz():
 
 
 def _fblob(did: int) -> bytes:
-    from k_means_hadoop_spark.operators.containers import _fmp4_plant
-
     return codecs.encode_fmp4(30, 1, _fmp4_plant(did))
 
 
 @pytest.mark.parametrize("did", [0, 1, 2, 7, 12345])
 def test_fmp4_roundtrip_bit_exact(did):
-    from k_means_hadoop_spark.operators.containers import _fmp4_plant
-
     frags = _fmp4_plant(did)
     parsed = codecs.parse_fmp4(_fblob(did))
     assert parsed["brand"] == "iso5"
@@ -225,8 +219,6 @@ def test_fmp4_init_segment_prefix_parses_empty():
     a VALID zero-fragment stream, and any cut that severs a fragment
     either drops whole trailing fragments or raises ValueError —
     never yields corrupt samples."""
-    from k_means_hadoop_spark.operators.containers import _fmp4_plant
-
     blob = _fblob(3)
     full = codecs.parse_fmp4(blob)["fragments"]
     spans = [(t, b, e) for t, b, e in codecs._mp4_walk(blob, 0, len(blob))]
@@ -243,8 +235,6 @@ def test_fmp4_init_segment_prefix_parses_empty():
 def test_fmp4_unsupported_flags_rejected():
     """Flag layouts the parser does not implement raise loudly instead
     of silently mis-demuxing."""
-    import struct
-
     blob = bytearray(_fblob(1))
     i = bytes(blob).find(b"tfhd")
     # clear default-base-is-moof
@@ -254,8 +244,6 @@ def test_fmp4_unsupported_flags_rejected():
 
 
 def test_fmp4_fuzz_roundtrip():
-    from hypothesis import given, settings, strategies as st
-
     frag = st.lists(st.binary(min_size=0, max_size=30), min_size=1, max_size=6)
 
     @settings(max_examples=40, deadline=None)
