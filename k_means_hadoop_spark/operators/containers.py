@@ -3,10 +3,13 @@ containers, archives and web-crawl records, each decoded on the
 executors and proven by an encode→parse roundtrip.
 
 Every query encodes real bytes (``functions/codecs.py``) for a fixed
-slice of the ``documents`` table, parses them back on the executors
-(in a ``mapInPandas`` kernel, or through a Python Data Source for
-shards on disk) and reports exact integers (or 6dp-floored doubles)
-that a closed-form DuckDB oracle reproduces from the same table:
+slice of the ``documents`` table (``_doc_slice``), parses them back on
+the executors and reports exact integers (or 6dp-floored doubles) that
+a closed-form DuckDB oracle reproduces from the same table.  Each
+kernel is a plain function of one input row that returns its output
+rows, run through ``multimodal.map_rows`` (one Arrow-batched
+``mapInPandas`` loop for every per-row kernel); shards on disk are read
+through a Python Data Source instead:
 
 - decoded media: PCM-WAV zero crossings, BMP channel histograms, PNG,
   GIF and baseline-JPEG decode stats;
@@ -29,8 +32,6 @@ globals, which ship by value under the package-wide pickling rule in
 
 from __future__ import annotations
 
-from typing import Iterator
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -42,9 +43,9 @@ from pyspark.sql import functions as F
 # resolves to the by-value codecs copy instead.
 from k_means_hadoop_spark.functions import codecs
 from k_means_hadoop_spark.operators.corpus_extra import _docs
-from k_means_hadoop_spark.operators.multimodal import synthesize_codec_media
+from k_means_hadoop_spark.operators.multimodal import map_rows, synthesize_codec_media
 from k_means_hadoop_spark.operators.relational import _t
-from k_means_hadoop_spark.operators.trends import _FL6_SQL
+from k_means_hadoop_spark.operators.trends import _FL6_SQL, _fl6_py
 from k_means_hadoop_spark.partitioning import fan_out
 from k_means_hadoop_spark.session import scratch_dir
 
@@ -57,6 +58,17 @@ from k_means_hadoop_spark.sources.warc_shards import (
     read_warc_shards,
     write_warc_shards,
 )
+
+
+def _doc_slice(spark: SparkSession, sf_dir: str, mod: int, rem: int, *extra: str) -> DataFrame:
+    """``doc_id`` (plus ``extra`` columns) of the documents with
+    ``doc_id % mod == rem``, fanned out: a small documents.parquet scans
+    as ONE input split, which would serialize a codec kernel on a single
+    core; round-robin to defaultParallelism so the Arrow batches cover
+    the cluster."""
+    return fan_out(
+        _t(spark, sf_dir, "documents").select("doc_id", *extra).where(F.col("doc_id") % mod == rem)
+    )
 
 
 # --------------------------------------------- frame zero crossings
@@ -74,32 +86,25 @@ def wav_frame_zero_crossings(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(media_id, frame_idx, n_flips) — intra-frame sign flips per
     16-sample frame of each planted PCM-WAV payload."""
     import numpy as np
-    import pandas as pd
 
     media = synthesize_codec_media(_docs(spark, sf_dir), kinds=("audio",))
     audio = media.filter(F.col("kind") == "audio").select("media_id", "payload")
 
-    def _batches(it: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        for pdf in it:
-            rows = []
-            for mid, payload in zip(pdf["media_id"], pdf["payload"]):
-                try:
-                    samples, _rate = codecs.decode_wav(bytes(payload))
-                except ValueError:
-                    continue  # malformed-payload contract (wav_frame_features)
-                s = samples.astype(np.int64)
-                for fi in range(len(s) // _ZC_FRAME):
-                    c = s[fi * _ZC_FRAME : (fi + 1) * _ZC_FRAME]
-                    rows.append(
-                        (int(mid), fi, int((c[1:] * c[:-1] < 0).sum()))
-                    )
-            yield pd.DataFrame(
-                rows, columns=["media_id", "frame_idx", "n_flips"]
+    def _row(mid, payload):
+        rows = []
+        try:
+            samples, _rate = codecs.decode_wav(bytes(payload))
+        except ValueError:
+            return []  # malformed-payload contract (wav_frame_features)
+        s = samples.astype(np.int64)
+        for fi in range(len(s) // _ZC_FRAME):
+            c = s[fi * _ZC_FRAME : (fi + 1) * _ZC_FRAME]
+            rows.append(
+                (int(mid), fi, int((c[1:] * c[:-1] < 0).sum()))
             )
+        return rows
 
-    return audio.mapInPandas(
-        _batches, schema="media_id bigint, frame_idx int, n_flips bigint"
-    )
+    return map_rows(audio, _row, "media_id bigint, frame_idx int, n_flips bigint")
 
 
 WAV_ZC_SQL = f"""
@@ -129,30 +134,25 @@ def bmp_channel_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(media_id, bucket, n_px) — blue-channel intensity histogram
     (16 buckets) from REAL BMP decode of the planted images."""
     import numpy as np
-    import pandas as pd
 
     media = synthesize_codec_media(_docs(spark, sf_dir), kinds=("image",))
     imgs = media.filter(F.col("kind") == "image").select("media_id", "payload")
 
-    def _batches(it: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        for pdf in it:
-            rows = []
-            for mid, payload in zip(pdf["media_id"], pdf["payload"]):
-                try:
-                    img = codecs.decode_bmp(bytes(payload))
-                except ValueError:
-                    continue
-                counts = np.bincount(
-                    img[:, :, 0].ravel() >> 4, minlength=16
-                )
-                for b in range(16):
-                    if counts[b]:
-                        rows.append((int(mid), b, int(counts[b])))
-            yield pd.DataFrame(rows, columns=["media_id", "bucket", "n_px"])
+    def _row(mid, payload):
+        rows = []
+        try:
+            img = codecs.decode_bmp(bytes(payload))
+        except ValueError:
+            return []
+        counts = np.bincount(
+            img[:, :, 0].ravel() >> 4, minlength=16
+        )
+        for b in range(16):
+            if counts[b]:
+                rows.append((int(mid), b, int(counts[b])))
+        return rows
 
-    return imgs.mapInPandas(
-        _batches, schema="media_id bigint, bucket int, n_px bigint"
-    )
+    return map_rows(imgs, _row, "media_id bigint, bucket int, n_px bigint")
 
 
 BMP_HIST_SQL = """
@@ -181,70 +181,39 @@ def png_decode_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(media_id, width, height, n_px, decode_ok, mean_r, mean_g,
     mean_b) — REAL PNG encode→decode roundtrip over planted 8×6 ramps
     (pixel stream value j of image d is (d·31 + j) mod 256)."""
-    import math
-
     import numpy as np
-    import pandas as pd
 
-    # fan_out: a small documents.parquet scans as ONE input split, which
-    # would serialize the codec kernel on a single core; round-robin to
-    # defaultParallelism so the Arrow batches cover the cluster (the
-    # _docs pattern the wav/bmp frame ops inherit)
-    ids = fan_out(
-        _t(spark, sf_dir, "documents")
-        .select("doc_id")
-        .where(F.col("doc_id") % 5 == 0)
-    )
+    ids = _doc_slice(spark, sf_dir, 5, 0)
 
-    def _batches(it: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        for pdf in it:
-            rows = []
-            for did in pdf["doc_id"]:
-                did = int(did)
-                j = np.arange(6 * 8 * 3, dtype=np.int64)
-                px = ((did * 31 + j) % 256).astype(np.uint8).reshape(6, 8, 3)
-                payload = codecs.encode_png(px)
-                img = codecs.decode_png(payload)
-                ok = bool((img == px).all())
-                sums = img.reshape(-1, 3).astype(np.int64).sum(axis=0)
-                n_px = img.shape[0] * img.shape[1]
-                means = [
-                    math.floor(s / n_px * 1_000_000 + 0.5) / 1_000_000
-                    for s in sums
-                ]
-                rows.append(
-                    (
-                        did,
-                        int(img.shape[1]),
-                        int(img.shape[0]),
-                        int(n_px),
-                        ok,
-                        means[0],
-                        means[1],
-                        means[2],
-                    )
-                )
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "media_id",
-                    "width",
-                    "height",
-                    "n_px",
-                    "decode_ok",
-                    "mean_r",
-                    "mean_g",
-                    "mean_b",
-                ],
+    def _row(did):
+        did = int(did)
+        j = np.arange(6 * 8 * 3, dtype=np.int64)
+        px = ((did * 31 + j) % 256).astype(np.uint8).reshape(6, 8, 3)
+        payload = codecs.encode_png(px)
+        img = codecs.decode_png(payload)
+        ok = bool((img == px).all())
+        sums = img.reshape(-1, 3).astype(np.int64).sum(axis=0)
+        n_px = img.shape[0] * img.shape[1]
+        means = [_fl6_py(s / n_px) for s in sums]
+        return [
+            (
+                did,
+                int(img.shape[1]),
+                int(img.shape[0]),
+                int(n_px),
+                ok,
+                means[0],
+                means[1],
+                means[2],
             )
+        ]
 
-    return ids.mapInPandas(
-        _batches,
-        schema=(
-            "media_id bigint, width int, height int, n_px bigint,"
-            " decode_ok boolean, mean_r double, mean_g double,"
-            " mean_b double"
-        ),
+    return map_rows(
+        ids,
+        _row,
+        "media_id bigint, width int, height int, n_px bigint,"
+        " decode_ok boolean, mean_r double, mean_g double,"
+        " mean_b double",
     )
 
 
@@ -283,67 +252,40 @@ def gif_decode_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(media_id, width, height, n_px, decode_ok, mean_idx,
     n_distinct) — REAL GIF encode→decode roundtrip over planted 8×6
     ramps (pixel j of image d is (d·37 + j) mod 256)."""
-    import math
-
     import numpy as np
-    import pandas as pd
 
-    # fan_out: see png_decode_stats — one small input split would
-    # serialize the codec kernel on a single core
-    ids = fan_out(
-        _t(spark, sf_dir, "documents")
-        .select("doc_id")
-        .where(F.col("doc_id") % 7 == 3)
-    )
+    ids = _doc_slice(spark, sf_dir, 7, 3)
 
-    def _batches(it: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        for pdf in it:
-            rows = []
-            for did in pdf["doc_id"]:
-                did = int(did)
-                j = np.arange(6 * 8, dtype=np.int64)
-                px = ((did * 37 + j) % 256).astype(np.uint8).reshape(6, 8)
-                payload = codecs.encode_gif(px)
-                idx, pal = codecs.decode_gif(payload)
-                ok = bool(
-                    (idx == px).all()
-                    and (pal[:, 0] == np.arange(256)).all()
-                    and (pal == pal[:, :1]).all()
-                )
-                n_px = idx.shape[0] * idx.shape[1]
-                mean_idx = math.floor(
-                    int(idx.astype(np.int64).sum()) / n_px * 1_000_000 + 0.5
-                ) / 1_000_000
-                rows.append(
-                    (
-                        did,
-                        int(idx.shape[1]),
-                        int(idx.shape[0]),
-                        int(n_px),
-                        ok,
-                        mean_idx,
-                        int(len(np.unique(idx))),
-                    )
-                )
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "media_id",
-                    "width",
-                    "height",
-                    "n_px",
-                    "decode_ok",
-                    "mean_idx",
-                    "n_distinct",
-                ],
+    def _row(did):
+        did = int(did)
+        j = np.arange(6 * 8, dtype=np.int64)
+        px = ((did * 37 + j) % 256).astype(np.uint8).reshape(6, 8)
+        payload = codecs.encode_gif(px)
+        idx, pal = codecs.decode_gif(payload)
+        ok = bool(
+            (idx == px).all()
+            and (pal[:, 0] == np.arange(256)).all()
+            and (pal == pal[:, :1]).all()
+        )
+        n_px = idx.shape[0] * idx.shape[1]
+        mean_idx = _fl6_py(int(idx.astype(np.int64).sum()) / n_px)
+        return [
+            (
+                did,
+                int(idx.shape[1]),
+                int(idx.shape[0]),
+                int(n_px),
+                ok,
+                mean_idx,
+                int(len(np.unique(idx))),
             )
+        ]
 
-    return ids.mapInPandas(
-        _batches,
-        schema=(
-            "media_id bigint, width int, height int, n_px bigint,"
-            " decode_ok boolean, mean_idx double, n_distinct int"
-        ),
+    return map_rows(
+        ids,
+        _row,
+        "media_id bigint, width int, height int, n_px bigint,"
+        " decode_ok boolean, mean_idx double, n_distinct int",
     )
 
 
@@ -384,66 +326,39 @@ def jpeg_decode_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     n_distinct) — REAL baseline-JPEG encode→decode roundtrip over
     planted 16×16 block-constant images (block b of image d is
     ((d·29 + b·17) mod 127)·2, blocks in raster order)."""
-    import math
-
     import numpy as np
-    import pandas as pd
 
-    # fan_out: see png_decode_stats — one small input split would
-    # serialize the codec kernel on a single core
-    ids = fan_out(
-        _t(spark, sf_dir, "documents")
-        .select("doc_id")
-        .where(F.col("doc_id") % 7 == 5)
-    )
+    ids = _doc_slice(spark, sf_dir, 7, 5)
 
-    def _batches(it: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        for pdf in it:
-            rows = []
-            for did in pdf["doc_id"]:
-                did = int(did)
-                px = np.zeros((16, 16), dtype=np.uint8)
-                for b, (y, x) in enumerate(
-                    ((0, 0), (0, 8), (8, 0), (8, 8))
-                ):
-                    px[y : y + 8, x : x + 8] = ((did * 29 + b * 17) % 127) * 2
-                payload = codecs.encode_jpeg(px)
-                dec = codecs.decode_jpeg(payload)
-                ok = bool(dec.shape == px.shape and (dec == px).all())
-                n_px = dec.shape[0] * dec.shape[1]
-                mean_px = math.floor(
-                    int(dec.astype(np.int64).sum()) / n_px * 1_000_000 + 0.5
-                ) / 1_000_000
-                rows.append(
-                    (
-                        did,
-                        int(dec.shape[1]),
-                        int(dec.shape[0]),
-                        int(n_px),
-                        ok,
-                        mean_px,
-                        int(len(np.unique(dec))),
-                    )
-                )
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "media_id",
-                    "width",
-                    "height",
-                    "n_px",
-                    "decode_ok",
-                    "mean_px",
-                    "n_distinct",
-                ],
+    def _row(did):
+        did = int(did)
+        px = np.zeros((16, 16), dtype=np.uint8)
+        for b, (y, x) in enumerate(
+            ((0, 0), (0, 8), (8, 0), (8, 8))
+        ):
+            px[y : y + 8, x : x + 8] = ((did * 29 + b * 17) % 127) * 2
+        payload = codecs.encode_jpeg(px)
+        dec = codecs.decode_jpeg(payload)
+        ok = bool(dec.shape == px.shape and (dec == px).all())
+        n_px = dec.shape[0] * dec.shape[1]
+        mean_px = _fl6_py(int(dec.astype(np.int64).sum()) / n_px)
+        return [
+            (
+                did,
+                int(dec.shape[1]),
+                int(dec.shape[0]),
+                int(n_px),
+                ok,
+                mean_px,
+                int(len(np.unique(dec))),
             )
+        ]
 
-    return ids.mapInPandas(
-        _batches,
-        schema=(
-            "media_id bigint, width int, height int, n_px bigint,"
-            " decode_ok boolean, mean_px double, n_distinct int"
-        ),
+    return map_rows(
+        ids,
+        _row,
+        "media_id bigint, width int, height int, n_px bigint,"
+        " decode_ok boolean, mean_px double, n_distinct int",
     )
 
 
@@ -518,82 +433,56 @@ def mp4_container_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     n_chunks, video_dur_units, audio_dur_units, movie_dur_ms) — REAL
     ISO-BMFF encode→parse roundtrip over planted two-track containers
     (spec in ``_mp4_plant``)."""
-    import pandas as pd
+    ids = _doc_slice(spark, sf_dir, 7, 1)
 
-    # fan_out: one small input split would serialize the kernel on a
-    # single core (the round-8 codec-kernel lesson)
-    ids = fan_out(
-        _t(spark, sf_dir, "documents")
-        .select("doc_id")
-        .where(F.col("doc_id") % 7 == 1)
-    )
-
-    def _batches(it: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        for pdf in it:
-            rows = []
-            for did in pdf["doc_id"]:
-                did = int(did)
-                tracks = _mp4_plant(did)
-                blob = codecs.encode_mp4(tracks)
-                try:
-                    parsed = codecs.parse_mp4(blob)
-                    ok = (
-                        parsed["brand"] == "isom"
-                        and parsed["timescale"] == 1000
-                        and len(parsed["tracks"]) == len(tracks)
-                    )
-                    for want, got in zip(tracks, parsed["tracks"]):
-                        n = len(want["samples"])
-                        ok = ok and (
-                            got["handler"] == want["handler"]
-                            and got["timescale"] == want["timescale"]
-                            and got["duration"] == n * want["delta"]
-                            and got["n_samples"] == n
-                            and got["width"] == want.get("width", 0)
-                            and got["height"] == want.get("height", 0)
-                            and got["samples"] == want["samples"]
-                        )
-                    t = parsed["tracks"]
-                    rows.append(
-                        (
-                            did,
-                            bool(ok),
-                            len(t),
-                            sum(x["n_samples"] for x in t),
-                            sum(
-                                sum(len(s) for s in x["samples"]) for x in t
-                            ),
-                            sum(x["n_chunks"] for x in t),
-                            t[0]["duration"],
-                            t[1]["duration"],
-                            parsed["duration"],
-                        )
-                    )
-                except ValueError:
-                    rows.append((did, False, 0, 0, 0, 0, 0, 0, 0))
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "media_id",
-                    "parse_ok",
-                    "n_tracks",
-                    "n_samples",
-                    "payload_bytes",
-                    "n_chunks",
-                    "video_dur_units",
-                    "audio_dur_units",
-                    "movie_dur_ms",
-                ],
+    def _row(did):
+        did = int(did)
+        tracks = _mp4_plant(did)
+        blob = codecs.encode_mp4(tracks)
+        try:
+            parsed = codecs.parse_mp4(blob)
+            ok = (
+                parsed["brand"] == "isom"
+                and parsed["timescale"] == 1000
+                and len(parsed["tracks"]) == len(tracks)
             )
+            for want, got in zip(tracks, parsed["tracks"]):
+                n = len(want["samples"])
+                ok = ok and (
+                    got["handler"] == want["handler"]
+                    and got["timescale"] == want["timescale"]
+                    and got["duration"] == n * want["delta"]
+                    and got["n_samples"] == n
+                    and got["width"] == want.get("width", 0)
+                    and got["height"] == want.get("height", 0)
+                    and got["samples"] == want["samples"]
+                )
+            t = parsed["tracks"]
+            return [
+                (
+                    did,
+                    bool(ok),
+                    len(t),
+                    sum(x["n_samples"] for x in t),
+                    sum(
+                        sum(len(s) for s in x["samples"]) for x in t
+                    ),
+                    sum(x["n_chunks"] for x in t),
+                    t[0]["duration"],
+                    t[1]["duration"],
+                    parsed["duration"],
+                )
+            ]
+        except ValueError:
+            return [(did, False, 0, 0, 0, 0, 0, 0, 0)]
 
-    return ids.mapInPandas(
-        _batches,
-        schema=(
-            "media_id bigint, parse_ok boolean, n_tracks int,"
-            " n_samples bigint, payload_bytes bigint, n_chunks bigint,"
-            " video_dur_units bigint, audio_dur_units bigint,"
-            " movie_dur_ms bigint"
-        ),
+    return map_rows(
+        ids,
+        _row,
+        "media_id bigint, parse_ok boolean, n_tracks int,"
+        " n_samples bigint, payload_bytes bigint, n_chunks bigint,"
+        " video_dur_units bigint, audio_dur_units bigint,"
+        " movie_dur_ms bigint",
     )
 
 
@@ -656,69 +545,48 @@ def fmp4_fragment_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(media_id, parse_ok, n_fragments, n_samples, payload_bytes,
     total_duration_units) — REAL fragmented-MP4 encode→parse roundtrip
     over planted DASH-style segment streams (spec in ``_fmp4_plant``)."""
-    import pandas as pd
+    ids = _doc_slice(spark, sf_dir, 7, 2)
 
-    ids = fan_out(
-        _t(spark, sf_dir, "documents")
-        .select("doc_id")
-        .where(F.col("doc_id") % 7 == 2)
-    )
-
-    def _batches(it: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        for pdf in it:
-            rows = []
-            for did in pdf["doc_id"]:
-                did = int(did)
-                frags = _fmp4_plant(did)
-                blob = codecs.encode_fmp4(30, 1, frags)
-                try:
-                    parsed = codecs.parse_fmp4(blob)
-                    got = parsed["fragments"]
-                    ok = (
-                        parsed["brand"] == "iso5"
-                        and parsed["timescale"] == 30
-                        and len(got) == len(frags)
-                        and all(
-                            g["seq"] == f + 1
-                            and g["samples"] == want
-                            and g["n_samples"] == len(want)
-                            and g["duration"] == len(want)
-                            for f, (want, g) in enumerate(zip(frags, got))
-                        )
-                    )
-                    rows.append(
-                        (
-                            did,
-                            bool(ok),
-                            len(got),
-                            sum(g["n_samples"] for g in got),
-                            sum(
-                                sum(len(s) for s in g["samples"]) for g in got
-                            ),
-                            sum(g["duration"] for g in got),
-                        )
-                    )
-                except ValueError:
-                    rows.append((did, False, 0, 0, 0, 0))
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "media_id",
-                    "parse_ok",
-                    "n_fragments",
-                    "n_samples",
-                    "payload_bytes",
-                    "total_duration_units",
-                ],
+    def _row(did):
+        did = int(did)
+        frags = _fmp4_plant(did)
+        blob = codecs.encode_fmp4(30, 1, frags)
+        try:
+            parsed = codecs.parse_fmp4(blob)
+            got = parsed["fragments"]
+            ok = (
+                parsed["brand"] == "iso5"
+                and parsed["timescale"] == 30
+                and len(got) == len(frags)
+                and all(
+                    g["seq"] == f + 1
+                    and g["samples"] == want
+                    and g["n_samples"] == len(want)
+                    and g["duration"] == len(want)
+                    for f, (want, g) in enumerate(zip(frags, got))
+                )
             )
+            return [
+                (
+                    did,
+                    bool(ok),
+                    len(got),
+                    sum(g["n_samples"] for g in got),
+                    sum(
+                        sum(len(s) for s in g["samples"]) for g in got
+                    ),
+                    sum(g["duration"] for g in got),
+                )
+            ]
+        except ValueError:
+            return [(did, False, 0, 0, 0, 0)]
 
-    return ids.mapInPandas(
-        _batches,
-        schema=(
-            "media_id bigint, parse_ok boolean, n_fragments int,"
-            " n_samples bigint, payload_bytes bigint,"
-            " total_duration_units bigint"
-        ),
+    return map_rows(
+        ids,
+        _row,
+        "media_id bigint, parse_ok boolean, n_fragments int,"
+        " n_samples bigint, payload_bytes bigint,"
+        " total_duration_units bigint",
     )
 
 
@@ -820,100 +688,70 @@ def mkv_container_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     pixel_height, channels, duration_ticks) — REAL Matroska/WebM
     encode→parse roundtrip over planted two-track containers (spec in
     ``_mkv_plant``)."""
-    import pandas as pd
+    ids = _doc_slice(spark, sf_dir, 7, 4)
 
-    # fan_out: one small input split would serialize the kernel on a
-    # single core (the round-8 codec-kernel lesson)
-    ids = fan_out(
-        _t(spark, sf_dir, "documents")
-        .select("doc_id")
-        .where(F.col("doc_id") % 7 == 4)
-    )
-
-    def _batches(it: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        for pdf in it:
-            rows = []
-            for did in pdf["doc_id"]:
-                did = int(did)
-                want = _mkv_plant(did)
-                blob = codecs.encode_mkv(
-                    want["doctype"],
-                    want["timescale_ns"],
-                    want["duration_ticks"],
-                    want["tracks"],
-                    want["clusters"],
-                )
-                try:
-                    parsed = codecs.parse_mkv(blob)
-                    v, a = parsed["tracks"][0], parsed["tracks"][1]
-                    ok = (
-                        parsed["doctype"] == want["doctype"]
-                        and parsed["timescale"] == want["timescale_ns"]
-                        and parsed["duration"]
-                        == float(want["duration_ticks"])
-                        and parsed["n_clusters"] == len(want["clusters"])
-                        and len(parsed["tracks"]) == 2
-                        and v["type"] == "video"
-                        and v["codec_id"] == want["tracks"][0]["codec_id"]
-                        and v["width"] == want["tracks"][0]["width"]
-                        and v["height"] == want["tracks"][0]["height"]
-                        and v["frames"] == want["vframes"]
-                        and a["type"] == "audio"
-                        and a["codec_id"] == want["tracks"][1]["codec_id"]
-                        and a["sampling"] == want["tracks"][1]["sampling"]
-                        and a["channels"] == want["tracks"][1]["channels"]
-                        and a["frames"] == want["aframes"]
-                    )
-                    rows.append(
-                        (
-                            did,
-                            bool(ok),
-                            parsed["doctype"],
-                            len(parsed["tracks"]),
-                            parsed["n_clusters"],
-                            parsed["n_blocks"],
-                            len(v["frames"]),
-                            len(a["frames"]),
-                            sum(len(x) for x in v["frames"])
-                            + sum(len(x) for x in a["frames"]),
-                            v["width"],
-                            v["height"],
-                            a["channels"],
-                            int(parsed["duration"]),
-                        )
-                    )
-                except ValueError:
-                    rows.append(
-                        (did, False, "", 0, 0, 0, 0, 0, 0, 0, 0, 0, 0)
-                    )
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "media_id",
-                    "parse_ok",
-                    "doctype",
-                    "n_tracks",
-                    "n_clusters",
-                    "n_blocks",
-                    "video_frames",
-                    "audio_frames",
-                    "payload_bytes",
-                    "pixel_width",
-                    "pixel_height",
-                    "channels",
-                    "duration_ticks",
-                ],
+    def _row(did):
+        did = int(did)
+        want = _mkv_plant(did)
+        blob = codecs.encode_mkv(
+            want["doctype"],
+            want["timescale_ns"],
+            want["duration_ticks"],
+            want["tracks"],
+            want["clusters"],
+        )
+        try:
+            parsed = codecs.parse_mkv(blob)
+            v, a = parsed["tracks"][0], parsed["tracks"][1]
+            ok = (
+                parsed["doctype"] == want["doctype"]
+                and parsed["timescale"] == want["timescale_ns"]
+                and parsed["duration"]
+                == float(want["duration_ticks"])
+                and parsed["n_clusters"] == len(want["clusters"])
+                and len(parsed["tracks"]) == 2
+                and v["type"] == "video"
+                and v["codec_id"] == want["tracks"][0]["codec_id"]
+                and v["width"] == want["tracks"][0]["width"]
+                and v["height"] == want["tracks"][0]["height"]
+                and v["frames"] == want["vframes"]
+                and a["type"] == "audio"
+                and a["codec_id"] == want["tracks"][1]["codec_id"]
+                and a["sampling"] == want["tracks"][1]["sampling"]
+                and a["channels"] == want["tracks"][1]["channels"]
+                and a["frames"] == want["aframes"]
             )
+            return [
+                (
+                    did,
+                    bool(ok),
+                    parsed["doctype"],
+                    len(parsed["tracks"]),
+                    parsed["n_clusters"],
+                    parsed["n_blocks"],
+                    len(v["frames"]),
+                    len(a["frames"]),
+                    sum(len(x) for x in v["frames"])
+                    + sum(len(x) for x in a["frames"]),
+                    v["width"],
+                    v["height"],
+                    a["channels"],
+                    int(parsed["duration"]),
+                )
+            ]
+        except ValueError:
+            return [
+                (did, False, "", 0, 0, 0, 0, 0, 0, 0, 0, 0, 0)
+            ]
 
-    return ids.mapInPandas(
-        _batches,
-        schema=(
-            "media_id bigint, parse_ok boolean, doctype string,"
-            " n_tracks int, n_clusters int, n_blocks bigint,"
-            " video_frames bigint, audio_frames bigint,"
-            " payload_bytes bigint, pixel_width int, pixel_height int,"
-            " channels int, duration_ticks bigint"
-        ),
+    return map_rows(
+        ids,
+        _row,
+        "media_id bigint, parse_ok boolean, doctype string,"
+        " n_tracks int, n_clusters int, n_blocks bigint,"
+        " video_frames bigint, audio_frames bigint,"
+        " payload_bytes bigint, pixel_width int, pixel_height int,"
+        " channels int, duration_ticks bigint",
     )
 
 
@@ -992,69 +830,47 @@ def ogg_container_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     continued_pages, bos_pages, eos_pages, max_granule) — REAL Ogg
     (RFC 3533) encode→parse roundtrip with per-page CRC-32
     verification over planted streams (spec in ``_ogg_plant``)."""
-    import pandas as pd
+    ids = _doc_slice(spark, sf_dir, 7, 6)
 
-    ids = fan_out(
-        _t(spark, sf_dir, "documents")
-        .select("doc_id")
-        .where(F.col("doc_id") % 7 == 6)
-    )
-
-    def _batches(it: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        for pdf in it:
-            rows = []
-            for did in pdf["doc_id"]:
-                did = int(did)
-                want = _ogg_plant(did)
-                blob = codecs.encode_ogg(want["serial"], want["packets"])
-                try:
-                    p = codecs.parse_ogg(blob)
-                    ok = (
-                        p["serial"] == want["serial"]
-                        and p["packets"] == want["packets"]
-                        and p["n_pages"] == 2
-                        and p["bos_pages"] == 1
-                        and p["eos_pages"] == 1
-                        and p["continued_pages"] == 1
-                        and p["max_granule"] == len(want["packets"])
-                    )
-                    rows.append(
-                        (
-                            did,
-                            bool(ok),
-                            p["n_pages"],
-                            p["n_packets"],
-                            sum(len(x) for x in p["packets"]),
-                            p["continued_pages"],
-                            p["bos_pages"],
-                            p["eos_pages"],
-                            p["max_granule"],
-                        )
-                    )
-                except ValueError:
-                    rows.append((did, False, 0, 0, 0, 0, 0, 0, 0))
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "media_id",
-                    "parse_ok",
-                    "n_pages",
-                    "n_packets",
-                    "payload_bytes",
-                    "continued_pages",
-                    "bos_pages",
-                    "eos_pages",
-                    "max_granule",
-                ],
+    def _row(did):
+        rows = []
+        did = int(did)
+        want = _ogg_plant(did)
+        blob = codecs.encode_ogg(want["serial"], want["packets"])
+        try:
+            p = codecs.parse_ogg(blob)
+            ok = (
+                p["serial"] == want["serial"]
+                and p["packets"] == want["packets"]
+                and p["n_pages"] == 2
+                and p["bos_pages"] == 1
+                and p["eos_pages"] == 1
+                and p["continued_pages"] == 1
+                and p["max_granule"] == len(want["packets"])
             )
+            rows.append(
+                (
+                    did,
+                    bool(ok),
+                    p["n_pages"],
+                    p["n_packets"],
+                    sum(len(x) for x in p["packets"]),
+                    p["continued_pages"],
+                    p["bos_pages"],
+                    p["eos_pages"],
+                    p["max_granule"],
+                )
+            )
+        except ValueError:
+            rows.append((did, False, 0, 0, 0, 0, 0, 0, 0))
+        return rows
 
-    return ids.mapInPandas(
-        _batches,
-        schema=(
-            "media_id bigint, parse_ok boolean, n_pages int,"
-            " n_packets int, payload_bytes bigint, continued_pages int,"
-            " bos_pages int, eos_pages int, max_granule bigint"
-        ),
+    return map_rows(
+        ids,
+        _row,
+        "media_id bigint, parse_ok boolean, n_pages int,"
+        " n_packets int, payload_bytes bigint, continued_pages int,"
+        " bos_pages int, eos_pages int, max_granule bigint",
     )
 
 
@@ -1127,82 +943,58 @@ def zip_container_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     total_uncompressed, member_names) — REAL ZIP encode→parse roundtrip
     with per-member reflected CRC-32 verification over planted archives
     (spec in ``_zip_plant``)."""
-    import pandas as pd
+    ids = _doc_slice(spark, sf_dir, 11, 7)
 
-    # fan_out: one small input split would serialize the kernel on a
-    # single core (the round-8 codec-kernel lesson)
-    ids = fan_out(
-        _t(spark, sf_dir, "documents")
-        .select("doc_id")
-        .where(F.col("doc_id") % 11 == 7)
-    )
-
-    def _batches(it: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        for pdf in it:
-            rows = []
-            for did in pdf["doc_id"]:
-                did = int(did)
-                want = _zip_plant(did)
-                blob = codecs.encode_zip(want)
-                try:
-                    p = codecs.parse_zip(blob)
-                    ok = (
-                        p["n_members"] == len(want)
-                        and p["comment"] == b""
-                        and [m["name"] for m in p["members"]]
-                        == [m["name"] for m in want]
-                        and [m["method"] for m in p["members"]]
-                        == [m["method"] for m in want]
-                        and [m["data"] for m in p["members"]]
-                        == [m["data"] for m in want]
-                        and all(
-                            m["compressed_size"] < len(m["data"])
-                            for m in p["members"]
-                            if m["method"] == "deflate"
-                        )
-                        and codecs.sniff_format(blob) == "zip"
-                    )
-                    rows.append(
-                        (
-                            did,
-                            bool(ok),
-                            p["n_members"],
-                            sum(
-                                1
-                                for m in p["members"]
-                                if m["method"] == "stored"
-                            ),
-                            sum(
-                                1
-                                for m in p["members"]
-                                if m["method"] == "deflate"
-                            ),
-                            p["total_uncompressed"],
-                            ",".join(m["name"] for m in p["members"]),
-                        )
-                    )
-                except ValueError:
-                    rows.append((did, False, 0, 0, 0, 0, ""))
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "media_id",
-                    "parse_ok",
-                    "n_members",
-                    "stored_members",
-                    "deflated_members",
-                    "total_uncompressed",
-                    "member_names",
-                ],
+    def _row(did):
+        did = int(did)
+        want = _zip_plant(did)
+        blob = codecs.encode_zip(want)
+        try:
+            p = codecs.parse_zip(blob)
+            ok = (
+                p["n_members"] == len(want)
+                and p["comment"] == b""
+                and [m["name"] for m in p["members"]]
+                == [m["name"] for m in want]
+                and [m["method"] for m in p["members"]]
+                == [m["method"] for m in want]
+                and [m["data"] for m in p["members"]]
+                == [m["data"] for m in want]
+                and all(
+                    m["compressed_size"] < len(m["data"])
+                    for m in p["members"]
+                    if m["method"] == "deflate"
+                )
+                and codecs.sniff_format(blob) == "zip"
             )
+            return [
+                (
+                    did,
+                    bool(ok),
+                    p["n_members"],
+                    sum(
+                        1
+                        for m in p["members"]
+                        if m["method"] == "stored"
+                    ),
+                    sum(
+                        1
+                        for m in p["members"]
+                        if m["method"] == "deflate"
+                    ),
+                    p["total_uncompressed"],
+                    ",".join(m["name"] for m in p["members"]),
+                )
+            ]
+        except ValueError:
+            return [(did, False, 0, 0, 0, 0, "")]
 
-    return ids.mapInPandas(
-        _batches,
-        schema=(
-            "media_id bigint, parse_ok boolean, n_members int,"
-            " stored_members int, deflated_members int,"
-            " total_uncompressed bigint, member_names string"
-        ),
+    return map_rows(
+        ids,
+        _row,
+        "media_id bigint, parse_ok boolean, n_members int,"
+        " stored_members int, deflated_members int,"
+        " total_uncompressed bigint, member_names string",
     )
 
 
@@ -1271,68 +1063,47 @@ def gzip_member_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     total_uncompressed, member_names) — REAL multi-member gzip
     encode→parse roundtrip with per-member reflected CRC-32 + ISIZE
     verification over planted streams (spec in ``_gzip_plant``)."""
-    import pandas as pd
+    ids = _doc_slice(spark, sf_dir, 11, 3)
 
-    ids = fan_out(
-        _t(spark, sf_dir, "documents")
-        .select("doc_id")
-        .where(F.col("doc_id") % 11 == 3)
-    )
-
-    def _batches(it: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        for pdf in it:
-            rows = []
-            for did in pdf["doc_id"]:
-                did = int(did)
-                want = _gzip_plant(did)
-                blob = codecs.encode_gzip(want)
-                try:
-                    p = codecs.parse_gzip(blob)
-                    ok = (
-                        p["n_members"] == len(want)
-                        and [m["name"] for m in p["members"]]
-                        == [m.get("name") for m in want]
-                        and [m["data"] for m in p["members"]]
-                        == [m["data"] for m in want]
-                        and codecs.sniff_format(blob) == "gzip"
-                    )
-                    rows.append(
-                        (
-                            did,
-                            bool(ok),
-                            p["n_members"],
-                            sum(
-                                1
-                                for m in p["members"]
-                                if m["name"] is not None
-                            ),
-                            p["total_uncompressed"],
-                            ",".join(
-                                m["name"] or "-" for m in p["members"]
-                            ),
-                        )
-                    )
-                except ValueError:
-                    rows.append((did, False, 0, 0, 0, ""))
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "media_id",
-                    "parse_ok",
-                    "n_members",
-                    "named_members",
-                    "total_uncompressed",
-                    "member_names",
-                ],
+    def _row(did):
+        did = int(did)
+        want = _gzip_plant(did)
+        blob = codecs.encode_gzip(want)
+        try:
+            p = codecs.parse_gzip(blob)
+            ok = (
+                p["n_members"] == len(want)
+                and [m["name"] for m in p["members"]]
+                == [m.get("name") for m in want]
+                and [m["data"] for m in p["members"]]
+                == [m["data"] for m in want]
+                and codecs.sniff_format(blob) == "gzip"
             )
+            return [
+                (
+                    did,
+                    bool(ok),
+                    p["n_members"],
+                    sum(
+                        1
+                        for m in p["members"]
+                        if m["name"] is not None
+                    ),
+                    p["total_uncompressed"],
+                    ",".join(
+                        m["name"] or "-" for m in p["members"]
+                    ),
+                )
+            ]
+        except ValueError:
+            return [(did, False, 0, 0, 0, "")]
 
-    return ids.mapInPandas(
-        _batches,
-        schema=(
-            "media_id bigint, parse_ok boolean, n_members int,"
-            " named_members int, total_uncompressed bigint,"
-            " member_names string"
-        ),
+    return map_rows(
+        ids,
+        _row,
+        "media_id bigint, parse_ok boolean, n_members int,"
+        " named_members int, total_uncompressed bigint,"
+        " member_names string",
     )
 
 
@@ -1388,86 +1159,65 @@ def warc_ingest_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     roundtrip (gzip member walk + WARC record parse, both fully
     verified) where the response payload is the document's own
     text."""
-    import pandas as pd
+    docs = _doc_slice(spark, sf_dir, 11, 5, "text")
 
-    docs = fan_out(
-        _t(spark, sf_dir, "documents")
-        .select("doc_id", "text")
-        .where(F.col("doc_id") % 11 == 5)
-    )
-
-    def _batches(it: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        for pdf in it:
-            rows = []
-            for did, text in zip(pdf["doc_id"], pdf["text"]):
-                did = int(did)
-                rid = f"<urn:uuid:{did:08x}>"
-                # encode INSIDE the try: a non-ASCII text (or a header
-                # an encoder rejects) must emit parse_ok=False like
-                # every other malformed case, not fail the Spark task
-                # (UnicodeEncodeError IS a ValueError subclass)
-                try:
-                    body = str(text).encode("ascii")
-                    info = codecs.encode_warc_record(
-                        [("WARC-Type", "warcinfo"), ("WARC-Record-ID", rid)],
-                        _WARCINFO_PAYLOAD,
-                    )
-                    resp = codecs.encode_warc_record(
-                        [("WARC-Type", "response"), ("WARC-Record-ID", rid)],
-                        body,
-                    )
-                    blob = codecs.encode_gzip([{"data": info}, {"data": resp}])
-                    g = codecs.parse_gzip(blob)
-                    # parse each member ONCE; the one-record-per-member
-                    # check reads the same parse result
-                    parsed = [codecs.parse_warc(m["data"]) for m in g["members"]]
-                    recs = [p["records"][0] for p in parsed]
-                    ok = (
-                        g["n_members"] == 2
-                        and all(p["n_records"] == 1 for p in parsed)
-                        and recs[0]["headers"]["WARC-Type"] == "warcinfo"
-                        and recs[0]["payload"] == _WARCINFO_PAYLOAD
-                        and recs[1]["headers"]["WARC-Type"] == "response"
-                        and recs[1]["payload"] == body
-                        and all(
-                            r["headers"]["WARC-Record-ID"] == rid
-                            and r["version"] == "WARC/1.0"
-                            and int(r["headers"]["Content-Length"])
-                            == len(r["payload"])
-                            for r in recs
-                        )
-                    )
-                    rows.append(
-                        (
-                            did,
-                            bool(ok),
-                            len(recs),
-                            len(recs[1]["payload"]),
-                            sum(len(r["payload"]) for r in recs),
-                            ",".join(r["headers"]["WARC-Type"] for r in recs),
-                        )
-                    )
-                except ValueError:
-                    rows.append((did, False, 0, 0, 0, ""))
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "media_id",
-                    "parse_ok",
-                    "n_records",
-                    "response_payload_bytes",
-                    "total_payload_bytes",
-                    "record_types",
-                ],
+    def _row(did, text):
+        did = int(did)
+        rid = f"<urn:uuid:{did:08x}>"
+        # encode INSIDE the try: a non-ASCII text (or a header
+        # an encoder rejects) must emit parse_ok=False like
+        # every other malformed case, not fail the Spark task
+        # (UnicodeEncodeError IS a ValueError subclass)
+        try:
+            body = str(text).encode("ascii")
+            info = codecs.encode_warc_record(
+                [("WARC-Type", "warcinfo"), ("WARC-Record-ID", rid)],
+                _WARCINFO_PAYLOAD,
             )
+            resp = codecs.encode_warc_record(
+                [("WARC-Type", "response"), ("WARC-Record-ID", rid)],
+                body,
+            )
+            blob = codecs.encode_gzip([{"data": info}, {"data": resp}])
+            g = codecs.parse_gzip(blob)
+            # parse each member ONCE; the one-record-per-member
+            # check reads the same parse result
+            parsed = [codecs.parse_warc(m["data"]) for m in g["members"]]
+            recs = [p["records"][0] for p in parsed]
+            ok = (
+                g["n_members"] == 2
+                and all(p["n_records"] == 1 for p in parsed)
+                and recs[0]["headers"]["WARC-Type"] == "warcinfo"
+                and recs[0]["payload"] == _WARCINFO_PAYLOAD
+                and recs[1]["headers"]["WARC-Type"] == "response"
+                and recs[1]["payload"] == body
+                and all(
+                    r["headers"]["WARC-Record-ID"] == rid
+                    and r["version"] == "WARC/1.0"
+                    and int(r["headers"]["Content-Length"])
+                    == len(r["payload"])
+                    for r in recs
+                )
+            )
+            return [
+                (
+                    did,
+                    bool(ok),
+                    len(recs),
+                    len(recs[1]["payload"]),
+                    sum(len(r["payload"]) for r in recs),
+                    ",".join(r["headers"]["WARC-Type"] for r in recs),
+                )
+            ]
+        except ValueError:
+            return [(did, False, 0, 0, 0, "")]
 
-    return docs.mapInPandas(
-        _batches,
-        schema=(
-            "media_id bigint, parse_ok boolean, n_records int,"
-            " response_payload_bytes bigint, total_payload_bytes bigint,"
-            " record_types string"
-        ),
+    return map_rows(
+        docs,
+        _row,
+        "media_id bigint, parse_ok boolean, n_records int,"
+        " response_payload_bytes bigint, total_payload_bytes bigint,"
+        " record_types string",
     )
 
 
@@ -1515,65 +1265,44 @@ def tar_archive_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     archive_blocks, member_names) — POSIX ustar encode→parse roundtrip
     with per-header checksum verification over planted archives (spec
     in ``_tar_plant``)."""
-    import pandas as pd
+    ids = _doc_slice(spark, sf_dir, 11, 9)
 
-    ids = fan_out(
-        _t(spark, sf_dir, "documents")
-        .select("doc_id")
-        .where(F.col("doc_id") % 11 == 9)
-    )
-
-    def _batches(it: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        for pdf in it:
-            rows = []
-            for did in pdf["doc_id"]:
-                did = int(did)
-                want = _tar_plant(did)
-                blob = codecs.encode_tar(want)
-                try:
-                    p = codecs.parse_tar(blob)
-                    ok = (
-                        p["n_members"] == len(want)
-                        and [m["name"] for m in p["members"]]
-                        == [m["name"] for m in want]
-                        and [m["data"] for m in p["members"]]
-                        == [m["data"] for m in want]
-                        and all(
-                            m["size"] == len(m["data"])
-                            for m in p["members"]
-                        )
-                    )
-                    rows.append(
-                        (
-                            did,
-                            bool(ok),
-                            p["n_members"],
-                            p["total_payload_bytes"],
-                            p["archive_blocks"],
-                            ",".join(m["name"] for m in p["members"]),
-                        )
-                    )
-                except ValueError:
-                    rows.append((did, False, 0, 0, 0, ""))
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "media_id",
-                    "parse_ok",
-                    "n_members",
-                    "total_payload_bytes",
-                    "archive_blocks",
-                    "member_names",
-                ],
+    def _row(did):
+        did = int(did)
+        want = _tar_plant(did)
+        blob = codecs.encode_tar(want)
+        try:
+            p = codecs.parse_tar(blob)
+            ok = (
+                p["n_members"] == len(want)
+                and [m["name"] for m in p["members"]]
+                == [m["name"] for m in want]
+                and [m["data"] for m in p["members"]]
+                == [m["data"] for m in want]
+                and all(
+                    m["size"] == len(m["data"])
+                    for m in p["members"]
+                )
             )
+            return [
+                (
+                    did,
+                    bool(ok),
+                    p["n_members"],
+                    p["total_payload_bytes"],
+                    p["archive_blocks"],
+                    ",".join(m["name"] for m in p["members"]),
+                )
+            ]
+        except ValueError:
+            return [(did, False, 0, 0, 0, "")]
 
-    return ids.mapInPandas(
-        _batches,
-        schema=(
-            "media_id bigint, parse_ok boolean, n_members int,"
-            " total_payload_bytes bigint, archive_blocks bigint,"
-            " member_names string"
-        ),
+    return map_rows(
+        ids,
+        _row,
+        "media_id bigint, parse_ok boolean, n_members int,"
+        " total_payload_bytes bigint, archive_blocks bigint,"
+        " member_names string",
     )
 
 
@@ -1688,75 +1417,64 @@ def ogg_codec_id_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     identification header, parsed and fully validated (spec in
     ``_ogg_codec_plant``).  Codec-specific fields are NULL for the
     other codec, the decode_media_real convention."""
-    import pandas as pd
-
-    ids = fan_out(
-        _t(spark, sf_dir, "documents")
-        .select("doc_id")
-        .where(F.col("doc_id") % 11 == 1)
-    )
+    ids = _doc_slice(spark, sf_dir, 11, 1)
 
     _COLS = [
         "media_id", "parse_ok", "codec", "channels", "sample_rate",
         "pre_skip", "mapping_family", "blocksize_0", "blocksize_1",
     ]
 
-    def _batches(it: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        for pdf in it:
-            rows = []
-            for did in pdf["doc_id"]:
-                did = int(did)
-                base = {c: None for c in _COLS}
-                base.update(media_id=did, parse_ok=False, codec="")
-                try:
-                    want = _ogg_codec_plant(did)
-                    blob = codecs.encode_ogg(did & 0xFFFFFFFF, want["packets"])
-                    p = codecs.parse_ogg(blob)
-                    ident = codecs.identify_ogg_codec(p["packets"][0])
-                    ok = (
-                        p["packets"] == want["packets"]
-                        and p["bos_pages"] == 1
-                        and p["eos_pages"] == 1
-                        and ident["codec"] == want["codec"]
-                        and ident["channels"] == want["channels"]
-                        and ident["sample_rate" if ident["codec"] == "vorbis"
-                                  else "input_sample_rate"]
-                        == want["sample_rate"]
-                        and all(
-                            ident[k] == want[k]
-                            for k in want
-                            if k not in ("packets", "sample_rate")
-                        )
-                    )
-                    base.update(
-                        parse_ok=bool(ok),
-                        codec=ident["codec"],
-                        channels=ident["channels"],
-                    )
-                    if ident["codec"] == "opus":
-                        base.update(
-                            sample_rate=ident["input_sample_rate"],
-                            pre_skip=ident["pre_skip"],
-                            mapping_family=ident["mapping_family"],
-                        )
-                    else:
-                        base.update(
-                            sample_rate=ident["sample_rate"],
-                            blocksize_0=ident["blocksize_0"],
-                            blocksize_1=ident["blocksize_1"],
-                        )
-                except ValueError:
-                    pass
-                rows.append(base)
-            yield pd.DataFrame(rows, columns=_COLS)
+    def _row(did):
+        did = int(did)
+        base = {c: None for c in _COLS}
+        base.update(media_id=did, parse_ok=False, codec="")
+        try:
+            want = _ogg_codec_plant(did)
+            blob = codecs.encode_ogg(did & 0xFFFFFFFF, want["packets"])
+            p = codecs.parse_ogg(blob)
+            ident = codecs.identify_ogg_codec(p["packets"][0])
+            ok = (
+                p["packets"] == want["packets"]
+                and p["bos_pages"] == 1
+                and p["eos_pages"] == 1
+                and ident["codec"] == want["codec"]
+                and ident["channels"] == want["channels"]
+                and ident["sample_rate" if ident["codec"] == "vorbis"
+                          else "input_sample_rate"]
+                == want["sample_rate"]
+                and all(
+                    ident[k] == want[k]
+                    for k in want
+                    if k not in ("packets", "sample_rate")
+                )
+            )
+            base.update(
+                parse_ok=bool(ok),
+                codec=ident["codec"],
+                channels=ident["channels"],
+            )
+            if ident["codec"] == "opus":
+                base.update(
+                    sample_rate=ident["input_sample_rate"],
+                    pre_skip=ident["pre_skip"],
+                    mapping_family=ident["mapping_family"],
+                )
+            else:
+                base.update(
+                    sample_rate=ident["sample_rate"],
+                    blocksize_0=ident["blocksize_0"],
+                    blocksize_1=ident["blocksize_1"],
+                )
+        except ValueError:
+            pass
+        return [base]
 
-    return ids.mapInPandas(
-        _batches,
-        schema=(
-            "media_id bigint, parse_ok boolean, codec string,"
-            " channels int, sample_rate bigint, pre_skip int,"
-            " mapping_family int, blocksize_0 int, blocksize_1 int"
-        ),
+    return map_rows(
+        ids,
+        _row,
+        "media_id bigint, parse_ok boolean, codec string,"
+        " channels int, sample_rate bigint, pre_skip int,"
+        " mapping_family int, blocksize_0 int, blocksize_1 int",
     )
 
 
@@ -1809,99 +1527,78 @@ def warc_wet_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     where the conversion payload is the document's own text."""
     import hashlib
 
-    import pandas as pd
 
-    docs = fan_out(
-        _t(spark, sf_dir, "documents")
-        .select("doc_id", "text")
-        .where(F.col("doc_id") % 11 == 2)
-    )
+    docs = _doc_slice(spark, sf_dir, 11, 2, "text")
 
-    def _batches(it: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        for pdf in it:
-            rows = []
-            for did, text in zip(pdf["doc_id"], pdf["text"]):
-                did = int(did)
-                rid = f"<urn:uuid:wet-{did:08x}>"
-                refers = f"<urn:uuid:{did:08x}>"
-                uri = f"https://example.org/doc/{did}"
-                try:
-                    body = str(text).encode("ascii")
-                    info = codecs.encode_warc_record(
-                        [
-                            ("WARC-Type", "warcinfo"),
-                            ("WARC-Record-ID", rid),
-                            ("Content-Type", "application/warc-fields"),
-                        ],
-                        _WET_INFO_PAYLOAD,
-                    )
-                    conv = codecs.encode_warc_record(
-                        [
-                            ("WARC-Type", "conversion"),
-                            ("WARC-Record-ID", rid),
-                            ("WARC-Refers-To", refers),
-                            ("WARC-Target-URI", uri),
-                            ("Content-Type", "text/plain"),
-                        ],
-                        body,
-                    )
-                    blob = codecs.encode_gzip([{"data": info}, {"data": conv}])
-                    g = codecs.parse_gzip(blob)
-                    # parse each member ONCE; the one-record-per-member
-                    # check reads the same parse result
-                    parsed = [codecs.parse_warc(m["data"]) for m in g["members"]]
-                    recs = [p["records"][0] for p in parsed]
-                    ok = (
-                        g["n_members"] == 2
-                        and all(p["n_records"] == 1 for p in parsed)
-                        and recs[0]["headers"]["WARC-Type"] == "warcinfo"
-                        and recs[0]["headers"]["Content-Type"]
-                        == "application/warc-fields"
-                        and recs[0]["payload"] == _WET_INFO_PAYLOAD
-                        and recs[1]["headers"]["WARC-Type"] == "conversion"
-                        and recs[1]["headers"]["WARC-Refers-To"] == refers
-                        and recs[1]["headers"]["WARC-Target-URI"] == uri
-                        and recs[1]["payload"] == body
-                        and all(
-                            r["version"] == "WARC/1.0"
-                            and int(r["headers"]["Content-Length"])
-                            == len(r["payload"])
-                            for r in recs
-                        )
-                    )
-                    rows.append(
-                        (
-                            did,
-                            bool(ok),
-                            len(recs),
-                            ",".join(r["headers"]["WARC-Type"] for r in recs),
-                            recs[1]["headers"]["Content-Type"],
-                            len(recs[1]["payload"]),
-                            hashlib.md5(recs[1]["payload"]).hexdigest(),
-                        )
-                    )
-                except ValueError:
-                    rows.append((did, False, 0, "", "", 0, ""))
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "media_id",
-                    "parse_ok",
-                    "n_records",
-                    "record_types",
-                    "content_type",
-                    "conversion_payload_bytes",
-                    "payload_md5",
+    def _row(did, text):
+        did = int(did)
+        rid = f"<urn:uuid:wet-{did:08x}>"
+        refers = f"<urn:uuid:{did:08x}>"
+        uri = f"https://example.org/doc/{did}"
+        try:
+            body = str(text).encode("ascii")
+            info = codecs.encode_warc_record(
+                [
+                    ("WARC-Type", "warcinfo"),
+                    ("WARC-Record-ID", rid),
+                    ("Content-Type", "application/warc-fields"),
                 ],
+                _WET_INFO_PAYLOAD,
             )
+            conv = codecs.encode_warc_record(
+                [
+                    ("WARC-Type", "conversion"),
+                    ("WARC-Record-ID", rid),
+                    ("WARC-Refers-To", refers),
+                    ("WARC-Target-URI", uri),
+                    ("Content-Type", "text/plain"),
+                ],
+                body,
+            )
+            blob = codecs.encode_gzip([{"data": info}, {"data": conv}])
+            g = codecs.parse_gzip(blob)
+            # parse each member ONCE; the one-record-per-member
+            # check reads the same parse result
+            parsed = [codecs.parse_warc(m["data"]) for m in g["members"]]
+            recs = [p["records"][0] for p in parsed]
+            ok = (
+                g["n_members"] == 2
+                and all(p["n_records"] == 1 for p in parsed)
+                and recs[0]["headers"]["WARC-Type"] == "warcinfo"
+                and recs[0]["headers"]["Content-Type"]
+                == "application/warc-fields"
+                and recs[0]["payload"] == _WET_INFO_PAYLOAD
+                and recs[1]["headers"]["WARC-Type"] == "conversion"
+                and recs[1]["headers"]["WARC-Refers-To"] == refers
+                and recs[1]["headers"]["WARC-Target-URI"] == uri
+                and recs[1]["payload"] == body
+                and all(
+                    r["version"] == "WARC/1.0"
+                    and int(r["headers"]["Content-Length"])
+                    == len(r["payload"])
+                    for r in recs
+                )
+            )
+            return [
+                (
+                    did,
+                    bool(ok),
+                    len(recs),
+                    ",".join(r["headers"]["WARC-Type"] for r in recs),
+                    recs[1]["headers"]["Content-Type"],
+                    len(recs[1]["payload"]),
+                    hashlib.md5(recs[1]["payload"]).hexdigest(),
+                )
+            ]
+        except ValueError:
+            return [(did, False, 0, "", "", 0, "")]
 
-    return docs.mapInPandas(
-        _batches,
-        schema=(
-            "media_id bigint, parse_ok boolean, n_records int,"
-            " record_types string, content_type string,"
-            " conversion_payload_bytes bigint, payload_md5 string"
-        ),
+    return map_rows(
+        docs,
+        _row,
+        "media_id bigint, parse_ok boolean, n_records int,"
+        " record_types string, content_type string,"
+        " conversion_payload_bytes bigint, payload_md5 string",
     )
 
 

@@ -26,7 +26,7 @@ from k_means_hadoop_spark.operators.analytics import (
     _copurchase_edges,
 )
 from k_means_hadoop_spark.operators.corpus_extra import _docs
-from k_means_hadoop_spark.operators.relational import _t
+from k_means_hadoop_spark.operators.relational import _d38, _t
 from k_means_hadoop_spark.operators.trends import _FL6_SQL, _fl6
 from k_means_hadoop_spark.partitioning import prefix_sum, truncate_lineage, truncate_lineage_lazy
 
@@ -527,14 +527,11 @@ def graph_assortativity(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.broadcast(dv), both.v == dv.dv_key
     )
 
-    def d38(c):
-        return c.cast("decimal(38,0)")
-
     g = pairs.agg(
         F.count(F.lit(1)).alias("m"),
         F.sum("j").alias("sj"),
-        F.sum(d38(F.col("j")) * d38(F.col("k"))).alias("sjk"),
-        F.sum(d38(F.col("j")) * d38(F.col("j"))).alias("sj2"),
+        F.sum(_d38("j") * _d38("k")).alias("sjk"),
+        F.sum(_d38("j") * _d38("j")).alias("sj2"),
     )
     r = (
         "CAST(CAST(m AS DECIMAL(38,0)) * sjk"

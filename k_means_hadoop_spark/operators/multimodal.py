@@ -5,7 +5,10 @@ typed metadata struct; heavy per-item work (decode / feature-extract /
 resize / frame-sample) runs as Arrow-batched ``mapInPandas`` — the
 correct 100 TB shape: payloads never leave their partition, Python sees
 columnar batches, and the output schema is declared up front so the
-rest of the plan stays Catalyst-planned.
+rest of the plan stays Catalyst-planned.  ``map_rows`` is the one batch
+loop every per-row kernel here and in ``containers.py`` runs through:
+a kernel is a plain function of one input row that returns its output
+rows.
 
 ``decode_media`` computes deterministic pseudo-features from the raw
 bytes and is clearly marked as a fake.  ``decode_media_real`` (round
@@ -18,7 +21,7 @@ now visible in the output instead of raising).
 
 from __future__ import annotations
 
-from collections.abc import Iterator, Sequence
+from collections.abc import Callable, Iterator, Sequence
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
@@ -60,6 +63,32 @@ FEATURES_SCHEMA = T.StructType(
 )
 
 
+def map_rows(df: DataFrame, row_fn: Callable[..., list], schema: T.StructType | str) -> DataFrame:
+    """Run a per-row Python kernel on the executors through ``mapInPandas``.
+
+    ``row_fn(*values)`` is called once per row of ``df``, with the values
+    in ``df.columns`` order, and returns that row's output rows: tuples
+    in ``schema`` order or dicts keyed by column name.  An empty list
+    emits nothing (how a kernel skips a malformed payload); several rows
+    expand the input row.  Each Arrow batch becomes one pandas frame
+    whose column names come from ``schema``, so a kernel states its
+    columns once.  Select the consumed columns JVM-side first: every
+    column of ``df`` crosses the Arrow boundary."""
+    import pandas as pd
+
+    parsed = T.StructType.fromDDL(schema) if isinstance(schema, str) else schema
+    names = parsed.fieldNames()
+
+    def _batches(it: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
+        for pdf in it:
+            rows = [
+                out for values in zip(*(pdf[c] for c in pdf.columns)) for out in row_fn(*values)
+            ]
+            yield pd.DataFrame(rows, columns=names)
+
+    return df.mapInPandas(_batches, schema=schema)
+
+
 def media_from_documents(docs: DataFrame) -> DataFrame:
     """Synthesize a media table from ``documents`` (deterministic test
     fixture): payload = utf-8 text bytes, kind round-robins, meta derived
@@ -98,41 +127,24 @@ def decode_media(media: DataFrame) -> DataFrame:
     import hashlib
 
     import numpy as np
-    import pandas as pd
 
-    def _batches(it: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        for pdf in it:
-            feats = []
-            for mid, kind, payload in zip(pdf["media_id"], pdf["kind"], pdf["payload"]):
-                buf = np.frombuffer(payload, dtype=np.uint8)
-                counts = np.bincount(buf, minlength=256).astype(np.float64)
-                p = counts[counts > 0] / max(len(buf), 1)
-                entropy = float(-(p * np.log2(p)).sum()) if len(buf) else 0.0
-                feats.append(
-                    (
-                        int(mid),
-                        str(kind),
-                        int(len(buf)),
-                        hashlib.md5(bytes(payload)).hexdigest(),
-                        float(buf.mean()) if len(buf) else 0.0,
-                        entropy,
-                    )
-                )
-            yield pd.DataFrame(
-                feats,
-                columns=[
-                    "media_id",
-                    "kind",
-                    "payload_bytes",
-                    "content_hash",
-                    "mean_byte",
-                    "byte_entropy",
-                ],
+    def _row(mid, kind, payload):
+        buf = np.frombuffer(payload, dtype=np.uint8)
+        counts = np.bincount(buf, minlength=256).astype(np.float64)
+        p = counts[counts > 0] / max(len(buf), 1)
+        entropy = float(-(p * np.log2(p)).sum()) if len(buf) else 0.0
+        return [
+            (
+                int(mid),
+                str(kind),
+                int(len(buf)),
+                hashlib.md5(bytes(payload)).hexdigest(),
+                float(buf.mean()) if len(buf) else 0.0,
+                entropy,
             )
+        ]
 
-    return media.select("media_id", "kind", "payload").mapInPandas(
-        _batches, schema=FEATURES_SCHEMA
-    )
+    return map_rows(media.select("media_id", "kind", "payload"), _row, FEATURES_SCHEMA)
 
 
 FRAME_SCHEMA = T.StructType(
@@ -157,24 +169,18 @@ def sample_frames(media: DataFrame, stride: int = 30) -> DataFrame:
     indices are real: range(0, meta.n_frames, stride)."""
     import hashlib
 
-    import pandas as pd
-
     videos = media.filter(F.col("kind") == "video").select(
         "media_id", "payload", F.col("meta.n_frames").alias("n_frames")
     )
 
-    def _batches(it: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        for pdf in it:
-            out: list[tuple[int, int, str]] = []
-            for mid, payload, n_frames in zip(
-                pdf["media_id"], pdf["payload"], pdf["n_frames"]
-            ):
-                for idx in range(0, int(n_frames), stride):
-                    h = hashlib.md5(bytes(payload) + b":" + str(idx).encode()).hexdigest()
-                    out.append((int(mid), idx, h))
-            yield pd.DataFrame(out, columns=["media_id", "frame_idx", "frame_hash"])
+    def _row(mid, payload, n_frames):
+        out: list[tuple[int, int, str]] = []
+        for idx in range(0, int(n_frames), stride):
+            h = hashlib.md5(bytes(payload) + b":" + str(idx).encode()).hexdigest()
+            out.append((int(mid), idx, h))
+        return out
 
-    return videos.mapInPandas(_batches, schema=FRAME_SCHEMA)
+    return map_rows(videos, _row, FRAME_SCHEMA)
 
 
 ARROW_STATS_SCHEMA = T.StructType(
@@ -249,89 +255,87 @@ def decode_media_real(media: DataFrame, thumb: tuple[int, int] = (4, 3)) -> Data
     gets RMS / zero-crossing rate from the waveform.  Payloads the
     container has no codec for yield ok=false rows carrying the reason
     — the remaining Pillow/ffmpeg seam, kept visible in the output
-    instead of raising."""
+    instead of raising.  Only the three consumed columns cross the
+    Arrow boundary (``meta`` stays JVM-side)."""
     import hashlib
 
     import numpy as np
-    import pandas as pd
 
     tw, th = thumb
 
-    def _batches(it: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        for pdf in it:
-            rows = []
-            for mid, kind, payload in zip(pdf["media_id"], pdf["kind"], pdf["payload"]):
-                mid, kind = int(mid), str(kind)
-                base = {
-                    "media_id": mid, "kind": kind, "ok": False, "reason": None,
-                    "width": None, "height": None, "mean_r": None, "mean_g": None,
-                    "mean_b": None, "thumb_hash": None, "sample_rate": None,
-                    "n_samples": None, "rms": None, "zcr": None,
-                }
-                try:
-                    if kind == "image":
-                        # dispatch on MAGIC BYTES, not the kind column:
-                        # all four in-repo image codecs land in the same
-                        # (H, W, 3) RGB stats shape, so a BMP payload
-                        # (the planted-oracle case) is byte-identical to
-                        # the pre-sniffing behavior while PNG/GIF/JPEG
-                        # payloads now decode instead of erroring
-                        raw = bytes(payload)
-                        fmt = codecs.sniff_format(raw)
-                        if fmt == "bmp":
-                            img = codecs.decode_bmp(raw)
-                        elif fmt == "png":
-                            img = codecs.decode_png(raw)
-                        elif fmt == "gif":
-                            idx, pal = codecs.decode_gif(raw)
-                            img = pal[idx]
-                        elif fmt == "jpeg":
-                            gray = codecs.decode_jpeg(raw)
-                            img = np.stack([gray] * 3, axis=-1)
-                        else:
-                            raise ValueError(
-                                f"no codec for image format {fmt!r}"
-                            )
-                        h, w, _ = img.shape
-                        # integer channel sums, ONE division each — the
-                        # same op order the oracle's closed form uses
-                        sums = img.reshape(-1, 3).astype(np.int64).sum(axis=0)
-                        n_px = h * w
-                        tb = codecs.resize_nearest(img, tw, th)
-                        base.update(
-                            ok=True, width=w, height=h,
-                            mean_r=float(sums[0]) / n_px,
-                            mean_g=float(sums[1]) / n_px,
-                            mean_b=float(sums[2]) / n_px,
-                            # md5 over the HEX of the thumb bytes (not the
-                            # raw bytes): the oracle can only md5 strings,
-                            # and hex is a faithful byte-level encoding
-                            thumb_hash=hashlib.md5(
-                                tb.tobytes().hex().encode()
-                            ).hexdigest(),
-                        )
-                    elif kind == "audio":
-                        samples, rate = codecs.decode_wav(bytes(payload))
-                        s = samples.astype(np.int64)
-                        n = len(s)
-                        import math
+    def _row(mid, kind, payload):
+        mid, kind = int(mid), str(kind)
+        base = {
+            "media_id": mid, "kind": kind, "ok": False, "reason": None,
+            "width": None, "height": None, "mean_r": None, "mean_g": None,
+            "mean_b": None, "thumb_hash": None, "sample_rate": None,
+            "n_samples": None, "rms": None, "zcr": None,
+        }
+        try:
+            if kind == "image":
+                # dispatch on MAGIC BYTES, not the kind column:
+                # all four in-repo image codecs land in the same
+                # (H, W, 3) RGB stats shape, so a BMP payload
+                # (the planted-oracle case) is byte-identical to
+                # the pre-sniffing behavior while PNG/GIF/JPEG
+                # payloads now decode instead of erroring
+                raw = bytes(payload)
+                fmt = codecs.sniff_format(raw)
+                if fmt == "bmp":
+                    img = codecs.decode_bmp(raw)
+                elif fmt == "png":
+                    img = codecs.decode_png(raw)
+                elif fmt == "gif":
+                    idx, pal = codecs.decode_gif(raw)
+                    img = pal[idx]
+                elif fmt == "jpeg":
+                    gray = codecs.decode_jpeg(raw)
+                    img = np.stack([gray] * 3, axis=-1)
+                else:
+                    raise ValueError(
+                        f"no codec for image format {fmt!r}"
+                    )
+                h, w, _ = img.shape
+                # integer channel sums, ONE division each — the
+                # same op order the oracle's closed form uses
+                sums = img.reshape(-1, 3).astype(np.int64).sum(axis=0)
+                n_px = h * w
+                tb = codecs.resize_nearest(img, tw, th)
+                base.update(
+                    ok=True, width=w, height=h,
+                    mean_r=float(sums[0]) / n_px,
+                    mean_g=float(sums[1]) / n_px,
+                    mean_b=float(sums[2]) / n_px,
+                    # md5 over the HEX of the thumb bytes (not the
+                    # raw bytes): the oracle can only md5 strings,
+                    # and hex is a faithful byte-level encoding
+                    thumb_hash=hashlib.md5(
+                        tb.tobytes().hex().encode()
+                    ).hexdigest(),
+                )
+            elif kind == "audio":
+                samples, rate = codecs.decode_wav(bytes(payload))
+                s = samples.astype(np.int64)
+                n = len(s)
+                import math
 
-                        base.update(
-                            ok=True, sample_rate=rate, n_samples=n,
-                            rms=math.sqrt(float((s * s).sum()) / n) if n else 0.0,
-                            zcr=(
-                                float(int((s[1:] * s[:-1] < 0).sum())) / (n - 1)
-                                if n > 1 else 0.0
-                            ),
-                        )
-                    else:
-                        base["reason"] = "no codec for kind=video in this container (ffmpeg seam)"
-                except ValueError as e:
-                    base["reason"] = str(e)
-                rows.append(base)
-            yield pd.DataFrame(rows, columns=[f.name for f in REAL_DECODE_SCHEMA.fields])
+                base.update(
+                    ok=True, sample_rate=rate, n_samples=n,
+                    rms=math.sqrt(float((s * s).sum()) / n) if n else 0.0,
+                    zcr=(
+                        float(int((s[1:] * s[:-1] < 0).sum())) / (n - 1)
+                        if n > 1 else 0.0
+                    ),
+                )
+            else:
+                base["reason"] = "no codec for kind=video in this container (ffmpeg seam)"
+        except ValueError as e:
+            base["reason"] = str(e)
+        return [base]
 
-    return media.mapInPandas(_batches, schema=REAL_DECODE_SCHEMA)
+    return map_rows(
+        media.select("media_id", "kind", "payload"), _row, REAL_DECODE_SCHEMA
+    )
 
 
 def synthesize_codec_media(
@@ -355,7 +359,7 @@ def synthesize_codec_media(
     is excluded, so document text stays out of the exchange entirely.
     Emitted rows are identical to filtering the full output on kind.
     """
-    import pandas as pd
+    import numpy as np
 
     out_schema = T.StructType(
         [
@@ -365,30 +369,24 @@ def synthesize_codec_media(
         ]
     )
 
-    def _batches(it: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        import numpy as np
-
-        for pdf in it:
-            rows = []
-            for did, text in zip(pdf["doc_id"], pdf["text"]):
-                did = int(did)
-                m = did % 3
-                if m == 0:
-                    i = np.arange(48, dtype=np.int64)
-                    px = ((did * 31 + i) % 256).astype(np.uint8)
-                    img = np.repeat(px, 3).reshape(6, 8, 3)
-                    payload = codecs.encode_bmp(img)
-                    kind = "image"
-                elif m == 1:
-                    i = np.arange(64, dtype=np.int64)
-                    s = ((did * 7 + i) % 201 - 100).astype(np.int16)
-                    payload = codecs.encode_wav(s, 16000)
-                    kind = "audio"
-                else:
-                    payload = str(text).encode("utf-8")
-                    kind = "video"
-                rows.append((did, kind, payload))
-            yield pd.DataFrame(rows, columns=["media_id", "kind", "payload"])
+    def _row(did, text):
+        did = int(did)
+        m = did % 3
+        if m == 0:
+            i = np.arange(48, dtype=np.int64)
+            px = ((did * 31 + i) % 256).astype(np.uint8)
+            img = np.repeat(px, 3).reshape(6, 8, 3)
+            payload = codecs.encode_bmp(img)
+            kind = "image"
+        elif m == 1:
+            i = np.arange(64, dtype=np.int64)
+            s = ((did * 7 + i) % 201 - 100).astype(np.int16)
+            payload = codecs.encode_wav(s, 16000)
+            kind = "audio"
+        else:
+            payload = str(text).encode("utf-8")
+            kind = "video"
+        return [(did, kind, payload)]
 
     inp = docs
     if kinds is not None:
@@ -401,10 +399,8 @@ def synthesize_codec_media(
         # depend on that).
         inp = inp.filter(F.pmod(F.col("doc_id"), F.lit(3)).isin(mods))
         if "video" not in kinds:
-            return inp.select("doc_id", F.lit("").alias("text")).mapInPandas(
-                _batches, schema=out_schema
-            )
-    return inp.select("doc_id", "text").mapInPandas(_batches, schema=out_schema)
+            return map_rows(inp.select("doc_id", F.lit("").alias("text")), _row, out_schema)
+    return map_rows(inp.select("doc_id", "text"), _row, out_schema)
 
 
 WAV_FRAME_SCHEMA = T.StructType(
@@ -427,36 +423,31 @@ def wav_frame_features(media: DataFrame, frame: int = 16) -> DataFrame:
     import math
 
     import numpy as np
-    import pandas as pd
 
     audio = media.filter(F.col("kind") == "audio").select("media_id", "payload")
 
-    def _batches(it: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        for pdf in it:
-            rows = []
-            for mid, payload in zip(pdf["media_id"], pdf["payload"]):
-                try:
-                    samples, _rate = codecs.decode_wav(bytes(payload))
-                except ValueError:
-                    # kind='audio' is assigned by file extension alone
-                    # (tar_shards), so a malformed payload is reachable;
-                    # skip it instead of failing the whole task —
-                    # mirroring decode_media_real's rejection contract.
-                    continue
-                s = samples.astype(np.int64)
-                for fi in range(len(s) // frame):
-                    chunk = s[fi * frame : (fi + 1) * frame]
-                    energy = int((chunk * chunk).sum())
-                    rows.append(
-                        (
-                            int(mid),
-                            fi,
-                            energy,
-                            math.sqrt(energy / float(frame)),
-                        )
-                    )
-            yield pd.DataFrame(
-                rows, columns=["media_id", "frame_idx", "energy", "rms"]
+    def _row(mid, payload):
+        try:
+            samples, _rate = codecs.decode_wav(bytes(payload))
+        except ValueError:
+            # kind='audio' is assigned by file extension alone
+            # (tar_shards), so a malformed payload is reachable;
+            # skip it instead of failing the whole task —
+            # mirroring decode_media_real's rejection contract.
+            return []
+        rows = []
+        s = samples.astype(np.int64)
+        for fi in range(len(s) // frame):
+            chunk = s[fi * frame : (fi + 1) * frame]
+            energy = int((chunk * chunk).sum())
+            rows.append(
+                (
+                    int(mid),
+                    fi,
+                    energy,
+                    math.sqrt(energy / float(frame)),
+                )
             )
+        return rows
 
-    return audio.mapInPandas(_batches, schema=WAV_FRAME_SCHEMA)
+    return map_rows(audio, _row, WAV_FRAME_SCHEMA)

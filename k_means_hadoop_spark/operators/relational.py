@@ -33,6 +33,10 @@ def _dec(c) -> F.Column:
     return F.col(c).cast("decimal(18,4)") if isinstance(c, str) else c.cast("decimal(18,4)")
 
 
+def _d38(c: str) -> F.Column:
+    return F.col(c).cast("decimal(38,0)")
+
+
 def q1_pricing_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q1 shape: scan-heavy group-aggregate over lineitem."""
     li = _t(spark, sf_dir, "lineitem")

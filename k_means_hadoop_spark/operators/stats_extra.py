@@ -39,7 +39,7 @@ from k_means_hadoop_spark.operators.analytics import (
     _dec14,
 )
 from k_means_hadoop_spark.operators.corpus_extra import _docs
-from k_means_hadoop_spark.operators.relational import _dec, _t
+from k_means_hadoop_spark.operators.relational import _d38, _dec, _t
 from k_means_hadoop_spark.operators.trends import (
     _FL6_SQL,
     _complete_blocks_case,
@@ -302,14 +302,9 @@ def bh_fdr_nation_acctbal(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     j = per.crossJoin(F.broadcast(g))
 
-    def d38(c_):
-        return c_.cast("decimal(38,0)")
-
-    diff = d38(F.col("nn")) * d38(F.col("s_i")) - d38(F.col("n")) * d38(F.col("s"))
+    diff = _d38("nn") * _d38("s_i") - _d38("n") * _d38("s")
     num = diff * diff  # z² numerator
-    den = d38(F.col("n")) * (
-        d38(F.col("nn")) * d38(F.col("ss")) - d38(F.col("s")) * d38(F.col("s"))
-    )
+    den = _d38("n") * (_d38("nn") * _d38("ss") - _d38("s") * _d38("s"))
     j = j.select(
         "c_nationkey",
         F.col("n").cast("bigint").alias("n"),
@@ -1258,16 +1253,10 @@ def cronbach_alpha_items(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     d = d.withColumn("t", F.col("i1") + F.col("i2") + F.col("i3"))
 
-    def d38(c):
-        return c.cast("decimal(38,0)")
-
     g = d.agg(
         F.count(F.lit(1)).alias("n"),
         *[F.sum(c).alias(f"s_{c}") for c in ("i1", "i2", "i3", "t")],
-        *[
-            F.sum(d38(F.col(c)) * d38(F.col(c))).alias(f"q_{c}")
-            for c in ("i1", "i2", "i3", "t")
-        ],
+        *[F.sum(_d38(c) * _d38(c)).alias(f"q_{c}") for c in ("i1", "i2", "i3", "t")],
     )
     num = (
         "(CAST(n AS DECIMAL(38,0)) * q_i1 - CAST(s_i1 AS DECIMAL(38,0)) * s_i1)"
@@ -2635,14 +2624,9 @@ def holm_bonferroni_nation_acctbal(spark: SparkSession, sf_dir: str) -> DataFram
     )
     j = per.crossJoin(F.broadcast(g))
 
-    def d38(c_):
-        return c_.cast("decimal(38,0)")
-
-    diff = d38(F.col("nn")) * d38(F.col("s_i")) - d38(F.col("n")) * d38(F.col("s"))
+    diff = _d38("nn") * _d38("s_i") - _d38("n") * _d38("s")
     num = diff * diff
-    den = d38(F.col("n")) * (
-        d38(F.col("nn")) * d38(F.col("ss")) - d38(F.col("s")) * d38(F.col("s"))
-    )
+    den = _d38("n") * (_d38("nn") * _d38("ss") - _d38("s") * _d38("s"))
     j = j.select(
         "c_nationkey",
         F.col("n").cast("bigint").alias("n"),

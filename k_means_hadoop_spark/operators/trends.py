@@ -23,11 +23,13 @@ day/user/part-level cardinality before any wide output.
 
 from __future__ import annotations
 
+import math
+
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from k_means_hadoop_spark.functions.zorder import interleave_bits, interleave_bits_sql
-from k_means_hadoop_spark.operators.relational import _dec, _t
+from k_means_hadoop_spark.operators.relational import _d38, _dec, _t
 from k_means_hadoop_spark.partitioning import ntile_expr, prefix_sum_literal_bounds, scan_parts
 
 # engine-identical 6dp stabilization (see module docstring)
@@ -36,6 +38,11 @@ _FL6_SQL = "floor(({x}) * CAST(1000000 AS DOUBLE) + CAST(0.5 AS DOUBLE)) / CAST(
 
 def _fl6(c: F.Column) -> F.Column:
     return F.floor(c * F.lit(1000000.0) + F.lit(0.5)) / F.lit(1000000.0)
+
+
+def _fl6_py(x: float) -> float:
+    """``_FL6_SQL`` for a Python float (worker kernels)."""
+    return math.floor(x * 1_000_000 + 0.5) / 1_000_000
 
 
 # --------------------------------------------- TPC-H Q11 shape
@@ -224,18 +231,13 @@ def acf_daily_events(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.sum("xl").alias("s2"),
     )
 
-    def d38(c):
-        return c.cast("decimal(38,0)")
-
     j = per.crossJoin(F.broadcast(g))
     num = (
-        d38(F.col("n")) * d38(F.col("n")) * d38(F.col("sxy"))
-        - d38(F.col("t")) * d38(F.col("n")) * (d38(F.col("s1")) + d38(F.col("s2")))
-        + d38(F.col("n_pairs")) * d38(F.col("t")) * d38(F.col("t"))
+        _d38("n") * _d38("n") * _d38("sxy")
+        - _d38("t") * _d38("n") * (_d38("s1") + _d38("s2"))
+        + _d38("n_pairs") * _d38("t") * _d38("t")
     )
-    den = d38(F.col("n")) * d38(F.col("n")) * d38(F.col("q")) - d38(
-        F.col("n")
-    ) * d38(F.col("t")) * d38(F.col("t"))
+    den = _d38("n") * _d38("n") * _d38("q") - _d38("n") * _d38("t") * _d38("t")
     return j.select(
         F.col("lag").cast("int").alias("lag"),
         F.col("n_pairs").cast("bigint").alias("n_pairs"),
@@ -1348,18 +1350,13 @@ def ljung_box_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.sum("xl").alias("s2"),
     )
 
-    def d38(c):
-        return c.cast("decimal(38,0)")
-
     j = per.crossJoin(F.broadcast(g))
     a_k = (
-        d38(F.col("n")) * d38(F.col("n")) * d38(F.col("p"))
-        - d38(F.col("n")) * d38(F.col("t")) * (d38(F.col("s1")) + d38(F.col("s2")))
-        + (d38(F.col("n")) - d38(F.col("lag"))) * d38(F.col("t")) * d38(F.col("t"))
+        _d38("n") * _d38("n") * _d38("p")
+        - _d38("n") * _d38("t") * (_d38("s1") + _d38("s2"))
+        + (_d38("n") - _d38("lag")) * _d38("t") * _d38("t")
     )
-    b_ = d38(F.col("n")) * d38(F.col("n")) * d38(F.col("q")) - d38(
-        F.col("n")
-    ) * d38(F.col("t")) * d38(F.col("t"))
+    b_ = _d38("n") * _d38("n") * _d38("q") - _d38("n") * _d38("t") * _d38("t")
     term = _FL6_SQL.format(
         x="CAST(ak * ak AS DOUBLE) / CAST(bb * bb * CAST(n - lag AS DECIMAL(38,0)) AS DOUBLE)"
     )

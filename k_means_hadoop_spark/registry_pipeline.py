@@ -9,7 +9,9 @@ DuckDB gotcha encoded here once: ``regexp_replace`` needs the 'g' flag
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+import uuid
+
+from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from k_means_hadoop_spark.functions.hashing import (
@@ -976,6 +978,33 @@ SELECT doc_id, n_chars, md5(text) AS text_md5 FROM documents
 """
 
 
+def _drain(stream_df: DataFrame, prefix: str, mode: str = "append") -> DataFrame:
+    """Run ``stream_df`` to completion (availableNow) into a memory sink
+    under ``mode`` and return the sink table as a batch DataFrame."""
+    name = f"{prefix}_{uuid.uuid4().hex[:8]}"
+    q = (
+        stream_df.writeStream.outputMode(mode)
+        .format("memory")
+        .queryName(name)
+        .option("checkpointLocation", scratch_dir("ckpt"))
+        .trigger(availableNow=True)
+        .start()
+    )
+    q.awaitTermination()
+    return stream_df.sparkSession.table(name)
+
+
+def _final_user_rows(updates: DataFrame, *extra: str) -> DataFrame:
+    """The final state per user of an update-mode drain: each user's row
+    with the most events."""
+    w = Window.partitionBy("user_id").orderBy(F.col("n_events").desc())
+    return (
+        updates.withColumn("_rn", F.row_number().over(w))
+        .filter(F.col("_rn") == 1)
+        .select("user_id", "n_events", F.round("sum_value", 6).alias("sum_value"), *extra)
+    )
+
+
 def q_python_datasource_stream(spark, sf_dir):
     """Spark 4 Python STREAMING data source (DataSourceStreamReader):
     the arith_seq feed drained with availableNow through a memory sink —
@@ -984,21 +1013,8 @@ def q_python_datasource_stream(spark, sf_dir):
     partitions; every emitted row is then aggregated per value bucket
     and checked against DuckDB range() (exactly-once: a dropped or
     doubled partition flips the counts)."""
-    import uuid
-
-    name = f"pyds_stream_{uuid.uuid4().hex[:8]}"
-    q = (
-        read_arith_seq_stream(spark, n=2000, parts=4)
-        .writeStream.outputMode("append")
-        .format("memory")
-        .queryName(name)
-        .option("checkpointLocation", scratch_dir("ckpt"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
     return (
-        spark.table(name)
+        _drain(read_arith_seq_stream(spark, n=2000, parts=4), "pyds_stream")
         .groupBy((F.col("val") % 10).alias("bucket"))
         .agg(
             F.count(F.lit(1)).alias("n"),
@@ -1456,8 +1472,6 @@ def q_knn_mllib_lsh(spark, sf_dir):
     q = vecs.filter(F.col("vid").isin(KNN_QUERY_IDS)).select(
         F.col("vid").alias("qid"), F.col("vec").alias("qvec")
     )
-    from pyspark.sql import Window
-
     w = Window.partitionBy("qid").orderBy(F.col("d"), F.col("nid"))
     exact = (
         vecs.crossJoin(F.broadcast(q))
@@ -1966,21 +1980,9 @@ def q_streaming_window_stats(spark, sf_dir):
     availableNow over one file admits no late data, so the result is
     deterministic and equals the batch oracle SQL — the strongest
     possible check of the streaming plan."""
-    import uuid
-
-    name = f"stream_win_{uuid.uuid4().hex[:8]}"
     stream = read_event_stream(spark, f"{sf_dir}/events.parquet")
-    q = (
-        windowed_event_stats(stream, window="1 hour", watermark="2 hours")
-        .writeStream.outputMode("complete")
-        .format("memory")
-        .queryName(name)
-        .option("checkpointLocation", scratch_dir("ckpt"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return spark.table(name).select(
+    win = windowed_event_stats(stream, window="1 hour", watermark="2 hours")
+    return _drain(win, "stream_win", "complete").select(
         F.unix_micros("window_start").alias("window_us"),
         "event_type",
         "n",
@@ -2005,22 +2007,11 @@ def q_streaming_kmeans_assign(spark, sf_dir):
     source, drained with availableNow into a memory sink.  Append mode
     (no state, no watermark) — every input row appears exactly once, so
     the batch SQL oracle is an exact check of the streaming plan."""
-    import uuid
-
-    name = f"stream_asg_{uuid.uuid4().hex[:8]}"
     stream = read_event_stream(spark, f"{sf_dir}/events.parquet")
-    q = (
-        stream_assign(stream, STREAM_CENTROIDS)
-        .select("id", "cluster", F.round("dist", 6).alias("dist"))
-        .writeStream.outputMode("append")
-        .format("memory")
-        .queryName(name)
-        .option("checkpointLocation", scratch_dir("ckpt"))
-        .trigger(availableNow=True)
-        .start()
+    asg = stream_assign(stream, STREAM_CENTROIDS).select(
+        "id", "cluster", F.round("dist", 6).alias("dist")
     )
-    q.awaitTermination()
-    return spark.table(name)
+    return _drain(asg, "stream_asg")
 
 
 def q_streaming_stateful_totals(spark, sf_dir):
@@ -2028,29 +2019,8 @@ def q_streaming_stateful_totals(spark, sf_dir):
     availableNow.  Update-mode emits one refreshed row per user per
     micro-batch; the final state (row with max n_events per user) must
     equal the batch GROUP BY — which is exactly what the oracle checks."""
-    import uuid
-
-    from pyspark.sql import Window
-
-    name = f"stream_state_{uuid.uuid4().hex[:8]}"
     stream = read_event_stream(spark, f"{sf_dir}/events.parquet")
-    q = (
-        stateful_user_totals(stream)
-        .writeStream.outputMode("update")
-        .format("memory")
-        .queryName(name)
-        .option("checkpointLocation", scratch_dir("ckpt"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    w = Window.partitionBy("user_id").orderBy(F.col("n_events").desc())
-    return (
-        spark.table(name)
-        .withColumn("_rn", F.row_number().over(w))
-        .filter(F.col("_rn") == 1)
-        .select("user_id", "n_events", F.round("sum_value", 6).alias("sum_value"))
-    )
+    return _final_user_rows(_drain(stateful_user_totals(stream), "stream_state", "update"))
 
 
 STREAMING_STATEFUL_SQL = """
@@ -2093,8 +2063,6 @@ UDTF_MAX_DOC = 20
 def q_udtf_tokenize(spark, sf_dir):
     """Python UDTF via SQL LATERAL: per-row token expansion inside the
     Arrow-batched table-function runner (no JVM-side explode)."""
-    import uuid
-
     register(spark)
     view = f"docs_udtf_{uuid.uuid4().hex[:8]}"
     _docs(spark, sf_dir).filter(F.col("doc_id") < UDTF_MAX_DOC).createOrReplaceTempView(view)
@@ -2133,34 +2101,8 @@ def q_streaming_tws_stats(spark, sf_dir):
     stats: ValueState totals + MapState distinct-type counts, drained
     with availableNow; the last update per user must equal the batch
     GROUP BY — the oracle check."""
-    import uuid
-
-    from pyspark.sql import Window
-
-    name = f"stream_tws_{uuid.uuid4().hex[:8]}"
     stream = read_event_stream(spark, f"{sf_dir}/events.parquet")
-    q = (
-        tws_user_stats(stream)
-        .writeStream.outputMode("update")
-        .format("memory")
-        .queryName(name)
-        .option("checkpointLocation", scratch_dir("ckpt"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    w = Window.partitionBy("user_id").orderBy(F.col("n_events").desc())
-    return (
-        spark.table(name)
-        .withColumn("_rn", F.row_number().over(w))
-        .filter(F.col("_rn") == 1)
-        .select(
-            "user_id",
-            "n_events",
-            F.round("sum_value", 6).alias("sum_value"),
-            "n_types",
-        )
-    )
+    return _final_user_rows(_drain(tws_user_stats(stream), "stream_tws", "update"), "n_types")
 
 
 STREAMING_TWS_SQL = """
@@ -2201,30 +2143,12 @@ STREAMING_TWS_CAPABILITY_SQL = (
 )
 
 
-def _drain(stream_df, prefix: str):
-    """availableNow → memory sink, return the drained table (append mode)."""
-    import uuid
-
-    name = f"{prefix}_{uuid.uuid4().hex[:8]}"
-    q = (
-        stream_df.writeStream.outputMode("append")
-        .format("memory")
-        .queryName(name)
-        .option("checkpointLocation", scratch_dir("ckpt"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return name
-
-
 def q_streaming_dedup_keys(spark, sf_dir):
     """Stateful streaming dedup: first-seen (user_id, event_type) pairs.
     Output order is nondeterministic but the SET of emitted keys equals
     batch DISTINCT — exactly what the hash compare checks."""
     stream = read_event_stream(spark, f"{sf_dir}/events.parquet")
-    name = _drain(dedup_stream_keys(stream, ["user_id", "event_type"]), "stream_dedup")
-    return spark.table(name)
+    return _drain(dedup_stream_keys(stream, ["user_id", "event_type"]), "stream_dedup")
 
 
 STREAMING_DEDUP_SQL = """
@@ -2242,8 +2166,7 @@ def q_streaming_enrich_join(spark, sf_dir):
         "event_id", "user_id", "event_type", F.round("value", 6).alias("value"),
         "c_nationkey", "c_mktsegment",
     )
-    name = _drain(enriched, "stream_enrich")
-    return spark.table(name)
+    return _drain(enriched, "stream_enrich")
 
 
 STREAMING_ENRICH_SQL = """
@@ -2264,8 +2187,7 @@ def q_streaming_interval_join(spark, sf_dir):
     clicks = read_event_stream(spark, f"{sf_dir}/events.parquet").filter(
         F.col("event_type") == "click"
     )
-    name = _drain(join_view_click_streams(views, clicks), "stream_ssj")
-    return spark.table(name)
+    return _drain(join_view_click_streams(views, clicks), "stream_ssj")
 
 
 STREAMING_INTERVAL_JOIN_SQL = """
@@ -2317,8 +2239,7 @@ def q_streaming_outer_interval_join(spark, sf_dir):
         "click_id",
         (F.unix_micros("click_ts") - F.unix_micros("view_ts")).alias("gap_us"),
     )
-    name = _drain(j, "stream_louter")
-    return spark.table(name)
+    return _drain(j, "stream_louter")
 
 
 STREAMING_OUTER_JOIN_SQL = """
@@ -2430,30 +2351,16 @@ def q_streaming_session_windows(spark, sf_dir):
     merged sessions must equal the batch gaps-and-islands SQL — the same
     oracle as the batch `session_windows_events`, checking the streaming
     MERGING state machine against a closed-form formulation."""
-    import uuid
-
-    from pyspark.sql import functions as SF
-
-    name = f"stream_sess_{uuid.uuid4().hex[:8]}"
     stream = read_event_stream(spark, f"{sf_dir}/events.parquet")
     sess = (
         stream.withWatermark("ts", "2 hours")
-        .groupBy("user_id", SF.session_window("ts", "30 minutes").alias("w"))
+        .groupBy("user_id", F.session_window("ts", "30 minutes").alias("w"))
         .agg(
-            SF.count(SF.lit(1)).alias("n_events"),
-            SF.sum(SF.col("value").cast("decimal(18,4)")).cast("double").alias("sum_value"),
+            F.count(F.lit(1)).alias("n_events"),
+            F.sum(F.col("value").cast("decimal(18,4)")).cast("double").alias("sum_value"),
         )
     )
-    q = (
-        sess.writeStream.outputMode("complete")
-        .format("memory")
-        .queryName(name)
-        .option("checkpointLocation", scratch_dir("ckpt"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return spark.table(name).select(
+    return _drain(sess, "stream_sess", "complete").select(
         "user_id",
         F.unix_micros("w.start").alias("session_start_us"),
         "n_events",
@@ -2497,8 +2404,6 @@ def _survivors(docs, pairs):
     pairs → connected components → quality join → one per-component
     window — the only data-sized shuffles are the CC rounds and the
     single window over comp_id."""
-    from pyspark.sql import Window
-
     comps = dedup.duplicate_components(pairs)
     q = text.quality_scores(docs).select("doc_id", "quality")
     full = (

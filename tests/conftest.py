@@ -8,8 +8,7 @@ import pytest
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from k_means_hadoop_spark.session import get_spark
-
-SF_DIR = os.environ.get("SPARK_GRAFT_TEST_SF_DIR", "/root/testdata/sf0.001")
+from tests.helpers import SF_DIR
 
 
 def pytest_configure(config):

@@ -3,6 +3,8 @@ one-table events writer used by more than one test module."""
 
 from __future__ import annotations
 
+import os
+
 import pandas as pd
 from pyspark.sql.types import LongType, StringType, StructField, StructType
 
@@ -18,7 +20,11 @@ DOC_SCHEMA = StructType(
 )
 
 
-SF_DIRS = [f"/root/testdata/sf{s}" for s in ("0.001", "0.01", "0.1")]
+# SPARK_GRAFT_TEST_SF_DIR picks the scale factor the suite runs at; the
+# other scale factors are its siblings under the same fixture root.
+SF_DIR = os.environ.get("SPARK_GRAFT_TEST_SF_DIR", "/root/testdata/sf0.001")
+SF_ROOT = os.path.dirname(os.path.normpath(SF_DIR))
+SF_DIRS = [os.path.join(SF_ROOT, f"sf{s}") for s in ("0.001", "0.01", "0.1")]
 
 
 def write_events(tmp_path, rows):

@@ -19,7 +19,6 @@ from pyspark.sql import Window
 from pyspark.sql import functions as F
 
 from k_means_hadoop_spark.operators import analytics, dedup
-from k_means_hadoop_spark.operators import analytics as an
 from k_means_hadoop_spark.operators.analytics import (
     _BFS_ITERS,
     _KC_ITERS,
@@ -141,12 +140,12 @@ def test_pareto_ties_survive_together(spark):
     ]
     df = spark.createDataFrame(rows, ["p_partkey", "p_size", "p_retailprice"])
 
-    orig = an._t
-    an._t = lambda s, d, n: df
+    orig = analytics._t
+    analytics._t = lambda s, d, n: df
     try:
-        got = sorted(r["p_partkey"] for r in an.pareto_front_parts(spark, "-").collect())
+        got = sorted(r["p_partkey"] for r in analytics.pareto_front_parts(spark, "-").collect())
     finally:
-        an._t = orig
+        analytics._t = orig
     assert got == [4, 6]
 
 
@@ -154,12 +153,12 @@ def test_pareto_tied_frontier_pair(spark):
     rows = [(1, 10, 5.0), (2, 10, 5.0), (3, 5, 4.0), (4, 5, 4.5)]
     df = spark.createDataFrame(rows, ["p_partkey", "p_size", "p_retailprice"])
 
-    orig = an._t
-    an._t = lambda s, d, n: df
+    orig = analytics._t
+    analytics._t = lambda s, d, n: df
     try:
-        got = sorted(r["p_partkey"] for r in an.pareto_front_parts(spark, "-").collect())
+        got = sorted(r["p_partkey"] for r in analytics.pareto_front_parts(spark, "-").collect())
     finally:
-        an._t = orig
+        analytics._t = orig
     # 1 and 2 tie on the frontier; 3 survives (cheaper than everything
     # larger); 4 is beaten at its own size
     assert got == [1, 2, 3]
@@ -586,14 +585,14 @@ def test_pareto_property_random_points(spark):
     def check(pts):
         rows = [(i, s, float(p)) for i, (s, p) in enumerate(pts)]
         df = spark.createDataFrame(rows, ["p_partkey", "p_size", "p_retailprice"])
-        orig = an._t
-        an._t = lambda sp, d, n: df
+        orig = analytics._t
+        analytics._t = lambda sp, d, n: df
         try:
             got = sorted(
-                r["p_partkey"] for r in an.pareto_front_parts(spark, "-").collect()
+                r["p_partkey"] for r in analytics.pareto_front_parts(spark, "-").collect()
             )
         finally:
-            an._t = orig
+            analytics._t = orig
         want = sorted(
             i
             for i, s, p in rows

@@ -17,6 +17,7 @@ from k_means_hadoop_spark.operators.assign import assign_expr
 from k_means_hadoop_spark.operators.multimodal import (
     decode_media,
     decode_media_real,
+    map_rows,
     media_from_documents,
 )
 from k_means_hadoop_spark.operators.pca import explained_variance, pca_project
@@ -219,6 +220,38 @@ def test_media_real_decode_rejects_noncodec_payloads(spark, sf_dir):
         assert not r["ok"]
         assert r["reason"], r
         assert r["width"] is None and r["rms"] is None
+
+
+def test_map_rows_declares_columns_once(spark):
+    """The per-row kernel runner: a kernel that returns [] for every row
+    gives 0 rows under the declared names and types, a 1→n kernel keeps
+    every value, and dict rows give the same frame as tuple rows."""
+    schema = "k bigint, i int, tag string"
+    src = spark.createDataFrame([(1, "a"), (2, "bb"), (3, "")], "k long, s string").repartition(2)
+
+    empty = map_rows(src, lambda k, s: [], schema)
+    assert [(f.name, f.dataType.simpleString()) for f in empty.schema] == [
+        ("k", "bigint"),
+        ("i", "int"),
+        ("tag", "string"),
+    ]
+    assert empty.collect() == []
+
+    expanded = map_rows(src, lambda k, s: [(int(k), i, s) for i in range(int(k))], schema)
+    assert sorted(tuple(r) for r in expanded.collect()) == [
+        (1, 0, "a"),
+        (2, 0, "bb"),
+        (2, 1, "bb"),
+        (3, 0, ""),
+        (3, 1, ""),
+        (3, 2, ""),
+    ]
+
+    as_tuples = map_rows(src, lambda k, s: [(int(k), len(s), s)], schema)
+    as_dicts = map_rows(src, lambda k, s: [{"tag": s, "i": len(s), "k": int(k)}], schema)
+    assert as_dicts.schema == as_tuples.schema
+    assert sorted(as_dicts.collect()) == sorted(as_tuples.collect())
+    assert len(as_tuples.collect()) == 3
 
 
 def test_watermark_drops_late_events(spark, tmp_path):

@@ -7,7 +7,6 @@ import math
 import os
 import random
 import re
-import re as _re
 import time
 from collections import Counter
 
@@ -15,7 +14,6 @@ import numpy as np
 import pytest as _pytest
 from pyspark.sql import Window
 from pyspark.sql import functions as F
-from pyspark.sql import functions as SF
 
 from k_means_hadoop_spark import registry
 from k_means_hadoop_spark import registry_pipeline as rp
@@ -794,7 +792,7 @@ def test_bpe_merges_match_python_reference(spark, sf_dir):
         for r in spark.read.parquet(f"{sf_dir}/documents.parquet").collect()
     }
     corpora = [
-        _re.split(r"\s+", t.lower().strip()) for t in docs.values()
+        re.split(r"\s+", t.lower().strip()) for t in docs.values()
     ]
 
     def top_pair(corp):
@@ -1077,16 +1075,16 @@ def test_split_by_group_no_source_crosses_splits(spark, sf_dir):
     membership row-by-row and assert every source maps to exactly one
     split, while all three splits are populated."""
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    h = stable_hash64(SF.concat(SF.lit(_GSPLIT_SALT), SF.col("source"))) % SF.lit(10)
+    h = stable_hash64(F.concat(F.lit(_GSPLIT_SALT), F.col("source"))) % F.lit(10)
     split = (
-        SF.when(h < _GSPLIT_TRAIN_LT, SF.lit("train"))
-        .when(h < _GSPLIT_TRAIN_LT + 1, SF.lit("val"))
-        .otherwise(SF.lit("test"))
+        F.when(h < _GSPLIT_TRAIN_LT, F.lit("train"))
+        .when(h < _GSPLIT_TRAIN_LT + 1, F.lit("val"))
+        .otherwise(F.lit("test"))
     )
     per_source = (
         docs.select("source", split.alias("split"))
         .groupBy("source")
-        .agg(SF.countDistinct("split").alias("n_splits"))
+        .agg(F.countDistinct("split").alias("n_splits"))
         .collect()
     )
     assert all(r["n_splits"] == 1 for r in per_source)

@@ -57,6 +57,7 @@ from k_means_hadoop_spark.operators.containers import (
     _zip_plant,
 )
 from k_means_hadoop_spark.registry_pipeline import EDIT_DIST_MAX, NGRAM_N, _docs
+from tests.helpers import SF_ROOT
 
 
 def test_edit_verified_precision_one(spark, sf_dir):
@@ -114,7 +115,7 @@ def test_documents_fixture_is_single_byte(spark, sf):
     edit-distance oracle pairing is exact only while octet_length ==
     char_length for every document.  If a multi-byte doc ever lands in
     a shipped fixture, THIS fails — not a silent driver hash flip."""
-    path = f"/root/testdata/sf{sf}/documents.parquet"
+    path = os.path.join(SF_ROOT, f"sf{sf}", "documents.parquet")
     if not os.path.exists(path):
         pytest.skip(f"no testdata at {path}")
     docs = spark.read.parquet(path)

@@ -32,7 +32,6 @@ from k_means_hadoop_spark.operators.evaluation import (
     silhouette_by_cluster,
     silhouette_sampled,
 )
-from k_means_hadoop_spark.operators.evaluation import silhouette_sampled as ss
 from k_means_hadoop_spark.operators.kmeans import init_ids, lloyd_kmeans
 from k_means_hadoop_spark.operators.multimodal import (
     decode_media_real,
@@ -101,7 +100,7 @@ def test_silhouette_sampled_is_subset_exact_s(spark, sf_dir):
 
     again = {
         (r["cluster"], r["n_sampled"], r["mean_silhouette"])
-        for r in ss(asg).collect()
+        for r in silhouette_sampled(asg).collect()
     }
     assert got == again  # deterministic (hash sample, decimal sums)
     assert len(ids) == sum(n for _, n, _ in got)

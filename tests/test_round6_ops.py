@@ -7,7 +7,6 @@ from __future__ import annotations
 
 import math
 import re
-import re as _re
 from collections import Counter
 
 import numpy as np
@@ -527,7 +526,7 @@ def test_logistic_newton_matches_numpy(spark, sf_dir):
         .collect()
     )
     X = np.array(
-        [[1.0, d["n_chars"], len(_re.findall(r"[^ ]+", d["text"]))] for d in docs]
+        [[1.0, d["n_chars"], len(re.findall(r"[^ ]+", d["text"]))] for d in docs]
     )
     y = np.array([1.0 if d["lang"] == "en" else 0.0 for d in docs])
     beta = 2.0 * np.linalg.solve(X.T @ X, X.T @ (2 * y - 1))
@@ -548,8 +547,8 @@ def test_cronbach_alpha_hand_recompute(spark, sf_dir):
         [
             [
                 d["n_chars"],
-                len(_re.findall(r"[^ ]+", d["text"])),
-                len(set(_re.findall(r"[a-z0-9]+", d["text"].lower()))),
+                len(re.findall(r"[^ ]+", d["text"])),
+                len(set(re.findall(r"[a-z0-9]+", d["text"].lower()))),
             ]
             for d in docs
         ],

@@ -6,7 +6,9 @@ Usage: python tools/verify_queries.py [<name> ...]
        python tools/verify_queries.py --sf 0.1 [<name> ...]
 
 With no names, every registry query runs, in ``queries()`` order.  A
-query that raises is reported as FAIL and the run goes on.
+query that raises is reported as FAIL and the run goes on.  The scale
+factor directories are the siblings of ``$SPARK_GRAFT_TEST_SF_DIR``,
+the test suite's fixture knob.
 """
 
 from __future__ import annotations
@@ -19,6 +21,7 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from k_means_hadoop_spark import registry
 from k_means_hadoop_spark.session import get_spark
+from tests.helpers import SF_ROOT
 from tests.oracle_harness import compare, duck_connection
 
 SFS = ["0.001", "0.01", "0.1"]
@@ -37,7 +40,7 @@ def main() -> None:
     spark = get_spark("verify_queries")
     failed = []
     for sf in sfs:
-        sf_dir = f"/root/testdata/sf{sf}"
+        sf_dir = os.path.join(SF_ROOT, f"sf{sf}")
         con = duck_connection(sf_dir)
         for name in names:
             t0 = time.perf_counter()
